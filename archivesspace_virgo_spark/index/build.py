@@ -83,20 +83,18 @@ def _arrow_postings_schema():
 def _pa_binary_from_stream(stream: np.ndarray, offsets: np.ndarray):
     """Arrow binary array straight over the encoder's contiguous byte
     stream — (values, offsets) IS Arrow's binary layout, so no per-term
-    ``bytes`` objects exist at all.  Falls back to slicing only if one
-    shard's stream exceeds int32 offsets (>2 GiB — docs_per_shard is sized
-    orders of magnitude below that)."""
+    ``bytes`` objects exist at all.  ``pa.binary()`` has int32 offsets, so
+    one shard's stream must stay under 2 GiB."""
     import pyarrow as pa
 
-    n = offsets.size - 1
-    if offsets[-1] > np.iinfo(np.int32).max:  # pragma: no cover - 2GiB shard
-        buf = stream.tobytes()
-        return pa.array(
-            [buf[a:b] for a, b in zip(offsets[:-1], offsets[1:])],
-            type=pa.binary(),
+    if offsets[-1] > np.iinfo(np.int32).max:
+        raise ValueError(
+            f"one shard's posting stream is {int(offsets[-1])} bytes, over "
+            "the 2 GiB an Arrow binary column holds; lower docs_per_shard "
+            "and rebuild"
         )
     return pa.Array.from_buffers(
-        pa.binary(), n,
+        pa.binary(), offsets.size - 1,
         [None, pa.py_buffer(offsets.astype(np.int32)),
          pa.py_buffer(np.ascontiguousarray(stream))],
     )

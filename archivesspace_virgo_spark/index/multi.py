@@ -27,6 +27,12 @@ from typing import Optional, Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from archivesspace_virgo_spark.index.query import (
+    _check_page,
+    _page,
+    parse_sort_spec,
+)
+
 
 class MultiIndexEngine:
     """Query a list of QueryEngines as one logical collection.
@@ -151,9 +157,8 @@ class MultiIndexEngine:
         composite key, so the global top-k is contained in the
         |members|·(k+offset)-row union — merged by one TakeOrdered on the
         identical key list ((index_id, doc_id) final tiebreak)."""
-        from archivesspace_virgo_spark.index.query import parse_sort_spec
-
         spec = parse_sort_spec(sort_field, ascending)
+        _check_page(k, offset)
         parts = [
             self._tagged(lab, e.sorted_search(terms, spec, k=k + offset,
                                               mode=mode, **kw))
@@ -161,10 +166,7 @@ class MultiIndexEngine:
         ]
         u = reduce(DataFrame.unionByName, parts)
         keys = [F.asc(f) if a else F.desc(f) for f, a in spec]
-        ordered = u.orderBy(*keys, F.asc("index_id"), F.asc("doc_id"))
-        if offset:
-            ordered = ordered.offset(offset)
-        return ordered.limit(k)
+        return _page(u, k, offset, *keys, F.asc("index_id"), F.asc("doc_id"))
 
     def grouped_search(self, terms: Sequence[str], group_field: str,
                        k_per_group: int = 3, mode: str = "or",
@@ -211,16 +213,14 @@ class MultiIndexEngine:
     # ≤ |members|·(k+offset) rows.  No postings move; global offset is
     # applied at the merge (members are asked for offset 0). ---
     def _scored(self, method: str, k: int, offset: int, *args, **kw):
+        _check_page(k, offset)  # before members see k + offset
         parts = [
             self._tagged(lab, getattr(e, method)(*args, k=k + offset, **kw))
             for lab, e in zip(self.labels, self.engines)
         ]
         u = reduce(DataFrame.unionByName, parts)
-        ordered = u.orderBy(F.desc("score"), F.asc("index_id"),
-                            F.asc("doc_id"))
-        if offset:
-            ordered = ordered.offset(offset)
-        return ordered.limit(k)
+        return _page(u, k, offset, F.desc("score"), F.asc("index_id"),
+                     F.asc("doc_id"))
 
     def query(self, q: str, k: int = 10, offset: int = 0,
               **kw) -> DataFrame:

@@ -1,31 +1,32 @@
 """BM25 top-k query engine (SURVEY.md §2.8-T6..T11, §3.3).
 
-Query lifecycle (idiomatic Spark, API-first — the reference's Solr
-``q=...&rows=k`` surface, SolrHelper.java:39-80, re-expressed natively):
+Query lifecycle (the reference's Solr ``q=...&rows=k`` surface,
+SolrHelper.java:39-80, re-expressed natively):
 
     search(terms, k, mode)
-    → lexicon point-lookup for query terms (collect ≤ |q| tiny rows;
-      gives exact df → idf with CURRENT corpus N)
-    → postings scan WHERE term IN terms  (parquet rowgroup min/max stats
-      prune because postings are written term-sorted within each shard;
-      on Iceberg this is also a bloom-filter hit)
-    → cogroup(postings, doc_stats) by doc_shard → one Arrow batch per shard
-      → numpy decode + vectorized scoring + per-shard partial top-k
-      (block-max metadata drives MaxScore-style skipping for single-term
-      and weak-term pruning; exact by construction — bounds are upper bounds)
-    → union of ≤ k·n_shards partial rows → TakeOrderedAndProject (score desc,
-      doc_id asc) limit k.
+    → ``_resolve``: lexicon point-lookup of the query terms (≤ |q| tiny
+      rows, cached per engine) → idf with CURRENT corpus N, per-field avgdl,
+      MUST_NOT and fq terms — or None when the query is statically empty
+    → ``_shard_scan``: postings WHERE term IN terms (rowgroup min/max stats
+      prune: postings are term-sorted within each shard), grouped by
+      doc_shard → one Arrow batch per shard → numpy decode (doc lengths
+      ride in each posting's dl_blob) + vectorized scoring + per-shard
+      partial top-k (exact MaxScore-style block-max skipping)
+    → ``_page``: ≤ k·n_shards partials → TakeOrderedAndProject (score
+      desc, doc_id asc), offset, limit k.
 
-No shuffle touches posting data: the only exchange moves per-shard top-k
-partials.  At 10^12 docs this is the document-partitioned "local index"
-architecture used by production engines; query fan-out is one map task per
-shard and the merge is O(k · n_shards).
+``_shard_scan`` is the query layer's only grouped-map scan: every surface
+hands it a kernel; ``grouped_search`` alone cogroups the same filtered
+postings with doc_map.  The one exchange groups ≤ |terms| postings rows
+per shard; the merge moves only partials — the document-partitioned
+"local index" of production engines: one map task per shard, an
+O(k · n_shards) merge.
 """
 
 from __future__ import annotations
 
 import math
-from typing import List, Optional, Sequence
+from typing import List, NamedTuple, Optional, Sequence
 
 import numpy as np
 import pandas as pd
@@ -35,9 +36,43 @@ from pyspark.sql import functions as F
 from archivesspace_virgo_spark.config import IndexConfig
 from archivesspace_virgo_spark.index.storage import IndexStorage
 
+_SCORED = "doc_id long, score double"
+# postings columns a kernel reads besides doc_shard/term; pos_blob (and cf)
+# stay out unless positions are needed: shipping them would roughly double
+# the per-query transfer bytes
+_SCORE_COLS = ("doc_blob", "tf_blob", "dl_blob")
+_BLOCK_COLS = _SCORE_COLS + ("block_last_doc", "block_max_tf", "block_min_dl",
+                             "block_doc_off", "block_tf_off", "block_dl_off")
+_POS_COLS = _SCORE_COLS + ("pos_blob",)
+_M = np.int64(1) << np.int64(33)  # doc·_M + position keys; > any doc length
+
 
 def lucene_idf(n_docs: int, df: int) -> float:
     return math.log(1.0 + (n_docs - df + 0.5) / (df + 0.5))
+
+
+def _check_page(k: int, offset: int) -> None:
+    """Lucene's TopDocs contract: n must be >= 1 (IllegalArgumentException
+    there; a descriptive ValueError here — the numpy top-k cuts in the
+    shard kernels fail with opaque bounds errors on k=0; a caller who wants
+    only the match COUNT uses count()/match_ids()), and Solr's ``start``
+    must be >= 0 (Spark would reject a negative OFFSET only at execution,
+    with an AnalysisException)."""
+    if int(k) < 1:
+        raise ValueError(f"k must be >= 1, got {k}")
+    if int(offset) < 0:
+        raise ValueError(f"offset must be >= 0, got {offset}")
+
+
+def _page(df: DataFrame, k: int, offset: int, *keys) -> DataFrame:
+    """The paging tail of every top-k surface (Solr ``start=N&rows=k``):
+    order by ``keys`` (default score desc, doc_id asc), skip ``offset``
+    rows, keep ``k`` — one TakeOrderedAndProject over the partials."""
+    _check_page(k, offset)
+    ordered = df.orderBy(*(keys or (F.desc("score"), F.asc("doc_id"))))
+    if offset:
+        ordered = ordered.offset(offset)
+    return ordered.limit(k)
 
 
 def parse_sort_spec(sort_field, ascending: bool = True):
@@ -490,22 +525,214 @@ def _make_dismax_scorer(
     return score
 
 
+def _exact_freq(stored: List[str], slop: int = 0):
+    """PhraseQuery frequency step: each term's occurrence set becomes a
+    key array ``local_doc·_M + (position − i)``; the phrase's start
+    positions are the running ``np.intersect1d`` across terms — fully
+    vectorized, no per-doc loop; ptf = start positions per doc."""
+    def freq(dec):
+        keys = None
+        for i, t in enumerate(stored):
+            ldoc, _dl, tf_, pos = dec[t]
+            valid = pos >= i
+            key = np.repeat(ldoc, tf_)[valid] * _M + (pos[valid] - i)
+            keys = key if keys is None else np.intersect1d(
+                keys, key, assume_unique=True
+            )
+            if keys.size == 0:
+                return None
+        return np.unique(keys // _M, return_counts=True)
+
+    return freq
+
+
+def _ordered_span_freq(stored: List[str], slop: int):
+    """SpanNearQuery(inOrder=true) frequency step: for each occurrence p1
+    of the first term, greedily chain to the NEXT occurrence of each later
+    term (one ``searchsorted`` per term over the sorted doc·_M + position
+    keys); matchLength = p_last − p1 − (n−1); spans with matchLength ≤ slop
+    add 1/(1+matchLength) to the sloppy frequency."""
+    n_terms = len(stored)
+
+    def freq(dec):
+        ldoc0, _dl, tf0, pos0 = dec[stored[0]]
+        start = np.repeat(ldoc0, tf0) * _M + pos0
+        cur = start
+        for t in stored[1:]:
+            ldoc, _dl, tf_, pos = dec[t]
+            kt = np.repeat(ldoc, tf_) * _M + pos
+            idx = np.searchsorted(kt, cur, side="right")
+            ok = idx < kt.size
+            nxt = kt[np.minimum(idx, kt.size - 1)]
+            ok &= (nxt // _M) == (cur // _M)  # stay within the doc
+            start, cur = start[ok], nxt[ok]
+            if cur.size == 0:
+                return None
+        mlen = (cur - start) - np.int64(n_terms - 1)
+        keep = mlen <= slop
+        if not keep.any():
+            return None
+        w = 1.0 / (1.0 + mlen[keep].astype(np.float64))
+        hit, inv = np.unique(start[keep] // _M, return_inverse=True)
+        sf = np.zeros(hit.size, dtype=np.float64)
+        np.add.at(sf, inv, w)
+        return hit, sf
+
+    return freq
+
+
+def _sloppy_freq(stored: List[str], slop: int):
+    """PhraseQuery-slop frequency step (transpositions allowed): intersect
+    the terms' doc sets, flatten each phrase offset's candidate position
+    runs once, then run the lockstep-batch SloppyPhraseMatcher
+    (``proximity.lucene_sloppy_freq_batch``) over every candidate at once.
+    Phrases with REPEATING terms run Lucene's repeats machinery
+    (``lucene_sloppy_freq_repeats``) per candidate — bounded by the rarest
+    repeated term's df.  One term or slop 0 is the exact PhraseQuery."""
+    if len(stored) == 1 or slop == 0:
+        return _exact_freq(stored)
+    from archivesspace_virgo_spark.functions.proximity import (
+        lucene_sloppy_freq_batch, lucene_sloppy_freq_repeats,
+    )
+
+    uniq = sorted(set(stored))
+    has_repeats = len(uniq) != len(stored)
+
+    def freq(dec):
+        cand = dec[uniq[0]][0]
+        for t in uniq[1:]:
+            cand = np.intersect1d(cand, dec[t][0], assume_unique=True)
+            if cand.size == 0:
+                return None
+        # vectorized run extraction — no per-doc slicing
+        flat, fstarts = [], []
+        for i, t in enumerate(stored):
+            ldoc, _dl, tf_, pos = dec[t]
+            starts = np.zeros(ldoc.size + 1, dtype=np.int64)
+            starts[1:] = np.cumsum(tf_.astype(np.int64))
+            j = np.searchsorted(ldoc, cand)
+            rs = starts[j]
+            lens = starts[j + 1] - rs
+            outst = np.zeros(cand.size + 1, dtype=np.int64)
+            np.cumsum(lens, out=outst[1:])
+            total = int(outst[-1])
+            idx = (np.arange(total, dtype=np.int64)
+                   - np.repeat(outst[:-1], lens) + np.repeat(rs, lens))
+            flat.append(pos[idx].astype(np.int64) - i)
+            fstarts.append(outst)
+        if not has_repeats:
+            sf_all = lucene_sloppy_freq_batch(flat, fstarts, slop)
+        else:
+            sf_all = np.array([
+                lucene_sloppy_freq_repeats(
+                    [flat[i][fstarts[i][c]:fstarts[i][c + 1]]
+                     for i in range(len(stored))],
+                    stored, slop)
+                for c in range(cand.size)
+            ], dtype=np.float64)
+        hit_m = sf_all > 0.0
+        if not hit_m.any():
+            return None
+        return cand[hit_m], sf_all[hit_m]
+
+    return freq
+
+
+def _make_phrase_scorer(stored: List[str], freq, idf_sum: float,
+                        avgdl: float, k: int, k1: float, b: float,
+                        docs_per_shard: int,
+                        only_ids: Optional[np.ndarray] = None):
+    """Per-shard kernel of the phrase family: decode each phrase term's
+    postings and positions (restricted to the ``only_ids`` window when
+    given — per-doc frequencies are unchanged, the work is bounded by the
+    window), let ``freq`` compute the per-doc phrase frequency f, and score
+    Lucene's phrase BM25 form idf_sum · f / (f + k1·(1 − b + b·dl/avgdl))
+    with the per-shard top-k cut.  ``freq(dec)`` maps {term: (local doc,
+    dl, tf, positions)} to (ascending local hit docs, f) or None."""
+    from archivesspace_virgo_spark import codec  # re-imported on workers
+
+    uniq = sorted(set(stored))
+
+    def scorer(pdf: pd.DataFrame) -> pd.DataFrame:
+        empty = pd.DataFrame({"doc_id": pd.Series(dtype="int64"),
+                              "score": pd.Series(dtype="float64")})
+        by_term = {
+            t: row for t, row in zip(pdf["term"], pdf.itertuples(index=False))
+        }
+        if any(t not in by_term for t in uniq):
+            return empty  # a phrase is an AND across its terms
+        base = int(pdf["doc_shard"].iloc[0]) * docs_per_shard
+        dec = {}
+        for t in uniq:
+            row = by_term[t]
+            d, tf_, dl_ = codec.decode_postings(
+                row.doc_blob, row.tf_blob, row.dl_blob
+            )
+            pos = codec.decode_positions(row.pos_blob, tf_)
+            ldoc = d.astype(np.int64) - base
+            if only_ids is not None:
+                w = np.isin(ldoc + base, only_ids)
+                pos = pos[np.repeat(w, tf_)]
+                ldoc, tf_, dl_ = ldoc[w], tf_[w], dl_[w]
+                if ldoc.size == 0:
+                    return empty
+            dec[t] = (ldoc, dl_, tf_, pos)
+        found = freq(dec)
+        if found is None:
+            return empty
+        hit, f = found
+        f = f.astype(np.float64)
+        ldoc0, dl0, _tf, _pos = dec[stored[0]]
+        dls = dl0[np.searchsorted(ldoc0, hit)].astype(np.float64)
+        score = idf_sum * f / (f + k1 * (1.0 - b + b * dls / avgdl))
+        if hit.size > k:
+            top = np.argpartition(-score, k - 1)[:k]
+            thresh = score[top].min()
+            keep = score >= thresh  # boundary ties → doc_id tiebreak
+            hit, score = hit[keep], score[keep]
+        order = np.lexsort((hit, -score))[:k]
+        return pd.DataFrame({
+            "doc_id": (hit[order] + base).astype(np.int64),
+            "score": score[order],
+        })
+
+    return scorer
+
+
+class _Query(NamedTuple):
+    """A query after term resolution: the live (lexicon-present) stored
+    terms in sorted order with their per-field idf × boost and avgdl, the
+    MUST_NOT terms, and the fq clauses (each an OR of stored terms)."""
+    live: List[str]
+    idfs: List[float]
+    avgdls: List[float]
+    neg: List[str]
+    filters: List[List[str]]
+    mode: str
+    min_match: int
+
+    @property
+    def scan_terms(self) -> List[str]:
+        return self.live + self.neg + sorted(
+            {t for cl in self.filters for t in cl})
+
+
 class QueryEngine:
     """Reads a committed index; answers top-k / facet / range queries."""
 
     def __init__(self, spark: SparkSession, index_dir: str,
-                 config: Optional[IndexConfig] = None, cache: bool = True):
-        """``cache=True`` pins postings + lexicon via DataFrame cache
-        (MEMORY_AND_DISK): a long-lived query service keeps its index hot,
-        cutting steady-state latency ~2-15x (parquet footer reads, file
-        listing and decode all disappear from the per-query path).  Cache is
-        partition-grained and spills, so it degrades gracefully when the
-        index exceeds cluster memory; a snapshot-bound engine never sees
-        stale data (call ``refresh()`` after an incremental merge)."""
+                 config: Optional[IndexConfig] = None):
+        """Postings + lexicon are pinned via DataFrame cache
+        (MEMORY_AND_DISK) on first use: a long-lived query service keeps
+        its index hot, cutting steady-state latency ~2-15x (parquet footer
+        reads, file listing and decode all disappear from the per-query
+        path).  Cache is partition-grained and spills, so it degrades
+        gracefully when the index exceeds cluster memory; a snapshot-bound
+        engine never sees stale data (call ``refresh()`` after an
+        incremental merge)."""
         self.spark = spark
         self.storage = IndexStorage(index_dir)
         self.config = config or IndexConfig()
-        self._cache = cache
         self._postings = None
         self._lexicon = None
         #: driver-side (df, cf) cache — absent terms cached as None so a
@@ -514,9 +741,15 @@ class QueryEngine:
         #: service's vocabulary is Zipfian, so this halves steady-state
         #: job count.  Bounded: one small tuple per distinct queried term.
         self._term_cache: dict = {}
+        self._load_commit()
+
+    def _load_commit(self) -> None:
+        """Check the commit marker and config hash, then read the per-field
+        corpus statistics of the committed index."""
         commit = self.storage.read_commit()
         if commit is None:
-            raise FileNotFoundError(f"no committed index at {index_dir}")
+            raise FileNotFoundError(
+                f"no committed index at {self.storage.index_dir}")
         if commit["config_hash"] != self.config.config_hash():
             raise ValueError(
                 "index was built with a different config "
@@ -524,23 +757,13 @@ class QueryEngine:
                 "rebuild required (reference pattern: transform-hash "
                 "invalidation, IndexRecordsForV4.java:44-64)"
             )
-        rows = self.storage.read(spark, "corpus_stats").collect()
+        rows = self.storage.read(self.spark, "corpus_stats").collect()
         #: per-field (n_docs, avgdl) — per-field norms (SURVEY §2.8-T10)
         self.field_stats = {
             r["field"]: (int(r["n_docs"]), float(r["avgdl"])) for r in rows
         }
         default = self.config.fields[0]
         self.n_docs, self.avgdl = self.field_stats[default]
-
-    @staticmethod
-    def _require_k(k: int, name: str = "k") -> None:
-        """Lucene's TopDocs contract: n must be >= 1 (IllegalArgumentException
-        there; a descriptive ValueError here).  The numpy top-k cuts in the
-        shard kernels (np.partition / argpartition) fail with opaque
-        bounds errors on k=0, so reject it at the API edge; a caller who
-        wants only the match COUNT uses count()/match_ids()."""
-        if int(k) < 1:
-            raise ValueError(f"{name} must be >= 1, got {k}")
 
     @staticmethod
     def _norm_mode(mode: str) -> str:
@@ -564,31 +787,29 @@ class QueryEngine:
                 return prefix, term
         return default, term
 
+    def _stored(self, terms: Sequence[str]) -> List[str]:
+        return sorted({self._parse_term(t)[1] for t in terms})
+
     def _postings_df(self) -> DataFrame:
-        if self._postings is not None:
-            return self._postings
-        p = self.storage.read(self.spark, "postings")
-        if self._cache:
-            p = p.cache()
-        self._postings = p
-        return p
+        if self._postings is None:
+            self._postings = self.storage.read(self.spark, "postings").cache()
+        return self._postings
 
     def _lexicon_df(self) -> DataFrame:
-        if self._lexicon is not None:
-            return self._lexicon
-        lx = self.storage.read(self.spark, "lexicon")
-        if self._cache:
-            lx = lx.cache()
-        self._lexicon = lx
-        return lx
+        if self._lexicon is None:
+            self._lexicon = self.storage.read(self.spark, "lexicon").cache()
+        return self._lexicon
 
     def refresh(self) -> None:
-        """Drop cached index tables (call after an incremental merge)."""
+        """Re-open the committed index (call after an incremental merge):
+        drop the cached tables and term stats, re-check the commit, and
+        re-read the corpus statistics."""
         for df in (self._postings, self._lexicon):
             if df is not None:
                 df.unpersist()
         self._postings = self._lexicon = None
         self._term_cache.clear()
+        self._load_commit()
 
     # --- term stats (T4) ---
     def term_stats(self, terms: Sequence[str]) -> dict:
@@ -604,6 +825,69 @@ class QueryEngine:
             for t in set(terms)
             if self._term_cache[t] is not None
         }
+
+    def _resolve(self, terms: Sequence[str], mode: str = "or",
+                 exclude: Sequence[str] = (),
+                 filters: Sequence[Sequence[str]] = (),
+                 boosts: Optional[dict] = None, min_match: int = 1,
+                 mult: Optional[dict] = None,
+                 global_stats: Optional[tuple] = None) -> Optional[_Query]:
+        """The one term-resolution step of every BM25 surface: parse field
+        scopes → stored terms → ``term_stats`` → live terms → per-field
+        idf × boost × ``mult`` (the clause multiplicity, keyed by stored
+        term) and avgdl → MUST_NOT terms → fq clauses.  Returns None when
+        the query is statically empty: an absent AND term, fewer live
+        terms than ``min_match``, or an empty fq clause.
+
+        ``global_stats`` (ExactStatsCache): LOCAL term presence still
+        decides which terms can match here, but df/N/avgdl in the idf and
+        norm come from the supplied merged statistics."""
+        mode = self._norm_mode(mode)
+        fields = {s: f for f, s in map(self._parse_term, terms)}
+        uniq = sorted(fields)
+        stats = self.term_stats(uniq)
+        live = [t for t in uniq if t in stats]
+        fstats = self.field_stats
+        if global_stats is not None:
+            g_terms, fstats = global_stats
+            stats = {t: g_terms[t] for t in live}
+        if mode == "and" and len(live) != len(uniq):
+            return None  # an absent term empties an AND query
+        if len(live) < max(1, min_match):
+            return None  # mm exceeding the live terms can never be satisfied
+        fcl = [self._stored(cl) for cl in filters]
+        if any(not cl for cl in fcl):
+            return None
+        boost_of = {self._parse_term(t)[1]: float(w)
+                    for t, w in (boosts or {}).items()}
+        mult = mult or {}
+        # idf from the term's OWN field corpus (per-field N and avgdl)
+        idfs = [
+            lucene_idf(fstats[fields[t]][0], stats[t][0])
+            * boost_of.get(t, 1.0) * mult.get(t, 1)
+            for t in live
+        ]
+        avgdls = [fstats[fields[t]][1] for t in live]
+        return _Query(live, idfs, avgdls, self._stored(exclude), fcl, mode,
+                      min_match)
+
+    def _shard_scan(self, terms: Sequence[str], columns: Sequence[str],
+                    kernel, schema: str, shards=None) -> DataFrame:
+        """The query layer's one grouped-map scan: the postings rows of
+        ``terms`` (optionally only in ``shards``), projected to
+        ``columns``, one Arrow batch per doc_shard through ``kernel``."""
+        return self._postings_scan(terms, columns, shards).groupBy(
+            "doc_shard").applyInPandas(kernel, schema=schema)
+
+    def _postings_scan(self, terms, columns, shards=None) -> DataFrame:
+        cond = F.col("term").isin(list(terms))
+        if shards is not None:
+            cond = cond & F.col("doc_shard").isin(list(shards))
+        return self._postings_df().filter(cond).select(
+            "doc_shard", "term", *columns)
+
+    def _no_hits(self, schema: str = _SCORED) -> DataFrame:
+        return self.spark.createDataFrame([], schema)
 
     # --- the headline operator: BM25 top-k (T6/T7/T8) ---
     def search(self, terms: Sequence[str], k: int = 10, mode: str = "or",
@@ -650,90 +934,27 @@ class QueryEngine:
         this index's own corpus statistics in the idf/norm computation —
         local postings still decide which docs match, but every member of
         a multi-index collection scores under the SAME merged stats."""
-        partials = self._score_partials(
-            terms, mode, k + offset, exclude, boosts, min_should_match,
-            filters, global_stats=global_stats,
-        )
-        if partials is None:
-            return self.spark.createDataFrame([], "doc_id long, score double")
-        ordered = partials.orderBy(F.desc("score"), F.asc("doc_id"))
-        if offset:
-            ordered = ordered.offset(offset)
-        return ordered.limit(k)
+        q = self._resolve(terms, mode, exclude, filters, boosts,
+                          min_should_match, global_stats=global_stats)
+        return _page(self._score_partials(q, k + offset), k, offset)
 
-    def _score_partials(self, terms, mode, kk, exclude, boosts,
-                        min_should_match, filters,
+    def _score_partials(self, q: Optional[_Query], kk: int,
                         return_all: bool = False,
-                        global_stats: Optional[tuple] = None
-                        ) -> Optional[DataFrame]:
-        """Shared setup for scored retrieval: stats → idfs → pruned postings
-        scan → per-shard kernel.  Returns the unordered per-shard partials
-        (top-kk rows each, or EVERY matching doc when ``return_all``), or
-        None when the query is statically empty.
-
-        ``global_stats`` (ExactStatsCache): LOCAL term presence still
-        decides which terms can match here, but df/N/avgdl in the idf and
-        norm come from the supplied merged statistics."""
-        if not return_all:
-            self._require_k(kk)
-        mode = self._norm_mode(mode)
-        parsed = {self._parse_term(t) for t in terms}
-        uniq = sorted(stored for _f, stored in parsed)
-        fields = {stored: f for f, stored in parsed}
-        stats = self.term_stats(uniq)
-        live = [t for t in uniq if t in stats]
-        fstats = self.field_stats
-        if global_stats is not None:
-            g_terms, fstats = global_stats
-            stats = {t: g_terms[t] for t in live}
-        if mode == "and" and len(live) != len(uniq):
-            live = []  # an absent term empties an AND query
-        if len(live) < max(1, min_should_match):
-            live = []  # mm exceeding the live terms can never be satisfied
-        if not live:
-            return None
-        neg = sorted({stored for _f, stored in
-                      (self._parse_term(t) for t in exclude)})
-        fcl = [
-            sorted({stored for _f, stored in
-                    (self._parse_term(t) for t in cl)})
-            for cl in filters
-        ]
-        if any(not cl for cl in fcl):
-            return None
-        flt_terms = sorted({t for cl in fcl for t in cl})
-        boost_of = {}
-        for t, w in (boosts or {}).items():
-            _f, stored = self._parse_term(t)
-            boost_of[stored] = float(w)
-        # idf from the term's OWN field corpus (per-field N and avgdl)
-        idfs = [
-            lucene_idf(fstats[fields[t]][0], stats[t][0])
-            * boost_of.get(t, 1.0)
-            for t in live
-        ]
-        avgdls = [fstats[fields[t]][1] for t in live]
-
-        # project pos_blob (and cf) OUT before the Arrow hand-off: scoring
-        # never reads positions, and shipping them would roughly double the
-        # per-query transfer bytes
-        postings = self._postings_df().filter(
-            F.col("term").isin(live + neg + flt_terms)
-        ).select(
-            "doc_shard", "term", "doc_blob", "tf_blob", "dl_blob",
-            "block_last_doc", "block_max_tf", "block_min_dl",
-            "block_doc_off", "block_tf_off", "block_dl_off",
-        )
+                        term_clauses: Optional[List[List[int]]] = None,
+                        n_clauses: int = 0) -> DataFrame:
+        """The BM25 shard scan of a resolved query: the unordered
+        per-shard partials (top-kk rows each, or EVERY matching doc when
+        ``return_all``); no rows when ``q`` is statically empty."""
+        if q is None:
+            return self._no_hits()
         scorer = _make_shard_scorer(
-            live, idfs, avgdls, kk, self.config.k1, self.config.b,
-            self.config.docs_per_shard, mode, neg_terms=neg,
-            min_match=min_should_match,
-            filter_clauses=fcl or None,
+            q.live, q.idfs, q.avgdls, kk, self.config.k1, self.config.b,
+            self.config.docs_per_shard, q.mode, neg_terms=q.neg,
+            min_match=q.min_match, term_clauses=term_clauses,
+            n_clauses=n_clauses, filter_clauses=q.filters or None,
             return_all=return_all,
         )
-        return postings.groupBy("doc_shard").applyInPandas(
-            scorer, schema="doc_id long, score double"
-        )
+        return self._shard_scan(q.scan_terms, _BLOCK_COLS, scorer, _SCORED)
 
     # --- the full scored match set (the primitive behind Solr grouping /
     # field sorting: Lucene's collectors also visit every match) ---
@@ -749,13 +970,9 @@ class QueryEngine:
         kernel as ``search`` minus the per-shard top-k truncation; output
         size equals the match set, and no pruning runs (every score is
         needed).  Use for grouping/sorting, not for plain top-k."""
-        partials = self._score_partials(
-            terms, mode, 0, exclude, boosts, min_should_match, filters,
-            return_all=True,
-        )
-        if partials is None:
-            return self.spark.createDataFrame([], "doc_id long, score double")
-        return partials
+        q = self._resolve(terms, mode, exclude, filters, boosts,
+                          min_should_match)
+        return self._score_partials(q, 0, return_all=True)
 
     # --- Solr result grouping (group=true&group.field=f): top docs per
     # group, groups ordered by their best doc ---
@@ -787,43 +1004,22 @@ class QueryEngine:
         ``global_stats`` are deliberately NOT threaded through this fused
         kernel — compose ``score_matches`` + a window for those rarer
         combinations."""
-        self._require_k(k_per_group, "k_per_group")
-        mode = self._norm_mode(mode)
-        parsed = {self._parse_term(t) for t in terms}
-        uniq = sorted(stored for _f, stored in parsed)
-        fieldmap = {stored: f for f, stored in parsed}
-        stats = self.term_stats(uniq)
-        live = [t for t in uniq if t in stats]
-        if mode == "and" and len(live) != len(uniq):
-            live = []
+        if int(k_per_group) < 1:
+            raise ValueError(f"k_per_group must be >= 1, got {k_per_group}")
+        q = self._resolve(terms, mode, exclude, filters)
         dm_full = self.storage.read(self.spark, "doc_map")
         gtype = dm_full.schema[group_field].dataType.simpleString()
         out_schema = (f"{group_field} {gtype}, doc_id long, score double")
-        if not live:
-            return self.spark.createDataFrame(
-                [], out_schema + ", rank_in_group int"
-            ).select(group_field, "rank_in_group", "doc_id", "score")
-        neg = sorted({stored for _f, stored in
-                      (self._parse_term(t) for t in exclude)})
-        fcl = [
-            sorted({stored for _f, stored in
-                    (self._parse_term(t) for t in cl)})
-            for cl in filters
-        ]
-        if any(not cl for cl in fcl):
-            return self.spark.createDataFrame(
-                [], out_schema + ", rank_in_group int"
-            ).select(group_field, "rank_in_group", "doc_id", "score")
-        flt_terms = sorted({t for cl in fcl for t in cl})
-        idfs = [lucene_idf(self.field_stats[fieldmap[t]][0], stats[t][0])
-                for t in live]
-        avgdls = [self.field_stats[fieldmap[t]][1] for t in live]
+        if q is None:
+            return self._no_hits(out_schema + ", rank_in_group int").select(
+                group_field, "rank_in_group", "doc_id", "score")
+        live, idfs, avgdls, neg = q.live, q.idfs, q.avgdls, q.neg
         kpg = int(k_per_group)
         k1, b = self.config.k1, self.config.b
         docs_per_shard = self.config.docs_per_shard
         n_query_terms = len(live)
-        is_and = mode == "and"
-        fcl_k = fcl or None
+        is_and = q.mode == "and"
+        fcl_k = q.filters or None
 
         from archivesspace_virgo_spark import codec  # re-imported on workers
 
@@ -893,9 +1089,7 @@ class QueryEngine:
             return out.groupby(group_field, sort=False,
                                dropna=False).head(kpg)
 
-        postings = self._postings_df().filter(
-            F.col("term").isin(live + neg + flt_terms)
-        ).select("doc_shard", "term", "doc_blob", "tf_blob", "dl_blob")
+        postings = self._postings_scan(q.scan_terms, _SCORE_COLS)
         dm = dm_full.select(
             F.expr(f"doc_id div {docs_per_shard}").alias("doc_shard"),
             "doc_id", group_field,
@@ -933,7 +1127,6 @@ class QueryEngine:
         entirely — the unranked match set semi-joins the column-pruned
         doc_map scan and TakeOrdered merges ≤k rows, exactly like
         ``facet_search``'s cost shape, whatever the key count."""
-        self._require_k(k + offset)
         spec = parse_sort_spec(sort_field, ascending)
         # doc_id may appear in the spec ("sort=doc_id desc"): it is always
         # selected as the identity/tiebreak column, so keep it out of the
@@ -948,13 +1141,8 @@ class QueryEngine:
             "doc_id", *fields
         )
         keys = [F.asc(f) if a else F.desc(f) for f, a in spec]
-        ordered = (
-            dm.join(hits, "doc_id", "left_semi")
-            .orderBy(*keys, F.asc("doc_id"))
-        )
-        if offset:
-            ordered = ordered.offset(offset)
-        return ordered.limit(k).select("doc_id", *fields)
+        return _page(dm.join(hits, "doc_id", "left_semi"), k, offset,
+                     *keys, F.asc("doc_id")).select("doc_id", *fields)
 
     # --- per-term contribution relation (the primitive under DisMax) ---
     def term_scores(self, terms: Sequence[str]) -> DataFrame:
@@ -962,26 +1150,14 @@ class QueryEngine:
         each doc containing it — one kernel pass, no qualification, no
         pruning.  ``terms`` may be field-scoped; absent terms yield no
         rows."""
-        parsed = {self._parse_term(t) for t in terms}
-        uniq = sorted(stored for _f, stored in parsed)
-        fields = {stored: f for f, stored in parsed}
-        stats = self.term_stats(uniq)
-        live = [t for t in uniq if t in stats]
-        if not live:
-            return self.spark.createDataFrame(
-                [], "doc_id long, term string, contrib double")
-        idfs = [lucene_idf(self.field_stats[fields[t]][0], stats[t][0])
-                for t in live]
-        avgdls = [self.field_stats[fields[t]][1] for t in live]
-        postings = self._postings_df().filter(
-            F.col("term").isin(live)
-        ).select("doc_shard", "term", "doc_blob", "tf_blob", "dl_blob")
+        q = self._resolve(terms)
+        schema = "doc_id long, term string, contrib double"
+        if q is None:
+            return self._no_hits(schema)
         kern = _make_term_contrib_kernel(
-            live, idfs, avgdls, self.config.k1, self.config.b
+            q.live, q.idfs, q.avgdls, self.config.k1, self.config.b
         )
-        return postings.groupBy("doc_shard").applyInPandas(
-            kern, schema="doc_id long, term string, contrib double"
-        )
+        return self._shard_scan(q.live, _SCORE_COLS, kern, schema)
 
     # --- Lucene Explanation / Solr debugQuery=true: per-term score
     # breakdown for specific documents ---
@@ -992,30 +1168,15 @@ class QueryEngine:
         ``search`` score (same kernel arithmetic; the per-doc tf/dl are
         decoded from the same postings).  Bounded output: |docs|·|terms|
         rows; the postings scan is still pruned to the query terms."""
+        schema = ("doc_id long, term string, idf double, tf long, "
+                  "dl long, contrib double")
         ids = sorted({int(d) for d in doc_ids})
-        if not ids:
-            return self.spark.createDataFrame(
-                [], "doc_id long, term string, idf double, tf long, "
-                    "dl long, contrib double")
-        parsed = {self._parse_term(t) for t in terms}
-        uniq = sorted(stored for _f, stored in parsed)
-        fields = {stored: f for f, stored in parsed}
-        stats = self.term_stats(uniq)
-        live = [t for t in uniq if t in stats]
-        if not live:
-            return self.spark.createDataFrame(
-                [], "doc_id long, term string, idf double, tf long, "
-                    "dl long, contrib double")
-        boost_of = {}
-        for t, w in (boosts or {}).items():
-            _f, stored = self._parse_term(t)
-            boost_of[stored] = float(w)
-        idfs = [lucene_idf(self.field_stats[fields[t]][0], stats[t][0])
-                * boost_of.get(t, 1.0) for t in live]
-        avgdls = [self.field_stats[fields[t]][1] for t in live]
+        q = self._resolve(terms, boosts=boosts) if ids else None
+        if q is None:
+            return self._no_hits(schema)
         k1, b = self.config.k1, self.config.b
         docs_per_shard = self.config.docs_per_shard
-        params = dict(zip(live, zip(idfs, avgdls)))
+        params = dict(zip(q.live, zip(q.idfs, q.avgdls)))
         shards = sorted({d // docs_per_shard for d in ids})
 
         from archivesspace_virgo_spark import codec  # re-imported on workers
@@ -1066,13 +1227,8 @@ class QueryEngine:
                 "contrib": np.concatenate(contrib_c),
             })
 
-        postings = self._postings_df().filter(
-            F.col("term").isin(live) & F.col("doc_shard").isin(shards)
-        ).select("doc_shard", "term", "doc_blob", "tf_blob", "dl_blob")
-        return postings.groupBy("doc_shard").applyInPandas(
-            kern, schema="doc_id long, term string, idf double, tf long, "
-                         "dl long, contrib double"
-        ).orderBy("doc_id", "term")
+        return self._shard_scan(q.live, _SCORE_COLS, kern, schema,
+                                shards).orderBy("doc_id", "term")
 
     # --- Solr DisMax (defType=dismax, qf=f1 f2 ..., tie=t): per query
     # term, a DisjunctionMaxQuery across the qf fields; terms combine as a
@@ -1097,7 +1253,6 @@ class QueryEngine:
         per-shard kernel pass as ``search`` — only ≤k partial rows per
         shard reach the TakeOrdered merge (pinned in
         tests/test_dismax.py)."""
-        self._require_k(k + offset)
         fields = list(fields or self.config.fields)
         default = self.config.fields[0]
         # duplicated query terms keep Lucene's m-times clause contribution
@@ -1114,28 +1269,20 @@ class QueryEngine:
         stats = self.term_stats([s for s, _b, _f in pairs])
         live = [(s, bare, f) for s, bare, f in pairs if s in stats]
         if not live:
-            return self.spark.createDataFrame([], "doc_id long, score double")
+            return _page(self._no_hits(), k, offset)
         stored_terms = [s for s, _b, _f in live]
         bare_of = [bare for _s, bare, _f in live]
         idfs = [lucene_idf(self.field_stats[f][0], stats[s][0])
                 * mult[bare]
                 for s, bare, f in live]
         avgdls = [self.field_stats[f][1] for _s, _b, f in live]
-        postings = self._postings_df().filter(
-            F.col("term").isin(stored_terms)
-        ).select("doc_shard", "term", "doc_blob", "tf_blob", "dl_blob")
         scorer = _make_dismax_scorer(
             stored_terms, bare_of, idfs, avgdls, k + offset,
             self.config.k1, self.config.b, self.config.docs_per_shard,
             float(tie),
         )
-        partials = postings.groupBy("doc_shard").applyInPandas(
-            scorer, schema="doc_id long, score double"
-        )
-        ordered = partials.orderBy(F.desc("score"), F.asc("doc_id"))
-        if offset:
-            ordered = ordered.offset(offset)
-        return ordered.limit(k)
+        return _page(self._shard_scan(stored_terms, _SCORE_COLS, scorer,
+                                      _SCORED), k, offset)
 
     # --- Lucene BooleanQuery of MUST clauses (the reference's compound
     # query shape: ``getQuery(...) + " AND types:repository"``
@@ -1183,67 +1330,26 @@ class QueryEngine:
                                exclude=exclude, boosts=merged or None,
                                filters=filters)
         term_cl: dict = {}
-        fields: dict = {}
-        opt_count: dict = {}
+        mult: dict = {}
         for ci, cl in enumerate(clauses):
-            for t in cl:
-                f, stored = self._parse_term(t)
-                term_cl.setdefault(stored, set()).add(ci)
-                fields[stored] = f
+            for t in self._stored(cl):
+                term_cl.setdefault(t, set()).add(ci)
+                mult[t] = mult.get(t, 0) + 1
         for t in optional_terms:
-            f, stored = self._parse_term(t)
-            opt_count[stored] = opt_count.get(stored, 0) + 1
-            term_cl.setdefault(stored, set())
-            fields[stored] = f
-        uniq = sorted(term_cl)
-        stats = self.term_stats(uniq)
-        live = [t for t in uniq if t in stats]
-        covered = set().union(*(term_cl[t] for t in live)) if live else set()
-        if len(covered) < len(clauses):
-            # a clause whose every term is absent can never be satisfied
-            return self.spark.createDataFrame([], "doc_id long, score double")
-        neg = sorted({stored for _f, stored in
-                      (self._parse_term(t) for t in exclude)})
-        fcl = [
-            sorted({stored for _f, stored in
-                    (self._parse_term(t) for t in cl)})
-            for cl in filters
-        ]
-        if any(not cl for cl in fcl):
-            return self.spark.createDataFrame([], "doc_id long, score double")
-        flt_terms = sorted({t for cl in fcl for t in cl})
-        boost_of = {}
-        for t, w in (boosts or {}).items():
             _f, stored = self._parse_term(t)
-            boost_of[stored] = float(w)
-        idfs = [
-            lucene_idf(self.field_stats[fields[t]][0], stats[t][0])
-            * boost_of.get(t, 1.0)
-            * (len(term_cl[t]) + opt_count.get(t, 0))
-            for t in live
-        ]
-        avgdls = [self.field_stats[fields[t]][1] for t in live]
-        postings = self._postings_df().filter(
-            F.col("term").isin(live + neg + flt_terms)
-        ).select(
-            "doc_shard", "term", "doc_blob", "tf_blob", "dl_blob",
-            "block_last_doc", "block_max_tf", "block_min_dl",
-            "block_doc_off", "block_tf_off", "block_dl_off",
-        )
-        scorer = _make_shard_scorer(
-            live, idfs, avgdls, k + offset, self.config.k1, self.config.b,
-            self.config.docs_per_shard, "or", neg_terms=neg,
-            term_clauses=[sorted(term_cl[t]) for t in live],
+            mult[stored] = mult.get(stored, 0) + 1
+            term_cl.setdefault(stored, set())
+        q = self._resolve(list(term_cl), exclude=exclude, filters=filters,
+                          boosts=boosts, mult=mult)
+        if q is None or len(set().union(*(term_cl[t] for t in q.live))) \
+                < len(clauses):
+            # a clause whose every term is absent can never be satisfied
+            return _page(self._no_hits(), k, offset)
+        partials = self._score_partials(
+            q, k + offset, term_clauses=[sorted(term_cl[t]) for t in q.live],
             n_clauses=len(clauses),
-            filter_clauses=fcl or None,
         )
-        partials = postings.groupBy("doc_shard").applyInPandas(
-            scorer, schema="doc_id long, score double"
-        )
-        ordered = partials.orderBy(F.desc("score"), F.asc("doc_id"))
-        if offset:
-            ordered = ordered.offset(offset)
-        return ordered.limit(k)
+        return _page(partials, k, offset)
 
     # --- multi-term query rewrites (Lucene MultiTermQuery family; the
     # Solr wildcard/fuzzy syntax of q=pre* / q=term~1 the reference's
@@ -1297,7 +1403,7 @@ class QueryEngine:
         expansion to that field's terms (stored as ``field:term``)."""
         terms = self._expand_prefix(prefix, max_expansions)
         if not terms:
-            return self.spark.createDataFrame([], "doc_id long, score double")
+            return self._no_hits()
         return self.search(terms, k=k, mode="or", offset=offset)
 
     def _fuzzy_pred(self, field: str, stored: str, max_edits: int,
@@ -1340,7 +1446,7 @@ class QueryEngine:
         terms = self._expand_fuzzy(term, max_edits, prefix_length,
                                    max_expansions)
         if not terms:
-            return self.spark.createDataFrame([], "doc_id long, score double")
+            return self._no_hits()
         return self.search(terms, k=k, mode="or", offset=offset)
 
     def _expand_wildcard(self, pattern: str, max_expansions: int) -> List[str]:
@@ -1363,7 +1469,7 @@ class QueryEngine:
         the expansion as a boolean OR."""
         terms = self._expand_wildcard(pattern, max_expansions)
         if not terms:
-            return self.spark.createDataFrame([], "doc_id long, score double")
+            return self._no_hits()
         return self.search(terms, k=k, mode="or", offset=offset)
 
     def _expand_regexp(self, regex: str, max_expansions: int) -> List[str]:
@@ -1385,7 +1491,7 @@ class QueryEngine:
         ``field:regex`` scopes to that field's terms."""
         terms = self._expand_regexp(regex, max_expansions)
         if not terms:
-            return self.spark.createDataFrame([], "doc_id long, score double")
+            return self._no_hits()
         return self.search(terms, k=k, mode="or", offset=offset)
 
     def term_range_search(self, lo: Optional[str], hi: Optional[str],
@@ -1402,7 +1508,7 @@ class QueryEngine:
         terms = self._expand_range(lo, hi, include_lo, include_hi, field,
                                    max_expansions)
         if not terms:
-            return self.spark.createDataFrame([], "doc_id long, score double")
+            return self._no_hits()
         return self.search(terms, k=k, mode="or", offset=offset)
 
     def _expand_range(self, lo: Optional[str], hi: Optional[str],
@@ -1486,7 +1592,7 @@ class QueryEngine:
                                        optional_terms=opt)
         terms = list(pq.terms) + [t for ex in expansions for t in ex]
         if not terms:
-            return self.spark.createDataFrame([], "doc_id long, score double")
+            return self._no_hits()
         return self.search(terms, k=k, mode=pq.mode, offset=offset,
                            exclude=pq.exclude, boosts=pq.boosts or None)
 
@@ -1612,108 +1718,54 @@ class QueryEngine:
         window): the postings scan prunes to their shards and the kernel
         masks candidates, so the cost is bounded by the window.
         """
+        return self._phrase_family(phrase, 0, k, field, offset, only_doc_ids,
+                                   _exact_freq)
+
+    def _phrase_family(self, phrase, slop: int, k: int,
+                       field: Optional[str], offset: int,
+                       only_doc_ids: Optional[Sequence[int]],
+                       make_freq) -> DataFrame:
+        """Preamble, scan and paging tail shared by the phrase family;
+        ``make_freq(stored, slop)`` supplies the per-shard frequency step
+        (exact ptf, ordered-span sf or sloppy sf).  Lucene's phrase
+        weight: idf = SUM of the phrase terms' idfs (duplicates counted)
+        under the phrase field's own N and avgdl."""
         from archivesspace_virgo_spark.tokenizer import tokenize_text
 
-        self._require_k(k + offset)
         terms = tokenize_text(phrase) if isinstance(phrase, str) else list(phrase)
-        empty = self.spark.createDataFrame([], "doc_id long, score double")
         if not terms:
-            return empty
+            return _page(self._no_hits(), k, offset)
+        if slop < 0:
+            raise ValueError("slop must be >= 0")
         if only_doc_ids is not None and not len(only_doc_ids):
-            return empty
+            return _page(self._no_hits(), k, offset)
         default = self.config.fields[0]
         field = field or default
         stored = [t if field == default else f"{field}:{t}" for t in terms]
         uniq = sorted(set(stored))
         stats = self.term_stats(uniq)
         if len(stats) != len(uniq):
-            return empty  # a missing term empties a phrase query
+            # a missing term empties a phrase query
+            return _page(self._no_hits(), k, offset)
         n_docs_f, avgdl_f = self.field_stats[field]
         idf_sum = float(
             sum(lucene_idf(n_docs_f, stats[t][0]) for t in stored)
         )
-        k1, b = self.config.k1, self.config.b
-        docs_per_shard = self.config.docs_per_shard
-        only_ids = (np.asarray(sorted(set(only_doc_ids)), dtype=np.int64)
-                    if only_doc_ids is not None else None)
+        only_ids = shards = None
+        if only_doc_ids is not None:
+            only_ids = np.asarray(sorted(set(only_doc_ids)), dtype=np.int64)
+            shards = sorted({int(d) // self.config.docs_per_shard
+                             for d in only_ids})
         # plain k+offset even with a rerank window: per-shard top-(k+offset)
         # partials + the global TakeOrdered merge are already exact for
-        # top-k, so inflating the per-shard cut to the window size only
-        # shuffled extra partial rows (rerank passes k = window size anyway)
-        kk = k + offset
-
-        from archivesspace_virgo_spark import codec  # re-imported on workers
-
-        def scorer(pdf: pd.DataFrame) -> pd.DataFrame:
-            empty_p = pd.DataFrame({"doc_id": pd.Series(dtype="int64"),
-                                    "score": pd.Series(dtype="float64")})
-            by_term = {
-                t: row
-                for t, row in zip(pdf["term"], pdf.itertuples(index=False))
-            }
-            if any(t not in by_term for t in uniq):
-                return empty_p  # phrase is an AND across its terms
-            shard = int(pdf["doc_shard"].iloc[0])
-            base = shard * docs_per_shard
-            dec = {}
-            for t in uniq:
-                row = by_term[t]
-                d, tf_, dl_ = codec.decode_postings(
-                    row.doc_blob, row.tf_blob, row.dl_blob
-                )
-                pos = codec.decode_positions(row.pos_blob, tf_)
-                ldoc = d.astype(np.int64) - base
-                dec[t] = (ldoc, dl_, np.repeat(ldoc, tf_), pos)
-            M = np.int64(1) << np.int64(33)  # > any real doc length
-            keys = None
-            for i, t in enumerate(stored):
-                _, _, occ_doc, pos = dec[t]
-                valid = pos >= i
-                key = occ_doc[valid] * M + (pos[valid] - i)
-                keys = key if keys is None else np.intersect1d(
-                    keys, key, assume_unique=True
-                )
-                if keys.size == 0:
-                    return empty_p
-            hit, ptf = np.unique(keys // M, return_counts=True)
-            if only_ids is not None:
-                keep_w = np.isin(hit + base, only_ids)
-                hit, ptf = hit[keep_w], ptf[keep_w]
-                if hit.size == 0:
-                    return empty_p
-            ldoc0, dl0, _, _ = dec[stored[0]]
-            dls = dl0[np.searchsorted(ldoc0, hit)].astype(np.float64)
-            ptf = ptf.astype(np.float64)
-            score = idf_sum * ptf / (
-                ptf + k1 * (1.0 - b + b * dls / avgdl_f)
-            )
-            if hit.size > kk:
-                top = np.argpartition(-score, kk - 1)[:kk]
-                thresh = score[top].min()
-                keep = score >= thresh  # boundary ties → doc_id tiebreak
-                hit, score = hit[keep], score[keep]
-            order = np.lexsort((hit, -score))[:kk]
-            return pd.DataFrame({
-                "doc_id": (hit[order] + base).astype(np.int64),
-                "score": score[order],
-            })
-
-        postings = self._postings_df().filter(F.col("term").isin(uniq))
-        if only_ids is not None:
-            shards = sorted({int(d) // docs_per_shard for d in only_ids})
-            postings = postings.filter(F.col("doc_shard").isin(shards))
-        postings = postings.select(
-            "doc_shard", "term", "doc_blob", "tf_blob", "dl_blob", "pos_blob"
+        # top-k (rerank passes k = window size anyway)
+        scorer = _make_phrase_scorer(
+            stored, make_freq(stored, slop), idf_sum, avgdl_f, k + offset,
+            self.config.k1, self.config.b, self.config.docs_per_shard,
+            only_ids,
         )
-        partials = postings.groupBy("doc_shard").applyInPandas(
-            scorer, schema="doc_id long, score double"
-        )
-        ordered = partials.orderBy(F.desc("score"), F.asc("doc_id"))
-        if offset:
-            ordered = ordered.offset(offset)
-        # external contract is always ≤k rows; only_doc_ids callers that
-        # need the whole window (rerank) pass k = window size
-        return ordered.limit(k)
+        return _page(self._shard_scan(uniq, _POS_COLS, scorer, _SCORED,
+                                      shards), k, offset)
 
     # --- ordered proximity query (Lucene SpanNearQuery(inOrder=true) /
     # the Solr ``"a b"~N`` proximity surface; built on the same stored v7
@@ -1743,121 +1795,8 @@ class QueryEngine:
         same combined ``doc·2^33 + position`` key trick as phrase_search,
         one ``searchsorted`` per query term, no per-doc loop).
         """
-        from archivesspace_virgo_spark.tokenizer import tokenize_text
-
-        self._require_k(k + offset)
-        terms = tokenize_text(phrase) if isinstance(phrase, str) else list(phrase)
-        empty = self.spark.createDataFrame([], "doc_id long, score double")
-        if not terms:
-            return empty
-        if slop < 0:
-            raise ValueError("slop must be >= 0")
-        if only_doc_ids is not None and not len(only_doc_ids):
-            return empty
-        default = self.config.fields[0]
-        field = field or default
-        stored = [t if field == default else f"{field}:{t}" for t in terms]
-        uniq = sorted(set(stored))
-        stats = self.term_stats(uniq)
-        if len(stats) != len(uniq):
-            return empty  # a missing term empties the span query
-        n_docs_f, avgdl_f = self.field_stats[field]
-        idf_sum = float(
-            sum(lucene_idf(n_docs_f, stats[t][0]) for t in stored)
-        )
-        k1, b = self.config.k1, self.config.b
-        docs_per_shard = self.config.docs_per_shard
-        only_ids = (np.asarray(sorted(set(only_doc_ids)), dtype=np.int64)
-                    if only_doc_ids is not None else None)
-        # plain k+offset even with a rerank window: per-shard top-(k+offset)
-        # partials + the global TakeOrdered merge are already exact for
-        # top-k, so inflating the per-shard cut to the window size only
-        # shuffled extra partial rows (rerank passes k = window size anyway)
-        kk = k + offset
-        n_terms = len(stored)
-
-        from archivesspace_virgo_spark import codec  # re-imported on workers
-
-        def scorer(pdf: pd.DataFrame) -> pd.DataFrame:
-            empty_p = pd.DataFrame({"doc_id": pd.Series(dtype="int64"),
-                                    "score": pd.Series(dtype="float64")})
-            by_term = {
-                t: row
-                for t, row in zip(pdf["term"], pdf.itertuples(index=False))
-            }
-            if any(t not in by_term for t in uniq):
-                return empty_p
-            shard = int(pdf["doc_shard"].iloc[0])
-            base = shard * docs_per_shard
-            dec = {}
-            for t in uniq:
-                row = by_term[t]
-                d, tf_, dl_ = codec.decode_postings(
-                    row.doc_blob, row.tf_blob, row.dl_blob
-                )
-                pos = codec.decode_positions(row.pos_blob, tf_)
-                ldoc = d.astype(np.int64) - base
-                # occurrence keys doc*M + pos are sorted by construction
-                dec[t] = (ldoc, dl_, np.repeat(ldoc, tf_), pos)
-            M = np.int64(1) << np.int64(33)
-            _, _, occ0, pos0 = dec[stored[0]]
-            start = occ0 * M + pos0
-            cur = start
-            for t in stored[1:]:
-                _, _, occ_t, pos_t = dec[t]
-                kt = occ_t * M + pos_t
-                idx = np.searchsorted(kt, cur, side="right")
-                ok = idx < kt.size
-                nxt = kt[np.minimum(idx, kt.size - 1)]
-                ok &= (nxt // M) == (cur // M)  # stay within the doc
-                start, cur = start[ok], nxt[ok]
-                if cur.size == 0:
-                    return empty_p
-            mlen = (cur - start) - np.int64(n_terms - 1)
-            keep = mlen <= slop
-            if not keep.any():
-                return empty_p
-            docs = (start[keep] // M)
-            w = 1.0 / (1.0 + mlen[keep].astype(np.float64))
-            hit, inv = np.unique(docs, return_inverse=True)
-            sf = np.zeros(hit.size, dtype=np.float64)
-            np.add.at(sf, inv, w)
-            if only_ids is not None:
-                keep_w = np.isin(hit + base, only_ids)
-                hit, sf = hit[keep_w], sf[keep_w]
-                if hit.size == 0:
-                    return empty_p
-            ldoc0, dl0, _, _ = dec[stored[0]]
-            dls = dl0[np.searchsorted(ldoc0, hit)].astype(np.float64)
-            score = idf_sum * sf / (
-                sf + k1 * (1.0 - b + b * dls / avgdl_f)
-            )
-            if hit.size > kk:
-                top = np.argpartition(-score, kk - 1)[:kk]
-                thresh = score[top].min()
-                keep2 = score >= thresh
-                hit, score = hit[keep2], score[keep2]
-            order = np.lexsort((hit, -score))[:kk]
-            return pd.DataFrame({
-                "doc_id": (hit[order] + base).astype(np.int64),
-                "score": score[order],
-            })
-
-        postings = self._postings_df().filter(F.col("term").isin(uniq))
-        if only_ids is not None:
-            shards = sorted({int(d) // docs_per_shard for d in only_ids})
-            postings = postings.filter(F.col("doc_shard").isin(shards))
-        postings = postings.select(
-            "doc_shard", "term", "doc_blob", "tf_blob", "dl_blob", "pos_blob"
-        )
-        partials = postings.groupBy("doc_shard").applyInPandas(
-            scorer, schema="doc_id long, score double"
-        )
-        ordered = partials.orderBy(F.desc("score"), F.asc("doc_id"))
-        if offset:
-            ordered = ordered.offset(offset)
-        # external contract is always ≤k rows (see phrase_search)
-        return ordered.limit(k)
+        return self._phrase_family(phrase, slop, k, field, offset,
+                                   only_doc_ids, _ordered_span_freq)
 
     # --- sloppy phrase (Lucene PhraseQuery slop — the Solr ``"a b"~N``
     # semantics proper: transpositions allowed within the edit budget,
@@ -1892,140 +1831,8 @@ class QueryEngine:
         the scalar path, acceptable because repeated-term phrases have
         candidate sets bounded by the rarest term and are a rare query
         shape; the hot path stays vectorized."""
-        from archivesspace_virgo_spark.tokenizer import tokenize_text
-
-        self._require_k(k + offset)
-        terms = tokenize_text(phrase) if isinstance(phrase, str) else list(phrase)
-        empty = self.spark.createDataFrame([], "doc_id long, score double")
-        if not terms:
-            return empty
-        if slop < 0:
-            raise ValueError("slop must be >= 0")
-        if only_doc_ids is not None and not len(only_doc_ids):
-            return empty
-        if len(terms) == 1 or slop == 0:
-            # 1 term = TermQuery rewrite; slop 0 = exact PhraseQuery —
-            # both are phrase_search's contract already
-            return self.phrase_search(terms, k=k, field=field, offset=offset,
-                                      only_doc_ids=only_doc_ids)
-        default = self.config.fields[0]
-        field = field or default
-        stored = [t if field == default else f"{field}:{t}" for t in terms]
-        uniq = sorted(set(stored))
-        stats = self.term_stats(uniq)
-        if len(stats) != len(uniq):
-            return empty  # a missing term empties a phrase query
-        n_docs_f, avgdl_f = self.field_stats[field]
-        idf_sum = float(
-            sum(lucene_idf(n_docs_f, stats[t][0]) for t in stored)
-        )
-        k1, b = self.config.k1, self.config.b
-        docs_per_shard = self.config.docs_per_shard
-        only_ids = (np.asarray(sorted(set(only_doc_ids)), dtype=np.int64)
-                    if only_doc_ids is not None else None)
-        kk = k + offset
-
-        has_repeats = len(set(stored)) != len(stored)
-
-        from archivesspace_virgo_spark import codec  # re-imported on workers
-        from archivesspace_virgo_spark.functions.proximity import (
-            lucene_sloppy_freq_batch, lucene_sloppy_freq_repeats,
-        )
-
-        def scorer(pdf: pd.DataFrame) -> pd.DataFrame:
-            empty_p = pd.DataFrame({"doc_id": pd.Series(dtype="int64"),
-                                    "score": pd.Series(dtype="float64")})
-            by_term = {
-                t: row
-                for t, row in zip(pdf["term"], pdf.itertuples(index=False))
-            }
-            if any(t not in by_term for t in uniq):
-                return empty_p
-            shard = int(pdf["doc_shard"].iloc[0])
-            base = shard * docs_per_shard
-            dec = {}
-            for t in uniq:
-                row = by_term[t]
-                d, tf_, dl_ = codec.decode_postings(
-                    row.doc_blob, row.tf_blob, row.dl_blob
-                )
-                pos = codec.decode_positions(row.pos_blob, tf_)
-                ldoc = d.astype(np.int64) - base
-                # occurrence run boundaries for O(1) per-doc slicing
-                starts = np.zeros(ldoc.size + 1, dtype=np.int64)
-                starts[1:] = np.cumsum(tf_.astype(np.int64))
-                dec[t] = (ldoc, dl_, pos, starts)
-            cand = dec[uniq[0]][0]
-            for t in uniq[1:]:
-                cand = np.intersect1d(cand, dec[t][0], assume_unique=True)
-                if cand.size == 0:
-                    return empty_p
-            if only_ids is not None:
-                cand = cand[np.isin(cand + base, only_ids)]
-                if cand.size == 0:
-                    return empty_p
-            # flatten each phrase offset's candidate position runs once
-            # (vectorized run extraction — no per-doc slicing)
-            flat, fstarts = [], []
-            for i, t in enumerate(stored):
-                ldoc, _dl, pos, starts = dec[t]
-                j = np.searchsorted(ldoc, cand)
-                rs = starts[j]
-                lens = starts[j + 1] - rs
-                outst = np.zeros(cand.size + 1, dtype=np.int64)
-                np.cumsum(lens, out=outst[1:])
-                total = int(outst[-1])
-                idx = (np.arange(total, dtype=np.int64)
-                       - np.repeat(outst[:-1], lens) + np.repeat(rs, lens))
-                flat.append(pos[idx].astype(np.int64) - i)
-                fstarts.append(outst)
-            if not has_repeats:
-                sf_all = lucene_sloppy_freq_batch(flat, fstarts, slop)
-            else:
-                # repeats: Lucene's SloppyPhraseMatcher repeats machinery,
-                # per candidate (bounded by the rarest repeated term's df)
-                sf_all = np.array([
-                    lucene_sloppy_freq_repeats(
-                        [flat[i][fstarts[i][c]:fstarts[i][c + 1]]
-                         for i in range(len(stored))],
-                        stored, slop)
-                    for c in range(cand.size)
-                ], dtype=np.float64)
-            hit_m = sf_all > 0.0
-            if not hit_m.any():
-                return empty_p
-            hit = cand[hit_m]
-            sf_arr = sf_all[hit_m]
-            ldoc0, dl0, _p0, _s0 = dec[stored[0]]
-            dls = dl0[np.searchsorted(ldoc0, hit)].astype(np.float64)
-            score = idf_sum * sf_arr / (
-                sf_arr + k1 * (1.0 - b + b * dls / avgdl_f)
-            )
-            if hit.size > kk:
-                top = np.argpartition(-score, kk - 1)[:kk]
-                thresh = score[top].min()
-                keep = score >= thresh
-                hit, score = hit[keep], score[keep]
-            order = np.lexsort((hit, -score))[:kk]
-            return pd.DataFrame({
-                "doc_id": (hit[order] + base).astype(np.int64),
-                "score": score[order],
-            })
-
-        postings = self._postings_df().filter(F.col("term").isin(uniq))
-        if only_ids is not None:
-            shards = sorted({int(d) // docs_per_shard for d in only_ids})
-            postings = postings.filter(F.col("doc_shard").isin(shards))
-        postings = postings.select(
-            "doc_shard", "term", "doc_blob", "tf_blob", "dl_blob", "pos_blob"
-        )
-        partials = postings.groupBy("doc_shard").applyInPandas(
-            scorer, schema="doc_id long, score double"
-        )
-        ordered = partials.orderBy(F.desc("score"), F.asc("doc_id"))
-        if offset:
-            ordered = ordered.offset(offset)
-        return ordered.limit(k)
+        return self._phrase_family(phrase, slop, k, field, offset,
+                                   only_doc_ids, _sloppy_freq)
 
     # --- Solr ReRankQParser (rq={!rerank reRankQuery=... reRankDocs=N
     # reRankWeight=w}): re-score the top-N window of a main query by
@@ -2054,7 +1861,7 @@ class QueryEngine:
         hits = [(int(r["doc_id"]), float(r["score"]))
                 for r in base.collect()]
         if not hits:
-            return self.spark.createDataFrame([], "doc_id long, score double")
+            return self._no_hits()
         window, tail = hits[:rerank_docs], hits[rerank_docs:]
         ids = [d for d, _s in window]
         if slop > 0 and ordered:
@@ -2098,14 +1905,11 @@ class QueryEngine:
         hits = self.search(terms, k=k, mode=mode)
         hit_rows = hits.collect()  # bounded: ≤ k rows
         if not hit_rows:
-            return self.spark.createDataFrame(
-                [], "doc_id long, score double, snippet_start int, "
-                    "snippet_end int, n_matched int")
+            return self._no_hits(
+                "doc_id long, score double, snippet_start int, "
+                "snippet_end int, n_matched int")
+        q = self._resolve(terms)  # not None: the hits matched a live term
         hit_ids = sorted(int(r["doc_id"]) for r in hit_rows)
-        parsed = {self._parse_term(t) for t in terms}
-        uniq = sorted(stored for _f, stored in parsed)
-        stats = self.term_stats(uniq)
-        live = sorted(t for t in uniq if t in stats)
         docs_per_shard = self.config.docs_per_shard
         hit_arr = np.asarray(hit_ids, dtype=np.int64)
 
@@ -2164,14 +1968,9 @@ class QueryEngine:
                 "doc_id", "snippet_start", "snippet_end", "n_matched"])
 
         hit_shards = sorted({d // docs_per_shard for d in hit_ids})
-        postings = self._postings_df().filter(
-            F.col("doc_shard").isin(hit_shards)
-            & F.col("term").isin(live)
-        ).select("doc_shard", "term", "doc_blob", "tf_blob", "dl_blob",
-                 "pos_blob")
-        windows = postings.groupBy("doc_shard").applyInPandas(
-            windower, schema="doc_id long, snippet_start int, "
-                             "snippet_end int, n_matched int")
+        windows = self._shard_scan(
+            q.live, _POS_COLS, windower, "doc_id long, snippet_start int, "
+            "snippet_end int, n_matched int", hit_shards)
         return (
             windows.join(F.broadcast(hits), "doc_id")
             .orderBy(F.desc("score"), F.asc("doc_id"))
@@ -2211,30 +2010,15 @@ class QueryEngine:
         ``filters``: Solr fq — non-scoring required clauses (each an OR of
         terms); matching ids are set-intersected shard-locally.
         """
-        mode = self._norm_mode(mode)
-        parsed = {self._parse_term(t) for t in terms}
-        uniq = sorted(stored for _f, stored in parsed)
-        stats = self.term_stats(uniq)
-        live = [t for t in uniq if t in stats]
-        if mode == "and" and len(live) != len(uniq):
-            live = []
-        if len(live) < max(1, min_should_match):
-            live = []
-        if not live:
-            return self.spark.createDataFrame([], "doc_shard int, doc_id long")
-        neg = sorted({stored for _f, stored in
-                      (self._parse_term(t) for t in exclude)})
-        fcl = [
-            sorted({stored for _f, stored in
-                    (self._parse_term(t) for t in cl)})
-            for cl in filters
-        ]
-        if any(not cl for cl in fcl):
-            return self.spark.createDataFrame([], "doc_shard int, doc_id long")
-        flt_terms = sorted({t for cl in fcl for t in cl})
-        by_flt_terms = set(flt_terms)
-        live_set = set(live)
-        n_required = len(live) if mode == "and" else max(1, min_should_match)
+        q = self._resolve(terms, mode, exclude, filters,
+                          min_match=min_should_match)
+        if q is None:
+            return self._no_hits("doc_shard int, doc_id long")
+        neg, fcl = q.neg, q.filters
+        by_flt_terms = {t for cl in fcl for t in cl}
+        live_set = set(q.live)
+        n_required = (len(q.live) if q.mode == "and"
+                      else max(1, min_should_match))
 
         from archivesspace_virgo_spark import codec  # re-imported on workers
 
@@ -2252,7 +2036,7 @@ class QueryEngine:
                     ids.append(d)
                 if neg and t in neg:
                     neg_ids.append(d)
-                if flt_terms and t in by_flt_terms:
+                if t in by_flt_terms:
                     by_flt[t] = d
             allids = np.concatenate(ids) if ids else np.empty(0, np.int64)
             if allids.size == 0:
@@ -2273,12 +2057,8 @@ class QueryEngine:
                 "doc_id": hit.astype(np.int64),
             })
 
-        postings = self._postings_df().filter(
-            F.col("term").isin(live + neg + flt_terms)
-        )
-        return postings.select("doc_shard", "term", "doc_blob").groupBy(
-            "doc_shard"
-        ).applyInPandas(matcher, schema="doc_shard int, doc_id long")
+        return self._shard_scan(q.scan_terms, ("doc_blob",), matcher,
+                                "doc_shard int, doc_id long")
 
     # --- facet over a result set (Solr: q=...&facet.field=f,
     # IndexRecords.java:134-135): counts of a doc_map field across ALL

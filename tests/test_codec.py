@@ -1,6 +1,7 @@
 """Codec round-trip + block-max property tests (SURVEY.md §5.2-3)."""
 
 import numpy as np
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -91,3 +92,13 @@ def test_block_random_access_decode():
             assert (got_d == doc_ids[idx]).all()
             assert (got_t == tfs[idx].astype(np.int64)).all()
             assert (got_l == dls[idx].astype(np.int64)).all()
+
+
+def test_binary_stream_over_int32_offsets_is_refused():
+    """An Arrow binary column has int32 offsets: a shard stream past 2 GiB
+    must fail loudly with the knob to turn, not build a short column."""
+    from archivesspace_virgo_spark.index.build import _pa_binary_from_stream
+
+    with pytest.raises(ValueError, match="docs_per_shard"):
+        _pa_binary_from_stream(np.zeros(2, dtype=np.uint8),
+                               np.array([0, 2**31]))

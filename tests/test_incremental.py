@@ -147,3 +147,25 @@ def test_determinism_across_partitioning(spark, tmp_path):
     build_index(spark, corpus.repartition(13), d1, CFG)
     build_index(spark, corpus.repartition(3), d2, CFG)
     _assert_index_equal(spark, d1, d2)
+
+
+def test_refresh_rereads_corpus_stats(spark, tmp_path):
+    """After an incremental merge that adds docs, ``refresh()`` must leave
+    the engine scoring exactly like a freshly opened one — new N and avgdl,
+    not the stale ones read at open."""
+    d = str(tmp_path / "idx")
+    build_index(spark, _input_hint_corpus(spark, n=120), d, CFG,
+                input_fingerprint="v1")
+    engine = QueryEngine(spark, d, CFG)
+    terms = ["spark", "window", "table"]
+    engine.search(terms, k=10).collect()  # warm the caches
+    meta = incremental_update(spark, _input_hint_corpus(spark, n=200), d,
+                              CFG, input_fingerprint="v2")
+    assert meta["mode"] == "incremental"
+    engine.refresh()
+    fresh = QueryEngine(spark, d, CFG)
+    assert (engine.n_docs, engine.avgdl) == (fresh.n_docs, fresh.avgdl)
+    assert engine.field_stats == fresh.field_stats
+    got = [(r["doc_id"], r["score"]) for r in engine.search(terms, k=10).collect()]
+    exp = [(r["doc_id"], r["score"]) for r in fresh.search(terms, k=10).collect()]
+    assert got and got == exp

@@ -6,6 +6,7 @@ import pytest
 from archivesspace_virgo_spark.config import IndexConfig
 from archivesspace_virgo_spark.corpus import load_documents_as_corpus
 from archivesspace_virgo_spark.index.build import build_index
+from archivesspace_virgo_spark.index.multi import MultiIndexEngine
 from archivesspace_virgo_spark.index.query import QueryEngine
 from archivesspace_virgo_spark.oracle import build_oracle_index, oracle_search
 
@@ -152,3 +153,26 @@ def test_k_and_mode_validation(built):
     lo = {r["doc_id"] for r in engine.search(["spark", "window"],
                                              mode="and", k=50).collect()}
     assert up == lo
+
+
+_PAGED = {
+    "search": lambda e, **kw: e.search(["spark", "window"], **kw),
+    "boolean_search": lambda e, **kw: e.boolean_search(
+        [["spark"], ["window", "table"]], **kw),
+    "dismax_search": lambda e, **kw: e.dismax_search(["spark"], **kw),
+    "phrase_search": lambda e, **kw: e.phrase_search(["slow", "stream"], **kw),
+    "sorted_search": lambda e, **kw: e.sorted_search(["spark"], "path", **kw),
+    "MultiIndexEngine.search": lambda e, **kw: MultiIndexEngine(
+        [e, e]).search(["spark", "window"], **kw),
+}
+
+
+@pytest.mark.parametrize("surface", sorted(_PAGED))
+@pytest.mark.parametrize("k,offset,bad", [(5, -3, "offset"), (0, 3, "k")])
+def test_paging_rejects_bad_k_and_offset(built, surface, k, offset, bad):
+    """k >= 1 and offset >= 0 are checked separately: their sum passing
+    must not let a negative offset reach Spark (an AnalysisException at
+    execution) or a k=0 page through as an empty result."""
+    engine, _oracle, _meta = built
+    with pytest.raises(ValueError, match=rf"^{bad} must be >= "):
+        _PAGED[surface](engine, k=k, offset=offset).collect()

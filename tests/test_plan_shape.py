@@ -68,23 +68,47 @@ def test_multifield_build_single_exchange(spark):
     assert _exchanges(stats) == 1
 
 
-def test_query_partials_exchange_free(spark, tmp_path):
-    """Shard scoring runs where the postings live; only ≤k-row partials
-    cross the wire to the final TakeOrdered merge."""
+@pytest.fixture(scope="module")
+def engine(spark, tmp_path_factory):
     from archivesspace_virgo_spark.index.build import build_index
     from archivesspace_virgo_spark.index.query import QueryEngine
 
-    d = str(tmp_path / "idx")
-    corpus = load_documents_as_corpus(spark, SF_SMOKE)
-    build_index(spark, corpus, d, CFG)
-    engine = QueryEngine(spark, d, CFG)
-    res = engine.search(["table", "join"], k=10)
-    plan = res._jdf.queryExecution().executedPlan().toString()
-    n = plan.count("Exchange")
+    d = str(tmp_path_factory.mktemp("idx"))
+    build_index(spark, load_documents_as_corpus(spark, SF_SMOKE), d, CFG)
+    return QueryEngine(spark, d, CFG)
+
+
+_TOPK = {
+    "search": lambda e: e.search(["table", "join"], k=10),
+    "boolean_search": lambda e: e.boolean_search([["table"], ["join"]], k=10),
+    "dismax_search": lambda e: e.dismax_search(["table", "join"], k=10),
+    "phrase_search": lambda e: e.phrase_search(["table", "join"], k=10),
+    "sloppy_phrase_search": lambda e: e.sloppy_phrase_search(
+        ["table", "join"], slop=2, k=10),
+}
+
+
+@pytest.mark.parametrize("surface", sorted(_TOPK))
+def test_query_partials_exchange_free(engine, surface):
+    """Shard scoring runs where the postings live; only ≤k-row partials
+    cross the wire to the final TakeOrdered merge."""
+    plan = _TOPK[surface](engine)._jdf.queryExecution().executedPlan().toString()
+    # the shard kernel really runs (not a statically-empty shortcut)
+    assert "FlatMapGroupsInPandas" in plan, plan[:4000]
     # grouping postings by doc_shard needs one exchange over the ≤|terms|
     # rows per shard; TakeOrderedAndProject merges partials without another
-    assert n <= 1, plan[:4000]
+    assert plan.count("Exchange") <= 1, plan[:4000]
     assert "TakeOrderedAndProject" in plan
+
+
+def test_query_layer_has_one_shard_scan():
+    """Every query surface goes through ``QueryEngine._shard_scan``; the
+    only other grouped-map call is grouped_search's cogroup with doc_map."""
+    import inspect
+
+    from archivesspace_virgo_spark.index import query
+
+    assert inspect.getsource(query).count("applyInPandas(") == 2
 
 
 def test_added_id_assignment_has_no_global_window(spark, tmp_path):
