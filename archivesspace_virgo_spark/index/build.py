@@ -39,6 +39,8 @@ Scale notes (the 100 TB story):
 
 from __future__ import annotations
 
+import json
+import logging
 import os
 import time
 import uuid
@@ -57,6 +59,8 @@ from archivesspace_virgo_spark.index.storage import (
     IndexStorage,
 )
 from archivesspace_virgo_spark.tokenizer import tokens_column
+
+log = logging.getLogger(__name__)
 
 
 def _arrow_postings_schema():
@@ -385,16 +389,14 @@ def term_frequencies(toks: DataFrame, config: IndexConfig) -> DataFrame:
     )
 
 
-def refresh_aggregates(spark: SparkSession, storage: IndexStorage) -> DataFrame:
+def refresh_aggregates(spark: SparkSession, storage: IndexStorage) -> None:
     """Recompute lexicon + corpus_stats from per-shard summaries.
 
     Exact df: shards hold disjoint doc ranges, so summing per-shard n_docs
     is the two-level exact-df aggregation of SURVEY.md §4.2 (never
     approx_count_distinct — BM25 rank-identity needs exact df).
-    Returns the postings DataFrame for reuse.
     """
-    postings = storage.read(spark, "postings")
-    lexicon = postings.groupBy("term").agg(
+    lexicon = storage.read(spark, "postings").groupBy("term").agg(
         F.sum("n_docs").alias("df"), F.sum("cf").alias("cf")
     )
     storage.write(lexicon, "lexicon")
@@ -405,7 +407,6 @@ def refresh_aggregates(spark: SparkSession, storage: IndexStorage) -> DataFrame:
         F.avg("dl").alias("avgdl"),
     )
     storage.write(corpus_stats, "corpus_stats")
-    return postings
 
 
 def quarantine_invalid(
@@ -467,7 +468,9 @@ def build_index(
     ``corpus`` must have ``content``; if it lacks ``doc_id`` one is assigned
     deterministically from (repo, path, commit).  ``only_shards`` restricts
     the build to specific doc_shards (used by incremental merge and by the
-    resume test to simulate a mid-build failure).
+    resume test to simulate a mid-build failure); one that gets no rows has
+    its doc_map/doc_stats/postings partitions dropped (a shard emptied by
+    deletions — dynamic overwrite would otherwise leave its old data).
     Returns build metadata dict.
     """
     config = config or IndexConfig()
@@ -497,14 +500,18 @@ def build_index(
     if done:
         corpus = corpus.filter(~F.col("doc_shard").isin(done))
     if only_shards is not None:
-        corpus = corpus.filter(F.col("doc_shard").isin(list(only_shards)))
+        only_shards = list(only_shards)
+        corpus = corpus.filter(F.col("doc_shard").isin(only_shards))
 
-    # one pass over the source to size the job (column-pruned scan)
-    sizing = corpus.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.countDistinct("doc_shard").alias("n_shards"),
-    ).collect()[0]
-    n_docs_built, n_shards = int(sizing["n"]), int(sizing["n_shards"])
+    # one pass over the source to size the job (column-pruned scan); the
+    # per-shard counts are also the lineage rows
+    counts = {r["doc_shard"]: r["count"]
+              for r in corpus.groupBy("doc_shard").count().collect()}
+    built_shards = sorted(counts)
+    n_docs_built = sum(counts.values())
+    for s in set(only_shards or ()) - set(counts) - set(done):
+        for table in ("doc_map", "doc_stats", "postings"):
+            storage.drop_shard_partition(table, s)
     if n_docs_built == 0:
         # nothing to build, but a deletion-only update still needs fresh
         # global aggregates over the surviving shards
@@ -519,7 +526,7 @@ def build_index(
     # Explicit partition count (AQE never coalesces a user-specified
     # repartition) so the partitioned writes keep enough writers — one task
     # per shard up to ~4 tasks/core, multiple shards per task beyond that.
-    n_part = max(1, min(n_shards, spark.sparkContext.defaultParallelism * 4))
+    n_part = max(1, min(len(counts), spark.sparkContext.defaultParallelism * 4))
     layout = corpus.repartition(n_part, "doc_shard").cache()
 
     # --- doc_map (identity + ingest invariant; facet columns live here) ---
@@ -583,38 +590,32 @@ def build_index(
         ]
         for f in futs:
             f.result()
-    corpus = layout  # built_shards query below reuses the cached layout
 
     # --- global aggregates (tiny: one row per term / one row total) ---
-    postings = refresh_aggregates(spark, storage)
+    refresh_aggregates(spark, storage)
 
-    # --- lineage (per-shard checkpoint rows) + metrics + commit marker ---
-    shard_summary = (
-        postings.groupBy("doc_shard")
-        .agg(F.sum("n_docs").alias("n_postings"), F.count(F.lit(1)).alias("n_terms"))
-        .withColumn("build_id", F.lit(build_id))
-        .withColumn("input_fingerprint", F.lit(fingerprint))
-        .withColumn("finished_at", F.lit(time.time()))
-    )
-    built_shards = [r["doc_shard"] for r in corpus.select("doc_shard").distinct().collect()]
+    # --- lineage (per-shard checkpoint rows from the sizing counts), one
+    # JSON metrics log line, then the commit marker ---
+    finished = time.time()
     storage.append(
-        shard_summary.filter(F.col("doc_shard").isin(built_shards)).select(
-            "build_id", "doc_shard", "input_fingerprint",
-            F.col("n_postings"), "n_terms", "finished_at",
+        spark.createDataFrame(
+            [(build_id, s, fingerprint, counts[s], finished) for s in built_shards],
+            "build_id string, doc_shard int, input_fingerprint string, "
+            "n_docs long, finished_at double",
         ),
         "_lineage",
     )
     elapsed = time.time() - t0
-    storage.log_metrics(
-        spark, build_id, "build",
-        {"n_docs": n_docs_built, "n_shards": len(built_shards),
-         "elapsed_sec": elapsed, "docs_per_sec": n_docs_built / max(elapsed, 1e-9)},
-    )
+    log.info(json.dumps({
+        "event": "build", "build_id": build_id, "n_docs": n_docs_built,
+        "n_shards": len(built_shards), "elapsed_sec": elapsed,
+        "docs_per_sec": n_docs_built / max(elapsed, 1e-9),
+    }))
     storage.write_commit(config, build_id, {"input_fingerprint": fingerprint})
-    corpus.unpersist()
+    layout.unpersist()
     return {
         "build_id": build_id,
         "n_docs": n_docs_built,
-        "shards": sorted(built_shards),
+        "shards": built_shards,
         "elapsed_sec": elapsed,
     }

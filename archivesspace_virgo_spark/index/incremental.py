@@ -2,34 +2,34 @@
 
 The reference's incremental path (IndexRecords.java:64-75, 136-170) detects
 changed records in a time window, expands the dirty set through dependency
-joins, and reindexes exactly that set.  Our Spark-native equivalent:
+joins, and reindexes exactly that set.  Every sync here goes through ONE
+merge step, ``_merge(delta, source, deletions)``, which does each once:
 
-1. **Delta detection** — full-outer join of the new corpus against the
-   stored ``doc_map`` on the document identity ``(repo, path)``; the per-row
-   ``sha256(content)`` ingest invariant doubles as the change detector (the
-   reference's md5-hash discipline, IndexRecordsForV4.java:157).
-2. **Dirty-set expansion** — a changed/added/deleted doc dirties its whole
-   doc_shard (the shard is the index's unit of rebuild, like the reference's
-   per-record Solr doc).
-3. **Shard-scoped rebuild** — ``build_index(only_shards=dirty)`` with
-   dynamic partition overwrite replaces exactly the dirty shards in
-   doc_map/doc_stats/postings; global lexicon/corpus_stats re-aggregate from
-   the per-shard summaries (a two-level agg — exact df, SURVEY §4.2).
+1. resolve same-identity ``(repo, path)`` rows to the newest commit and
+   attach ``sha256(content)``, the change detector (the reference's md5-hash
+   discipline, IndexRecordsForV4.java:157);
+2. classify (``detect_changes``) with a delta-sized left join against an
+   id-only ``doc_map`` projection; added rows get ids above the stored max;
+3. collect the dirty shards once — a changed/added/deleted doc dirties its
+   whole doc_shard, the index's unit of rebuild;
+4. take the dirty shards' surviving docs' ids from ``doc_map`` and their
+   current rows from the caller's source;
+5. stage the rebuild rows and call ``build_index(only_shards=dirty)``, which
+   replaces exactly those shards (dropping any that deletions emptied) and
+   re-aggregates lexicon/corpus_stats from the per-shard summaries.
+
+The callers differ only in delta, source and deletions:
+``incremental_update(new_corpus)`` passes the whole corpus as both, with
+deletions (O(corpus), for one-shot merges); ``incremental_update_from_table``
+over an append-only snapshot range passes ``table.diff`` — ONLY the files
+appended since the last indexed snapshot — with a manifest-pruned read as
+source and no deletions, so a sync costs |delta| + |dirty shards|, not the
+corpus; an overwrite in range (which breaks append-only incrementality, the
+Iceberg contract) passes the whole snapshot, with deletions.
 
 Identity rules: unchanged docs keep their doc_id (rank stability); new docs
-get ids above the previous max (they land in tail shards, so appends touch
-only tail + explicitly modified shards); deleted ids are never reused
-(shards may go sparse — scoring tolerates holes).
-
-**Snapshot-diff path** (``incremental_update_from_table``): when the corpus
-lives in a snapshot-versioned table (sources/snapshot_table.py — Iceberg
-semantics), the full-corpus join is replaced by an incremental read of ONLY
-the data files appended since the last indexed snapshot.  Cost is then
-proportional to |delta| + |dirty-shard contents| (fetched via
-manifest-pruned scan), not corpus size — the difference between rescanning
-100 TB per sync and scanning megabytes.  An overwrite snapshot breaks
-append-only incrementality (the Iceberg contract) and falls back to the
-full-diff join below.
+get ids above the previous max (they land in tail shards); deleted ids are
+never reused (shards may go sparse — scoring tolerates holes).
 """
 
 from __future__ import annotations
@@ -37,7 +37,7 @@ from __future__ import annotations
 import os
 import shutil
 import uuid
-from typing import Optional
+from typing import Callable, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -56,54 +56,51 @@ IDENTITY = ["repo", "path"]
 _MAX_PRUNE_KEYS = 10_000
 
 
-def _latest_per_identity(df: DataFrame) -> DataFrame:
-    """Resolve multiple same-identity rows to the newest commit.
+def _resolve_identities(df: DataFrame) -> DataFrame:
+    """Resolve multiple same-identity rows to the newest commit and attach
+    ``content_sha256``.
 
     A snapshot table whose updates arrive as same-identity appends presents
     several versions of one (repo, path) in a full read; indexing them all
     would give doc_map two rows per identity (first build) or merge two
     source rows into one doc_id (modified-classification fan-out) —
-    corrupted postings either way.  Every path that feeds a corpus into
-    build_index/detect_changes must funnel through this resolution.
-    Inputs without a ``commit`` column (already-resolved corpora) pass
-    through unchanged.
+    corrupted postings either way.  Every corpus fed to build_index or
+    detect_changes funnels through here (ordering by commit string is
+    arbitrary but deterministic).  Inputs without a ``commit`` column
+    (already-resolved corpora) skip the window.
     """
-    if "commit" not in df.columns:
-        return df
-    from pyspark.sql.window import Window
+    if "commit" in df.columns:
+        from pyspark.sql.window import Window
 
-    w = Window.partitionBy(*IDENTITY).orderBy(F.desc("commit"))
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1).drop("_rn")
-    )
+        w = Window.partitionBy(*IDENTITY).orderBy(F.desc("commit"))
+        df = (
+            df.withColumn("_rn", F.row_number().over(w))
+            .filter(F.col("_rn") == 1).drop("_rn")
+        )
+    return df if "content_sha256" in df.columns else with_content_sha(df)
 
 
 def detect_changes(spark: SparkSession, new_corpus: DataFrame, index_dir: str) -> dict:
-    """Classify new_corpus rows vs the stored doc_map.
+    """Classify new_corpus rows (one per identity) vs the stored doc_map.
 
-    Returns dict of DataFrames: unchanged / modified / added (all carrying
-    doc_id) and deleted (old doc_ids gone from the corpus).
+    Returns dict of DataFrames: modified / added (carrying doc_id; added ids
+    are dense above the stored max) and deleted (stored doc_ids whose
+    identity is absent from ``new_corpus`` — meaningful only when it is the
+    whole corpus).  All three are lazy except the max-id read.
     """
-    storage = IndexStorage(index_dir)
-    old = storage.read(spark, "doc_map").select(
+    old = IndexStorage(index_dir).read(spark, "doc_map").select(
         *IDENTITY, F.col("doc_id").alias("_old_id"),
         F.col("content_sha256").alias("_old_sha"),
     )
-    new = with_content_sha(new_corpus) if "content_sha256" not in new_corpus.columns else new_corpus
-    joined = new.join(old, IDENTITY, "full_outer")
-
-    unchanged = joined.filter(
-        F.col("_old_id").isNotNull()
-        & F.col("content_sha256").isNotNull()
-        & (F.col("content_sha256") == F.col("_old_sha"))
-    ).withColumn("doc_id", F.col("_old_id"))
+    new = new_corpus if "content_sha256" in new_corpus.columns else with_content_sha(new_corpus)
+    # |new| rows vs an id-only doc_map projection: the join is bounded by
+    # the delta, never the corpus bytes (AQE broadcasts the smaller side)
+    joined = new.join(old, IDENTITY, "left")
     modified = joined.filter(
         F.col("_old_id").isNotNull()
-        & F.col("content_sha256").isNotNull()
         & (F.col("content_sha256") != F.col("_old_sha"))
     ).withColumn("doc_id", F.col("_old_id"))
-    deleted = joined.filter(F.col("content_sha256").isNull()).select(
+    deleted = old.join(new.select(*IDENTITY), IDENTITY, "left_anti").select(
         F.col("_old_id").alias("doc_id")
     )
 
@@ -112,17 +109,72 @@ def detect_changes(spark: SparkSession, new_corpus: DataFrame, index_dir: str) -
     # two-phase prefix-sum id assignment with a base offset: a first
     # backfill or bulk append IS the common case at scale, so the added set
     # must never funnel through a single un-partitioned window task
-    added = assign_doc_ids(
-        joined.filter(F.col("_old_id").isNull()), base=base
-    )
+    added = assign_doc_ids(joined.filter(F.col("_old_id").isNull()), base=base)
 
     drop = ["_old_id", "_old_sha"]
     return {
-        "unchanged": unchanged.drop(*drop),
         "modified": modified.drop(*drop),
         "added": added.drop(*drop),
         "deleted": deleted,
     }
+
+
+def _merge(spark: SparkSession, index_dir: str, config: IndexConfig,
+           delta: DataFrame, source: Callable[[DataFrame], Optional[DataFrame]],
+           deletions: bool, build_id: Optional[str],
+           input_fingerprint: Optional[str]) -> dict:
+    """The one incremental merge: classify ``delta`` against doc_map and
+    rebuild exactly the dirty shards.  ``source(survivors_map)`` returns the
+    current rows to draw the dirty shards' surviving docs from (or None when
+    none can survive); ``survivors_map`` is their (repo, path, doc_id).
+    Returns build_index's metadata plus ``dirty_shards`` (empty: nothing to
+    do, nothing written)."""
+    ch = detect_changes(spark, _resolve_identities(delta), index_dir)
+    changed = ch["modified"].unionByName(ch["added"], allowMissingColumns=True)
+    shard = lambda c: (c / F.lit(config.docs_per_shard)).cast("int")  # noqa: E731
+    dirty_ids = changed.select("doc_id")
+    if deletions:
+        dirty_ids = dirty_ids.union(ch["deleted"])
+    dirty = dirty_ids.select(shard(F.col("doc_id")).alias("s")).distinct()
+    dirty_shards = sorted(r["s"] for r in dirty.collect())
+    if not dirty_shards:
+        return {"shards": [], "n_docs": 0, "dirty_shards": []}
+
+    # surviving docs of dirty shards whose content is NOT in the delta: ids
+    # from doc_map, rows from the caller's source (deleted identities are
+    # absent from it, so the inner join drops them)
+    survivors_map = (
+        IndexStorage(index_dir).read(spark, "doc_map")
+        .filter(shard(F.col("doc_id")).isin(dirty_shards))
+        .join(changed.select(*IDENTITY), IDENTITY, "left_anti")
+        .select(*IDENTITY, "doc_id")
+    )
+    rebuild = changed
+    rows = source(survivors_map)
+    if rows is not None:
+        # stored ids win over any carried ids
+        rows = _resolve_identities(rows).drop("doc_id")
+        rebuild = rows.join(survivors_map, IDENTITY).unionByName(
+            changed, allowMissingColumns=True
+        )
+
+    # STAGE the rebuild rows before touching the index: the lazy `rebuild`
+    # plan reads doc_map, which build_index is about to overwrite — you must
+    # never overwrite a table a live plan still scans (Iceberg gets this via
+    # snapshot isolation; plain parquet needs an explicit staging write).
+    staging = os.path.join(index_dir, "_staging", uuid.uuid4().hex[:12])
+    try:
+        rebuild.write.mode("overwrite").parquet(staging)
+        meta = build_index(
+            spark, spark.read.parquet(staging), index_dir, config,
+            build_id=build_id, input_fingerprint=input_fingerprint,
+            only_shards=dirty_shards,
+        )
+    finally:
+        shutil.rmtree(staging, ignore_errors=True)
+        spark.catalog.refreshByPath(index_dir)
+    meta["dirty_shards"] = dirty_shards
+    return meta
 
 
 def incremental_update_from_table(
@@ -134,12 +186,12 @@ def incremental_update_from_table(
 ) -> dict:
     """Sync the index to a SnapshotTable's current snapshot.
 
-    - first build / config change / overwrite in range → snapshot-pinned
-      full path (full rebuild or full-diff incremental);
-    - otherwise → **snapshot-diff merge**: read only the files appended
-      since the last indexed snapshot, classify against doc_map, fetch the
-      dirty shards' surviving docs with a manifest-pruned scan, and rebuild
-      exactly the dirty shards.
+    - first build / config change → snapshot-pinned full rebuild;
+    - overwrite in range → the merge over the whole snapshot, with
+      deletions;
+    - otherwise → **snapshot-diff merge**: the delta is only the files
+      appended since the last indexed snapshot, and the dirty shards'
+      surviving docs come from a manifest-pruned scan.
 
     The committed marker records ``corpus_snapshot_id`` so every build is
     pinned to (and resumable against) one immutable corpus version — the
@@ -151,128 +203,53 @@ def incremental_update_from_table(
     current = table.current_snapshot_id()
     commit = storage.read_commit()
     last = commit.get("corpus_snapshot_id") if commit else None
+    fingerprint = f"snap-{current}"
 
     def _pin(meta: dict, mode: str) -> dict:
         storage.write_commit(
             config, meta.get("build_id") or build_id or "sync",
-            {"input_fingerprint": f"snap-{current}",
-             "corpus_snapshot_id": current},
+            {"input_fingerprint": fingerprint, "corpus_snapshot_id": current},
         )
         meta["mode"] = mode
         meta["corpus_snapshot_id"] = current
         return meta
 
-    if (
-        commit is None
-        or commit.get("config_hash") != config.config_hash()
-        or last is None
-    ):
-        # snapshot-pinned full build; same-identity appends resolve to the
-        # newest commit exactly as in the snapshot-diff path below
-        corpus = _latest_per_identity(table.read(spark, current))
-        meta = build_index(
-            spark, corpus, index_dir, config, build_id=build_id,
-            input_fingerprint=f"snap-{current}",
-        )
+    if last is None or not storage.is_committed_with(config):
+        corpus = _resolve_identities(table.read(spark, current))
+        meta = build_index(spark, corpus, index_dir, config, build_id=build_id,
+                           input_fingerprint=fingerprint)
         return _pin(meta, "full_rebuild")
     if last == current:
         return {"mode": "noop", "shards": [], "n_docs": 0,
                 "corpus_snapshot_id": current}
     if table.has_overwrite_between(last, current):
         # overwrite breaks append-only incrementality (Iceberg contract):
-        # deletions/updates may hide anywhere → full-diff join path (with
-        # the same newest-commit identity resolution)
-        corpus = _latest_per_identity(table.read(spark, current))
-        meta = incremental_update(
-            spark, corpus, index_dir, config, build_id=build_id,
-            input_fingerprint=f"snap-{current}",
-        )
-        return _pin(meta, meta.get("mode", "incremental"))
+        # deletions/updates may hide anywhere → the whole snapshot is delta
+        snapshot = table.read(spark, current)
+        meta = _merge(spark, index_dir, config, snapshot, lambda _: snapshot,
+                      True, build_id, fingerprint)
+        return _pin(meta, "incremental" if meta["dirty_shards"] else "noop")
 
-    # --- append-only snapshot diff: scan ONLY the appended files ---
-    delta = table.diff(spark, last, current)
-    if "content_sha256" not in delta.columns:
-        delta = with_content_sha(delta)
-    # multiple appends may touch one identity; keep the newest (ordering by
-    # commit string is arbitrary but deterministic)
-    delta = _latest_per_identity(delta)
+    def pruned(survivors_map: DataFrame) -> Optional[DataFrame]:
+        # Manifest file-pruning needs the distinct survivor repos driver-side
+        # (that's Iceberg planning — manifests live on the driver), but the
+        # hand-off must stay BOUNDED: a delta touching many shards of a
+        # many-repo corpus could otherwise collect an unbounded repo list.
+        # limit(cap+1) caps the collect; past the cap, per-repo file pruning
+        # can't skip much anyway, so read the whole snapshot and let the
+        # identity join (survivors_map is the small, bounded side — AQE
+        # broadcasts it) do the narrowing distributed.
+        keys = [r["repo"] for r in survivors_map.select("repo").distinct()
+                .limit(_MAX_PRUNE_KEYS + 1).collect()]
+        if not keys:
+            return None
+        if len(keys) > _MAX_PRUNE_KEYS:
+            return table.read(spark, current)
+        return table.read_pruned(spark, keys, current)
 
-    old = storage.read(spark, "doc_map").select(
-        *IDENTITY, F.col("doc_id").alias("_old_id"),
-        F.col("content_sha256").alias("_old_sha"),
-    )
-    # |delta| rows vs an id-only doc_map projection: the join is bounded by
-    # the delta, never the corpus bytes (AQE broadcasts the smaller side)
-    classified = delta.join(old, IDENTITY, "left")
-    modified = (
-        classified.filter(
-            F.col("_old_id").isNotNull()
-            & (F.col("content_sha256") != F.col("_old_sha"))
-        ).withColumn("doc_id", F.col("_old_id"))
-    )
-    added_src = classified.filter(F.col("_old_id").isNull())
-    max_old = old.agg(F.max("_old_id")).collect()[0][0]
-    base = (max_old if max_old is not None else -1) + 1
-    added = assign_doc_ids(added_src, base=base)
-    drop = ["_old_id", "_old_sha"]
-    changed = modified.drop(*drop).unionByName(
-        added.drop(*drop), allowMissingColumns=True
-    )
-
-    shard = lambda c: (c / F.lit(config.docs_per_shard)).cast("int")  # noqa: E731
-    dirty = changed.select(shard(F.col("doc_id")).alias("s")).distinct()
-    dirty_shards = sorted(r["s"] for r in dirty.collect())
-    if not dirty_shards:
-        return _pin({"shards": [], "n_docs": 0}, "noop_content")
-
-    # surviving docs of dirty shards whose content is NOT in the delta:
-    # manifest-pruned fetch keyed on the identity prune column
-    survivors_map = (
-        storage.read(spark, "doc_map")
-        .filter(shard(F.col("doc_id")).isin(dirty_shards))
-        .join(changed.select(*IDENTITY), IDENTITY, "left_anti")
-        .select(*IDENTITY, "doc_id")
-    )
-    # Manifest file-pruning needs the distinct survivor repos driver-side
-    # (that's Iceberg planning — manifests live on the driver), but the
-    # hand-off must stay BOUNDED: a delta touching many shards of a
-    # many-repo corpus could otherwise collect an unbounded repo list.
-    # limit(cap+1) caps the collect; past the cap, per-repo file pruning
-    # can't skip much anyway, so read the whole snapshot and let the
-    # identity join below (survivors_map is the small, bounded side —
-    # AQE broadcasts it) do the narrowing distributed.
-    sk_rows = (survivors_map.select("repo").distinct()
-               .limit(_MAX_PRUNE_KEYS + 1).collect())
-    sk = [r["repo"] for r in sk_rows]
-    if sk:
-        if len(sk) > _MAX_PRUNE_KEYS:
-            pruned = table.read(spark, current)
-        else:
-            pruned = table.read_pruned(spark, sk, current)
-        if "content_sha256" not in pruned.columns:
-            pruned = with_content_sha(pruned)
-        # same newest-commit resolution as the delta, then attach stored ids
-        pruned = _latest_per_identity(pruned)
-        if "doc_id" in pruned.columns:  # stored ids win over any carried ids
-            pruned = pruned.drop("doc_id")
-        survivors = pruned.join(survivors_map, IDENTITY)
-        rebuild = survivors.unionByName(changed, allowMissingColumns=True)
-    else:
-        rebuild = changed
-
-    staging = os.path.join(index_dir, "_staging", uuid.uuid4().hex[:12])
-    rebuild.write.mode("overwrite").parquet(staging)
-    rebuild = spark.read.parquet(staging)
-    try:
-        meta = build_index(
-            spark, rebuild, index_dir, config, build_id=build_id,
-            input_fingerprint=f"snap-{current}", only_shards=dirty_shards,
-        )
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
-        spark.catalog.refreshByPath(index_dir)
-    meta["dirty_shards"] = dirty_shards
-    return _pin(meta, "snapshot_diff")
+    meta = _merge(spark, index_dir, config, table.diff(spark, last, current),
+                  pruned, False, build_id, fingerprint)
+    return _pin(meta, "snapshot_diff" if meta["dirty_shards"] else "noop_content")
 
 
 def incremental_update(
@@ -288,66 +265,20 @@ def incremental_update(
     stored config hash differs (reference: transform-hash change forces full
     reindex, IndexRecordsForV4.java:44-64).
 
-    SCALE NOTE: this is the DataFrame-level core merge — it full-outer-joins
-    ``new_corpus`` against doc_map, so its scan cost is O(corpus).  For
-    repeated syncs use ``incremental_update_from_table`` over a
-    SnapshotTable (or ``sources.wrap_parquet_dir`` for a plain directory),
-    which scans only the files appended since the last sync; this function
-    remains the correct tool exactly where full-corpus semantics are
-    required (overwrite snapshots, ad-hoc one-shot merges)."""
+    SCALE NOTE: the delta here is the whole of ``new_corpus``, so its scan
+    cost is O(corpus).  For repeated syncs use
+    ``incremental_update_from_table`` over a SnapshotTable (or
+    ``sources.wrap_parquet_dir`` for a plain directory), which scans only
+    the files appended since the last sync; this function remains the
+    correct tool exactly where full-corpus semantics are required (ad-hoc
+    one-shot merges)."""
     config = config or IndexConfig()
-    storage = IndexStorage(index_dir)
-    if not storage.is_committed_with(config):
-        meta = build_index(spark, new_corpus, index_dir, config,
+    if not IndexStorage(index_dir).is_committed_with(config):
+        meta = build_index(spark, _resolve_identities(new_corpus), index_dir, config,
                            build_id=build_id, input_fingerprint=input_fingerprint)
         meta["mode"] = "full_rebuild"
         return meta
-
-    ch = detect_changes(spark, new_corpus, index_dir)
-    shard = lambda c: (c / F.lit(config.docs_per_shard)).cast("int")  # noqa: E731
-    dirty = (
-        ch["modified"].select(shard(F.col("doc_id")).alias("s"))
-        .union(ch["added"].select(shard(F.col("doc_id")).alias("s")))
-        .union(ch["deleted"].select(shard(F.col("doc_id")).alias("s")))
-        .distinct()
-    )
-    dirty_shards = sorted(r["s"] for r in dirty.collect())
-    if not dirty_shards:
-        return {"mode": "noop", "shards": [], "n_docs": 0}
-
-    # rebuild corpus = every surviving doc whose id falls in a dirty shard
-    survivors = ch["unchanged"].unionByName(ch["modified"]).unionByName(ch["added"])
-    rebuild = survivors.filter(shard(F.col("doc_id")).isin(dirty_shards))
-
-    # STAGE the rebuild rows before touching the index: the lazy `rebuild`
-    # plan reads doc_map, which build_index is about to overwrite — you must
-    # never overwrite a table a live plan still scans (Iceberg gets this via
-    # snapshot isolation; plain parquet needs an explicit staging write).
-    import shutil
-    import uuid as _uuid
-
-    staging = os.path.join(index_dir, "_staging", _uuid.uuid4().hex[:12])
-    rebuild.write.mode("overwrite").parquet(staging)
-    rebuild = spark.read.parquet(staging)
-
-    # a shard fully emptied by deletions writes no partition → dynamic
-    # overwrite would leave its old data behind; drop those partitions
-    live = {r["s"] for r in rebuild.select(shard(F.col("doc_id")).alias("s")).distinct().collect()}
-    emptied = [s for s in dirty_shards if s not in live]
-    for s in emptied:
-        for table in ("doc_map", "doc_stats", "postings"):
-            storage.drop_shard_partition(table, s)
-
-    try:
-        meta = build_index(
-            spark, rebuild, index_dir, config,
-            build_id=build_id, input_fingerprint=input_fingerprint,
-            only_shards=dirty_shards,
-        )
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
-        spark.catalog.refreshByPath(index_dir)
-    meta["mode"] = "incremental"
-    meta["dirty_shards"] = dirty_shards
-    meta["emptied_shards"] = emptied
+    meta = _merge(spark, index_dir, config, new_corpus, lambda _: new_corpus,
+                  True, build_id, input_fingerprint)
+    meta["mode"] = "incremental" if meta["dirty_shards"] else "noop"
     return meta

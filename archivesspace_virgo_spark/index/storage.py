@@ -1,4 +1,4 @@
-"""Physical index layout + lineage/metrics/commit discipline.
+"""Physical index layout + lineage/commit discipline.
 
 Layout under ``index_dir`` (parquet here; on a cluster these are Iceberg
 tables — the code relies only on atomic-commit + partition-overwrite
@@ -14,17 +14,26 @@ semantics both provide):
     lexicon/      term, df, cf                (global agg; df exact — shards
                                                hold disjoint doc ranges)
     corpus_stats/ field, n_docs, total_tokens, avgdl   (per-field norms)
-    _lineage/     build_id, doc_shard, input_fingerprint, n_docs, n_terms, finished_at
-    _metrics/     build_id, phase, metric, value, ts
+    _lineage/     build_id, doc_shard, input_fingerprint, n_docs, finished_at
+                  (one row per built shard; n_docs = docs built into it)
     _meta/commit.json   config hash + build metadata — written LAST
+
+Build metrics are not a table: each build logs one JSON line at INFO
+(logger ``archivesspace_virgo_spark.index.build``) with n_docs, n_shards,
+elapsed_sec and docs_per_sec.
 
 Commit-ordering discipline mirrors the reference: hashes are persisted only
 after successful upload (IndexRecordsForV4.java:116-125); here the
 ``_meta/commit.json`` marker is the durable point — readers treat an index
-without it as absent.  The partition-by-doc_shard layout means postings for
-one term are spread over shards with disjoint contiguous doc_id ranges: this
-IS the hot-term salting of SURVEY.md §4.2 (scores are additive across
-sub-lists; exact df = sum of per-shard dfs).
+without it as absent.  It is also the ONLY validity signal: a build writes
+postings, doc_map and doc_stats as concurrent jobs, so a failed build can
+leave any subset of them rewritten, and table presence or lineage rows say
+nothing about whether the index is consistent.
+
+The partition-by-doc_shard layout means postings for one term are spread
+over shards with disjoint contiguous doc_id ranges: this IS the hot-term
+salting of SURVEY.md §4.2 (scores are additive across sub-lists; exact df =
+sum of per-shard dfs).
 """
 
 from __future__ import annotations
@@ -141,7 +150,7 @@ class IndexStorage:
         c = self.read_commit()
         return bool(c) and c.get("config_hash") == config.config_hash()
 
-    # --- lineage / metrics ---
+    # --- lineage ---
     def completed_shards(self, spark: SparkSession, input_fingerprint: str) -> List[int]:
         """Shards already built from the same input (resume support)."""
         p = self.path("_lineage")
@@ -155,12 +164,3 @@ class IndexStorage:
             .collect()
         )
         return sorted(r["doc_shard"] for r in rows)
-
-    def log_metrics(self, spark: SparkSession, build_id: str, phase: str, metrics: dict) -> None:
-        rows = [
-            (build_id, phase, k, float(v), time.time()) for k, v in metrics.items()
-        ]
-        df = spark.createDataFrame(
-            rows, "build_id string, phase string, metric string, value double, ts double"
-        )
-        self.append(df, "_metrics")

@@ -1,7 +1,12 @@
 """Incremental == full rebuild; resume; deletion handling; determinism
 (SURVEY.md §5.2-4/5/6)."""
 
+import json
+import logging
+import os
+
 import pytest
+from pyspark.sql import DataFrameWriter
 from pyspark.sql import functions as F
 
 from archivesspace_virgo_spark.config import IndexConfig
@@ -169,3 +174,82 @@ def test_refresh_rereads_corpus_stats(spark, tmp_path):
     got = [(r["doc_id"], r["score"]) for r in engine.search(terms, k=10).collect()]
     exp = [(r["doc_id"], r["score"]) for r in fresh.search(terms, k=10).collect()]
     assert got and got == exp
+
+
+def test_same_identity_versions_resolve_to_newest(spark, tmp_path):
+    """A corpus holding several commits of one (repo, path) merges as ONE
+    doc per identity, the newest commit winning — never a second doc_map
+    row per version."""
+    v1 = _input_hint_corpus(spark, n=100)
+    d = str(tmp_path / "idx")
+    build_index(spark, v1, d, CFG, input_fingerprint="v1")
+    docnum = F.regexp_extract("path", "doc/(\\d+)", 1).cast("int")
+    fresh = (
+        v1.filter(docnum < 5)
+        .withColumn("commit", F.lit("z-fresh"))
+        .withColumn("content", F.concat(F.col("content"), F.lit(" freshtoken")))
+    )
+    meta = incremental_update(spark, v1.unionByName(fresh), d, CFG,
+                              input_fingerprint="v2")
+    assert meta["mode"] == "incremental"
+    dm = IndexStorage(d).read(spark, "doc_map")
+    assert dm.count() == 100
+    assert dm.select("doc_id").distinct().count() == 100
+    engine = QueryEngine(spark, d, CFG)
+    assert engine.n_docs == 100
+    assert engine.search(["freshtoken"], k=20).count() == 5
+
+
+def test_failed_staging_write_leaves_no_staging(spark, tmp_path, monkeypatch):
+    """A merge that fails right after writing its staged rebuild rows must
+    still remove them: nothing is left under ``_staging``."""
+    v1 = _input_hint_corpus(spark, n=100)
+    d = str(tmp_path / "idx")
+    build_index(spark, v1, d, CFG, input_fingerprint="v1")
+    real = DataFrameWriter.parquet
+
+    def failing(self, path, *args, **kwargs):
+        real(self, path, *args, **kwargs)
+        if "_staging" in path:
+            raise RuntimeError("injected staging failure")
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", failing)
+    with pytest.raises(RuntimeError, match="injected"):
+        incremental_update(spark, _input_hint_corpus(spark, n=130), d, CFG,
+                           input_fingerprint="v2")
+    staging = os.path.join(d, "_staging")
+    assert not os.path.exists(staging) or not os.listdir(staging)
+
+
+def test_build_drops_only_shard_that_gets_no_rows(spark, tmp_path):
+    """``build_index(only_shards=[s])`` over rows with none in shard s (all
+    its docs deleted) leaves shard s with no doc_map and no postings."""
+    corpus = load_documents_as_corpus(spark, SF_SMOKE).filter("doc_id < 200")
+    d = str(tmp_path / "idx")
+    build_index(spark, corpus, d, CFG, input_fingerprint="v1")
+    build_index(spark, corpus.filter("doc_id >= 64"), d, CFG,
+                input_fingerprint="v2", only_shards=[0])
+    st = IndexStorage(d)
+    for table in ("doc_map", "postings"):
+        assert st.read(spark, table).filter("doc_shard = 0").count() == 0, table
+    assert QueryEngine(spark, d, CFG).n_docs == 136
+
+
+def test_build_logs_one_json_metrics_line(spark, tmp_path, caplog):
+    """Each build reports its metrics as one JSON line at INFO instead of
+    a ``_metrics`` table."""
+    d = str(tmp_path / "idx")
+    corpus = load_documents_as_corpus(spark, SF_SMOKE).filter("doc_id < 150")
+    with caplog.at_level(logging.INFO, logger="archivesspace_virgo_spark.index.build"):
+        meta = build_index(spark, corpus, d, CFG)
+    lines = [json.loads(r.getMessage()) for r in caplog.records
+             if r.name == "archivesspace_virgo_spark.index.build"]
+    assert len(lines) == 1
+    line = lines[0]
+    assert line["build_id"] == meta["build_id"]
+    assert (line["n_docs"], line["n_shards"]) == (150, 3)
+    assert line["elapsed_sec"] > 0 and line["docs_per_sec"] > 0
+    assert not os.path.exists(os.path.join(d, "_metrics"))
+    lin = IndexStorage(d).read(spark, "_lineage")
+    assert sorted((r["doc_shard"], r["n_docs"]) for r in lin.collect()) == [
+        (0, 64), (1, 64), (2, 22)]
