@@ -12,6 +12,8 @@ driver's value-hash compare never trips on float formatting.
 
 from __future__ import annotations
 
+import atexit
+import shutil
 import tempfile
 from collections.abc import Callable
 
@@ -47,6 +49,14 @@ ANN_QUERY = S.deterministic_hyperplanes(64, 1, seed=7)[0]
 _ENGINE_CACHE: dict = {}
 
 
+def _scratch_dir(prefix: str) -> str:
+    """A temp dir for a cached index or store, removed at interpreter
+    exit (the ``_ENGINE_CACHE`` entries that use it live until then)."""
+    d = tempfile.mkdtemp(prefix=prefix)
+    atexit.register(shutil.rmtree, d, ignore_errors=True)
+    return d
+
+
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/documents.parquet")
 
@@ -61,7 +71,7 @@ def _engine_for(
     key = (sf_dir, fields)
     if key not in _ENGINE_CACHE:
         cfg = IndexConfig(docs_per_shard=256, fields=fields)
-        index_dir = tempfile.mkdtemp(prefix="avs_entry_idx_")
+        index_dir = _scratch_dir("avs_entry_idx_")
         corpus = load_documents_as_corpus(spark, sf_dir)
         build_index(spark, corpus, index_dir, cfg)
         _ENGINE_CACHE[key] = QueryEngine(spark, index_dir, cfg)
@@ -116,7 +126,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             corpus = load_documents_as_corpus(spark, sf_dir)
             members = []
             for name, rem in [("a", 0), ("b", 1)]:
-                d = tempfile.mkdtemp(prefix=f"avs_alias_{name}_")
+                d = _scratch_dir(f"avs_alias_{name}_")
                 build_index(
                     spark, corpus.filter(F.col("doc_id") % 2 == rem), d, cfg
                 )
@@ -338,7 +348,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         key = ("ivf", sf_dir)
         if key not in _ENGINE_CACHE:
             emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-            store = tempfile.mkdtemp(prefix="avs_ivf_store_")
+            store = _scratch_dir("avs_ivf_store_")
             S.write_ivf_embeddings(emb, cent, store)
             _ENGINE_CACHE[key] = store
         res = S.ivf_topk(spark, _ENGINE_CACHE[key], cent, ANN_QUERY, k=K, nprobe=2)

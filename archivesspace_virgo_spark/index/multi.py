@@ -62,6 +62,26 @@ class MultiIndexEngine:
             )
         return df.select(F.lit(label).alias("index_id"), "*")
 
+    def _each(self, method: str, *args, **kw) -> list:
+        """``method(*args, **kw)`` on every member, in order.  Only
+        ``search`` supports ``exact_stats``; any other surface refuses it
+        here rather than let it reach the members as an unknown kwarg."""
+        if kw.pop("exact_stats", False):
+            raise ValueError(
+                "exact_stats=True is supported only by "
+                f"MultiIndexEngine.search, not {method}")
+        return [getattr(e, method)(*args, **kw) for e in self.engines]
+
+    def _union(self, method: str, *args, tag: bool = True,
+               **kw) -> DataFrame:
+        """The union of every member's ``method`` result, each tagged
+        with its ``index_id`` unless ``tag`` is off."""
+        parts = self._each(method, *args, **kw)
+        if tag:
+            parts = [self._tagged(lab, df)
+                     for lab, df in zip(self.labels, parts)]
+        return reduce(DataFrame.unionByName, parts)
+
     def global_stats(self, terms: Sequence[str]) -> tuple:
         """Merged corpus statistics across members (Solr ExactStatsCache):
         per-term (Σ df, Σ cf), per-field (Σ n_docs, token-weighted avgdl).
@@ -120,7 +140,7 @@ class MultiIndexEngine:
 
     def count(self, terms: Sequence[str], mode: str = "or", **kw) -> int:
         """Exact numFound = sum of member counts (disjoint members)."""
-        return sum(e.count(terms, mode=mode, **kw) for e in self.engines)
+        return sum(self._each("count", terms, mode=mode, **kw))
 
     def facet_search(self, terms: Sequence[str], field: str,
                      mode: str = "or", **kw) -> DataFrame:
@@ -128,11 +148,8 @@ class MultiIndexEngine:
         partial aggregates, summed per value — the distributed-facet
         refinement step, without the approximate first phase (members
         return complete counts, so no refinement error)."""
-        parts = [
-            e.facet_search(terms, field, mode=mode, **kw)
-            for e in self.engines
-        ]
-        u = reduce(DataFrame.unionByName, parts)
+        u = self._union("facet_search", terms, field, mode=mode, tag=False,
+                        **kw)
         return u.groupBy(field).agg(
             F.sum("facet_count").alias("facet_count")
         )
@@ -159,12 +176,8 @@ class MultiIndexEngine:
         identical key list ((index_id, doc_id) final tiebreak)."""
         spec = parse_sort_spec(sort_field, ascending)
         _check_page(k, offset)
-        parts = [
-            self._tagged(lab, e.sorted_search(terms, spec, k=k + offset,
-                                              mode=mode, **kw))
-            for lab, e in zip(self.labels, self.engines)
-        ]
-        u = reduce(DataFrame.unionByName, parts)
+        u = self._union("sorted_search", terms, spec, k=k + offset,
+                        mode=mode, **kw)
         keys = [F.asc(f) if a else F.desc(f) for f, a in spec]
         return _page(u, k, offset, *keys, F.asc("index_id"), F.asc("doc_id"))
 
@@ -180,14 +193,9 @@ class MultiIndexEngine:
         without the approximate first phase.  Cross-member ties break on
         (index_id, doc_id); group order is the group's best
         (score desc, group value asc), matching the leaf contract."""
-        parts = [
-            self._tagged(lab, e.grouped_search(terms, group_field,
-                                               k_per_group=k_per_group,
-                                               mode=mode, **kw)
-                         .drop("rank_in_group"))
-            for lab, e in zip(self.labels, self.engines)
-        ]
-        u = reduce(DataFrame.unionByName, parts)
+        u = self._union("grouped_search", terms, group_field,
+                        k_per_group=k_per_group, mode=mode,
+                        **kw).drop("rank_in_group")
         from pyspark.sql import Window
 
         w = Window.partitionBy(group_field).orderBy(
@@ -214,11 +222,7 @@ class MultiIndexEngine:
     # applied at the merge (members are asked for offset 0). ---
     def _scored(self, method: str, k: int, offset: int, *args, **kw):
         _check_page(k, offset)  # before members see k + offset
-        parts = [
-            self._tagged(lab, getattr(e, method)(*args, k=k + offset, **kw))
-            for lab, e in zip(self.labels, self.engines)
-        ]
-        u = reduce(DataFrame.unionByName, parts)
+        u = self._union(method, *args, k=k + offset, **kw)
         return _page(u, k, offset, F.desc("score"), F.asc("index_id"),
                      F.asc("doc_id"))
 
@@ -299,20 +303,15 @@ class MultiIndexEngine:
     def match_ids(self, terms, **kw) -> DataFrame:
         """(index_id, doc_shard, doc_id) of every match across members —
         the unranked union (no sort, no limit: the facet/stats primitive)."""
-        parts = [
-            self._tagged(lab, e.match_ids(terms, **kw))
-            for lab, e in zip(self.labels, self.engines)
-        ]
-        return reduce(DataFrame.unionByName, parts)
+        return self._union("match_ids", terms, **kw)
 
     def facet_range(self, terms, start: int, end: int, gap: int,
                     **kw) -> DataFrame:
         """Distributed range facets: member buckets are complete partial
         counts over disjoint docs — summed per bucket, no refinement
         error."""
-        parts = [e.facet_range(terms, start, end, gap, **kw)
-                 for e in self.engines]
-        u = reduce(DataFrame.unionByName, parts)
+        u = self._union("facet_range", terms, start, end, gap, tag=False,
+                        **kw)
         return (u.groupBy("bucket_lo")
                 .agg(F.sum("facet_count").alias("facet_count"))
                 .orderBy("bucket_lo"))
@@ -320,8 +319,7 @@ class MultiIndexEngine:
     def facet_pivot(self, terms, fields, **kw) -> DataFrame:
         """Distributed pivot facets: summed per value combination, Solr's
         count-desc ordering re-applied after the merge."""
-        parts = [e.facet_pivot(terms, fields, **kw) for e in self.engines]
-        u = reduce(DataFrame.unionByName, parts)
+        u = self._union("facet_pivot", terms, fields, tag=False, **kw)
         return (u.groupBy(*fields)
                 .agg(F.sum("facet_count").alias("facet_count"))
                 .orderBy(F.desc("facet_count"),
@@ -331,8 +329,7 @@ class MultiIndexEngine:
         """Distributed stats component: count/min/max/sum are associative
         partials; mean is recomputed as Σsum/Σcount (NOT averaged member
         means — members match different numbers of docs)."""
-        parts = [e.stats_component(terms, **kw) for e in self.engines]
-        u = reduce(DataFrame.unionByName, parts)
+        u = self._union("stats_component", terms, tag=False, **kw)
         return u.agg(
             F.sum("stats_count").alias("stats_count"),
             F.min("stats_min").alias("stats_min"),
@@ -349,9 +346,8 @@ class MultiIndexEngine:
         its documented approximation (terms.limit applies per shard, so a
         term ranked just below n on every member can be missed; raise n
         for exhaustive merges)."""
-        parts = [e.terms_component(prefix, n=n, by_count=by_count, **kw)
-                 for e in self.engines]
-        u = reduce(DataFrame.unionByName, parts)
+        u = self._union("terms_component", prefix, n=n, by_count=by_count,
+                        tag=False, **kw)
         merged = u.groupBy("term").agg(F.sum("df").alias("df"))
         order = ([F.desc("df"), F.asc("term")] if by_count
                  else [F.asc("term")])
@@ -362,8 +358,7 @@ class MultiIndexEngine:
         df, re-ranked the DirectSpellChecker way (distance, df desc, term).
         Same per-member-top-n containment caveat as ``terms_component`` —
         the shard-merge contract of Solr's distributed spellcheck."""
-        parts = [e.suggest(term, n=n, **kw) for e in self.engines]
-        u = reduce(DataFrame.unionByName, parts)
+        u = self._union("suggest", term, n=n, tag=False, **kw)
         return (u.groupBy("term", "distance")
                 .agg(F.sum("df").alias("df"))
                 .orderBy(F.asc("distance"), F.desc("df"), F.asc("term"))

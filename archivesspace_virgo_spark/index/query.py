@@ -7,29 +7,45 @@ SolrHelper.java:39-80, re-expressed natively):
     → ``_resolve``: lexicon point-lookup of the query terms (≤ |q| tiny
       rows, cached per engine) → idf with CURRENT corpus N, per-field avgdl,
       MUST_NOT and fq terms — or None when the query is statically empty
-    → ``_shard_scan``: postings WHERE term IN terms (rowgroup min/max stats
-      prune: postings are term-sorted within each shard), grouped by
-      doc_shard → one Arrow batch per shard → numpy decode (doc lengths
-      ride in each posting's dl_blob) + vectorized scoring + per-shard
-      partial top-k (exact MaxScore-style block-max skipping)
-    → ``_page``: ≤ k·n_shards partials → TakeOrderedAndProject (score
-      desc, doc_id asc), offset, limit k.
+    → ``_shard_scan``: postings WHERE term IN terms, grouped by doc_shard
+      → one Arrow batch per shard → numpy decode (doc lengths ride in each
+      posting's dl_blob) + vectorized scoring + per-shard partial top-k
+      (exact MaxScore-style block-max skipping)
+    → the page: ≤ k·n_shards partials ordered (score desc, doc_id asc),
+      offset, limit k.
 
 ``_shard_scan`` is the query layer's only grouped-map scan: every surface
 hands it a kernel; ``grouped_search`` alone cogroups the same filtered
-postings with doc_map.  The one exchange groups ≤ |terms| postings rows
-per shard; the merge moves only partials — the document-partitioned
-"local index" of production engines: one map task per shard, an
-O(k · n_shards) merge.
+postings with doc_map.  It has two executors, chosen per index by the
+postings' on-disk bytes against one cap (``_DRIVER_POSTINGS_MAX_BYTES``):
+
+- **driver** (at or under the cap): on the first query the engine reads
+  ``postings/`` and ``lexicon/`` once into driver-resident Arrow tables.
+  A scan filters the postings table by term (and shard) and runs the same
+  kernel on each doc_shard group in pandas; ``term_stats`` looks terms up
+  in the lexicon table.  The top-k page is cut in pandas and returned as
+  a local relation, so a query runs no Spark job.
+- **Spark** (over the cap): the postings scan prunes rowgroups by their
+  term min/max stats (postings are term-sorted within each shard), one
+  exchange groups ≤ |terms| rows per shard into ``applyInPandas``, and
+  only the partials reach the TakeOrderedAndProject merge — the
+  document-partitioned "local index" of production engines: one map task
+  per shard, an O(k · n_shards) merge.
+
+``refresh()`` drops the driver tables; the next query reloads them.
 """
 
 from __future__ import annotations
 
 import math
+import os
 from typing import List, NamedTuple, Optional, Sequence
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.dataset as pads
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -45,6 +61,9 @@ _BLOCK_COLS = _SCORE_COLS + ("block_last_doc", "block_max_tf", "block_min_dl",
                              "block_doc_off", "block_tf_off", "block_dl_off")
 _POS_COLS = _SCORE_COLS + ("pos_blob",)
 _M = np.int64(1) << np.int64(33)  # doc·_M + position keys; > any doc length
+# an index whose postings take at most this many bytes on disk is served
+# from driver memory (about 4x that as Arrow); a larger one by Spark
+_DRIVER_POSTINGS_MAX_BYTES = 32 << 20
 
 
 def lucene_idf(n_docs: int, df: int) -> float:
@@ -699,6 +718,18 @@ def _make_phrase_scorer(stored: List[str], freq, idf_sum: float,
     return scorer
 
 
+def _dir_bytes(path: str) -> int:
+    """Bytes of every file under ``path`` (0 when it does not exist)."""
+    return sum(os.path.getsize(os.path.join(d, f))
+               for d, _dirs, files in os.walk(path) for f in files)
+
+
+def _rows_of(table: pa.Table, column: str, values) -> pa.Table:
+    """The rows of ``table`` whose ``column`` is in ``values``."""
+    vals = pa.array(list(values), type=table.schema.field(column).type)
+    return table.filter(pc.is_in(table[column], value_set=vals))
+
+
 class _Query(NamedTuple):
     """A query after term resolution: the live (lexicon-present) stored
     terms in sorted order with their per-field idf × boost and avgdl, the
@@ -722,24 +753,28 @@ class QueryEngine:
 
     def __init__(self, spark: SparkSession, index_dir: str,
                  config: Optional[IndexConfig] = None):
-        """Postings + lexicon are pinned via DataFrame cache
-        (MEMORY_AND_DISK) on first use: a long-lived query service keeps
-        its index hot, cutting steady-state latency ~2-15x (parquet footer
-        reads, file listing and decode all disappear from the per-query
-        path).  Cache is partition-grained and spills, so it degrades
-        gracefully when the index exceeds cluster memory; a snapshot-bound
-        engine never sees stale data (call ``refresh()`` after an
-        incremental merge)."""
+        """Nothing is read but the commit marker and corpus stats until the
+        first query.  That query picks the executor: an index whose
+        postings fit ``_DRIVER_POSTINGS_MAX_BYTES`` on disk loads postings
+        and lexicon into driver-resident Arrow tables and is served with
+        no Spark job; a larger one pins postings and lexicon via DataFrame
+        cache (MEMORY_AND_DISK, partition-grained, spills) and is served
+        by Spark.  A snapshot-bound engine never sees stale data: call
+        ``refresh()`` after an incremental merge."""
         self.spark = spark
         self.storage = IndexStorage(index_dir)
         self.config = config or IndexConfig()
         self._postings = None
         self._lexicon = None
+        #: (postings, lexicon) Arrow tables of a driver-resident index,
+        #: False when Spark serves it, None until the first query decides
+        self._driver = None
         #: driver-side (df, cf) cache — absent terms cached as None so a
-        #: repeated miss never re-queries.  Every query otherwise pays a
-        #: separate lexicon job BEFORE the scoring job; a long-lived query
-        #: service's vocabulary is Zipfian, so this halves steady-state
-        #: job count.  Bounded: one small tuple per distinct queried term.
+        #: repeated miss never re-queries.  On the Spark executor every
+        #: query otherwise pays a separate lexicon job BEFORE the scoring
+        #: job; a long-lived query service's vocabulary is Zipfian, so
+        #: this halves steady-state job count.  Bounded: one small tuple
+        #: per distinct queried term.
         self._term_cache: dict = {}
         self._load_commit()
 
@@ -800,14 +835,27 @@ class QueryEngine:
             self._lexicon = self.storage.read(self.spark, "lexicon").cache()
         return self._lexicon
 
+    def _driver_tables(self):
+        """The driver-resident (postings, lexicon) Arrow tables, read once
+        on first use; None when the postings exceed the cap on disk and
+        Spark serves the index."""
+        if self._driver is None:
+            fits = (_dir_bytes(self.storage.path("postings"))
+                    <= _DRIVER_POSTINGS_MAX_BYTES)
+            self._driver = fits and tuple(
+                pads.dataset(self.storage.path(t), format="parquet",
+                             partitioning="hive").to_table()
+                for t in ("postings", "lexicon"))
+        return self._driver or None
+
     def refresh(self) -> None:
         """Re-open the committed index (call after an incremental merge):
-        drop the cached tables and term stats, re-check the commit, and
-        re-read the corpus statistics."""
+        drop the cached and driver-resident tables and the term stats,
+        re-check the commit, and re-read the corpus statistics."""
         for df in (self._postings, self._lexicon):
             if df is not None:
                 df.unpersist()
-        self._postings = self._lexicon = None
+        self._postings = self._lexicon = self._driver = None
         self._term_cache.clear()
         self._load_commit()
 
@@ -815,9 +863,17 @@ class QueryEngine:
     def term_stats(self, terms: Sequence[str]) -> dict:
         missing = [t for t in set(terms) if t not in self._term_cache]
         if missing:
-            lex = self._lexicon_df()
-            rows = lex.filter(F.col("term").isin(missing)).collect()
-            found = {r["term"]: (int(r["df"]), int(r["cf"])) for r in rows}
+            tables = self._driver_tables()
+            if tables is None:
+                rows = self._lexicon_df().filter(
+                    F.col("term").isin(missing)).collect()
+                found = {r["term"]: (int(r["df"]), int(r["cf"]))
+                         for r in rows}
+            else:
+                lex = _rows_of(tables[1], "term", missing)
+                found = dict(zip(lex["term"].to_pylist(),
+                                 zip(lex["df"].to_pylist(),
+                                     lex["cf"].to_pylist())))
             for t in missing:
                 self._term_cache[t] = found.get(t)  # None = known-absent
         return {
@@ -872,12 +928,37 @@ class QueryEngine:
                       min_match)
 
     def _shard_scan(self, terms: Sequence[str], columns: Sequence[str],
-                    kernel, schema: str, shards=None) -> DataFrame:
+                    kernel, schema: str, shards=None,
+                    page: Optional[tuple] = None) -> DataFrame:
         """The query layer's one grouped-map scan: the postings rows of
         ``terms`` (optionally only in ``shards``), projected to
-        ``columns``, one Arrow batch per doc_shard through ``kernel``."""
-        return self._postings_scan(terms, columns, shards).groupBy(
-            "doc_shard").applyInPandas(kernel, schema=schema)
+        ``columns``, one batch per doc_shard through ``kernel``; with
+        ``page=(k, offset)``, the default page of its output (score desc,
+        doc_id asc).  On a driver-resident index the kernels run here in
+        pandas, and the output comes back as a local relation that
+        collects without a Spark job."""
+        if page is not None:
+            _check_page(*page)  # before any kernel cuts at k + offset
+        tables = self._driver_tables()
+        if tables is None:
+            out = self._postings_scan(terms, columns, shards).groupBy(
+                "doc_shard").applyInPandas(kernel, schema=schema)
+            return out if page is None else _page(out, *page)
+        rows = _rows_of(tables[0], "term", terms)
+        if shards is not None:
+            rows = _rows_of(rows, "doc_shard", shards)
+        pdf = rows.select(["doc_shard", "term", *columns]).to_pandas()
+        parts = [kernel(g.reset_index(drop=True))
+                 for _s, g in pdf.groupby("doc_shard", sort=False)]
+        parts = [p for p in parts if len(p)]  # pandas warns on empty ones
+        out = (pd.concat(parts, ignore_index=True) if parts else
+               pd.DataFrame(columns=[c.split()[0] for c in schema.split(",")]))
+        if page is not None:
+            k, offset = page
+            order = np.lexsort((out["doc_id"].to_numpy(np.int64),
+                                -out["score"].to_numpy(np.float64)))
+            out = out.iloc[order[offset:offset + k]]
+        return self.spark.createDataFrame(out, schema)
 
     def _postings_scan(self, terms, columns, shards=None) -> DataFrame:
         cond = F.col("term").isin(list(terms))
@@ -936,17 +1017,20 @@ class QueryEngine:
         a multi-index collection scores under the SAME merged stats."""
         q = self._resolve(terms, mode, exclude, filters, boosts,
                           min_should_match, global_stats=global_stats)
-        return _page(self._score_partials(q, k + offset), k, offset)
+        return self._score_partials(q, k + offset, page=(k, offset))
 
     def _score_partials(self, q: Optional[_Query], kk: int,
                         return_all: bool = False,
                         term_clauses: Optional[List[List[int]]] = None,
-                        n_clauses: int = 0) -> DataFrame:
+                        n_clauses: int = 0,
+                        page: Optional[tuple] = None) -> DataFrame:
         """The BM25 shard scan of a resolved query: the unordered
         per-shard partials (top-kk rows each, or EVERY matching doc when
-        ``return_all``); no rows when ``q`` is statically empty."""
+        ``return_all``), or their ``page=(k, offset)``; no rows when
+        ``q`` is statically empty."""
         if q is None:
-            return self._no_hits()
+            return self._no_hits() if page is None else \
+                _page(self._no_hits(), *page)
         scorer = _make_shard_scorer(
             q.live, q.idfs, q.avgdls, kk, self.config.k1, self.config.b,
             self.config.docs_per_shard, q.mode, neg_terms=q.neg,
@@ -954,7 +1038,8 @@ class QueryEngine:
             n_clauses=n_clauses, filter_clauses=q.filters or None,
             return_all=return_all,
         )
-        return self._shard_scan(q.scan_terms, _BLOCK_COLS, scorer, _SCORED)
+        return self._shard_scan(q.scan_terms, _BLOCK_COLS, scorer, _SCORED,
+                                page=page)
 
     # --- the full scored match set (the primitive behind Solr grouping /
     # field sorting: Lucene's collectors also visit every match) ---
@@ -1281,8 +1366,8 @@ class QueryEngine:
             self.config.k1, self.config.b, self.config.docs_per_shard,
             float(tie),
         )
-        return _page(self._shard_scan(stored_terms, _SCORE_COLS, scorer,
-                                      _SCORED), k, offset)
+        return self._shard_scan(stored_terms, _SCORE_COLS, scorer, _SCORED,
+                                page=(k, offset))
 
     # --- Lucene BooleanQuery of MUST clauses (the reference's compound
     # query shape: ``getQuery(...) + " AND types:repository"``
@@ -1345,11 +1430,10 @@ class QueryEngine:
                 < len(clauses):
             # a clause whose every term is absent can never be satisfied
             return _page(self._no_hits(), k, offset)
-        partials = self._score_partials(
+        return self._score_partials(
             q, k + offset, term_clauses=[sorted(term_cl[t]) for t in q.live],
-            n_clauses=len(clauses),
+            n_clauses=len(clauses), page=(k, offset),
         )
-        return _page(partials, k, offset)
 
     # --- multi-term query rewrites (Lucene MultiTermQuery family; the
     # Solr wildcard/fuzzy syntax of q=pre* / q=term~1 the reference's
@@ -1764,8 +1848,8 @@ class QueryEngine:
             self.config.k1, self.config.b, self.config.docs_per_shard,
             only_ids,
         )
-        return _page(self._shard_scan(uniq, _POS_COLS, scorer, _SCORED,
-                                      shards), k, offset)
+        return self._shard_scan(uniq, _POS_COLS, scorer, _SCORED, shards,
+                                page=(k, offset))
 
     # --- ordered proximity query (Lucene SpanNearQuery(inOrder=true) /
     # the Solr ``"a b"~N`` proximity surface; built on the same stored v7

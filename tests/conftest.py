@@ -28,3 +28,16 @@ def spark():
     s.sparkContext.setLogLevel("ERROR")
     yield s
     s.stop()
+
+
+def spark_executor_engine(spark, index_dir, cfg):
+    """A QueryEngine whose executor choice is made under a postings cap no
+    index fits, so it serves every query through Spark (every test index
+    is small enough to be driver-resident otherwise)."""
+    from archivesspace_virgo_spark.index import query
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(query, "_DRIVER_POSTINGS_MAX_BYTES", -1)
+        engine = query.QueryEngine(spark, index_dir, cfg)
+        assert engine._driver_tables() is None
+    return engine

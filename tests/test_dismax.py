@@ -13,7 +13,7 @@ from archivesspace_virgo_spark.functions.bm25 import dismax_oracle_sql
 from archivesspace_virgo_spark.index.build import build_index
 from archivesspace_virgo_spark.index.query import QueryEngine
 
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, spark_executor_engine
 
 CFG = IndexConfig(docs_per_shard=64, block_size=16, fields=("content", "lang"))
 # the documents fixture tokenizes lang to exactly one token per doc, so a
@@ -78,7 +78,11 @@ def test_dismax_zero_data_shuffles(engine):
     (a doc's field-scoped postings all live in its home shard): the ONLY
     exchange in the plan groups the ≤|terms|×|fields| posting rows by
     doc_shard, and the ≤k partials merge through TakeOrderedAndProject —
-    no per-posting or per-doc row ever crosses a shuffle."""
+    no per-posting or per-doc row ever crosses a shuffle.  This is the
+    Spark executor's plan, so the engine is opened under a postings cap
+    no index fits."""
+    engine = spark_executor_engine(engine.spark, engine.storage.index_dir,
+                                   CFG)
     df = engine.dismax_search(["table", "en"], fields=("content", "lang"),
                               k=10)
     plan = df._jdf.queryExecution().executedPlan().toString()

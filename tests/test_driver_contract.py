@@ -2,6 +2,8 @@
 and compare row-count + sorted values against oracle_sql() in DuckDB."""
 
 import math
+import os
+import tempfile
 
 import duckdb
 import pytest
@@ -77,3 +79,31 @@ def test_entry_smoke(spark):
     rows = df.collect()
     assert len(rows) >= 0
     assert df.columns == ["doc_id", "score_micro"]
+
+
+def test_scratch_dirs_removed_at_exit(spark, monkeypatch):
+    """Every temp dir behind a cached engine or store (the entry index,
+    both alias members, the IVF store) is registered for removal at
+    interpreter exit."""
+    import atexit
+
+    exits, made = [], []
+    mkdtemp = tempfile.mkdtemp
+
+    def recording_mkdtemp(*a, **kw):
+        made.append(mkdtemp(*a, **kw))
+        return made[-1]
+
+    monkeypatch.setattr(atexit, "register",
+                        lambda fn, *a, **kw: exits.append((fn, a, kw)))
+    monkeypatch.setattr(tempfile, "mkdtemp", recording_mkdtemp)
+    monkeypatch.setattr(entrymod, "_ENGINE_CACHE", {})
+    entrymod.entry(spark).collect()
+    q = entrymod.queries()
+    for name in ("multi_alias_topk", "ivf_ann_topk"):
+        q[name](spark, SF_SMOKE).collect()
+    ours = [d for d in made if os.path.basename(d).startswith("avs_")]
+    assert len(ours) == 4, made
+    for fn, a, kw in exits:
+        fn(*a, **kw)
+    assert [d for d in ours if os.path.exists(d)] == []

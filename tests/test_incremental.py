@@ -176,6 +176,45 @@ def test_refresh_rereads_corpus_stats(spark, tmp_path):
     assert got and got == exp
 
 
+def test_refresh_reloads_driver_resident_tables(spark, tmp_path):
+    """A driver-resident engine answers from the index as of its last
+    ``refresh()``: after an incremental merge adds a doc with a new word
+    and removes another, the refreshed engine finds the word and drops
+    the removed doc, with the oracle's ids and scores."""
+    from archivesspace_virgo_spark.oracle import build_oracle_index, oracle_search
+    from archivesspace_virgo_spark.tokenizer import tokenize_text
+
+    d = str(tmp_path / "idx")
+    v1 = _input_hint_corpus(spark, n=120)
+    build_index(spark, v1, d, CFG, input_fingerprint="v1")
+    engine = QueryEngine(spark, d, CFG)
+    docnum = F.regexp_extract("path", "doc/(\\d+)", 1).cast("int")
+    old_word = tokenize_text(v1.filter(docnum == 7).first()["content"])[0]
+    new_word = "zzfreshword"
+    queries = [[new_word], [old_word], [old_word, new_word]]
+    for terms in queries:  # load the driver tables; cache the miss
+        engine.search(terms, k=1000).collect()
+    assert engine._driver_tables() is not None
+    added = (v1.filter(docnum == 8)
+             .withColumn("path", F.concat("path", F.lit("_fresh")))
+             .withColumn("content", F.concat("content", F.lit(f" {new_word}"))))
+    v2 = v1.filter(docnum != 7).unionByName(added)
+    meta = incremental_update(spark, v2, d, CFG, input_fingerprint="v2")
+    assert meta["mode"] == "incremental"
+    engine.refresh()
+    ids = IndexStorage(d).read(spark, "doc_map").select("doc_id", "repo", "path")
+    docs = [(r["doc_id"], r["content"]) for r in
+            v2.join(ids, ["repo", "path"]).select("doc_id", "content").collect()]
+    oracle = build_oracle_index(docs)
+    for terms in queries:
+        got = [(r["doc_id"], r["score"])
+               for r in engine.search(terms, k=1000).collect()]
+        exp = oracle_search(oracle, terms, k=1000)
+        assert got and [g for g, _s in got] == [e for e, _s in exp], terms
+        for (_g, gs), (_e, es) in zip(got, exp):
+            assert abs(gs - es) < 1e-9, terms
+
+
 def test_same_identity_versions_resolve_to_newest(spark, tmp_path):
     """A corpus holding several commits of one (repo, path) merges as ONE
     doc per identity, the newest commit winning — never a second doc_map

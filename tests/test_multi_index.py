@@ -210,6 +210,21 @@ def test_exact_stats_nested_member_raises(engines):
     assert nested.search(TERMS, k=5).count() == 5
 
 
+@pytest.mark.parametrize("method,args", [
+    ("query", ("spark window",)),
+    ("phrase_search", (["value", "table"],)),
+    ("boolean_search", ([["spark"], ["window"]],)),
+    ("count", (TERMS,)),
+    ("match_ids", (TERMS,)),
+])
+def test_exact_stats_refused_off_search(engines, method, args):
+    """Only ``search`` merges statistics across members; every other
+    surface rejects ``exact_stats=True`` up front, naming ``search``."""
+    multi = MultiIndexEngine(engines, labels=["a", "b"])
+    with pytest.raises(ValueError, match="only by MultiIndexEngine.search"):
+        getattr(multi, method)(*args, exact_stats=True)
+
+
 # --- round-5: the full distributed query surface, each pinned against a
 # pure-Python merge of the members' own (oracle-pinned) results ---
 

@@ -19,7 +19,7 @@ from archivesspace_virgo_spark.corpus import load_documents_as_corpus, with_cont
 from archivesspace_virgo_spark.index.build import _make_packer_arrow, tokenized
 from archivesspace_virgo_spark.index.storage import POSTINGS_SCHEMA
 
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, spark_executor_engine
 
 CFG = IndexConfig(docs_per_shard=64, block_size=16)
 
@@ -70,12 +70,13 @@ def test_multifield_build_single_exchange(spark):
 
 @pytest.fixture(scope="module")
 def engine(spark, tmp_path_factory):
+    """An engine on the Spark executor: its executor choice is made under
+    a postings cap no index fits (these tests pin the Spark plan)."""
     from archivesspace_virgo_spark.index.build import build_index
-    from archivesspace_virgo_spark.index.query import QueryEngine
 
     d = str(tmp_path_factory.mktemp("idx"))
     build_index(spark, load_documents_as_corpus(spark, SF_SMOKE), d, CFG)
-    return QueryEngine(spark, d, CFG)
+    return spark_executor_engine(spark, d, CFG)
 
 
 _TOPK = {
@@ -99,6 +100,31 @@ def test_query_partials_exchange_free(engine, surface):
     # rows per shard; TakeOrderedAndProject merges partials without another
     assert plan.count("Exchange") <= 1, plan[:4000]
     assert "TakeOrderedAndProject" in plan
+
+
+@pytest.mark.parametrize("surface", ["search", "phrase_search", "query"])
+def test_driver_resident_query_runs_no_spark_job(spark, engine, surface):
+    """On an index under the postings cap the kernels run on the driver
+    and the page comes back as a local relation: issuing and collecting
+    the query submits no Spark job."""
+    from archivesspace_virgo_spark.index.query import QueryEngine
+
+    driver = QueryEngine(spark, engine.storage.index_dir, CFG)
+    call = {
+        "search": lambda e: e.search(["table", "join"], k=10),
+        "phrase_search": lambda e: e.phrase_search(["table", "join"], k=10),
+        "query": lambda e: e.query("table join^2 -spark", k=10),
+    }[surface]
+    sc = spark.sparkContext
+    group = f"driver-resident-{surface}"
+    sc.setJobGroup(group, surface)
+    try:
+        rows = call(driver).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert rows
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert rows == call(engine).collect()
 
 
 def test_query_layer_has_one_shard_scan():
