@@ -14,17 +14,26 @@ SolrHelper.java:39-80, re-expressed natively):
     → the page: ≤ k·n_shards partials ordered (score desc, doc_id asc),
       offset, limit k.
 
+Every shard kernel is built from the same three steps, as every Lucene
+scorer calls the one ``BM25Similarity``: ``_decode`` (a postings row →
+shard-local doc ids, tf, dl), ``_bm25`` (the term score; the phrase
+family passes its phrase frequency as tf, the block bound idf 1) and
+``_top_k`` (the tie-keeping per-shard cut).  A kernel returns None for
+"no rows"; the scan supplies the typed empty frame.
+
 ``_shard_scan`` is the query layer's only grouped-map scan: every surface
 hands it a kernel; ``grouped_search`` alone cogroups the same filtered
-postings with doc_map.  It has two executors, chosen per index by the
-postings' on-disk bytes against one cap (``_DRIVER_POSTINGS_MAX_BYTES``):
+postings with doc_map (its kernel is ``_make_shard_scorer`` plus the
+group values).  It has two executors, chosen per index by the postings'
+on-disk bytes against one cap (``_DRIVER_POSTINGS_MAX_BYTES``):
 
 - **driver** (at or under the cap): on the first query the engine reads
   ``postings/`` and ``lexicon/`` once into driver-resident Arrow tables.
   A scan filters the postings table by term (and shard) and runs the same
   kernel on each doc_shard group in pandas; ``term_stats`` looks terms up
   in the lexicon table.  The top-k page is cut in pandas and returned as
-  a local relation, so a query runs no Spark job.
+  an Arrow local relation (``_local``, as are empty results), so a query
+  runs no Spark job.
 - **Spark** (over the cap): the postings scan prunes rowgroups by their
   term min/max stats (postings are term-sorted within each shard), one
   exchange groups ≤ |terms| rows per shard into ``applyInPandas``, and
@@ -37,6 +46,7 @@ postings' on-disk bytes against one cap (``_DRIVER_POSTINGS_MAX_BYTES``):
 
 from __future__ import annotations
 
+import functools
 import math
 import os
 from typing import List, NamedTuple, Optional, Sequence
@@ -48,11 +58,16 @@ import pyarrow.compute as pc
 import pyarrow.dataset as pads
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import DataType
 
+from archivesspace_virgo_spark import codec
 from archivesspace_virgo_spark.config import IndexConfig
 from archivesspace_virgo_spark.index.storage import IndexStorage
 
 _SCORED = "doc_id long, score double"
+_CONTRIB = ("doc_id long, term string, idf double, tf long, dl long, "
+            "contrib double")
 # postings columns a kernel reads besides doc_shard/term; pos_blob (and cf)
 # stay out unless positions are needed: shipping them would roughly double
 # the per-query transfer bytes
@@ -94,6 +109,62 @@ def _page(df: DataFrame, k: int, offset: int, *keys) -> DataFrame:
     return ordered.limit(k)
 
 
+@functools.lru_cache(maxsize=32)
+def _arrow_schema(schema: str) -> pa.Schema:
+    """The Arrow schema of a Spark DDL schema string (parsed once)."""
+    return to_arrow_schema(DataType.fromDDL(schema))
+
+
+def _decode(row, base: int, blocks: Optional[np.ndarray] = None):
+    """A postings row's (doc ids − ``base``, tf, dl), all int64: every
+    posting, or only those of the selected ``blocks`` (random access
+    through the per-block offsets)."""
+    if blocks is None:
+        d, tf, dl = codec.decode_postings(row.doc_blob, row.tf_blob,
+                                          row.dl_blob)
+    else:
+        d, tf, dl = codec.decode_posting_blocks(
+            row.doc_blob, row.tf_blob, row.dl_blob, row.block_doc_off,
+            row.block_tf_off, row.block_dl_off, row.block_last_doc, blocks)
+    return d.astype(np.int64) - base, tf, dl
+
+
+def _by_term(pdf: pd.DataFrame) -> dict:
+    """A shard batch's postings rows keyed by term (one row per term)."""
+    return dict(zip(pdf["term"], pdf.itertuples(index=False)))
+
+
+def _doc_ids(row) -> np.ndarray:
+    """A postings row's doc ids alone (no tf/dl decode)."""
+    return codec.delta_decode(codec.varbyte_decode(row.doc_blob)).astype(
+        np.int64)
+
+
+def _bm25(idf, tf, dl, avgdl: float, k1: float, b: float) -> np.ndarray:
+    """Lucene's BM25 term score idf·tf / (tf + k1·(1 − b + b·dl/avgdl)),
+    in float64 — the one scoring step of every kernel."""
+    tf = np.asarray(tf, dtype=np.float64)
+    dl = np.asarray(dl, dtype=np.float64)
+    return idf * tf / (tf + k1 * (1.0 - b + b * dl / avgdl))
+
+
+def _top_k(local: np.ndarray, score: np.ndarray, k: Optional[int],
+           base: int, rescore=None) -> pd.DataFrame:
+    """The per-shard top-k cut: keep every doc scoring at least the k-th
+    best (boundary ties survive for the doc_id tiebreak), let
+    ``rescore(local)`` recompute the survivors' scores when given, then
+    order by (score desc, doc_id asc) and keep k (all when k is None)."""
+    if k is not None and local.size > k:
+        top = np.argpartition(-score, k - 1)[:k]
+        keep = score >= score[top].min()
+        local, score = local[keep], score[keep]
+    if rescore is not None:
+        score = rescore(local)
+    order = np.lexsort((local, -score))[:k]
+    return pd.DataFrame({"doc_id": (local[order] + base).astype(np.int64),
+                         "score": score[order]})
+
+
 def parse_sort_spec(sort_field, ascending: bool = True):
     """Normalize a Solr sort spec to ``[(field, asc_bool), ...]``.
 
@@ -132,8 +203,7 @@ def parse_sort_spec(sort_field, ascending: bool = True):
     return out
 
 
-def _excluded_mask(by_term, neg, filter_clauses, docs_per_shard, base,
-                   codec):
+def _excluded_mask(by_term, neg, filter_clauses, docs_per_shard, base):
     """Shard-local exclusion mask shared by every scoring kernel:
     MUST_NOT postings mark docs excluded; each FILTER clause (Solr fq)
     marks docs NOT matching any of its terms excluded.  Returns
@@ -145,10 +215,9 @@ def _excluded_mask(by_term, neg, filter_clauses, docs_per_shard, base,
             row = by_term.get(t)
             if row is None:
                 continue
-            d = codec.delta_decode(codec.varbyte_decode(row.doc_blob))
             if excluded is None:
                 excluded = np.zeros(docs_per_shard, dtype=bool)
-            excluded[d.astype(np.int64) - base] = True
+            excluded[_doc_ids(row) - base] = True
     if filter_clauses:
         for cl in filter_clauses:
             clause_ok = np.zeros(docs_per_shard, dtype=bool)
@@ -158,8 +227,7 @@ def _excluded_mask(by_term, neg, filter_clauses, docs_per_shard, base,
                 if row is None:
                     continue
                 hit = True
-                d = codec.delta_decode(codec.varbyte_decode(row.doc_blob))
-                clause_ok[d.astype(np.int64) - base] = True
+                clause_ok[_doc_ids(row) - base] = True
             if not hit:
                 return None, True  # no clause term posts in this shard
             if excluded is None:
@@ -184,7 +252,7 @@ def _make_shard_scorer(
     filter_clauses: Optional[List[List[str]]] = None,
     return_all: bool = False,
 ):
-    """Per-shard scoring kernel for cogroup-applyInPandas.
+    """Per-shard scoring kernel of ``search`` and its relatives.
 
     Vectorized numpy term-at-a-time scoring (np.add.at scatter-accumulate
     into a dense shard-local array) with an EXACT MaxScore-style pruning
@@ -197,8 +265,11 @@ def _make_shard_scorer(
     valid across incremental rebuilds.
 
     Float determinism: the per-doc accumulation must match the oracle's
-    sorted-term order, so contributions are buffered per term and reduced in
-    sorted-term order at the end (float64 addition is order-sensitive).
+    sorted-term order (float64 addition is order-sensitive).  Only a
+    pruning (flat-OR top-k) scan visits terms in bound order; it buffers
+    each term's contributions and re-sums the survivors of the cut in
+    sorted-term order.  Every other scan adds them in sorted-term order
+    straight away, and reads no block columns.
 
     Boolean generalizations (both disable MaxScore pruning — its threshold
     is only valid when every scored doc qualifies):
@@ -219,8 +290,6 @@ def _make_shard_scorer(
     mask applied BEFORE scoring, so filtering adds no shuffle, excluded
     docs never inflate the pruning threshold, and MaxScore stays exact.
     """
-    from archivesspace_virgo_spark import codec  # re-imported on workers
-
     n_query_terms = len(set(terms))
     neg_set = sorted(set(neg_terms or ()))
     if term_clauses is not None and n_clauses > 63:
@@ -237,24 +306,13 @@ def _make_shard_scorer(
     # return_all every matching doc's exact score is required
     flat_or = (mode == "or" and term_clauses is None and min_match <= 1
                and not return_all)
+    need = n_query_terms if mode == "and" else max(1, min_match)
 
-    def term_bound(row, avgdl: float) -> float:
-        max_tf = np.asarray(row.block_max_tf, dtype=np.float64)
-        min_dl = np.asarray(row.block_min_dl, dtype=np.float64)
-        nrm = k1 * (1.0 - b + b * min_dl / avgdl)
-        return float((max_tf / (max_tf + nrm)).max()) if max_tf.size else 0.0
-
-    def score(postings_pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({"doc_id": pd.Series(dtype="int64"),
-                              "score": pd.Series(dtype="float64")})
-        by_term = {
-            t: row
-            for t, row in zip(postings_pdf["term"], postings_pdf.itertuples(index=False))
-        }
+    def score(postings_pdf: pd.DataFrame) -> Optional[pd.DataFrame]:
+        by_term = _by_term(postings_pdf)
         if not by_term:
-            return empty
-        shard = int(postings_pdf["doc_shard"].iloc[0])
-        base = shard * docs_per_shard
+            return None
+        base = int(postings_pdf["doc_shard"].iloc[0]) * docs_per_shard
         # MUST_NOT exclusion (Lucene BooleanClause / Solr ``-term``) and
         # FILTER clauses (fq): one shard-local mask stripped from every
         # positive term's postings BEFORE scoring — excluded docs never
@@ -262,28 +320,30 @@ def _make_shard_scorer(
         # pruning threshold, so MaxScore/WAND pruning stays exact.
         # Entirely shard-local: no extra shuffle.
         excluded, impossible = _excluded_mask(
-            by_term, neg_set, filter_clauses, docs_per_shard, base, codec
+            by_term, neg_set, filter_clauses, docs_per_shard, base
         )
         if impossible:
-            return empty
+            return None
         present = [(i, terms[i]) for i in range(len(terms)) if terms[i] in by_term]
-        if mode == "and" and len(present) < n_query_terms:
-            return empty
-        if min_match > 1 and len(present) < min_match:
-            return empty
+        if len(present) < need:
+            return None
         if clause_bits is not None:
             covered = np.int64(0)
             for i, _t in present:
                 covered |= clause_bits[i]
             if covered != full_cover:
-                return empty  # a whole clause is absent from this shard
-        # process strongest terms first so the pruning threshold rises fast
-        ubs = {i: idfs[i] * term_bound(by_term[t], avgdls[i]) for i, t in present}
-        order_by_ub = sorted(present, key=lambda it: -ubs[it[0]])
-        total_rem = sum(ubs.values())
-
+                return None  # a whole clause is absent from this shard
         sorted_order = sorted(present, key=lambda it: it[1])
-        needs_rescore = len(present) > 1 and order_by_ub != sorted_order
+        order = sorted_order
+        if flat_or:
+            # process strongest terms first so the pruning threshold rises
+            # fast; a term's bound is its best block's BM25 at idf 1
+            ubs = {i: idfs[i] * float(_bm25(
+                1.0, by_term[t].block_max_tf, by_term[t].block_min_dl,
+                avgdls[i], k1, b).max(initial=0.0)) for i, t in present}
+            order = sorted(present, key=lambda it: -ubs[it[0]])
+            total_rem = sum(ubs.values())
+        needs_rescore = len(present) > 1 and order != sorted_order
 
         scores = np.zeros(docs_per_shard, dtype=np.float64)
         seen = np.zeros(docs_per_shard, dtype=np.int32)
@@ -303,10 +363,10 @@ def _make_shard_scorer(
         # could prune is > total_rem >= 0, so non-positive touched scores
         # can never displace the top k).
         cand_parts: list = []
-        for i, t in order_by_ub:
+        for i, t in order:
             row = by_term[t]
-            prune = flat_or and total_rem < theta
-            if prune:
+            blocks = None
+            if flat_or and total_rem < theta:
                 # WAND-style block skipping: a non-essential term can only
                 # change the scores of docs already seen under an essential
                 # term — decode ONLY the blocks whose doc range intersects
@@ -322,28 +382,15 @@ def _make_shard_scorer(
                 lo[1:] = last[:-1]
                 left = np.searchsorted(cand_docs, lo + 1, side="left")
                 right = np.searchsorted(cand_docs, last, side="right")
-                sel = np.flatnonzero(right > left)
-                doc_ids, tfs, dls = codec.decode_posting_blocks(
-                    row.doc_blob, row.tf_blob, row.dl_blob,
-                    row.block_doc_off, row.block_tf_off, row.block_dl_off,
-                    last, sel,
-                )
-                local = doc_ids.astype(np.int64) - base
-                tfs = tfs.astype(np.float64)
-                dls = dls.astype(np.float64)
-                mask = seen[local] > 0  # untouched docs can't reach theta
-                local, tfs, dls = local[mask], tfs[mask], dls[mask]
-            else:
-                doc_ids, tfs, dls = codec.decode_postings(
-                    row.doc_blob, row.tf_blob, row.dl_blob
-                )
-                local = doc_ids.astype(np.int64) - base
-                tfs = tfs.astype(np.float64)
-                dls = dls.astype(np.float64)
+                blocks = np.flatnonzero(right > left)
+            local, tfs, dls = _decode(row, base, blocks)
+            if blocks is not None:
+                keep = seen[local] > 0  # untouched docs can't reach theta
+                local, tfs, dls = local[keep], tfs[keep], dls[keep]
             if excluded is not None:
                 keep = ~excluded[local]
                 local, tfs, dls = local[keep], tfs[keep], dls[keep]
-            contrib = idfs[i] * tfs / (tfs + k1 * (1.0 - b + b * dls / avgdls[i]))
+            contrib = _bm25(idfs[i], tfs, dls, avgdls[i], k1, b)
             # first-touch docs join the candidate list exactly once
             # (postings are unique per term, so `local` has no duplicates)
             newly = local[seen[local] == 0]
@@ -355,50 +402,36 @@ def _make_shard_scorer(
                 np.bitwise_or.at(cl_mask, local, clause_bits[i])
             if needs_rescore:
                 contribs[i] = (local, contrib)
-            total_rem -= ubs[i]
-            if multi and flat_or and total_rem > 0:
-                if len(cand_parts) > 1:
-                    cand_parts = [np.concatenate(cand_parts)]
-                vals = scores[cand_parts[0]] if cand_parts else \
-                    np.empty(0, dtype=np.float64)
-                if vals.size >= k:
-                    theta = np.partition(vals, vals.size - k)[vals.size - k]
+            if flat_or:
+                total_rem -= ubs[i]
+                if multi and total_rem > 0:
+                    if len(cand_parts) > 1:
+                        cand_parts = [np.concatenate(cand_parts)]
+                    vals = scores[cand_parts[0]] if cand_parts else \
+                        np.empty(0, dtype=np.float64)
+                    if vals.size >= k:
+                        theta = np.partition(vals, vals.size - k)[vals.size - k]
 
-        if cl_mask is not None:
-            cand = np.flatnonzero(cl_mask == full_cover)
-        elif mode == "and":
-            cand = np.flatnonzero(seen >= n_query_terms)
-        elif min_match > 1:
-            cand = np.flatnonzero(seen >= min_match)
-        else:
-            cand = np.flatnonzero(seen > 0)
+        cand = np.flatnonzero(cl_mask == full_cover if cl_mask is not None
+                              else seen >= need)
         if cand.size == 0:
-            return empty
-        if not return_all and cand.size > k:
-            cs = scores[cand]
-            top = np.argpartition(-cs, k - 1)[:k]
-            thresh = cs[top].min()
-            cand = cand[cs >= thresh]  # keep boundary ties → doc_id tiebreak
-        if needs_rescore:
-            # deterministic rescore of the winners in sorted-term order
-            # (matches the oracle's float64 accumulation order exactly);
-            # np.add.at applies updates in array order → per-call order is
-            # per-term, calls issued in sorted-term order
-            final = np.zeros(cand.size, dtype=np.float64)
+            return None
+
+        def rescore(winners: np.ndarray) -> np.ndarray:
+            # the winners' sums in sorted-term order (the oracle's float64
+            # accumulation order); np.add.at applies updates in array order
+            final = np.zeros(winners.size, dtype=np.float64)
             idx_map = np.full(docs_per_shard, -1, dtype=np.int64)
-            idx_map[cand] = np.arange(cand.size)
+            idx_map[winners] = np.arange(winners.size)
             for i, _t in sorted_order:
                 local, contrib = contribs[i]
                 mapped = idx_map[local]
                 m = mapped >= 0
                 np.add.at(final, mapped[m], contrib[m])
-        else:
-            final = scores[cand]
-        order = np.lexsort((cand, -final))
-        if not return_all:
-            order = order[:k]
-        return pd.DataFrame({"doc_id": (cand[order] + base).astype(np.int64),
-                             "score": final[order]})
+            return final
+
+        return _top_k(cand, scores[cand], None if return_all else k, base,
+                      rescore if needs_rescore else None)
 
     return score
 
@@ -409,43 +442,34 @@ def _make_term_contrib_kernel(
     avgdls: List[float],
     k1: float,
     b: float,
+    only_ids: Optional[np.ndarray] = None,
 ):
-    """Per-shard kernel emitting one (doc_id, term, contrib) row per
-    posting — the exploded per-clause scores Lucene's DisjunctionMaxQuery
-    combines.  No qualification or pruning: every posting of every query
-    term contributes, and the combiner (max/sum per doc) runs declaratively
-    on top."""
-    from archivesspace_virgo_spark import codec  # re-imported on workers
-
+    """Per-shard kernel emitting one ``_CONTRIB`` row (doc_id, term, idf,
+    tf, dl, contrib) per posting of a query term — the BM25 factors of
+    Lucene's Explanation and the per-clause scores DisjunctionMaxQuery
+    combines.  No qualification or pruning; ``only_ids`` keeps only those
+    docs' rows (an explain window)."""
     params = dict(zip(terms, zip(idfs, avgdls)))
 
-    def kern(pdf: pd.DataFrame) -> pd.DataFrame:
-        docs, tags, contribs = [], [], []
-        for t, row in zip(pdf["term"], pdf.itertuples(index=False)):
+    def kern(pdf: pd.DataFrame) -> Optional[pd.DataFrame]:
+        cols = []
+        for t, row in _by_term(pdf).items():
             if t not in params:
                 continue
             idf, avgdl = params[t]
-            doc_ids, tfs, dls = codec.decode_postings(
-                row.doc_blob, row.tf_blob, row.dl_blob
-            )
-            tfs = tfs.astype(np.float64)
-            dls = dls.astype(np.float64)
-            docs.append(doc_ids.astype(np.int64))
-            tags.append(np.full(doc_ids.size, t, dtype=object))
-            contribs.append(
-                idf * tfs / (tfs + k1 * (1.0 - b + b * dls / avgdl))
-            )
-        if not docs:
-            return pd.DataFrame({
-                "doc_id": pd.Series(dtype="int64"),
-                "term": pd.Series(dtype="object"),
-                "contrib": pd.Series(dtype="float64"),
-            })
-        return pd.DataFrame({
-            "doc_id": np.concatenate(docs),
-            "term": np.concatenate(tags),
-            "contrib": np.concatenate(contribs),
-        })
+            d, tfs, dls = _decode(row, 0)
+            if only_ids is not None:
+                keep = np.isin(d, only_ids)
+                d, tfs, dls = d[keep], tfs[keep], dls[keep]
+            cols.append((d, np.full(d.size, t, dtype=object),
+                         np.full(d.size, idf), tfs, dls,
+                         _bm25(idf, tfs, dls, avgdl, k1, b)))
+        if not cols:
+            return None
+        out = pd.DataFrame(dict(zip(
+            ("doc_id", "term", "idf", "tf", "dl", "contrib"),
+            map(np.concatenate, zip(*cols)))))
+        return out if len(out) else None
 
     return kern
 
@@ -472,8 +496,6 @@ def _make_dismax_scorer(
     bare groups reduce in sorted-bare order, members in sorted-stored
     order (float64 accumulation order is pinned, like _make_shard_scorer).
     """
-    from archivesspace_virgo_spark import codec  # re-imported on workers
-
     groups: dict = {}
     for i, bare in enumerate(bare_of):
         groups.setdefault(bare, []).append(i)
@@ -482,17 +504,9 @@ def _make_dismax_scorer(
         for bare, idx in sorted(groups.items())
     ]
 
-    def score(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({"doc_id": pd.Series(dtype="int64"),
-                              "score": pd.Series(dtype="float64")})
-        by_term = {
-            t: row
-            for t, row in zip(pdf["term"], pdf.itertuples(index=False))
-        }
-        if not by_term:
-            return empty
-        shard = int(pdf["doc_shard"].iloc[0])
-        base = shard * docs_per_shard
+    def score(pdf: pd.DataFrame) -> Optional[pd.DataFrame]:
+        by_term = _by_term(pdf)
+        base = int(pdf["doc_shard"].iloc[0]) * docs_per_shard
         scores = np.zeros(docs_per_shard, dtype=np.float64)
         seen = np.zeros(docs_per_shard, dtype=bool)
         mx = np.zeros(docs_per_shard, dtype=np.float64)
@@ -509,15 +523,8 @@ def _make_dismax_scorer(
                     sm[:] = 0.0
                     gseen[:] = False
                     fresh = False
-                d, tfs, dls = codec.decode_postings(
-                    row.doc_blob, row.tf_blob, row.dl_blob
-                )
-                local = d.astype(np.int64) - base
-                tfs = tfs.astype(np.float64)
-                dls = dls.astype(np.float64)
-                contrib = idfs[i] * tfs / (
-                    tfs + k1 * (1.0 - b + b * dls / avgdls[i])
-                )
+                local, tfs, dls = _decode(row, base)
+                contrib = _bm25(idfs[i], tfs, dls, avgdls[i], k1, b)
                 np.maximum.at(mx, local, contrib)
                 np.add.at(sm, local, contrib)
                 gseen[local] = True
@@ -527,19 +534,7 @@ def _make_dismax_scorer(
             scores[hit] += mx[hit] + tie * (sm[hit] - mx[hit])
             seen[hit] = True
         cand = np.flatnonzero(seen)
-        if cand.size == 0:
-            return empty
-        final = scores[cand]
-        if cand.size > k:
-            top = np.argpartition(-final, k - 1)[:k]
-            thresh = final[top].min()
-            keep = final >= thresh  # boundary ties → doc_id tiebreak
-            cand, final = cand[keep], final[keep]
-        order = np.lexsort((cand, -final))[:k]
-        return pd.DataFrame({
-            "doc_id": (cand[order] + base).astype(np.int64),
-            "score": final[order],
-        })
+        return _top_k(cand, scores[cand], k, base) if cand.size else None
 
     return score
 
@@ -668,52 +663,32 @@ def _make_phrase_scorer(stored: List[str], freq, idf_sum: float,
     Lucene's phrase BM25 form idf_sum · f / (f + k1·(1 − b + b·dl/avgdl))
     with the per-shard top-k cut.  ``freq(dec)`` maps {term: (local doc,
     dl, tf, positions)} to (ascending local hit docs, f) or None."""
-    from archivesspace_virgo_spark import codec  # re-imported on workers
-
     uniq = sorted(set(stored))
 
-    def scorer(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({"doc_id": pd.Series(dtype="int64"),
-                              "score": pd.Series(dtype="float64")})
-        by_term = {
-            t: row for t, row in zip(pdf["term"], pdf.itertuples(index=False))
-        }
+    def scorer(pdf: pd.DataFrame) -> Optional[pd.DataFrame]:
+        by_term = _by_term(pdf)
         if any(t not in by_term for t in uniq):
-            return empty  # a phrase is an AND across its terms
+            return None  # a phrase is an AND across its terms
         base = int(pdf["doc_shard"].iloc[0]) * docs_per_shard
         dec = {}
         for t in uniq:
             row = by_term[t]
-            d, tf_, dl_ = codec.decode_postings(
-                row.doc_blob, row.tf_blob, row.dl_blob
-            )
+            ldoc, tf_, dl_ = _decode(row, base)
             pos = codec.decode_positions(row.pos_blob, tf_)
-            ldoc = d.astype(np.int64) - base
             if only_ids is not None:
                 w = np.isin(ldoc + base, only_ids)
                 pos = pos[np.repeat(w, tf_)]
                 ldoc, tf_, dl_ = ldoc[w], tf_[w], dl_[w]
                 if ldoc.size == 0:
-                    return empty
+                    return None
             dec[t] = (ldoc, dl_, tf_, pos)
         found = freq(dec)
         if found is None:
-            return empty
+            return None
         hit, f = found
-        f = f.astype(np.float64)
         ldoc0, dl0, _tf, _pos = dec[stored[0]]
-        dls = dl0[np.searchsorted(ldoc0, hit)].astype(np.float64)
-        score = idf_sum * f / (f + k1 * (1.0 - b + b * dls / avgdl))
-        if hit.size > k:
-            top = np.argpartition(-score, k - 1)[:k]
-            thresh = score[top].min()
-            keep = score >= thresh  # boundary ties → doc_id tiebreak
-            hit, score = hit[keep], score[keep]
-        order = np.lexsort((hit, -score))[:k]
-        return pd.DataFrame({
-            "doc_id": (hit[order] + base).astype(np.int64),
-            "score": score[order],
-        })
+        dls = dl0[np.searchsorted(ldoc0, hit)]
+        return _top_k(hit, _bm25(idf_sum, f, dls, avgdl, k1, b), k, base)
 
     return scorer
 
@@ -939,10 +914,15 @@ class QueryEngine:
         collects without a Spark job."""
         if page is not None:
             _check_page(*page)  # before any kernel cuts at k + offset
+        empty = _arrow_schema(schema).empty_table().to_pandas()
         tables = self._driver_tables()
         if tables is None:
+            def run(pdf: pd.DataFrame) -> pd.DataFrame:
+                out = kernel(pdf)
+                return empty if out is None else out
+
             out = self._postings_scan(terms, columns, shards).groupBy(
-                "doc_shard").applyInPandas(kernel, schema=schema)
+                "doc_shard").applyInPandas(run, schema=schema)
             return out if page is None else _page(out, *page)
         rows = _rows_of(tables[0], "term", terms)
         if shards is not None:
@@ -950,15 +930,14 @@ class QueryEngine:
         pdf = rows.select(["doc_shard", "term", *columns]).to_pandas()
         parts = [kernel(g.reset_index(drop=True))
                  for _s, g in pdf.groupby("doc_shard", sort=False)]
-        parts = [p for p in parts if len(p)]  # pandas warns on empty ones
-        out = (pd.concat(parts, ignore_index=True) if parts else
-               pd.DataFrame(columns=[c.split()[0] for c in schema.split(",")]))
+        parts = [p for p in parts if p is not None]
+        out = pd.concat(parts, ignore_index=True) if parts else empty
         if page is not None:
             k, offset = page
             order = np.lexsort((out["doc_id"].to_numpy(np.int64),
                                 -out["score"].to_numpy(np.float64)))
             out = out.iloc[order[offset:offset + k]]
-        return self.spark.createDataFrame(out, schema)
+        return self._local(schema, out)
 
     def _postings_scan(self, terms, columns, shards=None) -> DataFrame:
         cond = F.col("term").isin(list(terms))
@@ -967,8 +946,18 @@ class QueryEngine:
         return self._postings_df().filter(cond).select(
             "doc_shard", "term", *columns)
 
+    def _local(self, schema: str,
+               pdf: Optional[pd.DataFrame] = None) -> DataFrame:
+        """``pdf`` (no rows when None) as a local relation built from an
+        Arrow table, which Spark collects, sorts and pages with no job —
+        empty or not (an empty pandas frame would become an RDD)."""
+        arrow = _arrow_schema(schema)
+        return self.spark.createDataFrame(
+            arrow.empty_table() if pdf is None else
+            pa.Table.from_pandas(pdf, schema=arrow, preserve_index=False))
+
     def _no_hits(self, schema: str = _SCORED) -> DataFrame:
-        return self.spark.createDataFrame([], schema)
+        return self._local(schema)
 
     # --- the headline operator: BM25 top-k (T6/T7/T8) ---
     def search(self, terms: Sequence[str], k: int = 10, mode: str = "or",
@@ -1098,79 +1087,29 @@ class QueryEngine:
         if q is None:
             return self._no_hits(out_schema + ", rank_in_group int").select(
                 group_field, "rank_in_group", "doc_id", "score")
-        live, idfs, avgdls, neg = q.live, q.idfs, q.avgdls, q.neg
-        kpg = int(k_per_group)
-        k1, b = self.config.k1, self.config.b
         docs_per_shard = self.config.docs_per_shard
-        n_query_terms = len(live)
-        is_and = q.mode == "and"
-        fcl_k = q.filters or None
+        kpg = int(k_per_group)
+        scorer = _make_shard_scorer(
+            q.live, q.idfs, q.avgdls, 0, self.config.k1, self.config.b,
+            docs_per_shard, q.mode, neg_terms=q.neg,
+            filter_clauses=q.filters or None, return_all=True,
+        )
 
-        from archivesspace_virgo_spark import codec  # re-imported on workers
+        empty = _arrow_schema(out_schema).empty_table().to_pandas()
 
         def kern(l: pd.DataFrame, r: pd.DataFrame) -> pd.DataFrame:
-            empty_p = pd.DataFrame({
-                group_field: pd.Series(dtype=r[group_field].dtype
-                                       if len(r.columns) else "object"),
-                "doc_id": pd.Series(dtype="int64"),
-                "score": pd.Series(dtype="float64"),
-            })
-            if len(l) == 0 or len(r) == 0:
-                return empty_p
-            by_term = {
-                t: row for t, row in zip(l["term"], l.itertuples(index=False))
-            }
-            shard = int(l["doc_shard"].iloc[0])
-            base = shard * docs_per_shard
-            excluded, impossible = _excluded_mask(
-                by_term, neg, fcl_k, docs_per_shard, base, codec
-            )
-            if impossible:
-                return empty_p
-            present = [(i, t) for i, t in enumerate(live) if t in by_term]
-            if is_and and len(present) < n_query_terms:
-                return empty_p
-            if not present:
-                return empty_p
-            scores = np.zeros(docs_per_shard, dtype=np.float64)
-            seen = np.zeros(docs_per_shard, dtype=np.int32)
-            # no pruning (every match's exact score is needed), so the
-            # scatter can run directly in sorted-term order — the same
-            # deterministic float64 accumulation as the rescore path
-            for i, t in present:
-                row = by_term[t]
-                d, tfs, dls = codec.decode_postings(
-                    row.doc_blob, row.tf_blob, row.dl_blob
-                )
-                local = d.astype(np.int64) - base
-                tfs = tfs.astype(np.float64)
-                dls = dls.astype(np.float64)
-                if excluded is not None:
-                    keep = ~excluded[local]
-                    local, tfs, dls = local[keep], tfs[keep], dls[keep]
-                contrib = idfs[i] * tfs / (
-                    tfs + k1 * (1.0 - b + b * dls / avgdls[i])
-                )
-                np.add.at(scores, local, contrib)
-                np.add.at(seen, local, 1)
-            cand = np.flatnonzero(
-                seen >= (n_query_terms if is_and else 1)
-            )
-            if cand.size == 0:
-                return empty_p
+            out = scorer(l) if len(l) and len(r) else None
+            if out is None:
+                return empty
+            base = int(l["doc_shard"].iloc[0]) * docs_per_shard
             gv = np.empty(docs_per_shard, dtype=object)
-            rloc = r["doc_id"].to_numpy().astype(np.int64) - base
-            gv[rloc] = r[group_field].to_numpy()
-            out = pd.DataFrame({
-                group_field: gv[cand],
-                "doc_id": (cand + base).astype(np.int64),
-                "score": scores[cand],
-            })
-            out = out.sort_values(["score", "doc_id"],
-                                  ascending=[False, True])
-            # dropna=False: docs with a NULL group value form their own
-            # group (Solr grouping returns a null group; pandas groupby
-            # silently drops null keys by default)
+            gv[r["doc_id"].to_numpy().astype(np.int64) - base] = \
+                r[group_field].to_numpy()
+            out.insert(0, group_field, gv[out["doc_id"].to_numpy() - base])
+            # out is in (score desc, doc_id) order; dropna=False: docs with
+            # a NULL group value form their own group (Solr grouping
+            # returns a null group; pandas groupby silently drops null keys
+            # by default)
             return out.groupby(group_field, sort=False,
                                dropna=False).head(kpg)
 
@@ -1236,13 +1175,13 @@ class QueryEngine:
         pruning.  ``terms`` may be field-scoped; absent terms yield no
         rows."""
         q = self._resolve(terms)
-        schema = "doc_id long, term string, contrib double"
         if q is None:
-            return self._no_hits(schema)
+            return self._no_hits("doc_id long, term string, contrib double")
         kern = _make_term_contrib_kernel(
             q.live, q.idfs, q.avgdls, self.config.k1, self.config.b
         )
-        return self._shard_scan(q.live, _SCORE_COLS, kern, schema)
+        return self._shard_scan(q.live, _SCORE_COLS, kern, _CONTRIB).select(
+            "doc_id", "term", "contrib")
 
     # --- Lucene Explanation / Solr debugQuery=true: per-term score
     # breakdown for specific documents ---
@@ -1252,67 +1191,18 @@ class QueryEngine:
         query term's BM25 factors and contribution, summing to exactly the
         ``search`` score (same kernel arithmetic; the per-doc tf/dl are
         decoded from the same postings).  Bounded output: |docs|·|terms|
-        rows; the postings scan is still pruned to the query terms."""
-        schema = ("doc_id long, term string, idf double, tf long, "
-                  "dl long, contrib double")
+        rows; the postings scan is still pruned to the query terms and the
+        docs' shards."""
         ids = sorted({int(d) for d in doc_ids})
         q = self._resolve(terms, boosts=boosts) if ids else None
         if q is None:
-            return self._no_hits(schema)
-        k1, b = self.config.k1, self.config.b
-        docs_per_shard = self.config.docs_per_shard
-        params = dict(zip(q.live, zip(q.idfs, q.avgdls)))
-        shards = sorted({d // docs_per_shard for d in ids})
-
-        from archivesspace_virgo_spark import codec  # re-imported on workers
-
-        ids_arr = np.asarray(ids, dtype=np.int64)
-
-        def kern(pdf: pd.DataFrame) -> pd.DataFrame:
-            # fully vectorized: one isin mask + one BM25 expression per
-            # term row, arrays concatenated at the end (no per-posting
-            # Python loop — debugQuery stays usable on wide windows)
-            docs, tags, idf_c, tf_c, dl_c, contrib_c = [], [], [], [], [], []
-            for t, row in zip(pdf["term"], pdf.itertuples(index=False)):
-                if t not in params:
-                    continue
-                idf, avgdl = params[t]
-                d, tfs, dls = codec.decode_postings(
-                    row.doc_blob, row.tf_blob, row.dl_blob
-                )
-                d = d.astype(np.int64)
-                mask = np.isin(d, ids_arr)
-                if not mask.any():
-                    continue
-                tm = tfs[mask].astype(np.float64)
-                lm = dls[mask].astype(np.float64)
-                docs.append(d[mask])
-                tags.append(np.full(int(mask.sum()), t, dtype=object))
-                idf_c.append(np.full(int(mask.sum()), idf))
-                tf_c.append(tfs[mask].astype(np.int64))
-                dl_c.append(dls[mask].astype(np.int64))
-                contrib_c.append(
-                    idf * tm / (tm + k1 * (1.0 - b + b * lm / avgdl))
-                )
-            if not docs:
-                return pd.DataFrame({
-                    "doc_id": pd.Series(dtype="int64"),
-                    "term": pd.Series(dtype="object"),
-                    "idf": pd.Series(dtype="float64"),
-                    "tf": pd.Series(dtype="int64"),
-                    "dl": pd.Series(dtype="int64"),
-                    "contrib": pd.Series(dtype="float64"),
-                })
-            return pd.DataFrame({
-                "doc_id": np.concatenate(docs),
-                "term": np.concatenate(tags),
-                "idf": np.concatenate(idf_c),
-                "tf": np.concatenate(tf_c),
-                "dl": np.concatenate(dl_c),
-                "contrib": np.concatenate(contrib_c),
-            })
-
-        return self._shard_scan(q.live, _SCORE_COLS, kern, schema,
+            return self._no_hits(_CONTRIB)
+        kern = _make_term_contrib_kernel(
+            q.live, q.idfs, q.avgdls, self.config.k1, self.config.b,
+            np.asarray(ids, dtype=np.int64),
+        )
+        shards = sorted({d // self.config.docs_per_shard for d in ids})
+        return self._shard_scan(q.live, _SCORE_COLS, kern, _CONTRIB,
                                 shards).orderBy("doc_id", "term")
 
     # --- Solr DisMax (defType=dismax, qf=f1 f2 ..., tie=t): per query
@@ -1347,26 +1237,18 @@ class QueryEngine:
         from collections import Counter
 
         mult = Counter(terms)
-        pairs = sorted({
-            (t if f == default else f"{f}:{t}", t, f)
-            for t in terms for f in fields
-        })
-        stats = self.term_stats([s for s, _b, _f in pairs])
-        live = [(s, bare, f) for s, bare, f in pairs if s in stats]
-        if not live:
+        bare_of = {t if f == default else f"{f}:{t}": t
+                   for t in terms for f in fields}
+        q = self._resolve(list(bare_of),
+                          mult={s: mult[t] for s, t in bare_of.items()})
+        if q is None:
             return _page(self._no_hits(), k, offset)
-        stored_terms = [s for s, _b, _f in live]
-        bare_of = [bare for _s, bare, _f in live]
-        idfs = [lucene_idf(self.field_stats[f][0], stats[s][0])
-                * mult[bare]
-                for s, bare, f in live]
-        avgdls = [self.field_stats[f][1] for _s, _b, f in live]
         scorer = _make_dismax_scorer(
-            stored_terms, bare_of, idfs, avgdls, k + offset,
-            self.config.k1, self.config.b, self.config.docs_per_shard,
-            float(tie),
+            q.live, [bare_of[s] for s in q.live], q.idfs, q.avgdls,
+            k + offset, self.config.k1, self.config.b,
+            self.config.docs_per_shard, float(tie),
         )
-        return self._shard_scan(stored_terms, _SCORE_COLS, scorer, _SCORED,
+        return self._shard_scan(q.live, _SCORE_COLS, scorer, _SCORED,
                                 page=(k, offset))
 
     # --- Lucene BooleanQuery of MUST clauses (the reference's compound
@@ -1736,9 +1618,8 @@ class QueryEngine:
 
         tf = Counter(tokenize_text(text))
         cand = sorted(t for t, c in tf.items() if c >= min_term_freq)
-        empty = self.spark.createDataFrame([], "doc_id long, score double")
         if not cand:
-            return empty
+            return self._no_hits()
         stats = self.term_stats(cand)
         ranked = []
         for t in cand:
@@ -1751,7 +1632,7 @@ class QueryEngine:
         top = [t for _s, t in
                sorted(ranked, key=lambda it: (-it[0], it[1]))[:max_query_terms]]
         if not top:
-            return empty
+            return self._no_hits()
         if exclude_doc_id is None:
             return self.search(top, k=k, mode="or")
         hits = self.search(top, k=k + 1, mode="or")
@@ -1964,9 +1845,8 @@ class QueryEngine:
             (d, s + weight * ph.get(d, 0.0)) for d, s in window
         ]
         rescored.sort(key=lambda ds: (-ds[1], ds[0]))
-        return self.spark.createDataFrame(
-            (rescored + tail)[:k], "doc_id long, score double"
-        )
+        return self._local(_SCORED, pd.DataFrame(
+            (rescored + tail)[:k], columns=["doc_id", "score"]))
 
     # --- highlighting (Lucene UnifiedHighlighter surface: the hl=true
     # snippet field the reference's Solr responses carry back to Virgo,
@@ -1997,30 +1877,18 @@ class QueryEngine:
         docs_per_shard = self.config.docs_per_shard
         hit_arr = np.asarray(hit_ids, dtype=np.int64)
 
-        from archivesspace_virgo_spark import codec  # re-imported on workers
-
-        def windower(pdf: pd.DataFrame) -> pd.DataFrame:
-            empty = pd.DataFrame({
-                "doc_id": pd.Series(dtype="int64"),
-                "snippet_start": pd.Series(dtype="int32"),
-                "snippet_end": pd.Series(dtype="int32"),
-                "n_matched": pd.Series(dtype="int32"),
-            })
-            if pdf.empty:
-                return empty
-            shard = int(pdf["doc_shard"].iloc[0])
-            base = shard * docs_per_shard
+        def windower(pdf: pd.DataFrame) -> Optional[pd.DataFrame]:
+            base = int(pdf["doc_shard"].iloc[0]) * docs_per_shard
             in_shard = hit_arr[(hit_arr >= base)
                                & (hit_arr < base + docs_per_shard)]
             if in_shard.size == 0:
-                return empty
+                return None
             # occurrences of each query term within the hit docs only
             occ: dict = {d: [] for d in in_shard}
             for row in pdf.itertuples(index=False):
-                d_ids, tfs, _dls = codec.decode_postings(
-                    row.doc_blob, row.tf_blob, row.dl_blob)
+                d_ids, tfs, _dls = _decode(row, 0)
                 pos = codec.decode_positions(row.pos_blob, tfs)
-                occ_doc = np.repeat(d_ids.astype(np.int64), tfs)
+                occ_doc = np.repeat(d_ids, tfs)
                 keep = np.isin(occ_doc, in_shard)
                 for d, p in zip(occ_doc[keep], pos[keep]):
                     occ[int(d)].append((int(p), row.term))
@@ -2088,57 +1956,38 @@ class QueryEngine:
         (facets) costs one map pass over ≤|terms| posting rows per shard
         plus a partial-aggregated count — independent of result-set size.
 
-        ``exclude``: MUST_NOT terms — matching doc ids are set-subtracted
-        shard-locally (sorted-array difference, no shuffle).
+        ``exclude`` (MUST_NOT terms) and ``filters`` (Solr fq: non-scoring
+        required clauses, each an OR of terms) mask ids out shard-locally
+        through the scoring kernels' ``_excluded_mask`` (no shuffle).
         ``min_should_match``: Solr mm — require ≥ that many distinct terms.
-        ``filters``: Solr fq — non-scoring required clauses (each an OR of
-        terms); matching ids are set-intersected shard-locally.
         """
         q = self._resolve(terms, mode, exclude, filters,
                           min_match=min_should_match)
         if q is None:
             return self._no_hits("doc_shard int, doc_id long")
-        neg, fcl = q.neg, q.filters
-        by_flt_terms = {t for cl in fcl for t in cl}
-        live_set = set(q.live)
+        docs_per_shard = self.config.docs_per_shard
         n_required = (len(q.live) if q.mode == "and"
                       else max(1, min_should_match))
 
-        from archivesspace_virgo_spark import codec  # re-imported on workers
-
-        def matcher(pdf: pd.DataFrame) -> pd.DataFrame:
-            empty = pd.DataFrame({"doc_shard": pd.Series(dtype="int32"),
-                                  "doc_id": pd.Series(dtype="int64")})
-            if pdf.empty:
-                return empty
+        def matcher(pdf: pd.DataFrame) -> Optional[pd.DataFrame]:
+            by_term = _by_term(pdf)
             shard = int(pdf["doc_shard"].iloc[0])
-            ids, neg_ids = [], []
-            by_flt: dict = {}
-            for t, blob in zip(pdf["term"], pdf["doc_blob"]):
-                d = codec.delta_decode(codec.varbyte_decode(blob))
-                if t in live_set:
-                    ids.append(d)
-                if neg and t in neg:
-                    neg_ids.append(d)
-                if t in by_flt_terms:
-                    by_flt[t] = d
-            allids = np.concatenate(ids) if ids else np.empty(0, np.int64)
-            if allids.size == 0:
-                return empty
-            uniq_ids, counts = np.unique(allids, return_counts=True)
+            base = shard * docs_per_shard
+            excluded, impossible = _excluded_mask(
+                by_term, q.neg, q.filters, docs_per_shard, base)
+            ids = [_doc_ids(by_term[t]) for t in q.live if t in by_term]
+            if impossible or not ids:
+                return None
+            uniq_ids, counts = np.unique(np.concatenate(ids),
+                                         return_counts=True)
             hit = uniq_ids[counts >= n_required]
-            if neg_ids:
-                hit = np.setdiff1d(hit, np.concatenate(neg_ids),
-                                   assume_unique=False)
-            for cl in fcl:
-                present = [by_flt[t] for t in cl if t in by_flt]
-                if not present:
-                    return empty  # no clause term posts in this shard
-                ok = np.unique(np.concatenate(present))
-                hit = hit[np.isin(hit, ok, assume_unique=False)]
+            if excluded is not None:
+                hit = hit[~excluded[hit - base]]
+            if hit.size == 0:
+                return None
             return pd.DataFrame({
                 "doc_shard": np.full(hit.size, shard, dtype=np.int32),
-                "doc_id": hit.astype(np.int64),
+                "doc_id": hit,
             })
 
         return self._shard_scan(q.scan_terms, ("doc_blob",), matcher,

@@ -179,23 +179,32 @@ def run_windowed_events_stream(
     query_name: str = "event_counts",
 ) -> DataFrame:
     """Drive the windowed agg as a real stream over the events parquet
-    (memory sink, AvailableNow) and return the materialized result."""
+    (memory sink, AvailableNow) and return the materialized result.  A
+    single events file is streamed from a temporary directory copy, which
+    is removed once the stream has terminated."""
     import os
     import shutil
     import tempfile
 
+    copy = None
     if os.path.isfile(events_path):  # file streams need a directory source
-        d = tempfile.mkdtemp(prefix="avs_stream_events_")
-        shutil.copy(events_path, os.path.join(d, os.path.basename(events_path)))
-        events_path = d
-    schema = spark.read.parquet(events_path).schema
-    stream = spark.readStream.schema(schema).format("parquet").load(events_path)
-    agg = windowed_event_counts(stream)
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory").queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+        copy = tempfile.mkdtemp(prefix="avs_stream_events_")
+        shutil.copy(events_path,
+                    os.path.join(copy, os.path.basename(events_path)))
+        events_path = copy
+    try:
+        schema = spark.read.parquet(events_path).schema
+        stream = spark.readStream.schema(schema).format("parquet").load(
+            events_path)
+        agg = windowed_event_counts(stream)
+        q = (
+            agg.writeStream.outputMode("complete")
+            .format("memory").queryName(query_name)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+    finally:
+        if copy is not None:
+            shutil.rmtree(copy, ignore_errors=True)
     return spark.sql(f"SELECT * FROM {query_name}")

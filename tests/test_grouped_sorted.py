@@ -58,15 +58,20 @@ def test_score_matches_is_untruncated_search(engine, con):
     assert top == best
 
 
-def test_grouped_search_matches_duckdb_oracle(engine, con):
+@pytest.mark.parametrize("mode,exclude", [
+    ("or", ()), ("and", ()), ("or", ("hash",)),
+], ids=["or", "and", "exclude"])
+def test_grouped_search_matches_duckdb_oracle(engine, con, mode, exclude):
     got = [
         (r["lang"], r["rank_in_group"], r["doc_id"], round(r["score"], 6))
-        for r in engine.grouped_search(TERMS, "lang", k_per_group=3).collect()
+        for r in engine.grouped_search(TERMS, "lang", k_per_group=3,
+                                       mode=mode, exclude=exclude).collect()
     ]
+    scored = bm25_oracle_sql(TERMS, k=BIG, mode=mode, exclude=exclude)
     exp = [
         (lang, int(rn), int(d), round(s, 6))
         for lang, rn, d, s in con.execute(f"""
-WITH scored AS ({bm25_oracle_sql(TERMS, k=BIG)}),
+WITH scored AS ({scored}),
 g AS (
   SELECT d.lang, s.doc_id, s.score,
          row_number() OVER (PARTITION BY d.lang

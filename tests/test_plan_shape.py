@@ -102,6 +102,17 @@ def test_query_partials_exchange_free(engine, surface):
     assert "TakeOrderedAndProject" in plan
 
 
+def _jobs_of(spark, group, call):
+    """(rows, Spark job ids) of issuing and collecting ``call()``."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        rows = call().collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return rows, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
 @pytest.mark.parametrize("surface", ["search", "phrase_search", "query"])
 def test_driver_resident_query_runs_no_spark_job(spark, engine, surface):
     """On an index under the postings cap the kernels run on the driver
@@ -115,16 +126,39 @@ def test_driver_resident_query_runs_no_spark_job(spark, engine, surface):
         "phrase_search": lambda e: e.phrase_search(["table", "join"], k=10),
         "query": lambda e: e.query("table join^2 -spark", k=10),
     }[surface]
-    sc = spark.sparkContext
-    group = f"driver-resident-{surface}"
-    sc.setJobGroup(group, surface)
-    try:
-        rows = call(driver).collect()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
+    rows, jobs = _jobs_of(spark, f"driver-resident-{surface}",
+                          lambda: call(driver))
     assert rows
-    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert jobs == []
     assert rows == call(engine).collect()
+
+
+_EMPTY = {
+    # statically empty: resolution finds an absent AND term, no scan runs
+    "and_absent_term": lambda e: e.search(["table", "zzz_no_such_qq"],
+                                          k=10, mode="and"),
+    # every term is live, but no doc holds them side by side
+    "phrase_never_adjacent": lambda e: e.phrase_search(
+        ["window", "merge", "sort"], k=10, offset=2),
+    # the fq clause's term posts nowhere, so every kernel finds no rows
+    "fq_excludes_every_hit": lambda e: e.search(
+        ["table", "join"], k=10, filters=[["zzz_no_such_qq"]]),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_EMPTY))
+def test_driver_resident_empty_result_runs_no_spark_job(spark, engine, case):
+    """An empty result on a driver-resident index is an Arrow local
+    relation like any other page: collecting it, after the page's sort,
+    offset and limit, submits no Spark job."""
+    from archivesspace_virgo_spark.index.query import QueryEngine
+
+    driver = QueryEngine(spark, engine.storage.index_dir, CFG)
+    rows, jobs = _jobs_of(spark, f"driver-resident-empty-{case}",
+                          lambda: _EMPTY[case](driver))
+    assert rows == []
+    assert jobs == []
+    assert _EMPTY[case](engine).collect() == []
 
 
 def test_query_layer_has_one_shard_scan():
@@ -135,6 +169,19 @@ def test_query_layer_has_one_shard_scan():
     from archivesspace_virgo_spark.index import query
 
     assert inspect.getsource(query).count("applyInPandas(") == 2
+
+
+def test_query_layer_has_one_bm25_step():
+    """Every kernel scores through ``query._bm25`` and decodes postings
+    through ``query._decode``: the BM25 length norm and the postings
+    decode are each written once."""
+    import inspect
+
+    from archivesspace_virgo_spark.index import query
+
+    src = inspect.getsource(query)
+    assert src.count("(1.0 - b + b *") == 1
+    assert src.count("codec.decode_postings(") == 1
 
 
 def test_added_id_assignment_has_no_global_window(spark, tmp_path):

@@ -9,7 +9,6 @@ import json
 import os
 import subprocess
 import sys
-import tempfile
 
 import pytest
 
@@ -27,7 +26,7 @@ def test_spark_submit_pyfiles_build_and_query(tmp_path):
     zip2 = make_zip(str(tmp_path / "avs2.zip"))
     assert open(zip_path, "rb").read() == open(zip2, "rb").read()
 
-    index_dir = tempfile.mkdtemp(prefix="avs_submit_idx_")
+    index_dir = str(tmp_path / "idx")
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
     env["PYSPARK_PYTHON"] = sys.executable
     proc = subprocess.run(

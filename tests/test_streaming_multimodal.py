@@ -75,6 +75,21 @@ def test_windowed_event_counts_stream_matches_batch(spark):
     assert a == b and len(a) > 0
 
 
+def test_windowed_events_stream_removes_its_copy(spark, tmp_path,
+                                                monkeypatch):
+    """A single events file is streamed from a temporary directory copy;
+    the copy is gone once the stream has run."""
+    import tempfile
+
+    scratch = tmp_path / "tmp"
+    scratch.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(scratch))
+    events_path = f"{SF_SMOKE}/events.parquet"
+    streamed = run_windowed_events_stream(spark, events_path, "evt_cleanup")
+    assert streamed.count() > 0
+    assert list(scratch.iterdir()) == []
+
+
 def test_media_feature_extraction(spark):
     docs = load_documents_as_corpus(spark, SF_SMOKE).limit(50)
     with_media = attach_fake_media(docs, "doc_id", "content")
