@@ -14,8 +14,9 @@ import json
 from dataclasses import asdict, dataclass, field
 
 #: bump when tokenizer / codec / layout semantics change incompatibly
-FORMAT_VERSION = 7  # v6: term positions; v7: per-block byte offsets
-# (random-access block decode for WAND-style skipping)
+FORMAT_VERSION = 8  # v6: term positions; v7: per-block byte offsets
+# (random-access block decode for WAND-style skipping); v8: the commit
+# marker carries the per-shard stats (no lexicon/corpus_stats tables)
 
 
 @dataclass(frozen=True)

@@ -32,8 +32,9 @@ Scale notes (the 100 TB story):
 - Each shard is one applyInArrow group; docs_per_shard controls kernel
   memory (4096 for tests; millions at cluster scale — size so one shard's
   tokens fit an Arrow batch comfortably).
-- Resume: shards listed in _lineage for the same input fingerprint are
-  skipped; dynamic partition overwrite replaces exactly the rebuilt shards
+- Resume: shards whose commit-marker entry has the same input fingerprint
+  are skipped; dynamic partition overwrite replaces exactly the rebuilt
+  shards, and partitions of shards the new marker omits are dropped
   (reference checkpoint discipline IndexRecordsForV4.java:116-125).
 """
 
@@ -44,7 +45,7 @@ import logging
 import os
 import time
 import uuid
-from typing import Iterable, List, Optional
+from typing import Dict, Iterable, List, Optional
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
@@ -55,6 +56,7 @@ from archivesspace_virgo_spark import codec
 from archivesspace_virgo_spark.config import IndexConfig
 from archivesspace_virgo_spark.corpus import assign_doc_ids, with_content_sha
 from archivesspace_virgo_spark.index.storage import (
+    DOC_STATS_SCHEMA,
     POSTINGS_SCHEMA,
     IndexStorage,
 )
@@ -367,46 +369,22 @@ def tokenized(corpus: DataFrame, config: IndexConfig) -> DataFrame:
     )
 
 
-def term_frequencies(toks: DataFrame, config: IndexConfig) -> DataFrame:
-    """(doc_shard, doc_id, dl, term, tf) — the declarative tf relation.
-
-    Retained as the pure-DataFrame rendering (tests / ad-hoc analysis); the
-    build path computes the same aggregation inside the pack kernel so
-    tokens never shuffle.  Tokens arrive from ``tokenized`` already
-    field-prefixed; dl is the per-(doc, field) token count, carried through
-    the explode as a grouping key (a term determines its field, so each
-    (term, doc) pair has exactly one dl).
-    """
-    return (
-        toks.select(
-            "doc_shard",
-            "doc_id",
-            F.size("toks").alias("dl"),
-            F.explode("toks").alias("term"),
-        )
-        .groupBy("doc_shard", "doc_id", "dl", "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
-
-
-def refresh_aggregates(spark: SparkSession, storage: IndexStorage) -> None:
-    """Recompute lexicon + corpus_stats from per-shard summaries.
-
-    Exact df: shards hold disjoint doc ranges, so summing per-shard n_docs
-    is the two-level exact-df aggregation of SURVEY.md §4.2 (never
-    approx_count_distinct — BM25 rank-identity needs exact df).
-    """
-    lexicon = storage.read(spark, "postings").groupBy("term").agg(
-        F.sum("n_docs").alias("df"), F.sum("cf").alias("cf")
-    )
-    storage.write(lexicon, "lexicon")
-    all_stats = storage.read(spark, "doc_stats")
-    corpus_stats = all_stats.groupBy("field").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("dl").alias("total_tokens"),
-        F.avg("dl").alias("avgdl"),
-    )
-    storage.write(corpus_stats, "corpus_stats")
+def refresh_aggregates(spark: SparkSession, storage: IndexStorage,
+                       shards: Optional[Iterable[int]] = None) -> Dict[int, dict]:
+    """The commit marker's per-shard stats, {doc_shard: {"n_docs",
+    "tokens": {field: total dl}}}, for ``shards`` (all when None), from
+    ``doc_stats`` in one bounded collect of shards × fields rows.  Writes
+    nothing: corpus stats are sums over these entries, so a sync pays for
+    the shards it rebuilt, not for the index."""
+    # the declared schema spares the footer-reading schema inference job
+    stats = spark.read.schema(DOC_STATS_SCHEMA).parquet(storage.path("doc_stats"))
+    if shards is not None:
+        stats = stats.filter(F.col("doc_shard").isin(list(shards)))
+    out: Dict[int, dict] = {}
+    for s, field, n, tokens in sorted(stats.groupBy("doc_shard", "field").agg(
+            F.count(F.lit(1)), F.sum("dl")).collect()):
+        out.setdefault(s, {"n_docs": n, "tokens": {}})["tokens"][field] = tokens
+    return out
 
 
 def quarantine_invalid(
@@ -439,16 +417,13 @@ def quarantine_invalid(
             F.col("path") if "path" in corpus.columns
             else F.lit(None).cast("string")
         )
-        storage.append(
-            bad.select(
-                F.lit(build_id).alias("build_id"),
-                F.col("doc_id").cast("long").alias("doc_id"),
-                path_col.alias("path"),
-                F.col("_reason").alias("reason"),
-                F.lit(time.time()).alias("ts"),
-            ),
-            "_errors",
-        )
+        bad.select(
+            F.lit(build_id).alias("build_id"),
+            F.col("doc_id").cast("long").alias("doc_id"),
+            path_col.alias("path"),
+            F.col("_reason").alias("reason"),
+            F.lit(time.time()).alias("ts"),
+        ).write.mode("append").parquet(storage.path("_errors"))
     return flagged.filter(F.col("_reason").isNull()).drop("_reason")
 
 
@@ -470,7 +445,8 @@ def build_index(
     the build to specific doc_shards (used by incremental merge and by the
     resume test to simulate a mid-build failure); one that gets no rows has
     its doc_map/doc_stats/postings partitions dropped (a shard emptied by
-    deletions — dynamic overwrite would otherwise leave its old data).
+    deletions — dynamic overwrite would otherwise leave its old data), as
+    has, on a full build, every old shard the new corpus does not reach.
     Returns build metadata dict.
     """
     config = config or IndexConfig()
@@ -494,30 +470,45 @@ def build_index(
     corpus = corpus.withColumn("doc_shard", shard_col)
 
     fingerprint = input_fingerprint or build_id
-    done: List[int] = (
-        storage.completed_shards(spark, fingerprint) if resume else []
-    )
+    # a resumed or shard-scoped build keeps the previous marker's entries
+    # for the shards it does not touch, and its doc-id high-water mark; a
+    # full build starts the manifest over
+    carry = ((resume or only_shards is not None)
+             and storage.is_committed_with(config))
+    done: List[int] = storage.completed_shards(fingerprint) if resume and carry else []
     if done:
         corpus = corpus.filter(~F.col("doc_shard").isin(done))
     if only_shards is not None:
         only_shards = list(only_shards)
         corpus = corpus.filter(F.col("doc_shard").isin(only_shards))
+    keep = {s: e for s, e in storage.shards().items()
+            if s in done or (only_shards is not None and s not in only_shards)
+            } if carry else {}
+    next_doc_id = storage.read_commit()["next_doc_id"] if carry else 0
 
-    # one pass over the source to size the job (column-pruned scan); the
-    # per-shard counts are also the lineage rows
-    counts = {r["doc_shard"]: r["count"]
-              for r in corpus.groupBy("doc_shard").count().collect()}
-    built_shards = sorted(counts)
-    n_docs_built = sum(counts.values())
-    for s in set(only_shards or ()) - set(counts) - set(done):
-        for table in ("doc_map", "doc_stats", "postings"):
-            storage.drop_shard_partition(table, s)
+    # one pass over the source to size the job (column-pruned scan)
+    sizes = corpus.groupBy("doc_shard").agg(
+        F.count(F.lit(1)), F.max("doc_id")).collect()
+    built_shards = sorted(s for s, _n, _hi in sizes)
+    n_docs_built = sum(n for _s, n, _hi in sizes)
+    next_doc_id = max([next_doc_id] + [hi + 1 for _s, _n, hi in sizes])
+
+    def commit(built: Dict[int, dict]) -> None:
+        # the marker lists exactly the index's shards: drop every other
+        # partition (dynamic overwrite leaves shards the input no longer
+        # reaches, and a shard emptied by deletions), then publish
+        shards = dict(sorted({**keep, **built}.items()))
+        storage.drop_shards_except(shards)
+        storage.write_commit(config, build_id, {
+            "input_fingerprint": fingerprint, "next_doc_id": next_doc_id,
+            "shards": shards,
+        })
+
     if n_docs_built == 0:
-        # nothing to build, but a deletion-only update still needs fresh
-        # global aggregates over the surviving shards
+        # nothing to build, but a deletion-only update still commits the
+        # surviving shards
         if os.path.exists(storage.path("postings")):
-            refresh_aggregates(spark, storage)
-            storage.write_commit(config, build_id, {"input_fingerprint": fingerprint})
+            commit({})
         return {"build_id": build_id, "n_docs": 0, "shards": [], "elapsed_sec": 0.0}
 
     # --- THE one shuffle of the build: repartition raw corpus bytes by
@@ -526,7 +517,7 @@ def build_index(
     # Explicit partition count (AQE never coalesces a user-specified
     # repartition) so the partitioned writes keep enough writers — one task
     # per shard up to ~4 tasks/core, multiple shards per task beyond that.
-    n_part = max(1, min(len(counts), spark.sparkContext.defaultParallelism * 4))
+    n_part = max(1, min(len(built_shards), spark.sparkContext.defaultParallelism * 4))
     layout = corpus.repartition(n_part, "doc_shard").cache()
 
     # --- doc_map (identity + ingest invariant; facet columns live here) ---
@@ -591,27 +582,19 @@ def build_index(
         for f in futs:
             f.result()
 
-    # --- global aggregates (tiny: one row per term / one row total) ---
-    refresh_aggregates(spark, storage)
-
-    # --- lineage (per-shard checkpoint rows from the sizing counts), one
-    # JSON metrics log line, then the commit marker ---
-    finished = time.time()
-    storage.append(
-        spark.createDataFrame(
-            [(build_id, s, fingerprint, counts[s], finished) for s in built_shards],
-            "build_id string, doc_shard int, input_fingerprint string, "
-            "n_docs long, finished_at double",
-        ),
-        "_lineage",
-    )
+    # --- the marker's entries for the built shards, one JSON metrics log
+    # line, then the commit marker ---
+    built = {
+        s: dict(e, build_id=build_id, input_fingerprint=fingerprint)
+        for s, e in refresh_aggregates(spark, storage, built_shards).items()
+    }
     elapsed = time.time() - t0
     log.info(json.dumps({
         "event": "build", "build_id": build_id, "n_docs": n_docs_built,
         "n_shards": len(built_shards), "elapsed_sec": elapsed,
         "docs_per_sec": n_docs_built / max(elapsed, 1e-9),
     }))
-    storage.write_commit(config, build_id, {"input_fingerprint": fingerprint})
+    commit(built)
     layout.unpersist()
     return {
         "build_id": build_id,

@@ -9,14 +9,15 @@ merge step, ``_merge(delta, source, deletions)``, which does each once:
    attach ``sha256(content)``, the change detector (the reference's md5-hash
    discipline, IndexRecordsForV4.java:157);
 2. classify (``detect_changes``) with a delta-sized left join against an
-   id-only ``doc_map`` projection; added rows get ids above the stored max;
+   id-only ``doc_map`` projection; added rows get ids from the marker's
+   ``next_doc_id`` up;
 3. collect the dirty shards once — a changed/added/deleted doc dirties its
    whole doc_shard, the index's unit of rebuild;
 4. take the dirty shards' surviving docs' ids from ``doc_map`` and their
    current rows from the caller's source;
 5. stage the rebuild rows and call ``build_index(only_shards=dirty)``, which
    replaces exactly those shards (dropping any that deletions emptied) and
-   re-aggregates lexicon/corpus_stats from the per-shard summaries.
+   commits a marker whose manifest replaces only their entries.
 
 The callers differ only in delta, source and deletions:
 ``incremental_update(new_corpus)`` passes the whole corpus as both, with
@@ -28,7 +29,7 @@ corpus; an overwrite in range (which breaks append-only incrementality, the
 Iceberg contract) passes the whole snapshot, with deletions.
 
 Identity rules: unchanged docs keep their doc_id (rank stability); new docs
-get ids above the previous max (they land in tail shards); deleted ids are
+get ids from ``next_doc_id`` up (they land in tail shards); deleted ids are
 never reused (shards may go sparse — scoring tolerates holes).
 """
 
@@ -36,7 +37,6 @@ from __future__ import annotations
 
 import os
 import shutil
-import uuid
 from typing import Callable, Optional
 
 from pyspark.sql import DataFrame, SparkSession
@@ -84,9 +84,9 @@ def detect_changes(spark: SparkSession, new_corpus: DataFrame, index_dir: str) -
     """Classify new_corpus rows (one per identity) vs the stored doc_map.
 
     Returns dict of DataFrames: modified / added (carrying doc_id; added ids
-    are dense above the stored max) and deleted (stored doc_ids whose
-    identity is absent from ``new_corpus`` — meaningful only when it is the
-    whole corpus).  All three are lazy except the max-id read.
+    are dense from the committed ``next_doc_id`` up) and deleted (stored
+    doc_ids whose identity is absent from ``new_corpus`` — meaningful only
+    when it is the whole corpus).  All three are lazy.
     """
     old = IndexStorage(index_dir).read(spark, "doc_map").select(
         *IDENTITY, F.col("doc_id").alias("_old_id"),
@@ -104,8 +104,7 @@ def detect_changes(spark: SparkSession, new_corpus: DataFrame, index_dir: str) -
         F.col("_old_id").alias("doc_id")
     )
 
-    max_old = old.agg(F.max("_old_id")).collect()[0][0]
-    base = (max_old if max_old is not None else -1) + 1
+    base = IndexStorage(index_dir).read_commit()["next_doc_id"]
     # two-phase prefix-sum id assignment with a base offset: a first
     # backfill or bulk append IS the common case at scale, so the added set
     # must never funnel through a single un-partitioned window task
@@ -162,7 +161,7 @@ def _merge(spark: SparkSession, index_dir: str, config: IndexConfig,
     # plan reads doc_map, which build_index is about to overwrite — you must
     # never overwrite a table a live plan still scans (Iceberg gets this via
     # snapshot isolation; plain parquet needs an explicit staging write).
-    staging = os.path.join(index_dir, "_staging", uuid.uuid4().hex[:12])
+    staging = os.path.join(index_dir, "_staging")
     try:
         rebuild.write.mode("overwrite").parquet(staging)
         meta = build_index(
@@ -206,9 +205,11 @@ def incremental_update_from_table(
     fingerprint = f"snap-{current}"
 
     def _pin(meta: dict, mode: str) -> dict:
+        marker = storage.read_commit()  # carry the manifest forward
         storage.write_commit(
             config, meta.get("build_id") or build_id or "sync",
-            {"input_fingerprint": fingerprint, "corpus_snapshot_id": current},
+            {"shards": marker["shards"], "next_doc_id": marker["next_doc_id"],
+             "input_fingerprint": fingerprint, "corpus_snapshot_id": current},
         )
         meta["mode"] = mode
         meta["corpus_snapshot_id"] = current

@@ -9,7 +9,7 @@ Lucene/Solr's DEFAULT distributed scoring uses PER-SHARD corpus stats
 contract exactly — each member index scores with its own statistics, and
 only the ≤k ranked rows per index are merged — plus the opt-in
 ExactStatsCache variant (``search(exact_stats=True)``): merged df/N/avgdl
-are computed first (one bounded lexicon point-lookup per member) and every
+are computed first (one bounded term-stats lookup per member) and every
 member scores under the global statistics, so ranks match a single merged
 index.
 
@@ -86,7 +86,7 @@ class MultiIndexEngine:
         """Merged corpus statistics across members (Solr ExactStatsCache):
         per-term (Σ df, Σ cf), per-field (Σ n_docs, token-weighted avgdl).
 
-        Cost: one bounded lexicon point-lookup per member (|terms| tiny
+        Cost: one bounded term-stats lookup per member (|terms| tiny
         rows each — the same exchange ExactStatsCache does per query) plus
         the members' already-cached field stats; nothing distributed moves.
         Per-member totals are recovered exactly (avgdl·n rounds to the

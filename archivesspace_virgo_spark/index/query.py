@@ -4,9 +4,10 @@ Query lifecycle (the reference's Solr ``q=...&rows=k`` surface,
 SolrHelper.java:39-80, re-expressed natively):
 
     search(terms, k, mode)
-    → ``_resolve``: lexicon point-lookup of the query terms (≤ |q| tiny
-      rows, cached per engine) → idf with CURRENT corpus N, per-field avgdl,
-      MUST_NOT and fq terms — or None when the query is statically empty
+    → ``_resolve``: df/cf of the query terms, sums over their postings rows
+      (≤ |q| · n_shards tiny rows, cached per engine) → idf with CURRENT
+      corpus N, per-field avgdl, MUST_NOT and fq terms — or None when the
+      query is statically empty
     → ``_shard_scan``: postings WHERE term IN terms, grouped by doc_shard
       → one Arrow batch per shard → numpy decode (doc lengths ride in each
       posting's dl_blob) + vectorized scoring + per-shard partial top-k
@@ -28,12 +29,12 @@ group values).  It has two executors, chosen per index by the postings'
 on-disk bytes against one cap (``_DRIVER_POSTINGS_MAX_BYTES``):
 
 - **driver** (at or under the cap): on the first query the engine reads
-  ``postings/`` and ``lexicon/`` once into driver-resident Arrow tables.
-  A scan filters the postings table by term (and shard) and runs the same
-  kernel on each doc_shard group in pandas; ``term_stats`` looks terms up
-  in the lexicon table.  The top-k page is cut in pandas and returned as
-  an Arrow local relation (``_local``, as are empty results), so a query
-  runs no Spark job.
+  ``postings/``, the only table it reads, once into a driver-resident
+  Arrow table.  A scan filters it by term (and shard) and runs the same
+  kernel on each doc_shard group in pandas; expansions filter the
+  vocabulary grouped from it.  The top-k page is cut in pandas and
+  returned as an Arrow local relation (``_local``, as are empty results),
+  so a query runs no Spark job.
 - **Spark** (over the cap): the postings scan prunes rowgroups by their
   term min/max stats (postings are term-sorted within each shard), one
   exchange groups ≤ |terms| rows per shard into ``applyInPandas``, and
@@ -41,7 +42,7 @@ on-disk bytes against one cap (``_DRIVER_POSTINGS_MAX_BYTES``):
   document-partitioned "local index" of production engines: one map task
   per shard, an O(k · n_shards) merge.
 
-``refresh()`` drops the driver tables; the next query reloads them.
+``refresh()`` drops the driver table; the next query reloads it.
 """
 
 from __future__ import annotations
@@ -706,7 +707,7 @@ def _rows_of(table: pa.Table, column: str, values) -> pa.Table:
 
 
 class _Query(NamedTuple):
-    """A query after term resolution: the live (lexicon-present) stored
+    """A query after term resolution: the live (index-present) stored
     terms in sorted order with their per-field idf × boost and avgdl, the
     MUST_NOT terms, and the fq clauses (each an OR of stored terms)."""
     live: List[str]
@@ -728,34 +729,34 @@ class QueryEngine:
 
     def __init__(self, spark: SparkSession, index_dir: str,
                  config: Optional[IndexConfig] = None):
-        """Nothing is read but the commit marker and corpus stats until the
-        first query.  That query picks the executor: an index whose
-        postings fit ``_DRIVER_POSTINGS_MAX_BYTES`` on disk loads postings
-        and lexicon into driver-resident Arrow tables and is served with
-        no Spark job; a larger one pins postings and lexicon via DataFrame
-        cache (MEMORY_AND_DISK, partition-grained, spills) and is served
-        by Spark.  A snapshot-bound engine never sees stale data: call
+        """Nothing is read but the commit marker until the first query,
+        so opening runs no Spark job.  That query picks the executor: an
+        index whose postings fit ``_DRIVER_POSTINGS_MAX_BYTES`` on disk
+        loads them into a driver-resident Arrow table and is served with
+        no Spark job; a larger one pins postings via DataFrame cache
+        (MEMORY_AND_DISK, partition-grained, spills) and is served by
+        Spark.  A snapshot-bound engine never sees stale data: call
         ``refresh()`` after an incremental merge."""
         self.spark = spark
         self.storage = IndexStorage(index_dir)
         self.config = config or IndexConfig()
         self._postings = None
         self._lexicon = None
-        #: (postings, lexicon) Arrow tables of a driver-resident index,
-        #: False when Spark serves it, None until the first query decides
+        #: postings Arrow table of a driver-resident index, False when
+        #: Spark serves it, None until the first query decides
         self._driver = None
         #: driver-side (df, cf) cache — absent terms cached as None so a
         #: repeated miss never re-queries.  On the Spark executor every
-        #: query otherwise pays a separate lexicon job BEFORE the scoring
-        #: job; a long-lived query service's vocabulary is Zipfian, so
+        #: query otherwise pays a separate term-stats job BEFORE the
+        #: scoring job; a long-lived query service's vocabulary is Zipfian, so
         #: this halves steady-state job count.  Bounded: one small tuple
         #: per distinct queried term.
         self._term_cache: dict = {}
         self._load_commit()
 
     def _load_commit(self) -> None:
-        """Check the commit marker and config hash, then read the per-field
-        corpus statistics of the committed index."""
+        """Check the commit marker and config hash, then sum its per-shard
+        entries into the per-field corpus statistics."""
         commit = self.storage.read_commit()
         if commit is None:
             raise FileNotFoundError(
@@ -767,10 +768,13 @@ class QueryEngine:
                 "rebuild required (reference pattern: transform-hash "
                 "invalidation, IndexRecordsForV4.java:44-64)"
             )
-        rows = self.storage.read(self.spark, "corpus_stats").collect()
-        #: per-field (n_docs, avgdl) — per-field norms (SURVEY §2.8-T10)
+        shards = commit["shards"].values()
+        n = sum(e["n_docs"] for e in shards)
+        #: per-field (n_docs, avgdl) — per-field norms (SURVEY §2.8-T10);
+        #: total / n equals Spark's avg(dl) bit for bit below 2^53 tokens
         self.field_stats = {
-            r["field"]: (int(r["n_docs"]), float(r["avgdl"])) for r in rows
+            f: (n, sum(e["tokens"][f] for e in shards) / n if n else 0.0)
+            for f in self.config.fields
         }
         default = self.config.fields[0]
         self.n_docs, self.avgdl = self.field_stats[default]
@@ -806,27 +810,37 @@ class QueryEngine:
         return self._postings
 
     def _lexicon_df(self) -> DataFrame:
+        """The vocabulary (term, df, cf) grouped from postings: a local
+        relation on a driver-resident index, else a cached aggregate."""
         if self._lexicon is None:
-            self._lexicon = self.storage.read(self.spark, "lexicon").cache()
+            table = self._driver_tables()
+            if table is None:
+                self._lexicon = self._postings_df().groupBy("term").agg(
+                    F.sum("n_docs").alias("df"), F.sum("cf").alias("cf")
+                ).cache()
+            else:
+                vocab = table.group_by("term").aggregate(
+                    [("n_docs", "sum"), ("cf", "sum")])
+                self._lexicon = self.spark.createDataFrame(vocab.select(
+                    ["term", "n_docs_sum", "cf_sum"]).rename_columns(
+                    ["term", "df", "cf"]).sort_by("term"))
         return self._lexicon
 
-    def _driver_tables(self):
-        """The driver-resident (postings, lexicon) Arrow tables, read once
-        on first use; None when the postings exceed the cap on disk and
-        Spark serves the index."""
+    def _driver_tables(self) -> Optional[pa.Table]:
+        """The driver-resident postings Arrow table, read once on first
+        use; None when the postings exceed the cap on disk and Spark
+        serves the index."""
         if self._driver is None:
-            fits = (_dir_bytes(self.storage.path("postings"))
-                    <= _DRIVER_POSTINGS_MAX_BYTES)
-            self._driver = fits and tuple(
-                pads.dataset(self.storage.path(t), format="parquet",
-                             partitioning="hive").to_table()
-                for t in ("postings", "lexicon"))
+            path = self.storage.path("postings")
+            self._driver = _dir_bytes(path) <= _DRIVER_POSTINGS_MAX_BYTES and (
+                pads.dataset(path, format="parquet", partitioning="hive")
+                .to_table())
         return self._driver or None
 
     def refresh(self) -> None:
         """Re-open the committed index (call after an incremental merge):
         drop the cached and driver-resident tables and the term stats,
-        re-check the commit, and re-read the corpus statistics."""
+        re-check the commit, and re-sum the corpus statistics."""
         for df in (self._postings, self._lexicon):
             if df is not None:
                 df.unpersist()
@@ -836,21 +850,19 @@ class QueryEngine:
 
     # --- term stats (T4) ---
     def term_stats(self, terms: Sequence[str]) -> dict:
+        """{term: (df, cf)} of the present ``terms``: sums over their
+        postings rows' n_docs and cf."""
         missing = [t for t in set(terms) if t not in self._term_cache]
         if missing:
-            tables = self._driver_tables()
-            if tables is None:
-                rows = self._lexicon_df().filter(
-                    F.col("term").isin(missing)).collect()
-                found = {r["term"]: (int(r["df"]), int(r["cf"]))
-                         for r in rows}
-            else:
-                lex = _rows_of(tables[1], "term", missing)
-                found = dict(zip(lex["term"].to_pylist(),
-                                 zip(lex["df"].to_pylist(),
-                                     lex["cf"].to_pylist())))
-            for t in missing:
-                self._term_cache[t] = found.get(t)  # None = known-absent
+            table = self._driver_tables()
+            rows = (self._postings_scan(missing, ["n_docs", "cf"]).collect()
+                    if table is None else
+                    _rows_of(table.select(["term", "n_docs", "cf"]), "term",
+                             missing).to_pylist())
+            self._term_cache.update(dict.fromkeys(missing))  # None = absent
+            for r in rows:
+                df, cf = self._term_cache[r["term"]] or (0, 0)
+                self._term_cache[r["term"]] = (df + r["n_docs"], cf + r["cf"])
         return {
             t: self._term_cache[t]
             for t in set(terms)
@@ -915,8 +927,8 @@ class QueryEngine:
         if page is not None:
             _check_page(*page)  # before any kernel cuts at k + offset
         empty = _arrow_schema(schema).empty_table().to_pandas()
-        tables = self._driver_tables()
-        if tables is None:
+        table = self._driver_tables()
+        if table is None:
             def run(pdf: pd.DataFrame) -> pd.DataFrame:
                 out = kernel(pdf)
                 return empty if out is None else out
@@ -924,7 +936,7 @@ class QueryEngine:
             out = self._postings_scan(terms, columns, shards).groupBy(
                 "doc_shard").applyInPandas(run, schema=schema)
             return out if page is None else _page(out, *page)
-        rows = _rows_of(tables[0], "term", terms)
+        rows = _rows_of(table, "term", terms)
         if shards is not None:
             rows = _rows_of(rows, "doc_shard", shards)
         pdf = rows.select(["doc_shard", "term", *columns]).to_pandas()
@@ -978,7 +990,7 @@ class QueryEngine:
         docs containing ANY excluded term are dropped; surviving docs keep
         their unchanged positive-clause BM25 score (a pure filter — MUST_NOT
         clauses never contribute to scoring).  Excluded terms need no
-        lexicon lookup: their postings rows ride the same per-shard Arrow
+        term-stats lookup: their postings rows ride the same per-shard Arrow
         batch and become a shard-local boolean mask.
 
         ``boosts`` is Lucene's BoostQuery (Solr ``q=term^2``): a
@@ -1338,7 +1350,7 @@ class QueryEngine:
                 f"{what} expands to more than {max_expansions} terms; "
                 "raise max_expansions or narrow the query"
             )
-        for r in rows:  # seed the stats cache — no second lexicon job
+        for r in rows:  # seed the stats cache — no second stats lookup
             self._term_cache[r["term"]] = (int(r["df"]), int(r["cf"]))
         return [r["term"] for r in rows]
 
@@ -1608,8 +1620,8 @@ class QueryEngine:
         keep terms with seed-tf ≥ min_term_freq and corpus df within
         [min_doc_freq, max_doc_freq_pct·N], rank candidates by
         seed-tf · idf, take the top ``max_query_terms`` as an interesting-
-        terms set, and run them as a scoring boolean OR.  One lexicon
-        point-lookup job for the candidate stats, then a normal ``search``.
+        terms set, and run them as a scoring boolean OR.  One term-stats
+        lookup for the candidates, then a normal ``search``.
         ``exclude_doc_id`` drops the seed doc itself from the hits (Solr
         mlt's match-exclusion) without disturbing the ranking."""
         from collections import Counter

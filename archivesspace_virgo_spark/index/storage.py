@@ -1,4 +1,4 @@
-"""Physical index layout + lineage/commit discipline.
+"""Physical index layout + commit discipline.
 
 Layout under ``index_dir`` (parquet here; on a cluster these are Iceberg
 tables — the code relies only on atomic-commit + partition-overwrite
@@ -11,12 +11,14 @@ semantics both provide):
                                  block_last_doc, block_max_tf, block_min_dl
                   (non-default-field terms stored prefixed "field:token" —
                    the composite (field, term) key of SURVEY §2.8-T10)
-    lexicon/      term, df, cf                (global agg; df exact — shards
-                                               hold disjoint doc ranges)
-    corpus_stats/ field, n_docs, total_tokens, avgdl   (per-field norms)
-    _lineage/     build_id, doc_shard, input_fingerprint, n_docs, finished_at
-                  (one row per built shard; n_docs = docs built into it)
-    _meta/commit.json   config hash + build metadata — written LAST
+    _meta/commit.json   written LAST: config hash, build metadata,
+                  ``next_doc_id`` (id high-water mark) and ``shards``, one
+                  entry per shard — n_docs, per-field token totals
+                  ("tokens"), build_id, input_fingerprint
+
+Like Lucene's commit point (``segments_N``), nothing global is stored:
+corpus stats are sums over ``shards``, a term's df/cf sums of its postings
+rows' n_docs/cf (exact: shards hold disjoint doc ranges).
 
 Build metrics are not a table: each build logs one JSON line at INFO
 (logger ``archivesspace_virgo_spark.index.build``) with n_docs, n_shards,
@@ -27,8 +29,8 @@ after successful upload (IndexRecordsForV4.java:116-125); here the
 ``_meta/commit.json`` marker is the durable point — readers treat an index
 without it as absent.  It is also the ONLY validity signal: a build writes
 postings, doc_map and doc_stats as concurrent jobs, so a failed build can
-leave any subset of them rewritten, and table presence or lineage rows say
-nothing about whether the index is consistent.
+leave any subset of them rewritten; corpus stats, resume state and
+visibility all change in the marker's one atomic rename.
 
 The partition-by-doc_shard layout means postings for one term are spread
 over shards with disjoint contiguous doc_id ranges: this IS the hot-term
@@ -41,7 +43,7 @@ from __future__ import annotations
 import json
 import os
 import time
-from typing import List, Optional
+from typing import Dict, List, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -107,16 +109,17 @@ class IndexStorage:
     def read(self, spark: SparkSession, table: str) -> DataFrame:
         return spark.read.parquet(self.path(table))
 
-    def append(self, df: DataFrame, table: str) -> None:
-        df.write.mode("append").parquet(self.path(table))
-
-    def drop_shard_partition(self, table: str, shard: int) -> None:
-        """Remove one doc_shard partition (Iceberg: DELETE WHERE doc_shard=s)."""
+    def drop_shards_except(self, keep) -> None:
+        """Remove every doc_map/doc_stats/postings doc_shard partition not
+        in ``keep`` (Iceberg: DELETE WHERE doc_shard NOT IN keep)."""
         import shutil
 
-        p = os.path.join(self.path(table), f"doc_shard={shard}")
-        if os.path.exists(p):
-            shutil.rmtree(p)
+        for table in ("doc_map", "doc_stats", "postings"):
+            p = self.path(table)
+            for name in os.listdir(p) if os.path.isdir(p) else ():
+                if (name.startswith("doc_shard=")
+                        and int(name.split("=", 1)[1]) not in keep):
+                    shutil.rmtree(os.path.join(p, name))
 
     # --- commit marker (the reference's persist-hash-after-upload pattern) ---
     def write_commit(self, config: IndexConfig, build_id: str, extra: Optional[dict] = None) -> None:
@@ -150,17 +153,12 @@ class IndexStorage:
         c = self.read_commit()
         return bool(c) and c.get("config_hash") == config.config_hash()
 
-    # --- lineage ---
-    def completed_shards(self, spark: SparkSession, input_fingerprint: str) -> List[int]:
+    def shards(self) -> Dict[int, dict]:
+        """The committed marker's per-shard entries, by doc_shard."""
+        c = self.read_commit() or {}
+        return {int(s): e for s, e in c.get("shards", {}).items()}
+
+    def completed_shards(self, input_fingerprint: str) -> List[int]:
         """Shards already built from the same input (resume support)."""
-        p = self.path("_lineage")
-        if not os.path.exists(p):
-            return []
-        lin = spark.read.parquet(p)
-        rows = (
-            lin.filter(lin.input_fingerprint == input_fingerprint)
-            .select("doc_shard")
-            .distinct()
-            .collect()
-        )
-        return sorted(r["doc_shard"] for r in rows)
+        return sorted(s for s, e in self.shards().items()
+                      if e["input_fingerprint"] == input_fingerprint)

@@ -41,3 +41,23 @@ def spark_executor_engine(spark, index_dir, cfg):
         engine = query.QueryEngine(spark, index_dir, cfg)
         assert engine._driver_tables() is None
     return engine
+
+
+#: the entries of a committed index directory
+INDEX_LAYOUT = ["_meta", "doc_map", "doc_stats", "postings"]
+
+
+def index_stats(spark, index_dir, cfg):
+    """What a committed index serves as statistics: per-field (n_docs,
+    avgdl), (df, cf) of every postings term, the marker's per-shard doc
+    counts and token totals (build ids and fingerprints left out) and its
+    doc-id high-water mark."""
+    from archivesspace_virgo_spark.index import query
+
+    engine = query.QueryEngine(spark, index_dir, cfg)
+    st = engine.storage
+    terms = [r["term"] for r in
+             st.read(spark, "postings").select("term").distinct().collect()]
+    shards = {s: (e["n_docs"], e["tokens"]) for s, e in st.shards().items()}
+    return (engine.field_stats, engine.term_stats(terms), shards,
+            st.read_commit()["next_doc_id"])

@@ -2,10 +2,10 @@
 
 The index format must be a pure function of (corpus, config): neither the
 input partition layout nor the executor count may change a single byte of
-lexicon/doc_map/postings or any query result.  This is what makes the
-per-shard checkpoints trustworthy (a resumed build mixes shards produced by
-different cluster incarnations) and the N-vs-4N scaling protocol meaningful
-(both sizes must produce the same index).
+doc_map/postings, a stat in the commit marker, or any query result.  This
+is what makes the per-shard checkpoints trustworthy (a resumed build mixes
+shards produced by different cluster incarnations) and the N-vs-4N scaling
+protocol meaningful (both sizes must produce the same index).
 """
 
 import subprocess
@@ -39,8 +39,10 @@ def index_fingerprint(spark, index_dir: str) -> dict:
         for r in post
     )
     out["postings"] = hashlib.sha256(repr(rows).encode()).hexdigest()
-    lex = sorted(tuple(r) for r in storage.read(spark, "lexicon").collect())
-    out["lexicon"] = hashlib.sha256(repr(lex).encode()).hexdigest()
+    stats = sorted((s, e["n_docs"], sorted(e["tokens"].items()))
+                   for s, e in storage.shards().items())
+    stats.append(storage.read_commit()["next_doc_id"])
+    out["shard_stats"] = hashlib.sha256(repr(stats).encode()).hexdigest()
     dm = sorted(
         (r["doc_id"], r["content_sha256"])
         for r in storage.read(spark, "doc_map").collect()

@@ -16,7 +16,7 @@ from archivesspace_virgo_spark.index.incremental import incremental_update
 from archivesspace_virgo_spark.index.query import QueryEngine
 from archivesspace_virgo_spark.index.storage import IndexStorage
 
-from tests.conftest import SF_SMOKE
+from tests.conftest import INDEX_LAYOUT, SF_SMOKE, index_stats
 
 CFG = IndexConfig(docs_per_shard=64, block_size=16)
 
@@ -38,13 +38,12 @@ def _snapshot(spark, index_dir, table, key_cols):
 def _assert_index_equal(spark, dir_a, dir_b):
     for table, keys in [
         ("doc_stats", ["doc_shard", "doc_id"]),
-        ("lexicon", ["term"]),
-        ("corpus_stats", []),
         ("postings", ["doc_shard", "term"]),
     ]:
         a = _snapshot(spark, dir_a, table, keys)
         b = _snapshot(spark, dir_b, table, keys)
         assert a == b, f"{table} differs: {len(a)} vs {len(b)} rows"
+    assert index_stats(spark, dir_a, CFG) == index_stats(spark, dir_b, CFG)
 
 
 def test_incremental_equals_full(spark, tmp_path):
@@ -133,10 +132,11 @@ def test_resume_skips_completed_shards(spark, tmp_path):
     m2 = build_index(spark, corpus, d, CFG, input_fingerprint="fp1",
                      resume=True, build_id="second")
     assert set(m2["shards"]).isdisjoint({0, 1, 2, 3})
-    # lineage: shards 0-3 still attributed to the first build (not recomputed)
-    lin = IndexStorage(d).read(spark, "_lineage")
-    firsts = {r["doc_shard"] for r in lin.filter(F.col("build_id") == "first").collect()}
-    assert firsts == {0, 1, 2, 3}
+    # the marker: shards 0-3 still attributed to the first build (not
+    # recomputed), the rest to the second
+    builds = {s: e["build_id"] for s, e in IndexStorage(d).shards().items()}
+    assert {s for s, b in builds.items() if b == "first"} == {0, 1, 2, 3}
+    assert {s for s, b in builds.items() if b == "second"} == set(m2["shards"])
 
     # result equals a clean one-shot build
     ref = str(tmp_path / "ref")
@@ -289,6 +289,56 @@ def test_build_logs_one_json_metrics_line(spark, tmp_path, caplog):
     assert (line["n_docs"], line["n_shards"]) == (150, 3)
     assert line["elapsed_sec"] > 0 and line["docs_per_sec"] > 0
     assert not os.path.exists(os.path.join(d, "_metrics"))
-    lin = IndexStorage(d).read(spark, "_lineage")
-    assert sorted((r["doc_shard"], r["n_docs"]) for r in lin.collect()) == [
+    shards = IndexStorage(d).shards()
+    assert sorted((s, e["n_docs"]) for s, e in shards.items()) == [
         (0, 64), (1, 64), (2, 22)]
+
+
+def test_deleted_max_id_is_not_reused(spark, tmp_path):
+    """A doc added after the highest-id doc was deleted gets a fresh id
+    above it, never the deleted one."""
+    v1 = _input_hint_corpus(spark, n=150)
+    d = str(tmp_path / "idx")
+    build_index(spark, v1, d, CFG, input_fingerprint="v1")
+    top = IndexStorage(d).read(spark, "doc_map").orderBy(F.desc("doc_id")).first()
+    v2 = v1.filter(F.col("path") != top["path"])
+    incremental_update(spark, v2, d, CFG, input_fingerprint="v2")
+    docnum = F.regexp_extract("path", "doc/(\\d+)", 1).cast("int")
+    new = _input_hint_corpus(spark).filter(docnum == 160)
+    new_path = new.first()["path"]
+    incremental_update(spark, v2.unionByName(new), d, CFG,
+                       input_fingerprint="v3")
+    ids = {r["path"]: r["doc_id"] for r in
+           IndexStorage(d).read(spark, "doc_map").collect()}
+    assert top["path"] not in ids
+    assert ids[new_path] == top["doc_id"] + 1
+
+
+def test_full_rebuild_drops_shards_the_new_corpus_does_not_reach(spark, tmp_path):
+    """A full build into a directory holding a larger index leaves only the
+    new corpus's shards: no old doc is counted or found."""
+    corpus = load_documents_as_corpus(spark, SF_SMOKE)
+    d = str(tmp_path / "idx")
+    build_index(spark, corpus.filter("doc_id < 150"), d, CFG)
+    build_index(spark, corpus.filter("doc_id < 60"), d, CFG)
+    engine = QueryEngine(spark, d, CFG)
+    assert engine.n_docs == 60
+    hits = engine.search(["table"], k=200).collect()
+    assert hits and max(r["doc_id"] for r in hits) < 60
+    st = IndexStorage(d)
+    assert set(st.shards()) == {0}
+    for table in ("doc_map", "doc_stats", "postings"):
+        shards = st.read(spark, table).select("doc_shard").distinct().collect()
+        assert [r["doc_shard"] for r in shards] == [0], table
+
+
+def test_index_holds_three_tables_and_a_marker(spark, tmp_path):
+    """After a build and after an incremental merge, the index directory
+    holds doc_map, doc_stats, postings and the commit marker — no derived
+    table and no staging leftovers."""
+    d = str(tmp_path / "idx")
+    build_index(spark, _input_hint_corpus(spark, n=100), d, CFG)
+    assert sorted(os.listdir(d)) == INDEX_LAYOUT
+    meta = incremental_update(spark, _input_hint_corpus(spark, n=130), d, CFG)
+    assert meta["mode"] == "incremental"
+    assert sorted(os.listdir(d)) == INDEX_LAYOUT

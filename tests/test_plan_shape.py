@@ -103,17 +103,29 @@ def test_query_partials_exchange_free(engine, surface):
 
 
 def _jobs_of(spark, group, call):
-    """(rows, Spark job ids) of issuing and collecting ``call()``."""
+    """(result, Spark job ids) of ``call()``."""
     sc = spark.sparkContext
     sc.setJobGroup(group, group)
     try:
-        rows = call().collect()
+        result = call()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    return rows, list(sc.statusTracker().getJobIdsForGroup(group))
+    return result, list(sc.statusTracker().getJobIdsForGroup(group))
 
 
-@pytest.mark.parametrize("surface", ["search", "phrase_search", "query"])
+_QUERIES = {
+    "search": lambda e: e.search(["table", "join"], k=10),
+    "phrase_search": lambda e: e.phrase_search(["table", "join"], k=10),
+    "query": lambda e: e.query("table join^2 -spark", k=10),
+    # multi-term expansion filters the vocabulary as a local relation
+    "prefix_search": lambda e: e.prefix_search("tab", k=10),
+    "wildcard_search": lambda e: e.wildcard_search("t?bl*", k=10),
+    "fuzzy_search": lambda e: e.fuzzy_search("tablr", k=10),
+    "query_expansion": lambda e: e.query("tab* join", k=10),
+}
+
+
+@pytest.mark.parametrize("surface", sorted(_QUERIES))
 def test_driver_resident_query_runs_no_spark_job(spark, engine, surface):
     """On an index under the postings cap the kernels run on the driver
     and the page comes back as a local relation: issuing and collecting
@@ -121,13 +133,9 @@ def test_driver_resident_query_runs_no_spark_job(spark, engine, surface):
     from archivesspace_virgo_spark.index.query import QueryEngine
 
     driver = QueryEngine(spark, engine.storage.index_dir, CFG)
-    call = {
-        "search": lambda e: e.search(["table", "join"], k=10),
-        "phrase_search": lambda e: e.phrase_search(["table", "join"], k=10),
-        "query": lambda e: e.query("table join^2 -spark", k=10),
-    }[surface]
+    call = _QUERIES[surface]
     rows, jobs = _jobs_of(spark, f"driver-resident-{surface}",
-                          lambda: call(driver))
+                          lambda: call(driver).collect())
     assert rows
     assert jobs == []
     assert rows == call(engine).collect()
@@ -155,10 +163,22 @@ def test_driver_resident_empty_result_runs_no_spark_job(spark, engine, case):
 
     driver = QueryEngine(spark, engine.storage.index_dir, CFG)
     rows, jobs = _jobs_of(spark, f"driver-resident-empty-{case}",
-                          lambda: _EMPTY[case](driver))
+                          lambda: _EMPTY[case](driver).collect())
     assert rows == []
     assert jobs == []
     assert _EMPTY[case](engine).collect() == []
+
+
+def test_engine_open_runs_no_spark_job(spark, engine):
+    """Opening an engine reads the commit marker alone: its corpus stats
+    are sums over the marker's per-shard entries."""
+    from archivesspace_virgo_spark.index.query import QueryEngine
+
+    opened, jobs = _jobs_of(spark, "engine-open", lambda: QueryEngine(
+        spark, engine.storage.index_dir, CFG))
+    assert jobs == []
+    assert opened.field_stats == engine.field_stats
+    assert opened.n_docs == engine.n_docs > 0
 
 
 def test_query_layer_has_one_shard_scan():

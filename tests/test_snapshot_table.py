@@ -17,7 +17,7 @@ from archivesspace_virgo_spark.index.query import QueryEngine
 from archivesspace_virgo_spark.index.storage import IndexStorage
 from archivesspace_virgo_spark.sources import SnapshotTable
 
-from tests.conftest import SF_SMOKE
+from tests.conftest import INDEX_LAYOUT, SF_SMOKE, index_stats
 
 CFG = IndexConfig(docs_per_shard=64, block_size=16)
 
@@ -29,10 +29,11 @@ def _corpus(spark, lo, hi):
 
 
 def _assert_index_equal(spark, dir_a, dir_b):
-    for table in ["doc_stats", "lexicon", "corpus_stats", "postings"]:
+    for table in ["doc_stats", "postings"]:
         a = sorted(str(tuple(r)) for r in IndexStorage(dir_a).read(spark, table).collect())
         b = sorted(str(tuple(r)) for r in IndexStorage(dir_b).read(spark, table).collect())
         assert a == b, f"{table} differs: {len(a)} vs {len(b)} rows"
+    assert index_stats(spark, dir_a, CFG) == index_stats(spark, dir_b, CFG)
 
 
 def test_snapshot_pinning_and_diff_scope(spark, tmp_path):
@@ -331,3 +332,30 @@ def test_survivors_fetch_over_prune_cap(spark, tmp_path, monkeypatch):
     build_index(spark, final.join(dm, ["repo", "path"]), full_dir, CFG,
                 input_fingerprint="full")
     _assert_index_equal(spark, idx, full_dir)
+
+
+def test_sync_stats_equal_a_fresh_build(spark, tmp_path):
+    """After a snapshot-diff sync, and after a sync whose appended rows
+    change no content, the index is three tables and a marker, and it
+    serves the corpus and term stats of a fresh full build of the same
+    snapshot."""
+    t = SnapshotTable.create(str(tmp_path / "tbl"))
+    t.append(_corpus(spark, 0, 150))
+    idx = str(tmp_path / "idx")
+    incremental_update_from_table(spark, t, idx, CFG)
+
+    def assert_fresh(name):
+        fresh = str(tmp_path / name)
+        assert incremental_update_from_table(
+            spark, t, fresh, CFG)["mode"] == "full_rebuild"
+        assert sorted(os.listdir(idx)) == INDEX_LAYOUT
+        got, want = index_stats(spark, idx, CFG), index_stats(spark, fresh, CFG)
+        assert got[:2] == want[:2]
+
+    t.append(_corpus(spark, 150, 180))
+    assert incremental_update_from_table(spark, t, idx, CFG)["mode"] == "snapshot_diff"
+    assert_fresh("fresh_diff")
+    # same content under a newer commit: classified unchanged
+    t.append(_corpus(spark, 0, 5).withColumn("commit", F.lit("z-same")))
+    assert incremental_update_from_table(spark, t, idx, CFG)["mode"] == "noop_content"
+    assert_fresh("fresh_noop")

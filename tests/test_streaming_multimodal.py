@@ -52,17 +52,13 @@ def test_stream_merges_into_index(spark, tmp_path):
     assert e2.search(["table"], k=5).count() > 0
 
     # the second micro-batch merged via the snapshot-diff path, NOT a
-    # full rebuild: its lineage rows cover only the dirty tail shards
+    # full rebuild: its marker entries cover only the dirty tail shards
     # (appended ids 100-149 → shards 1,2 at 64 docs/shard; shard 0 untouched)
     st = IndexStorage(index_dir)
     commit = st.read_commit()
     assert commit["corpus_snapshot_id"] == 2  # wrap committed one append
-    snap2 = {
-        r["doc_shard"]
-        for r in st.read(spark, "_lineage")
-        .filter(F.col("input_fingerprint") == "snap-2")
-        .collect()
-    }
+    snap2 = {s for s, e in st.shards().items()
+             if e["input_fingerprint"] == "snap-2"}
     assert snap2 == {1, 2}
 
 
