@@ -55,11 +55,7 @@ from pyspark.sql.window import Window
 from archivesspace_virgo_spark import codec
 from archivesspace_virgo_spark.config import IndexConfig
 from archivesspace_virgo_spark.corpus import assign_doc_ids, with_content_sha
-from archivesspace_virgo_spark.index.storage import (
-    DOC_STATS_SCHEMA,
-    POSTINGS_SCHEMA,
-    IndexStorage,
-)
+from archivesspace_virgo_spark.index.storage import POSTINGS_SCHEMA, IndexStorage
 from archivesspace_virgo_spark.tokenizer import tokens_column
 
 log = logging.getLogger(__name__)
@@ -376,8 +372,7 @@ def refresh_aggregates(spark: SparkSession, storage: IndexStorage,
     ``doc_stats`` in one bounded collect of shards × fields rows.  Writes
     nothing: corpus stats are sums over these entries, so a sync pays for
     the shards it rebuilt, not for the index."""
-    # the declared schema spares the footer-reading schema inference job
-    stats = spark.read.schema(DOC_STATS_SCHEMA).parquet(storage.path("doc_stats"))
+    stats = storage.read(spark, "doc_stats")
     if shards is not None:
         stats = stats.filter(F.col("doc_shard").isin(list(shards)))
     out: Dict[int, dict] = {}
@@ -437,6 +432,7 @@ def build_index(
     resume: bool = False,
     only_shards: Optional[Iterable[int]] = None,
     validate: bool = False,
+    _marker: Optional[dict] = None,
 ) -> dict:
     """Full (or shard-scoped) index build.
 
@@ -447,7 +443,9 @@ def build_index(
     its doc_map/doc_stats/postings partitions dropped (a shard emptied by
     deletions — dynamic overwrite would otherwise leave its old data), as
     has, on a full build, every old shard the new corpus does not reach.
-    Returns build metadata dict.
+    ``_marker`` holds extra commit-marker entries, written in the build's
+    one marker write (internal: a snapshot sync pins its
+    ``corpus_snapshot_id`` there).  Returns build metadata dict.
     """
     config = config or IndexConfig()
     build_id = build_id or uuid.uuid4().hex[:12]
@@ -501,7 +499,7 @@ def build_index(
         storage.drop_shards_except(shards)
         storage.write_commit(config, build_id, {
             "input_fingerprint": fingerprint, "next_doc_id": next_doc_id,
-            "shards": shards,
+            "shards": shards, **(_marker or {}),
         })
 
     if n_docs_built == 0:
@@ -536,7 +534,7 @@ def build_index(
                 # coalesce: a NULL field value must count as dl=0 (the pack
                 # kernel's fillna('') convention) — otherwise the row stays in
                 # n_docs but silently drops out of avg(dl)/sum(dl), skewing
-                # avgdl and violating DOC_STATS_SCHEMA's non-null dl
+                # avgdl and breaking doc_stats' non-null dl
                 F.coalesce(
                     F.regexp_count(F.lower(F.col(f)), F.lit("[a-z0-9]+")),
                     F.lit(0),
@@ -573,14 +571,18 @@ def build_index(
     # pattern for this (scheduler pools); exceptions propagate via result().
     from concurrent.futures import ThreadPoolExecutor
 
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        futs = [
-            pool.submit(storage.write, packed, "postings", partition_shards=True),
-            pool.submit(storage.write, doc_map, "doc_map", partition_shards=True),
-            pool.submit(storage.write, doc_stats, "doc_stats", partition_shards=True),
-        ]
-        for f in futs:
-            f.result()
+    try:
+        with ThreadPoolExecutor(max_workers=3) as pool:
+            futs = [
+                pool.submit(storage.write, packed, "postings", partition_shards=True),
+                pool.submit(storage.write, doc_map, "doc_map", partition_shards=True),
+                pool.submit(storage.write, doc_stats, "doc_stats", partition_shards=True),
+            ]
+            for f in futs:
+                f.result()
+    finally:
+        # the writes are layout's only readers, failed or not
+        layout.unpersist()
 
     # --- the marker's entries for the built shards, one JSON metrics log
     # line, then the commit marker ---
@@ -595,7 +597,6 @@ def build_index(
         "docs_per_sec": n_docs_built / max(elapsed, 1e-9),
     }))
     commit(built)
-    layout.unpersist()
     return {
         "build_id": build_id,
         "n_docs": n_docs_built,

@@ -49,6 +49,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from archivesspace_virgo_spark.config import IndexConfig
+from archivesspace_virgo_spark.sources.snapshot_table import footer_schema
 
 POSTINGS_SCHEMA = T.StructType(
     [
@@ -74,16 +75,6 @@ POSTINGS_SCHEMA = T.StructType(
     ]
 )
 
-DOC_STATS_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_shard", T.IntegerType(), False),
-        T.StructField("doc_id", T.LongType(), False),
-        T.StructField("field", T.StringType(), False),
-        T.StructField("dl", T.LongType(), False),
-    ]
-)
-
-
 class IndexStorage:
     def __init__(self, index_dir: str):
         self.index_dir = index_dir
@@ -107,7 +98,32 @@ class IndexStorage:
         w.parquet(self.path(table))
 
     def read(self, spark: SparkSession, table: str) -> DataFrame:
-        return spark.read.parquet(self.path(table))
+        """``table`` read with a declared schema: the one Spark would infer,
+        taken from the same footer on the driver, so no read runs Spark's
+        footer-reading inference job."""
+        schema = self._schema(table)
+        return (spark.read.schema(schema) if schema else spark.read).parquet(
+            self.path(table))
+
+    def _schema(self, table: str) -> Optional[T.StructType]:
+        """The schema Spark infers for a doc_shard-partitioned ``table``:
+        the Spark schema in the footer of its smallest-path file (Spark's
+        pick), then the ``doc_shard`` partition column.  doc_map's and
+        doc_stats' columns follow the corpus (doc_id may be int), so no
+        constant serves.  None for a table with no such file: Spark infers."""
+        import pyarrow.parquet as pq
+
+        root = self.path(table)
+        shards = sorted(n for n in os.listdir(root)
+                        if n.startswith("doc_shard=")) if os.path.isdir(root) else []
+        for shard in shards:
+            files = sorted(n for n in os.listdir(os.path.join(root, shard))
+                           if n.endswith(".parquet"))
+            if files:
+                recorded = footer_schema(pq.ParquetFile(os.path.join(root, shard, files[0])))
+                return recorded and T.StructType.fromJson(json.loads(recorded)).add(
+                    "doc_shard", T.IntegerType())
+        return None
 
     def drop_shards_except(self, keep) -> None:
         """Remove every doc_map/doc_stats/postings doc_shard partition not

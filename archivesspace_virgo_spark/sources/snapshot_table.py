@@ -21,7 +21,15 @@ engine depends on with the same mechanics Iceberg uses, over plain parquet:
 - **manifest pruning**: each manifest entry records per-file row count and
   the min/max of a chosen prune column (``repo`` for the corpus), so a
   point/semi-join fetch can skip files whose range cannot match — the
-  file-skipping role of Iceberg's manifest stats.
+  file-skipping role of Iceberg's manifest stats;
+- **recorded schemas**: each manifest entry also records the Spark schema
+  of its file, read from the footer on the driver when the file is
+  committed (the schema Spark's writer stored there, else the file's Arrow
+  schema converted), as Iceberg's ``metadata.json`` records the table
+  schema.  Every read declares the schema Spark would infer — that of the
+  scanned file with the smallest path — so no read runs a footer-reading
+  schema-inference job.  A file whose schema has no exact conversion
+  records none, and reads whose smallest file lacks one infer as before.
 
 When a real Iceberg catalog IS configured (cluster deployments),
 ``read_iceberg`` maps the same three operations onto
@@ -40,6 +48,28 @@ import uuid
 from typing import List, Optional
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
+
+#: footer key under which Spark's parquet writer stores the Spark schema
+#: (Spark's own inference reads it first)
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def footer_schema(pf) -> Optional[str]:
+    """The Spark schema (JSON) Spark infers from this ``pyarrow``
+    ParquetFile's footer, or None when the Arrow conversion is not exact."""
+    recorded = (pf.metadata.metadata or {}).get(_SPARK_SCHEMA_KEY)
+    if recorded is not None:
+        return recorded.decode()
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    try:
+        schema = from_arrow_schema(pf.schema_arrow, prefer_timestamp_ntz=True).json()
+    except TypeError:  # a type with no Spark counterpart (e.g. uint32)
+        return None
+    # Spark reads an all-null (Arrow null) column as int, the conversion
+    # gives void: leave such files to inference
+    return None if '"void"' in schema else schema
 
 
 class SnapshotTable:
@@ -87,12 +117,15 @@ class SnapshotTable:
 
     # --- writes ---
     def _manifest_entry(self, path: str, prune_col: Optional[str]) -> dict:
-        """Manifest entry for one immutable parquet file: row count +
-        min/max of the prune column (Iceberg manifest stats)."""
+        """Manifest entry for one immutable parquet file: row count, Spark
+        schema and min/max of the prune column (Iceberg manifest stats)."""
         import pyarrow.parquet as pq
 
         meta = pq.ParquetFile(path)
         entry = {"path": path, "n_rows": meta.metadata.num_rows}
+        schema = footer_schema(meta)
+        if schema is not None:
+            entry["schema"] = schema
         if prune_col is not None:
             try:
                 idx = meta.schema_arrow.names.index(prune_col)
@@ -111,7 +144,8 @@ class SnapshotTable:
 
     def _stage_files(self, df: DataFrame) -> List[dict]:
         """Write df as immutable parquet files under data/, returning
-        manifest entries with per-file stats (rows, min/max prune column)."""
+        manifest entries with per-file stats (rows, schema, min/max prune
+        column)."""
         sub = os.path.join(self.data_dir, uuid.uuid4().hex[:12])
         df.write.mode("overwrite").parquet(sub)
         prune_col = self.snapshot(0).get("prune_column")
@@ -186,20 +220,26 @@ class SnapshotTable:
                 shutil.rmtree(d)
 
     # --- reads ---
-    def _read_files(self, spark: SparkSession, files: List[str]) -> DataFrame:
-        if not files:
+    def _read_files(self, spark: SparkSession, entries: List[dict]) -> DataFrame:
+        if not entries:
             # schema-less empty: derive from any snapshot that has files
             for v in range(self.current_snapshot_id(), -1, -1):
                 man = self.snapshot(v)["manifest"]
                 if man:
-                    return spark.read.parquet(man[0]["path"]).limit(0)
+                    return self._read_files(spark, man[:1]).limit(0)
             raise ValueError("empty table with no schema source")
-        return spark.read.parquet(*files)
+        # Spark infers a multi-file read's schema from the file with the
+        # smallest path; declaring that file's recorded schema reads the
+        # same columns, types and nullability with no inference job
+        first = min(entries, key=lambda e: e["path"])
+        reader = spark.read
+        if "schema" in first:
+            reader = reader.schema(T.StructType.fromJson(json.loads(first["schema"])))
+        return reader.parquet(*[e["path"] for e in entries])
 
     def read(self, spark: SparkSession, snapshot_id: Optional[int] = None) -> DataFrame:
         """Snapshot-pinned scan (Iceberg: VERSION AS OF)."""
-        man = self.snapshot(snapshot_id)["manifest"]
-        return self._read_files(spark, [e["path"] for e in man])
+        return self._read_files(spark, self.snapshot(snapshot_id)["manifest"])
 
     def diff(self, spark: SparkSession, from_snapshot: int,
              to_snapshot: Optional[int] = None) -> DataFrame:
@@ -213,9 +253,9 @@ class SnapshotTable:
                 f"snapshot range ({from_snapshot}, {to_snapshot}] contains an "
                 "overwrite; incremental diff undefined (Iceberg contract)"
             )
-        files: List[str] = []
+        files: List[dict] = []
         for v in range(from_snapshot + 1, to_snapshot + 1):
-            files.extend(e["path"] for e in self.snapshot(v).get("added", []))
+            files.extend(self.snapshot(v).get("added", []))
         return self._read_files(spark, files)
 
     def has_overwrite_between(self, from_snapshot: int, to_snapshot: int) -> bool:
@@ -239,7 +279,7 @@ class SnapshotTable:
                 i = bisect.bisect_left(keys_sorted, e["min"])
                 if i >= len(keys_sorted) or keys_sorted[i] > e["max"]:
                     continue  # no key falls inside this file's range
-            files.append(e["path"])
+            files.append(e)
         return self._read_files(spark, files)
 
 

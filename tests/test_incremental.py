@@ -260,6 +260,26 @@ def test_failed_staging_write_leaves_no_staging(spark, tmp_path, monkeypatch):
     assert not os.path.exists(staging) or not os.listdir(staging)
 
 
+def test_failed_table_write_releases_the_cached_layout(spark, tmp_path, monkeypatch):
+    """A build whose postings write fails unpersists the corpus layout its
+    writes share: the session holds as many persisted RDDs as before."""
+    src = str(tmp_path / "src")
+    _input_hint_corpus(spark, n=100).write.parquet(src)
+    jsc = spark.sparkContext._jsc
+    persisted = jsc.getPersistentRDDs().size()
+    real = IndexStorage.write
+
+    def failing(self, df, table, *args, **kwargs):
+        if table == "postings":
+            raise RuntimeError("injected postings write failure")
+        real(self, df, table, *args, **kwargs)
+
+    monkeypatch.setattr(IndexStorage, "write", failing)
+    with pytest.raises(RuntimeError, match="injected"):
+        build_index(spark, spark.read.parquet(src), str(tmp_path / "idx"), CFG)
+    assert jsc.getPersistentRDDs().size() == persisted
+
+
 def test_build_drops_only_shard_that_gets_no_rows(spark, tmp_path):
     """``build_index(only_shards=[s])`` over rows with none in shard s (all
     its docs deleted) leaves shard s with no doc_map and no postings."""

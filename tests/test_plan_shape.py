@@ -102,15 +102,23 @@ def test_query_partials_exchange_free(engine, surface):
     assert "TakeOrderedAndProject" in plan
 
 
-def _jobs_of(spark, group, call):
-    """(result, Spark job ids) of ``call()``."""
+def _jobs_of(spark, group, call, ungrouped=False):
+    """(result, Spark job ids) of ``call()``: its job group's jobs and, with
+    ``ungrouped``, the jobs without a group that start meanwhile — the
+    build's writer threads do not inherit the group (perfbench's
+    ``JobCounter`` counts the same way)."""
     sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
     sc.setJobGroup(group, group)
     try:
         result = call()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    return result, list(sc.statusTracker().getJobIdsForGroup(group))
+    jobs = list(tracker.getJobIdsForGroup(group))
+    if ungrouped:
+        jobs += sorted(set(tracker.getJobIdsForGroup(None)) - before)
+    return result, jobs
 
 
 _QUERIES = {
@@ -179,6 +187,73 @@ def test_engine_open_runs_no_spark_job(spark, engine):
     assert jobs == []
     assert opened.field_stats == engine.field_stats
     assert opened.n_docs == engine.n_docs > 0
+
+
+def _snapshot_table(spark, path):
+    """A snapshot table of the test corpus's first 150 docs (input shape,
+    no doc_id) and a loader for any doc range of it."""
+    from archivesspace_virgo_spark.sources import SnapshotTable
+
+    def docs(lo, hi):
+        c = load_documents_as_corpus(spark, SF_SMOKE)
+        return c.filter(F.col("doc_id").between(lo, hi - 1)).drop("doc_id")
+
+    t = SnapshotTable.create(path)
+    t.append(docs(0, 150))
+    return t, docs
+
+
+@pytest.mark.parametrize("read", ["doc_map", "doc_stats", "postings",
+                                  "snapshot", "snapshot_diff", "snapshot_pruned"])
+def test_declared_reads_run_no_spark_job(spark, engine, tmp_path, read):
+    """Index-table and snapshot-table reads declare the schema Spark would
+    infer, so opening them runs no Spark job, where inferring it runs
+    one."""
+    st = engine.storage
+    t, docs = _snapshot_table(spark, str(tmp_path / "tbl"))
+    first = t.current_snapshot_id()
+    t.append(docs(150, 160))
+    repo = docs(150, 151).first()["repo"]
+    reads = {
+        "snapshot": lambda: t.read(spark),
+        "snapshot_diff": lambda: t.diff(spark, first),
+        "snapshot_pruned": lambda: t.read_pruned(spark, [repo]),
+    }
+    declared = reads.get(read, lambda: st.read(spark, read))
+    df, jobs = _jobs_of(spark, f"declared-read-{read}", declared)
+    assert jobs == []
+    paths = df.inputFiles() if read in reads else [st.path(read)]
+    inferred, jobs = _jobs_of(spark, f"inferred-read-{read}",
+                              lambda: spark.read.parquet(*paths))
+    assert jobs, "inference runs a job: the declared read must run none"
+    assert df.schema == inferred.schema
+
+
+#: Spark jobs a snapshot-diff sync of 20 new and 5 modified docs into the
+#: 150-doc index may run, counted like perfbench; 61 when every action
+#: re-ran the classification plan from the diff read
+_SYNC_JOB_BUDGET = 34
+
+
+def test_snapshot_diff_sync_job_budget(spark, tmp_path):
+    """A snapshot-diff sync evaluates its change set once: the id
+    assignment, the dirty-shard collect, the survivor-repo collect and the
+    staging write read persisted frames, and no read infers a schema."""
+    from archivesspace_virgo_spark.index.incremental import (
+        incremental_update_from_table,
+    )
+
+    t, docs = _snapshot_table(spark, str(tmp_path / "tbl"))
+    idx = str(tmp_path / "idx")
+    assert incremental_update_from_table(spark, t, idx, CFG)["mode"] == "full_rebuild"
+    modified = docs(10, 15).withColumn(
+        "content", F.concat("content", F.lit(" modified token"))
+    ).withColumn("commit", F.lit("z-v2"))
+    t.append(docs(150, 170).unionByName(modified))
+    meta, jobs = _jobs_of(spark, "snapshot-diff-sync", lambda: (
+        incremental_update_from_table(spark, t, idx, CFG)), ungrouped=True)
+    assert meta["mode"] == "snapshot_diff" and meta["dirty_shards"] == [0, 2]
+    assert len(jobs) <= _SYNC_JOB_BUDGET, len(jobs)
 
 
 def test_query_layer_has_one_shard_scan():

@@ -11,13 +11,14 @@ from archivesspace_virgo_spark.config import IndexConfig
 from archivesspace_virgo_spark.corpus import load_documents_as_corpus
 from archivesspace_virgo_spark.index.build import build_index
 from archivesspace_virgo_spark.index.incremental import (
+    incremental_update,
     incremental_update_from_table,
 )
 from archivesspace_virgo_spark.index.query import QueryEngine
 from archivesspace_virgo_spark.index.storage import IndexStorage
 from archivesspace_virgo_spark.sources import SnapshotTable
 
-from tests.conftest import INDEX_LAYOUT, SF_SMOKE, index_stats
+from tests.conftest import INDEX_LAYOUT, SF_SMOKE, index_stats, spark_executor_engine
 
 CFG = IndexConfig(docs_per_shard=64, block_size=16)
 
@@ -359,3 +360,167 @@ def test_sync_stats_equal_a_fresh_build(spark, tmp_path):
     t.append(_corpus(spark, 0, 5).withColumn("commit", F.lit("z-same")))
     assert incremental_update_from_table(spark, t, idx, CFG)["mode"] == "noop_content"
     assert_fresh("fresh_noop")
+
+
+def test_delta_with_reordered_columns_syncs_like_a_full_build(spark, tmp_path):
+    """Reads declare the schema Spark infers, which follows one file's
+    column order: a delta whose files list the columns in another order
+    than the base files syncs to the index a full build of the final state
+    gives."""
+    t = SnapshotTable.create(str(tmp_path / "tbl"))
+    t.append(_corpus(spark, 0, 150))
+    idx = str(tmp_path / "idx")
+    incremental_update_from_table(spark, t, idx, CFG)
+    docnum = F.regexp_extract("path", "doc/(\\d+)", 1).cast("int")
+    modify = lambda c: F.when(docnum.between(10, 14), F.concat(  # noqa: E731
+        c, F.lit(" modified token"))).otherwise(c)
+    delta = _corpus(spark, 150, 180).unionByName(
+        _corpus(spark, 10, 15).withColumn("commit", F.lit("z-v2")))
+    delta = delta.withColumn("content", modify(F.col("content")))
+    t.append(delta.select(*reversed(delta.columns)))
+    assert incremental_update_from_table(spark, t, idx, CFG)["mode"] == "snapshot_diff"
+
+    full_dir = str(tmp_path / "full")
+    dm = IndexStorage(idx).read(spark, "doc_map").select("doc_id", "repo", "path")
+    final = _corpus(spark, 0, 180).withColumn("content", modify(F.col("content")))
+    build_index(spark, final.join(dm, ["repo", "path"]), full_dir, CFG,
+                input_fingerprint="full")
+    _assert_index_equal(spark, idx, full_dir)
+
+
+def test_declared_schemas_equal_inference(spark, tmp_path):
+    """Every snapshot-table read and every index-table read declares the
+    schema Spark infers from the footers: the same columns, order, types
+    and nullability, whether a file was written by Spark or by pyarrow."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from archivesspace_virgo_spark.sources import wrap_parquet_dir
+
+    # Spark-written files, the second in another column order
+    t = SnapshotTable.create(str(tmp_path / "tbl"))
+    s1 = t.append(_corpus(spark, 0, 60))
+    base = _corpus(spark, 60, 90)
+    s2 = t.append(base.select(*reversed(base.columns)))
+    assert all("schema" in e for e in t.snapshot(s2)["manifest"])
+
+    def inferred(entries):
+        return spark.read.parquet(*[e["path"] for e in entries]).schema
+
+    man = t.snapshot(s2)["manifest"]
+    assert t.read(spark, s1).schema == inferred(t.snapshot(s1)["manifest"])
+    assert t.read(spark, s2).schema == inferred(man)
+    assert t.diff(spark, s1, s2).schema == inferred(t.snapshot(s2)["added"])
+    repos = [r["repo"] for r in base.select("repo").distinct().collect()]
+    pruned = t.read_pruned(spark, repos, s2)
+    assert pruned.schema == spark.read.parquet(*pruned.inputFiles()).schema
+
+    # pyarrow-written files: converted from the Arrow schema, except a
+    # type Spark does not read as converted (null) or cannot (uint32),
+    # which records no schema and is inferred
+    ts = datetime.datetime(2024, 1, 2, 3, 4, 5)
+    typed = pa.table({
+        "repo": ["r"], "n": pa.array([1], pa.int16()), "x": [1.5],
+        "at": pa.array([ts], pa.timestamp("us")),
+        "at_utc": pa.array([ts], pa.timestamp("us", tz="UTC")),
+        "tags": [["a", "b"]], "kv": [{"k": 1}],
+    })
+    for name, table in {
+        "typed": typed,
+        "with_null": typed.append_column("none", pa.nulls(1)),
+        "with_uint": typed.append_column("u", pa.array([1], pa.uint32())),
+    }.items():
+        src = tmp_path / name
+        src.mkdir()
+        pq.write_table(table, str(src / "part-0.parquet"))
+        w = wrap_parquet_dir(str(src), str(tmp_path / f"{name}_log"))
+        entries = w.snapshot()["manifest"]
+        assert ("schema" in entries[0]) == (name == "typed"), name
+        assert w.read(spark).schema == inferred(entries), name
+
+    # the index tables, over a corpus whose doc_id is an int
+    idx = str(tmp_path / "idx")
+    build_index(spark, _corpus(spark, 0, 90).withColumn(
+        "doc_id", F.regexp_extract("path", "doc/(\\d+)", 1).cast("int")), idx, CFG)
+    st = IndexStorage(idx)
+    for table in ("doc_map", "doc_stats", "postings"):
+        assert st.read(spark, table).schema == spark.read.parquet(st.path(table)).schema, table
+
+
+def test_syncs_release_exactly_the_frames_they_persist(spark, tmp_path, monkeypatch):
+    """Each sync path unpersists the frames it persisted, whether it
+    rebuilds, rebuilds nothing or fails, and only those: an engine opened
+    before the syncs keeps its cached postings."""
+    from pyspark.sql import DataFrameWriter
+
+    engine_dir = str(tmp_path / "engine_index")
+    build_index(spark, _corpus(spark, 0, 100), engine_dir, CFG)
+    engine = spark_executor_engine(spark, engine_dir, CFG)
+    engine._postings_df().count()  # materialize its cached table
+    jsc = spark.sparkContext._jsc
+    persisted = jsc.getPersistentRDDs().size()
+    assert persisted > 0
+
+    t = SnapshotTable.create(str(tmp_path / "tbl"))
+    t.append(_corpus(spark, 0, 150))
+    idx = str(tmp_path / "sync_index")
+
+    def sync(mode, run=lambda: incremental_update_from_table(spark, t, idx, CFG)):
+        assert run()["mode"] == mode
+        assert jsc.getPersistentRDDs().size() == persisted, mode
+
+    sync("full_rebuild")
+    t.append(_corpus(spark, 150, 170))
+    sync("snapshot_diff")
+    t.append(_corpus(spark, 0, 5).withColumn("commit", F.lit("z-same")))
+    sync("noop_content")
+    t.overwrite(_corpus(spark, 10, 170))
+    sync("incremental")
+
+    real = DataFrameWriter.parquet
+
+    def failing(self, path, *args, **kwargs):
+        real(self, path, *args, **kwargs)
+        if "_staging" in path:
+            raise RuntimeError("injected staging failure")
+
+    t.append(_corpus(spark, 170, 180))
+    with monkeypatch.context() as mp:
+        mp.setattr(DataFrameWriter, "parquet", failing)
+        with pytest.raises(RuntimeError, match="injected"):
+            incremental_update_from_table(spark, t, idx, CFG)
+    assert jsc.getPersistentRDDs().size() == persisted
+
+    sync("incremental", lambda: incremental_update(
+        spark, _corpus(spark, 10, 190), idx, CFG))
+    assert engine._postings.storageLevel.useMemory
+
+
+def test_crash_after_the_build_commit_keeps_the_snapshot_pin(spark, tmp_path, monkeypatch):
+    """A sync whose process dies right after the build's marker write
+    leaves the index pinned to the synced snapshot: the next sync diffs
+    from it instead of rebuilding the whole index."""
+    t = SnapshotTable.create(str(tmp_path / "tbl"))
+    t.append(_corpus(spark, 0, 150))
+    idx = str(tmp_path / "idx")
+    incremental_update_from_table(spark, t, idx, CFG)
+    t.append(_corpus(spark, 150, 170))
+
+    real = IndexStorage.write_commit
+
+    def dies_after_write(self, *args, **kwargs):
+        real(self, *args, **kwargs)
+        raise RuntimeError("process died after a marker write")
+
+    with monkeypatch.context() as mp:
+        mp.setattr(IndexStorage, "write_commit", dies_after_write)
+        with pytest.raises(RuntimeError, match="process died"):
+            incremental_update_from_table(spark, t, idx, CFG)
+    assert not os.path.exists(os.path.join(idx, "_staging"))
+
+    t.append(_corpus(spark, 170, 180))
+    meta = incremental_update_from_table(spark, t, idx, CFG)
+    assert meta["mode"] == "snapshot_diff"
+    assert QueryEngine(spark, idx, CFG).n_docs == 180
