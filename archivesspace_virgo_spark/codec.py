@@ -58,40 +58,20 @@ def varbyte_encode(values: np.ndarray) -> bytes:
     return out.tobytes()
 
 
-def varbyte_encode_segments(
-    values: np.ndarray, seg_starts: np.ndarray, return_value_offsets: bool = False
-):
-    """Encode MANY value segments in one vectorized pass; returns one bytes
-    blob per segment.
-
-    ``seg_starts``: ascending value-index starts (first must be 0); segment i
-    covers values[seg_starts[i]:seg_starts[i+1]].  The bit-math runs batched
-    over ALL segments (this is what removes the per-term Python loop from the
-    build hot path); the only per-segment work is a memoryview slice.
-
-    With ``return_value_offsets``, also returns the GLOBAL byte offset of
-    every value (int64 array, len(values)+1 with the total as last element) —
-    callers derive per-block offsets for random-access block decode from it.
-    """
-    out, seg_byte_offsets, value_offsets = varbyte_encode_stream(
-        values, seg_starts
-    )
-    if seg_byte_offsets.size <= 1:
-        return ([], value_offsets) if return_value_offsets else []
-    buf = out.tobytes()
-    blobs = [buf[a:b] for a, b in zip(seg_byte_offsets[:-1],
-                                      seg_byte_offsets[1:])]
-    return (blobs, value_offsets) if return_value_offsets else blobs
-
-
 def varbyte_encode_stream(values: np.ndarray, seg_starts: np.ndarray):
-    """Zero-slicing form of :func:`varbyte_encode_segments`: returns
+    """Encode MANY value segments in one vectorized pass: returns
     ``(stream, seg_byte_offsets, value_offsets)`` where ``stream`` is ONE
     contiguous uint8 array holding every segment back to back and
     ``seg_byte_offsets`` (int64, ``n_seg + 1``) delimits each segment's
     bytes within it.  This is exactly the (values, offsets) pair an Arrow
     binary array is made of, so the pack kernel can hand the encoded
     stream to Arrow without materializing one Python ``bytes`` per term.
+
+    ``seg_starts``: ascending value-index starts (first must be 0); segment
+    i covers values[seg_starts[i]:seg_starts[i+1]].  ``value_offsets`` is
+    the byte offset of every value in ``stream`` (int64, len(values)+1 with
+    the total last) — the pack kernel derives per-block offsets for
+    random-access block decode from it.
     """
     out, nbytes = _varbyte_encode_raw(values)
     seg_starts = np.asarray(seg_starts, dtype=np.int64)

@@ -3,15 +3,22 @@
 The reference invalidates its whole output when the transform changes
 (md5 hash of the XSLTs, IndexRecordsForV4.java:44-64, 116-125).  We carry the
 same discipline: ``IndexConfig.config_hash()`` covers every parameter that
-affects index bytes; a mismatch between a stored index's hash and the current
-config forces a full rebuild instead of a (now incorrect) incremental merge.
+affects index bytes — the fields below plus the tokenizer identity and the
+on-disk format version; a mismatch between a stored index's hash and the
+current config forces a full rebuild instead of a (now incorrect)
+incremental merge.
 """
 
 from __future__ import annotations
 
 import hashlib
 import json
-from dataclasses import asdict, dataclass, field
+from dataclasses import asdict, dataclass
+
+from pyspark.sql import Column
+from pyspark.sql import functions as F
+
+from archivesspace_virgo_spark import tokenizer
 
 #: bump when tokenizer / codec / layout semantics change incompatibly
 FORMAT_VERSION = 8  # v6: term positions; v7: per-block byte offsets
@@ -33,9 +40,6 @@ class IndexConfig:
     # count stays in the 10^5-10^6 range (one Spark task each).
     block_size: int = 128  # postings per block-max block (Ding & Suel 2011)
 
-    # tokenizer identity (see tokenizer.py; changing the regex is a new index)
-    tokenizer: str = "ascii_alnum_lower_v1"
-
     # indexed fields (SURVEY.md §2.8-T10: the reference's Solr surface scopes
     # queries per field, e.g. ``types:repository`` IndexRecords.java:174).
     # fields[0] is the DEFAULT field: its terms are stored bare; any other
@@ -45,16 +49,16 @@ class IndexConfig:
     # Lucene's per-field similarity stats).
     fields: tuple = ("content",)
 
-    # storage format ("parquet" here; "iceberg" on a cluster with the runtime
-    # jar — the storage layer only relies on atomic directory-swap semantics
-    # that both provide)
-    table_format: str = "parquet"
+    def shard_of(self, doc_id: Column) -> Column:
+        """The doc_shard of a doc_id column: its contiguous id range."""
+        return (doc_id / F.lit(self.docs_per_shard)).cast("int")
 
-    format_version: int = field(default=FORMAT_VERSION)
-
-    def shard_of(self, doc_id: int) -> int:
-        return doc_id // self.docs_per_shard
+    def identity(self) -> dict:
+        """Every value that shapes the index: the fields, the tokenizer
+        and the format version."""
+        return dict(asdict(self), tokenizer=tokenizer.TOKENIZER,
+                    format_version=FORMAT_VERSION)
 
     def config_hash(self) -> str:
-        payload = json.dumps(asdict(self), sort_keys=True)
+        payload = json.dumps(self.identity(), sort_keys=True)
         return hashlib.sha256(payload.encode()).hexdigest()[:16]

@@ -32,12 +32,19 @@ def with_content_sha(df: DataFrame) -> DataFrame:
     return df.withColumn("content_sha256", F.sha2(F.col("content"), 256))
 
 
-def range_bucket_column(df: DataFrame, keys, num_partitions: int,
-                        seed: int = 42, sample_per_bucket: int = 64):
+#: key rows sampled per range bucket
+_SAMPLE_PER_BUCKET = 64
+#: range buckets of a doc-id assignment
+_ID_BUCKETS = 32
+
+
+def range_bucket_column(df: DataFrame, keys, num_partitions: int):
     """Deterministic range-bucket id for the two-phase prefix-sum pattern.
 
-    Samples the key columns ONCE (one bounded collect of ~64 keys per
-    bucket), picks ``num_partitions − 1`` boundary tuples driver-side, and
+    Samples the key columns ONCE — one bounded collect of the
+    ``num_partitions × 64`` rows whose keys have the smallest ``xxhash64``
+    (a TakeOrdered: one job, no count, no seed; every row of a frame that
+    small) — picks ``num_partitions − 1`` boundary tuples driver-side, and
     returns ``(bucket_col, n_buckets)`` where ``bucket_col`` assigns each
     row its bucket via a binary-search tree of struct comparisons —
     O(log P) comparisons per row, evaluated JVM-side.
@@ -58,20 +65,18 @@ def range_bucket_column(df: DataFrame, keys, num_partitions: int,
     broadcast per-bucket offsets reproduce the exact global total order no
     matter how the sample fell.  Skew caveat: a single key value that
     dominates the distribution lands in one bucket, exactly as it would in
-    one range partition.
+    one range partition.  The hash sample is uniform over DISTINCT keys,
+    not over rows: rows sharing a key share its hash, so a frame whose keys
+    repeat many times yields fewer distinct boundaries (ids and results are
+    unaffected, only the bucket balance).
     """
     if num_partitions <= 1:
         return F.lit(0), 1
-    n = df.count()
-    if n == 0:
-        return F.lit(0), 1
-    target = num_partitions * sample_per_bucket
-    fraction = min(1.0, float(target) / float(n))
-    sample_df = df.select(*keys)
-    if fraction < 1.0:
-        sample_df = sample_df.where(F.rand(seed) < fraction)
+    sample = (df.select(*keys)
+              .orderBy(F.xxhash64(*keys), *keys)
+              .limit(num_partitions * _SAMPLE_PER_BUCKET))
     vals = sorted(
-        {tuple(r) for r in sample_df.collect()
+        {tuple(r) for r in sample.collect()
          if all(v is not None for v in r)}
     )
     if not vals:
@@ -114,7 +119,7 @@ def prefix_sum_offsets(spark: SparkSession, counts: dict, n_buckets: int):
     )
 
 
-def assign_doc_ids(df: DataFrame, num_partitions: int = 32, base: int = 0) -> DataFrame:
+def assign_doc_ids(df: DataFrame, base: int = 0) -> DataFrame:
     """Deterministic dense doc_id from the total order on (repo, path, commit).
 
     Two-phase prefix-sum: scales to 10^12 rows because no single task ever
@@ -128,7 +133,7 @@ def assign_doc_ids(df: DataFrame, num_partitions: int = 32, base: int = 0) -> Da
     the bucket id is monotone in the key.  ``base`` offsets the whole
     sequence (incremental appends allocate above the stored max id).
     """
-    pid_col, n_buckets = range_bucket_column(df, KEY_COLUMNS, num_partitions)
+    pid_col, n_buckets = range_bucket_column(df, KEY_COLUMNS, _ID_BUCKETS)
     part = df.withColumn("_pid", pid_col)
     counts = {
         int(r["_pid"]): int(r["count"])

@@ -6,10 +6,9 @@ Dataflow — ONE shuffle total:
       → repartition(n_part, doc_shard), cached          [THE shuffle: raw
         corpus bytes, 5-10x smaller than the exploded token relation]
       → doc_map  (identity + sha256)                    [partition-local write]
-      → tokenized: explode of per-field token structs (JVM codegen
-        lower/split/filter; non-default fields prefixed "field:token";
-        Generate preserves the doc_shard partitioning)
-      → doc_stats (doc_shard, doc_id, field, dl)        [partition-local write]
+      → doc_stats (doc_shard, doc_id, field, dl)        [partition-local write:
+        explode of per-field regexp_count dl structs — no token arrays;
+        Generate preserves the doc_shard partitioning]
       → groupBy(doc_shard).applyInArrow(pack): partition-LOCAL sort, no
         exchange; the kernel tokenizes (Arrow RE2), factorizes
         (dictionary_encode) and encodes (delta-gap + varbyte + block-max in
@@ -50,36 +49,19 @@ from typing import Dict, Iterable, List, Optional
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.window import Window
 
 from archivesspace_virgo_spark import codec
 from archivesspace_virgo_spark.config import IndexConfig
 from archivesspace_virgo_spark.corpus import assign_doc_ids, with_content_sha
 from archivesspace_virgo_spark.index.storage import POSTINGS_SCHEMA, IndexStorage
-from archivesspace_virgo_spark.tokenizer import tokens_column
 
 log = logging.getLogger(__name__)
 
 
-def _arrow_postings_schema():
-    import pyarrow as pa
-
-    return pa.schema([
-        ("doc_shard", pa.int32()),
-        ("term", pa.string()),
-        ("n_docs", pa.int32()),
-        ("cf", pa.int64()),
-        ("doc_blob", pa.binary()),
-        ("tf_blob", pa.binary()),
-        ("dl_blob", pa.binary()),
-        ("pos_blob", pa.binary()),
-        ("block_last_doc", pa.list_(pa.int64())),
-        ("block_max_tf", pa.list_(pa.int64())),
-        ("block_min_dl", pa.list_(pa.int64())),
-        ("block_doc_off", pa.list_(pa.int64())),
-        ("block_tf_off", pa.list_(pa.int64())),
-        ("block_dl_off", pa.list_(pa.int64())),
-    ])
+#: the kernel's Arrow output schema, derived from the table's Spark schema
+_ARROW_POSTINGS_SCHEMA = to_arrow_schema(POSTINGS_SCHEMA)
 
 
 def _pa_binary_from_stream(stream: np.ndarray, offsets: np.ndarray):
@@ -229,7 +211,7 @@ def _pack_occurrences_table(
             "block_tf_off": _pa_list_int64(b_tf_off, nb_off),
             "block_dl_off": _pa_list_int64(b_dl_off, nb_off),
         },
-        schema=_arrow_postings_schema(),
+        schema=_ARROW_POSTINGS_SCHEMA,
     )
 
 
@@ -260,7 +242,7 @@ def _make_packer_arrow(block_size: int, fields: tuple = ("content",)):
         import pyarrow as pa
         import pyarrow.compute as pc
 
-        empty = _arrow_postings_schema().empty_table()
+        empty = _ARROW_POSTINGS_SCHEMA.empty_table()
         if tbl.num_rows == 0:
             return empty
         shard = int(tbl.column("doc_shard")[0].as_py())
@@ -316,52 +298,36 @@ def _make_packer_arrow(block_size: int, fields: tuple = ("content",)):
     return pack
 
 
-def tokenized(corpus: DataFrame, config: IndexConfig) -> DataFrame:
-    """(doc_shard, doc_id, field, toks) — the analyzed relation (JVM-side).
-
-    One row per (doc, indexed field), produced by explode of a per-field
-    struct array rather than a union: Generate preserves the child's output
-    partitioning on ``doc_shard``, so a downstream groupBy(doc_shard) needs
-    only a partition-local sort — no shuffle (a union would erase the
-    partitioning info and force one).  Non-default-field tokens are prefixed
-    "field:token" here, inside codegen.  Missing columns raise early.
-    """
-    missing = [f for f in config.fields if f not in corpus.columns]
-    if missing:
-        raise ValueError(f"corpus lacks indexed field column(s) {missing}")
-    default = config.fields[0]
-
-    def toks_of(f: str):
-        toks = tokens_column(f)
-        if f == default:
-            return toks
-        return F.transform(toks, lambda t: F.concat(F.lit(f + ":"), t))
-
-    if "doc_shard" in corpus.columns:
-        # keep the existing attribute (an alias would mint a new attribute id
-        # and break output-partitioning propagation past the projection)
-        shard_col = "doc_shard"
-    else:
-        corpus = corpus.withColumn(
-            "doc_shard",
-            (F.col("doc_id") / F.lit(config.docs_per_shard)).cast("int"),
-        )
-        shard_col = "doc_shard"
-    per_field = F.array(
+def _doc_stats(layout: DataFrame, fields: tuple) -> DataFrame:
+    """(doc_shard, doc_id, field, dl): one row per (doc, indexed field).
+    dl via regexp_count: counts token runs WITHOUT materializing a token
+    array (a JVM split would allocate one UTF8String per token — GC-bound,
+    stops scaling past ~8 threads).  Equivalence with
+    len(tokenize_text(x)) is pinned by a tokenizer test.  dl=0 docs appear
+    here (not in postings) so N/avgdl match the oracle.  An explode of a
+    per-field struct array, not a union: Generate keeps ``layout``'s
+    doc_shard partitioning, so the write adds no exchange."""
+    per_field_dl = F.array(
         *[
-            F.struct(F.lit(f).alias("field"), toks_of(f).alias("toks"))
-            for f in config.fields
+            F.struct(
+                F.lit(f).alias("field"),
+                # coalesce: a NULL field value must count as dl=0 (the pack
+                # kernel's fill_null('') convention) — otherwise the row stays
+                # in n_docs but silently drops out of avg(dl)/sum(dl),
+                # skewing avgdl and breaking doc_stats' non-null dl
+                F.coalesce(
+                    F.regexp_count(F.lower(F.col(f)), F.lit("[a-z0-9]+")),
+                    F.lit(0),
+                ).cast("long").alias("dl"),
+            )
+            for f in fields
         ]
     )
-    return corpus.select(
-        shard_col,
-        "doc_id",
-        F.explode(per_field).alias("_ft"),
+    return layout.select(
+        "doc_shard", "doc_id", F.explode(per_field_dl).alias("_fd")
     ).select(
-        "doc_shard",
-        "doc_id",
-        F.col("_ft.field").alias("field"),
-        F.col("_ft.toks").alias("toks"),
+        "doc_shard", "doc_id",
+        F.col("_fd.field").alias("field"), F.col("_fd.dl").alias("dl"),
     )
 
 
@@ -464,8 +430,7 @@ def build_index(
     if "content_sha256" not in corpus.columns:
         corpus = with_content_sha(corpus)
 
-    shard_col = (F.col("doc_id") / F.lit(config.docs_per_shard)).cast("int")
-    corpus = corpus.withColumn("doc_shard", shard_col)
+    corpus = corpus.withColumn("doc_shard", config.shard_of(F.col("doc_id")))
 
     fingerprint = input_fingerprint or build_id
     # a resumed or shard-scoped build keeps the previous marker's entries
@@ -522,33 +487,7 @@ def build_index(
     meta_cols = [c for c in ["repo", "path", "commit", "lang"] if c in corpus.columns]
     doc_map = layout.select("doc_shard", "doc_id", *meta_cols, "content_sha256")
 
-    # --- per-(doc, field) stats.  dl via regexp_count: counts token runs
-    # WITHOUT materializing a token array (a JVM split would allocate one
-    # UTF8String per token — GC-bound, stops scaling past ~8 threads).
-    # Equivalence with len(tokenize_text(x)) is pinned by a tokenizer test.
-    # dl=0 docs appear here (not in postings) so N/avgdl match the oracle.
-    per_field_dl = F.array(
-        *[
-            F.struct(
-                F.lit(f).alias("field"),
-                # coalesce: a NULL field value must count as dl=0 (the pack
-                # kernel's fillna('') convention) — otherwise the row stays in
-                # n_docs but silently drops out of avg(dl)/sum(dl), skewing
-                # avgdl and breaking doc_stats' non-null dl
-                F.coalesce(
-                    F.regexp_count(F.lower(F.col(f)), F.lit("[a-z0-9]+")),
-                    F.lit(0),
-                ).cast("long").alias("dl"),
-            )
-            for f in config.fields
-        ]
-    )
-    doc_stats = layout.select(
-        "doc_shard", "doc_id", F.explode(per_field_dl).alias("_fd")
-    ).select(
-        "doc_shard", "doc_id",
-        F.col("_fd.field").alias("field"), F.col("_fd.dl").alias("dl"),
-    )
+    doc_stats = _doc_stats(layout, config.fields)
     # --- pack postings per shard (tokenize + tf + encode in the kernel) ---
     packed = layout.select(
         "doc_shard", "doc_id", *config.fields
@@ -574,9 +513,9 @@ def build_index(
     try:
         with ThreadPoolExecutor(max_workers=3) as pool:
             futs = [
-                pool.submit(storage.write, packed, "postings", partition_shards=True),
-                pool.submit(storage.write, doc_map, "doc_map", partition_shards=True),
-                pool.submit(storage.write, doc_stats, "doc_stats", partition_shards=True),
+                pool.submit(storage.write, packed, "postings"),
+                pool.submit(storage.write, doc_map, "doc_map"),
+                pool.submit(storage.write, doc_stats, "doc_stats"),
             ]
             for f in futs:
                 f.result()

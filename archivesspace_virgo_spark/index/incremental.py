@@ -156,11 +156,10 @@ def _stage(spark: SparkSession, index_dir: str, config: IndexConfig,
 
         ch = detect_changes(spark, _resolve_identities(delta), index_dir, _hold=hold)
         changed = hold(ch["modified"].unionByName(ch["added"], allowMissingColumns=True))
-        shard = lambda c: (c / F.lit(config.docs_per_shard)).cast("int")  # noqa: E731
         dirty_ids = changed.select("doc_id")
         if deletions:
             dirty_ids = dirty_ids.union(ch["deleted"])
-        dirty = dirty_ids.select(shard(F.col("doc_id")).alias("s")).distinct()
+        dirty = dirty_ids.select(config.shard_of(F.col("doc_id")).alias("s")).distinct()
         dirty_shards = sorted(r["s"] for r in dirty.collect())
         if not dirty_shards:
             return [], None
@@ -170,7 +169,7 @@ def _stage(spark: SparkSession, index_dir: str, config: IndexConfig,
         # are absent from it, so the inner join drops them)
         survivors_map = hold(
             IndexStorage(index_dir).read(spark, "doc_map")
-            .filter(shard(F.col("doc_id")).isin(dirty_shards))
+            .filter(config.shard_of(F.col("doc_id")).isin(dirty_shards))
             .join(changed.select(*IDENTITY), IDENTITY, "left_anti")
             .select(*IDENTITY, "doc_id")
         )

@@ -1127,7 +1127,7 @@ class QueryEngine:
 
         postings = self._postings_scan(q.scan_terms, _SCORE_COLS)
         dm = dm_full.select(
-            F.expr(f"doc_id div {docs_per_shard}").alias("doc_shard"),
+            self.config.shard_of(F.col("doc_id")).alias("doc_shard"),
             "doc_id", group_field,
         )
         reduced = postings.groupby("doc_shard").cogroup(
@@ -1870,22 +1870,22 @@ class QueryEngine:
         term the document contains: (doc_id, score, snippet_start,
         snippet_end, n_matched) with positions in token offsets.
 
-        Plan shape: the ≤k hit ids are shipped INTO the per-shard kernel as
-        a closure literal (k rows — not a join), the postings scan prunes
-        to the hit docs' shards (partition pruning — non-hit shards are
-        never read), and the kernel emits ≤k window rows; the final
-        broadcast join attaches scores.  Inside a hit shard the kernel
-        decodes the query terms' postings for that shard (the same decode
-        class a phrase query pays per shard); the Python window loop runs
-        over occurrences WITHIN hit docs only."""
-        hits = self.search(terms, k=k, mode=mode)
-        hit_rows = hits.collect()  # bounded: ≤ k rows
+        Plan shape: the ≤k hits (ids and scores) are shipped INTO the
+        per-shard kernel as a closure literal (k rows — not a join), the
+        postings scan prunes to the hit docs' shards (partition pruning —
+        non-hit shards are never read), and the kernel emits ≤k scored
+        window rows that the scan's page orders.  Inside a hit shard the
+        kernel decodes the query terms' postings for that shard (the same
+        decode class a phrase query pays per shard); the Python window loop
+        runs over occurrences WITHIN hit docs only."""
+        schema = ("doc_id long, score double, snippet_start int, "
+                  "snippet_end int, n_matched int")
+        hit_rows = self.search(terms, k=k, mode=mode).collect()  # ≤ k rows
         if not hit_rows:
-            return self._no_hits(
-                "doc_id long, score double, snippet_start int, "
-                "snippet_end int, n_matched int")
+            return self._no_hits(schema)
         q = self._resolve(terms)  # not None: the hits matched a live term
-        hit_ids = sorted(int(r["doc_id"]) for r in hit_rows)
+        score_of = {int(r["doc_id"]): r["score"] for r in hit_rows}
+        hit_ids = sorted(score_of)
         docs_per_shard = self.config.docs_per_shard
         hit_arr = np.asarray(hit_ids, dtype=np.int64)
 
@@ -1927,20 +1927,15 @@ class QueryEngine:
                         if counts[t_lo] == 0:
                             covered -= 1
                         lo += 1
-                out.append((int(d), best[1], best[2], need))
+                out.append((int(d), score_of[int(d)], best[1], best[2],
+                            need))
             return pd.DataFrame(out, columns=[
-                "doc_id", "snippet_start", "snippet_end", "n_matched"])
+                "doc_id", "score", "snippet_start", "snippet_end",
+                "n_matched"])
 
         hit_shards = sorted({d // docs_per_shard for d in hit_ids})
-        windows = self._shard_scan(
-            q.live, _POS_COLS, windower, "doc_id long, snippet_start int, "
-            "snippet_end int, n_matched int", hit_shards)
-        return (
-            windows.join(F.broadcast(hits), "doc_id")
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .select("doc_id", "score", "snippet_start", "snippet_end",
-                    "n_matched")
-        )
+        return self._shard_scan(q.live, _POS_COLS, windower, schema,
+                                hit_shards, page=(k, 0))
 
     # --- total-hits count (Solr numFound: every response the reference
     # iterates carries it, SolrHelper.java:43-66) ---
@@ -2136,7 +2131,3 @@ class QueryEngine:
         if where:
             dm = dm.filter(where)
         return dm.groupBy(field).agg(F.count(F.lit(1)).alias("facet_count"))
-
-    # --- typed range filter (T9: user_mtime:[NOW-24H TO NOW]) ---
-    def range_filter(self, df: DataFrame, column: str, lo, hi) -> DataFrame:
-        return df.filter((F.col(column) >= lo) & (F.col(column) <= hi))

@@ -8,7 +8,8 @@ semantics both provide):
     doc_stats/    (doc_shard=N/) doc_id, field, dl     (per-field lengths)
     postings/     (doc_shard=N/) term, n_docs, cf, doc_blob, tf_blob,
                                  dl_blob, pos_blob,
-                                 block_last_doc, block_max_tf, block_min_dl
+                                 block_last_doc, block_max_tf, block_min_dl,
+                                 block_doc_off, block_tf_off, block_dl_off
                   (non-default-field terms stored prefixed "field:token" —
                    the composite (field, term) key of SURVEY §2.8-T10)
     _meta/commit.json   written LAST: config hash, build metadata,
@@ -88,14 +89,12 @@ class IndexStorage:
         return os.path.join(self.index_dir, "_meta", "commit.json")
 
     # --- tables ---
-    def write(self, df: DataFrame, table: str, partition_shards: bool = False,
-              mode: str = "overwrite") -> None:
-        w = df.write.mode(mode)
-        if partition_shards:
-            # dynamic overwrite: incremental rebuilds replace only the shards
-            # present in `df` (Iceberg: overwrite-by-filter on doc_shard)
-            w = w.option("partitionOverwriteMode", "dynamic").partitionBy("doc_shard")
-        w.parquet(self.path(table))
+    def write(self, df: DataFrame, table: str) -> None:
+        """Write ``df`` partitioned by doc_shard.  Dynamic overwrite:
+        incremental rebuilds replace only the shards present in ``df``
+        (Iceberg: overwrite-by-filter on doc_shard)."""
+        (df.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+         .partitionBy("doc_shard").parquet(self.path(table)))
 
     def read(self, spark: SparkSession, table: str) -> DataFrame:
         """``table`` read with a declared schema: the one Spark would infer,
@@ -142,14 +141,7 @@ class IndexStorage:
         os.makedirs(os.path.dirname(self.commit_path), exist_ok=True)
         payload = {
             "config_hash": config.config_hash(),
-            "config": {
-                "k1": config.k1,
-                "b": config.b,
-                "docs_per_shard": config.docs_per_shard,
-                "block_size": config.block_size,
-                "tokenizer": config.tokenizer,
-                "format_version": config.format_version,
-            },
+            "config": config.identity(),
             "build_id": build_id,
             "committed_at": time.time(),
         }

@@ -342,10 +342,6 @@ def collection_visible(publish: Column, processing_status: Column,
     return publish & (processing_status == "completed") & (n_containers > 0)
 
 
-def collection_visible_sql(publish: str, status: str, n_containers: str) -> str:
-    return f"({publish} AND {status} = 'completed' AND {n_containers} > 0)"
-
-
 # ---------------------------------------------------------------------------
 # P3 — publish visibility filter (ASpaceTopContainer.java:44-46,
 # ASpaceDigitalObject.java:42-44, ASpaceArchivalObject.java:30-32): the
@@ -413,12 +409,6 @@ def string_agg(df: DataFrame, key: str, value: str, sep: str = "\n") -> DataFram
     return df.groupBy(key).agg(
         F.array_join(F.sort_array(F.collect_list(value)), sep).alias("agg_value")
     )
-
-
-def dedup_min_by_key(df: DataFrame, dup_key: str, keep_col: str) -> DataFrame:
-    """A3 — dedup on a key keeping the min surviving id
-    (containers deduped on call_number, ASpaceObject.java:497-509)."""
-    return df.groupBy(dup_key).agg(F.min(keep_col).alias("kept"))
 
 
 def shadowed_anti_join(fact: DataFrame, dim: DataFrame, key: str) -> DataFrame:

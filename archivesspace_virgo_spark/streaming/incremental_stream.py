@@ -22,6 +22,36 @@ from pyspark.sql import functions as F
 from archivesspace_virgo_spark.config import IndexConfig
 
 
+def _sync_each_batch(spark: SparkSession, stream: DataFrame, table_of,
+                     index_dir: str, checkpoint_dir: str,
+                     config: Optional[IndexConfig]):
+    """Start ``stream`` (AvailableNow → drain & stop) with each micro-batch
+    running a snapshot-diff sync of ``table_of()`` into the index.  The
+    micro-batch is only the TRIGGER: the merge is driven by the snapshot
+    log, so each sync scans ONLY the files appended since the last indexed
+    snapshot — never the full corpus.  Exactly-once: the index commit
+    marker records ``corpus_snapshot_id``; a replayed trigger batch becomes
+    a noop."""
+    from archivesspace_virgo_spark.index.incremental import (
+        incremental_update_from_table,
+    )
+
+    cfg = config or IndexConfig()
+
+    def merge_batch(batch_df: DataFrame, epoch_id: int) -> None:
+        incremental_update_from_table(
+            spark, table_of(), index_dir, cfg,
+            build_id=f"stream-epoch-{epoch_id}",
+        )
+
+    return (
+        stream.writeStream.foreachBatch(merge_batch)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
 def stream_corpus_into_index(
     spark: SparkSession,
     corpus_dir: str,
@@ -34,41 +64,23 @@ def stream_corpus_into_index(
 
     The plain-directory on-ramp: each micro-batch reconciles the directory
     into a SnapshotTable snapshot log (``wrap_parquet_dir`` — files are
-    REGISTERED, never copied) and merges via the snapshot-diff path, so a
-    sync scans ONLY the files appended since the last indexed snapshot —
-    never the full corpus.  Deleted source files commit an overwrite
-    snapshot, which correctly falls back to the full-diff merge (the
-    Iceberg contract).  The log lives under ``{index_dir}/_corpus_log``.
-    Returns the StreamingQuery (caller awaits termination).
+    REGISTERED, never copied) and merges via the snapshot-diff path.
+    Deleted source files commit an overwrite snapshot, which correctly
+    falls back to the full-diff merge (the Iceberg contract).  The log
+    lives under ``{index_dir}/_corpus_log``.  Returns the StreamingQuery
+    (caller awaits termination).
     """
     import os
 
-    from archivesspace_virgo_spark.index.incremental import (
-        incremental_update_from_table,
-    )
     from archivesspace_virgo_spark.sources import wrap_parquet_dir
 
-    cfg = config or IndexConfig()
     log_dir = os.path.join(index_dir, "_corpus_log")
     stream = (
         spark.readStream.schema(corpus_schema).format("parquet").load(corpus_dir)
     )
-
-    def merge_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        # the micro-batch is only the TRIGGER; the merge is driven by the
-        # snapshot log so its scan scope is |appended files|, not |corpus|
-        table = wrap_parquet_dir(corpus_dir, log_dir)
-        incremental_update_from_table(
-            spark, table, index_dir, cfg,
-            build_id=f"stream-epoch-{epoch_id}",
-        )
-
-    return (
-        stream.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _sync_each_batch(spark, stream,
+                            lambda: wrap_parquet_dir(corpus_dir, log_dir),
+                            index_dir, checkpoint_dir, config)
 
 
 def stream_table_into_index(
@@ -78,40 +90,16 @@ def stream_table_into_index(
     checkpoint_dir: str,
     config: Optional[IndexConfig] = None,
 ):
-    """Stream a SnapshotTable's commits into the index via snapshot diffs.
-
-    The file stream over the table's data directory is only the TRIGGER;
-    the merge itself is driven by the snapshot log
-    (``incremental_update_from_table``), so each sync scans ONLY the files
-    appended since the last indexed snapshot — never the full corpus (the
-    fix for the round-1 re-read-everything micro-batch).  Exactly-once:
-    the index commit marker records ``corpus_snapshot_id``; a replayed
-    trigger batch becomes a noop.
-    """
-    from archivesspace_virgo_spark.index.incremental import (
-        incremental_update_from_table,
-    )
-
-    cfg = config or IndexConfig()
-    schema = table.read(spark).schema
+    """Stream a SnapshotTable's commits into the index via snapshot diffs:
+    a file stream over the table's data directory triggers each sync.
+    Returns the StreamingQuery."""
     stream = (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(table.read(spark).schema)
         .format("parquet")
         .load(f"{table.data_dir}/*")
     )
-
-    def merge_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        incremental_update_from_table(
-            spark, table, index_dir, cfg,
-            build_id=f"stream-epoch-{epoch_id}",
-        )
-
-    return (
-        stream.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _sync_each_batch(spark, stream, lambda: table, index_dir,
+                            checkpoint_dir, config)
 
 
 def windowed_event_counts(

@@ -5,8 +5,11 @@ analyzed field (``*_text``) — e.g. ASpaceObject.java:278-279 — delegating
 tokenization to Solr.  Here tokenization IS the contract, so there is exactly
 one definition, used by:
 
-- the Spark engine (JVM-side ``F.split`` expression — stays in whole-stage
-  codegen, no Python in the hot path),
+- the index build: the pack kernel tokenizes each shard's Arrow batch with
+  ``tokenize_flat`` (Arrow RE2), and doc lengths are counted JVM-side with
+  ``regexp_count`` over the same token class, without a token array,
+- the DataFrame operators and the DataFrame BM25 twin (``tokens_column``,
+  a JVM ``split`` expression),
 - the numpy oracle (``tokenize_text``),
 - the DuckDB ``oracle_sql`` strings (``string_split_regex`` on the same
   pattern).
@@ -26,6 +29,10 @@ from typing import List
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+#: the tokenizer's identity, part of every index's config hash: changing
+#: the semantics below is a new index
+TOKENIZER = "ascii_alnum_lower_v1"
 
 #: the one token-delimiter pattern. Identical meaning in Python re, Java
 #: (Spark), and RE2 (DuckDB): any run of chars outside [a-z0-9].
@@ -52,11 +59,10 @@ def tokenize_flat(s):
     concatenated in row order and ``lens`` is each row's token count
     (int64).
 
-    Accepts a pandas Series OR a ``pyarrow`` (Chunked)Array.  The Arrow
-    form is the zero-copy hot path: ``applyInArrow`` hands the kernel the
-    raw Arrow buffers Spark shipped, and the content bytes are never
-    materialized as Python/pandas string objects at all (at ~10 KB/doc the
-    pandas detour was a full extra copy of the corpus per batch — pure
+    ``s`` is a ``pyarrow`` (Chunked)Array: ``applyInArrow`` hands the
+    kernel the raw Arrow buffers Spark shipped, and the content bytes are
+    never materialized as Python/pandas string objects at all (at ~10 KB/doc
+    a pandas detour was a full extra copy of the corpus per batch — pure
     memory-bandwidth tax, the binding resource at high parallelism).
 
     Token-for-token identical to ``tokenize_series`` (property-pinned in
@@ -75,14 +81,9 @@ def tokenize_flat(s):
 
     if isinstance(s, pa.ChunkedArray):
         s = s.combine_chunks()
-    if isinstance(s, pa.Array):
-        arr = pc.fill_null(s, "")
-        if not pa.types.is_string(arr.type):
-            arr = pc.cast(arr, pa.string())
-        filled = None  # scalar fallback reads arr[i].as_py()
-    else:
-        filled = s.fillna("").astype(str)
-        arr = pa.Array.from_pandas(filled, type=pa.string())
+    arr = pc.fill_null(s, "")
+    if not pa.types.is_string(arr.type):
+        arr = pc.cast(arr, pa.string())
     ascii_mask = pc.string_is_ascii(arr).to_numpy(zero_copy_only=False)
     all_ascii = bool(ascii_mask.all())
     lower = pc.ascii_lower(arr) if all_ascii else pc.utf8_lower(arr)
@@ -111,8 +112,7 @@ def tokenize_flat(s):
         if starts[i] > starts[prev]:
             pieces.append(flat.slice(int(starts[prev]),
                                      int(starts[i] - starts[prev])))
-        raw = arr[i].as_py() if filled is None else filled.iloc[i]
-        toks = tokenize_text(raw)
+        toks = tokenize_text(arr[i].as_py())
         lens[i] = len(toks)
         if toks:
             pieces.append(pa.array(toks, type=pa.string()))
@@ -127,11 +127,11 @@ def tokenize_flat(s):
 
 
 def tokens_column(col: Column | str) -> Column:
-    """JVM-side tokenizer expression — the engine-side definition.
+    """JVM-side tokenizer expression, for the DataFrame operators and the
+    DataFrame BM25 twin (the index build tokenizes in its pack kernel).
 
     Built-in ``lower``/``split``/``filter`` keep the whole analysis chain in
-    Tungsten codegen (no Python worker round-trip), which is why this is the
-    default over a pandas UDF at 100 TB scale.
+    Tungsten codegen (no Python worker round-trip).
     """
     c = F.col(col) if isinstance(col, str) else col
     toks = F.split(F.lower(c), TOKEN_SPLIT_PATTERN)

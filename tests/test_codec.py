@@ -75,9 +75,10 @@ def test_block_random_access_decode():
         dls = rng.integers(1, 5000, size=n).astype(np.uint64)
         gaps = codec.delta_encode(doc_ids)
         starts = np.array([0], dtype=np.int64)
-        (doc_blob,), doc_voff = codec.varbyte_encode_segments(gaps, starts, True)
-        (tf_blob,), tf_voff = codec.varbyte_encode_segments(tfs, starts, True)
-        (dl_blob,), dl_voff = codec.varbyte_encode_segments(dls, starts, True)
+        doc_blob, _, doc_voff = codec.varbyte_encode_stream(gaps, starts)
+        tf_blob, _, tf_voff = codec.varbyte_encode_stream(tfs, starts)
+        dl_blob, _, dl_voff = codec.varbyte_encode_stream(dls, starts)
+        doc_blob, tf_blob, dl_blob = (s.tobytes() for s in (doc_blob, tf_blob, dl_blob))
         n_blocks = (n + bs - 1) // bs
         bstart = np.arange(n_blocks) * bs
         bend = np.minimum(bstart + bs, n)

@@ -9,6 +9,8 @@ import pytest
 from pyspark.sql import DataFrameWriter
 from pyspark.sql import functions as F
 
+from archivesspace_virgo_spark import config as config_module
+from archivesspace_virgo_spark import tokenizer
 from archivesspace_virgo_spark.config import IndexConfig
 from archivesspace_virgo_spark.corpus import load_documents_as_corpus, with_content_sha
 from archivesspace_virgo_spark.index.build import build_index
@@ -119,6 +121,27 @@ def test_config_change_forces_full_rebuild(spark, tmp_path):
     other = IndexConfig(docs_per_shard=32, block_size=16)
     meta = incremental_update(spark, v1, d, other, input_fingerprint="v2")
     assert meta["mode"] == "full_rebuild"
+
+
+@pytest.mark.parametrize("module, name, bumped", [
+    (config_module, "FORMAT_VERSION", config_module.FORMAT_VERSION + 1),
+    (tokenizer, "TOKENIZER", tokenizer.TOKENIZER + "_next"),
+])
+def test_format_or_tokenizer_bump_forces_full_rebuild(spark, tmp_path, monkeypatch,
+                                                     module, name, bumped):
+    """The format version and the tokenizer name are constants, not config
+    fields, yet part of every index's identity: bumping either changes
+    config_hash(), and a sync over an index committed before the bump
+    rebuilds it in full."""
+    v1 = _input_hint_corpus(spark, n=100)
+    d = str(tmp_path / "idx")
+    build_index(spark, v1, d, CFG, input_fingerprint="v1")
+    assert incremental_update(spark, v1, d, CFG)["mode"] == "noop"
+    before = CFG.config_hash()
+    monkeypatch.setattr(module, name, bumped)
+    assert CFG.config_hash() != before
+    assert incremental_update(spark, v1, d, CFG)["mode"] == "full_rebuild"
+    assert IndexStorage(d).read_commit()["config"][name.lower()] == bumped
 
 
 def test_resume_skips_completed_shards(spark, tmp_path):

@@ -39,10 +39,10 @@ def test_varbyte_segments_match_per_segment_encode(vals, data):
     )
     starts = np.array([0] + cuts, dtype=np.int64)
     ends = np.append(starts[1:], len(vals))
-    blobs = codec.varbyte_encode_segments(v, starts)
-    assert len(blobs) == starts.size
-    for blob, s, e in zip(blobs, starts, ends):
-        assert blob == codec.varbyte_encode(v[s:e])
+    stream, seg_off, _ = codec.varbyte_encode_stream(v, starts)
+    assert seg_off.size == starts.size + 1 and seg_off[-1] == stream.size
+    for a, z, s, e in zip(seg_off[:-1], seg_off[1:], starts, ends):
+        assert stream[a:z].tobytes() == codec.varbyte_encode(v[s:e])
 
 
 def test_position_roundtrip():

@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 
 from archivesspace_virgo_spark.config import IndexConfig
 from archivesspace_virgo_spark.corpus import load_documents_as_corpus, with_content_sha
-from archivesspace_virgo_spark.index.build import _make_packer_arrow, tokenized
+from archivesspace_virgo_spark.index.build import _doc_stats, _make_packer_arrow
 from archivesspace_virgo_spark.index.storage import POSTINGS_SCHEMA
 
 from tests.conftest import SF_SMOKE, spark_executor_engine
@@ -31,21 +31,16 @@ def _exchanges(df) -> int:
 
 def _build_fragments(spark, cfg):
     corpus = with_content_sha(load_documents_as_corpus(spark, SF_SMOKE))
-    corpus = corpus.withColumn(
-        "doc_shard", (F.col("doc_id") / F.lit(cfg.docs_per_shard)).cast("int")
-    )
+    corpus = corpus.withColumn("doc_shard", cfg.shard_of(F.col("doc_id")))
     layout = corpus.repartition(8, "doc_shard")
-    # same grouped-map fragment build_index runs (applyInArrow — the
-    # production path; the exchange count must be pinned on THAT plan)
+    # the same postings and doc_stats fragments build_index writes (the
+    # exchange count must be pinned on THOSE plans)
     packed = layout.select(
         "doc_shard", "doc_id", *cfg.fields
     ).groupBy("doc_shard").applyInArrow(
         _make_packer_arrow(cfg.block_size, cfg.fields), schema=POSTINGS_SCHEMA
     )
-    stats = tokenized(layout, cfg).select(
-        "doc_shard", "doc_id", "field", F.size("toks").alias("dl")
-    )
-    return packed, stats
+    return packed, _doc_stats(layout, cfg.fields)
 
 
 def test_build_pipeline_single_exchange(spark):
@@ -125,6 +120,8 @@ _QUERIES = {
     "search": lambda e: e.search(["table", "join"], k=10),
     "phrase_search": lambda e: e.phrase_search(["table", "join"], k=10),
     "query": lambda e: e.query("table join^2 -spark", k=10),
+    # the window kernel carries the hits' scores and pages its own output
+    "highlight": lambda e: e.highlight(["table", "join"], k=10),
     # multi-term expansion filters the vocabulary as a local relation
     "prefix_search": lambda e: e.prefix_search("tab", k=10),
     "wildcard_search": lambda e: e.wildcard_search("t?bl*", k=10),
@@ -230,9 +227,10 @@ def test_declared_reads_run_no_spark_job(spark, engine, tmp_path, read):
 
 
 #: Spark jobs a snapshot-diff sync of 20 new and 5 modified docs into the
-#: 150-doc index may run, counted like perfbench; 61 when every action
-#: re-ran the classification plan from the diff read
-_SYNC_JOB_BUDGET = 34
+#: 150-doc index may run, counted like perfbench: 29 measured, plus 3; 61
+#: when every action re-ran the classification plan from the diff read, 31
+#: when the id assignment counted its input before sampling it
+_SYNC_JOB_BUDGET = 32
 
 
 def test_snapshot_diff_sync_job_budget(spark, tmp_path):

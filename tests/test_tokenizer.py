@@ -105,13 +105,12 @@ def test_regexp_count_dl_equivalence(spark):
 # --- tokenize_flat (the Arrow-vectorized pack-kernel batch form) ---
 
 def _flat_as_lists(s: pd.Series):
-    import numpy as np
+    import pyarrow as pa
 
     from archivesspace_virgo_spark.tokenizer import tokenize_flat
 
-    flat, lens = tokenize_flat(s)
-    toks = (flat.to_numpy(zero_copy_only=False)
-            if not isinstance(flat, np.ndarray) else flat)
+    flat, lens = tokenize_flat(pa.array(s.tolist(), type=pa.string()))
+    toks = flat.to_numpy(zero_copy_only=False)
     out, off = [], 0
     for n in lens:
         out.append(list(toks[off:off + int(n)]))
