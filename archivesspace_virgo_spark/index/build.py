@@ -44,7 +44,7 @@ import logging
 import os
 import time
 import uuid
-from typing import Dict, Iterable, List, Optional
+from typing import Dict, Iterable, List, Optional, Tuple
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
@@ -399,6 +399,7 @@ def build_index(
     only_shards: Optional[Iterable[int]] = None,
     validate: bool = False,
     _marker: Optional[dict] = None,
+    _sizes: Optional[List[Tuple[int, int, int]]] = None,
 ) -> dict:
     """Full (or shard-scoped) index build.
 
@@ -411,7 +412,11 @@ def build_index(
     has, on a full build, every old shard the new corpus does not reach.
     ``_marker`` holds extra commit-marker entries, written in the build's
     one marker write (internal: a snapshot sync pins its
-    ``corpus_snapshot_id`` there).  Returns build metadata dict.
+    ``corpus_snapshot_id`` there).  ``_sizes`` is the built rows'
+    ``(doc_shard, count, max doc_id)`` per shard when the caller already
+    holds it (internal: a sync that decides its change set on the driver),
+    so the sizing pass does not re-run the corpus plan.  Returns build
+    metadata dict.
     """
     config = config or IndexConfig()
     build_id = build_id or uuid.uuid4().hex[:12]
@@ -450,7 +455,7 @@ def build_index(
     next_doc_id = storage.read_commit()["next_doc_id"] if carry else 0
 
     # one pass over the source to size the job (column-pruned scan)
-    sizes = corpus.groupBy("doc_shard").agg(
+    sizes = _sizes if _sizes is not None else corpus.groupBy("doc_shard").agg(
         F.count(F.lit(1)), F.max("doc_id")).collect()
     built_shards = sorted(s for s, _n, _hi in sizes)
     n_docs_built = sum(n for _s, n, _hi in sizes)

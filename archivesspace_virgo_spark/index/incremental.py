@@ -3,32 +3,44 @@
 The reference's incremental path (IndexRecords.java:64-75, 136-170) detects
 changed records in a time window, expands the dirty set through dependency
 joins, and reindexes exactly that set.  Every sync here goes through ONE
-merge step, ``_merge(delta, source, deletions)``, which does each once:
+merge step, ``_merge(delta, source, deletions)``:
 
 1. resolve same-identity ``(repo, path)`` rows to the newest commit and
    attach ``sha256(content)``, the change detector (the reference's md5-hash
    discipline, IndexRecordsForV4.java:157);
-2. classify (``detect_changes``) with a delta-sized left join against an
-   id-only ``doc_map`` projection; added rows get ids from the marker's
-   ``next_doc_id`` up;
-3. collect the dirty shards once — a changed/added/deleted doc dirties its
-   whole doc_shard, the index's unit of rebuild.  Steps 1-4 are one lazy
-   plan that each Spark action would re-run from the source (the id
-   assignment alone takes three actions), so three frames are persisted,
-   each evaluated once: the changed rows (new identity or new content, from
-   step 2's join), the changed set with its ids, and the survivors' ids of
-   step 4.  They hold changed rows and ids, none of the delta's unchanged
-   rows, and live only until the rebuild rows are staged: ``_stage``
-   unpersists exactly them when it returns or raises;
-4. take the dirty shards' surviving docs' ids from ``doc_map`` and their
-   current rows from the caller's source, and stage the rebuild rows under
-   ``_staging``.  The staging write stays: persisted blocks are no
-   snapshot (the build's doc_map write drops the cached blocks of every
-   plan over doc_map, and a lost block is recomputed from the live files),
-   so the rows the build reads must be on disk before it overwrites them;
-5. call ``build_index(only_shards=dirty)`` on the staged rows, which
-   replaces exactly those shards (dropping any that deletions emptied) and
-   commits a marker whose manifest replaces only their entries.
+2. classify the delta with a delta-sized left join against an id-only
+   ``doc_map`` projection: its changed rows have a new identity (added) or
+   new content (modified); with deletions, the stored ids whose identity
+   the delta lacks are deleted.  Modified docs keep their ids; added docs
+   get ids from the marker's ``next_doc_id`` up, by rank in
+   ``(repo, path, commit)`` order;
+3. a changed, added or deleted doc dirties its whole doc_shard, the
+   index's unit of rebuild;
+4. the rebuild rows are the changed rows plus the dirty shards' surviving
+   docs: their ids from ``doc_map`` (a read pruned to the dirty
+   ``doc_shard`` partitions), their current rows from the caller's source;
+5. ``build_index(only_shards=dirty)`` over them replaces exactly those
+   shards (dropping any that deletions emptied) and commits a marker whose
+   manifest replaces only their entries.
+
+Steps 2-4 run one of two ways, chosen by the sizes the sync observes:
+
+- **driver** (a small change set, the steady state): two bounded collects
+  decide everything.  The changed keys (and the deleted ids) come back
+  under ``_MAX_PRUNE_KEYS``; the driver numbers the added docs, exactly as
+  ``assign_doc_ids`` does, and derives the dirty shards.  If the marker's
+  ``n_docs`` over those shards fits the same cap, it collects the
+  survivors' ids.  The rebuild rows are the delta and the source joined
+  to Arrow local relations of ids: they read no index table, so the build
+  reads them as they are, sized by the per-shard counts the driver holds.
+- **disk** (past the cap): ``_stage`` classifies distributed, with
+  ``detect_changes``' two-phase id assignment.  It persists three frames,
+  each evaluated once (the changed rows, the changed set with its ids, the
+  survivors' ids), and stages the rebuild rows under ``_staging``.  Their
+  plan reads doc_map, which the build overwrites, and persisted blocks are
+  no snapshot (a lost block is recomputed from the live files), so the
+  rows must be on disk before the build starts.  ``_stage`` unpersists
+  exactly its frames when it returns or raises.
 
 Every read on the way declares its schema, as Spark would infer it, so
 none runs a footer-reading inference job: the snapshot table's from its
@@ -42,7 +54,8 @@ over an append-only snapshot range passes ``table.diff`` — ONLY the files
 appended since the last indexed snapshot — with a manifest-pruned read as
 source and no deletions, so a sync costs |delta| + |dirty shards|, not the
 corpus; an overwrite in range (which breaks append-only incrementality, the
-Iceberg contract) passes the whole snapshot, with deletions.
+Iceberg contract) passes the whole snapshot, with deletions.  A source
+never reads the index's own tables.
 
 Identity rules: unchanged docs keep their doc_id (rank stability); new docs
 get ids from ``next_doc_id`` up (they land in tail shards); deleted ids are
@@ -52,26 +65,33 @@ never reused (shards may go sparse — scoring tolerates holes).
 from __future__ import annotations
 
 import contextlib
+import json
+import logging
 import os
 import shutil
-from typing import Callable, List, Optional, Tuple
+from typing import Callable, List, NamedTuple, Optional, Tuple
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from archivesspace_virgo_spark.config import IndexConfig
-from archivesspace_virgo_spark.corpus import assign_doc_ids, with_content_sha
+from archivesspace_virgo_spark.corpus import KEY_COLUMNS, assign_doc_ids, with_content_sha
 from archivesspace_virgo_spark.index.build import build_index
 from archivesspace_virgo_spark.index.storage import IndexStorage
 
+log = logging.getLogger(__name__)
+
 IDENTITY = ["repo", "path"]
 
-# Cap on the distinct-repo list collected for manifest file-pruning in the
-# survivors fetch.  Below it, the driver hand-off is tiny and pruning skips
-# files; above it, the snapshot is read whole and the (broadcast) identity
-# join narrows it distributed — never an unbounded driver list.
+# Cap on every driver hand-off of a sync: the changed keys, deleted ids and
+# survivors' ids a small sync decides on the driver, and the distinct
+# survivor repos collected for manifest file-pruning.  Above it the work is
+# distributed instead — never an unbounded driver list.
 _MAX_PRUNE_KEYS = 10_000
+
+#: the survivors' distinct repos, or None past ``_MAX_PRUNE_KEYS``
+Repos = Callable[[], Optional[List[str]]]
 
 
 def _resolve_identities(df: DataFrame) -> DataFrame:
@@ -98,6 +118,27 @@ def _resolve_identities(df: DataFrame) -> DataFrame:
     return df if "content_sha256" in df.columns else with_content_sha(df)
 
 
+def _classify(spark: SparkSession, new: DataFrame,
+              index_dir: str) -> Tuple[DataFrame, DataFrame]:
+    """``new``'s changed rows (new identity or new content) with the stored
+    ``_old_id`` (null: added) and ``_old_sha``, and the stored doc_ids whose
+    identity ``new`` lacks.  Both lazy."""
+    old = IndexStorage(index_dir).read(spark, "doc_map").select(
+        *IDENTITY, F.col("doc_id").alias("_old_id"),
+        F.col("content_sha256").alias("_old_sha"),
+    )
+    new = new if "content_sha256" in new.columns else with_content_sha(new)
+    # |new| rows vs an id-only doc_map projection: the join is bounded by
+    # the delta, never the corpus bytes (AQE broadcasts the smaller side)
+    diff = new.join(old, IDENTITY, "left").filter(
+        F.col("_old_id").isNull() | (F.col("content_sha256") != F.col("_old_sha"))
+    )
+    deleted = old.join(new.select(*IDENTITY), IDENTITY, "left_anti").select(
+        F.col("_old_id").alias("doc_id")
+    )
+    return diff, deleted
+
+
 def detect_changes(spark: SparkSession, new_corpus: DataFrame, index_dir: str,
                    _hold: Callable[[DataFrame], DataFrame] = lambda df: df) -> dict:
     """Classify new_corpus rows (one per identity) vs the stored doc_map.
@@ -109,21 +150,10 @@ def detect_changes(spark: SparkSession, new_corpus: DataFrame, index_dir: str,
     both read the changed rows (new identity or new content), which pass
     through ``_hold`` once (internal: the merge persists them there).
     """
-    old = IndexStorage(index_dir).read(spark, "doc_map").select(
-        *IDENTITY, F.col("doc_id").alias("_old_id"),
-        F.col("content_sha256").alias("_old_sha"),
-    )
-    new = new_corpus if "content_sha256" in new_corpus.columns else with_content_sha(new_corpus)
-    # |new| rows vs an id-only doc_map projection: the join is bounded by
-    # the delta, never the corpus bytes (AQE broadcasts the smaller side)
-    diff = _hold(new.join(old, IDENTITY, "left").filter(
-        F.col("_old_id").isNull() | (F.col("content_sha256") != F.col("_old_sha"))
-    ))
+    diff, deleted = _classify(spark, new_corpus, index_dir)
+    diff = _hold(diff)
     modified = diff.filter(F.col("_old_id").isNotNull()).withColumn(
         "doc_id", F.col("_old_id"))
-    deleted = old.join(new.select(*IDENTITY), IDENTITY, "left_anti").select(
-        F.col("_old_id").alias("doc_id")
-    )
 
     base = IndexStorage(index_dir).read_commit()["next_doc_id"]
     # two-phase prefix-sum id assignment with a base offset: a first
@@ -139,42 +169,147 @@ def detect_changes(spark: SparkSession, new_corpus: DataFrame, index_dir: str,
     }
 
 
+class _Rebuild(NamedTuple):
+    """A merge's decision: the path that made it (``driver`` or ``disk``),
+    the dirty shards, the rows that rebuild them (None when none is dirty),
+    their per-shard ``(doc_shard, count, max doc_id)`` when the driver
+    holds them, and the changed / added / deleted counts."""
+    staging: str
+    dirty: List[int]
+    rows: Optional[DataFrame]
+    sizes: Optional[List[Tuple[int, int, int]]]
+    counts: dict
+
+
+def _nulls_first(row) -> tuple:
+    """Sort key of a key row in Spark's ascending order, NULLs first."""
+    return tuple((v is not None, "" if v is None else v)
+                 for v in (row[c] for c in KEY_COLUMNS))
+
+
+def _join_ids(spark: SparkSession, rows: DataFrame,
+              ids: List[Tuple[Optional[str], Optional[str], int]]) -> DataFrame:
+    """``rows`` (one per identity) with the doc_ids of the ``(repo, path,
+    doc_id)`` triples ``ids``, an Arrow local relation: the rows whose
+    identity is listed, NULL keys matching NULL (a changed row's identity
+    can hold one)."""
+    local = spark.createDataFrame(pa.table({
+        "_repo": pa.array([r for r, _p, _i in ids], pa.string()),
+        "_path": pa.array([p for _r, p, _i in ids], pa.string()),
+        "doc_id": pa.array([i for _r, _p, i in ids], pa.int64()),
+    }))
+    on = F.col("repo").eqNullSafe(F.col("_repo")) & F.col("path").eqNullSafe(F.col("_path"))
+    return rows.drop("doc_id").join(local, on).drop("_repo", "_path")
+
+
+def _decide_on_driver(spark: SparkSession, index_dir: str, config: IndexConfig,
+                      delta: DataFrame, source: Callable[[Repos], Optional[DataFrame]],
+                      deletions: bool) -> Optional[_Rebuild]:
+    """Steps 2-4 of the merge in two bounded collects; None when the changed
+    keys, the deleted ids or the dirty shards' docs exceed
+    ``_MAX_PRUNE_KEYS``, and nothing is decided."""
+    cap = _MAX_PRUNE_KEYS
+    storage = IndexStorage(index_dir)
+    diff, deleted = _classify(spark, delta, index_dir)
+    keys = diff.select(*KEY_COLUMNS, "_old_id").limit(cap + 1).collect()
+    if len(keys) > cap:
+        return None
+    gone = deleted.limit(cap + 1).collect() if deletions else []
+    if len(gone) > cap:
+        return None
+    # an added doc's id is next_doc_id plus its rank in (repo, path, commit)
+    # order, NULLs first: the ids assign_doc_ids computes
+    added = sorted((k for k in keys if k["_old_id"] is None), key=_nulls_first)
+    base = storage.read_commit()["next_doc_id"]
+    ids = [(k["repo"], k["path"], k["_old_id"]) for k in keys
+           if k["_old_id"] is not None]
+    ids += [(k["repo"], k["path"], base + i) for i, k in enumerate(added)]
+    gone = {r["doc_id"] for r in gone}
+    counts = {"changed": len(ids), "added": len(added), "deleted": len(gone)}
+    per = config.docs_per_shard
+    dirty = sorted({i // per for _r, _p, i in ids} | {i // per for i in gone})
+    if not dirty:
+        return _Rebuild("driver", [], None, None, counts)
+    entries = storage.shards()
+    if sum(entries[s]["n_docs"] for s in dirty if s in entries) > cap:
+        return None
+
+    # the dirty shards' docs neither changed nor deleted; a NULL identity
+    # joins no source row, so it cannot survive
+    changed = {(r, p) for r, p, _i in ids}
+    survivors = [
+        (r["repo"], r["path"], r["doc_id"]) for r in
+        storage.read(spark, "doc_map").filter(F.col("doc_shard").isin(dirty))
+        .select(*IDENTITY, "doc_id").collect()
+        if r["repo"] is not None and r["path"] is not None
+        and (r["repo"], r["path"]) not in changed and r["doc_id"] not in gone
+    ]
+    rows = _join_ids(spark, delta, ids)
+    current = source(lambda: sorted({r for r, _p, _i in survivors})) if survivors else None
+    if current is None:
+        survivors = []
+    else:
+        rows = _join_ids(spark, _resolve_identities(current), survivors).unionByName(
+            rows, allowMissingColumns=True)
+    sizes: dict = {}
+    for _r, _p, i in ids + survivors:
+        n, hi = sizes.get(i // per, (0, i))
+        sizes[i // per] = (n + 1, max(hi, i))
+    return _Rebuild("driver", dirty, rows,
+                    [(s, n, hi) for s, (n, hi) in sorted(sizes.items())], counts)
+
+
 def _stage(spark: SparkSession, index_dir: str, config: IndexConfig,
-           delta: DataFrame, source: Callable[[DataFrame], Optional[DataFrame]],
-           deletions: bool, staging: str) -> Tuple[List[int], Optional[T.StructType]]:
-    """Steps 1-4 of the merge: classify ``delta``, collect the dirty shards
-    and write their rebuild rows to ``staging``.  Returns the dirty shards
-    and the staged rows' schema; ([], None) when nothing changed, and then
-    nothing is written.  The frames it persists (step 3) are unpersisted,
-    exactly they, when it returns or raises: never a session-wide
-    ``clearCache``, which would drop other engines' cached tables."""
+           delta: DataFrame, source: Callable[[Repos], Optional[DataFrame]],
+           deletions: bool, staging: str) -> _Rebuild:
+    """Steps 2-4 of the merge, distributed: classify ``delta``, collect the
+    per-shard counts of its changes and write the dirty shards' rebuild
+    rows to ``staging`` (nothing, when nothing changed).
+    The frames it persists are unpersisted, exactly they, when it returns
+    or raises: never a session-wide ``clearCache``, which would drop other
+    engines' cached tables."""
     with contextlib.ExitStack() as held:
         def hold(df: DataFrame) -> DataFrame:
             df = df.persist()
             held.callback(df.unpersist)
             return df
 
-        ch = detect_changes(spark, _resolve_identities(delta), index_dir, _hold=hold)
+        storage = IndexStorage(index_dir)
+        base = storage.read_commit()["next_doc_id"]
+        ch = detect_changes(spark, delta, index_dir, _hold=hold)
         changed = hold(ch["modified"].unionByName(ch["added"], allowMissingColumns=True))
-        dirty_ids = changed.select("doc_id")
+        ids = changed.select("doc_id", F.lit(False).alias("_gone"))
         if deletions:
-            dirty_ids = dirty_ids.union(ch["deleted"])
-        dirty = dirty_ids.select(config.shard_of(F.col("doc_id")).alias("s")).distinct()
-        dirty_shards = sorted(r["s"] for r in dirty.collect())
+            ids = ids.union(ch["deleted"].select("doc_id", F.lit(True)))
+        # one collect: the dirty shards with their deleted, added (ids from
+        # next_doc_id up) and total counts
+        per_shard = ids.groupBy(config.shard_of(F.col("doc_id")).alias("s")).agg(
+            F.count_if("_gone"), F.count_if(F.col("doc_id") >= base),
+            F.count(F.lit(1))).collect()
+        dirty_shards = sorted(r[0] for r in per_shard)
+        gone = sum(r[1] for r in per_shard)
+        counts = {"changed": sum(r[3] for r in per_shard) - gone,
+                  "added": sum(r[2] for r in per_shard), "deleted": gone}
         if not dirty_shards:
-            return [], None
+            return _Rebuild("disk", [], None, None, counts)
 
         # surviving docs of dirty shards whose content is NOT in the delta:
         # ids from doc_map, rows from the caller's source (deleted identities
         # are absent from it, so the inner join drops them)
         survivors_map = hold(
-            IndexStorage(index_dir).read(spark, "doc_map")
-            .filter(config.shard_of(F.col("doc_id")).isin(dirty_shards))
+            storage.read(spark, "doc_map")
+            .filter(F.col("doc_shard").isin(dirty_shards))
             .join(changed.select(*IDENTITY), IDENTITY, "left_anti")
             .select(*IDENTITY, "doc_id")
         )
+
+        def repos() -> Optional[List[str]]:
+            keys = [r["repo"] for r in survivors_map.select("repo").distinct()
+                    .limit(_MAX_PRUNE_KEYS + 1).collect()]
+            return None if len(keys) > _MAX_PRUNE_KEYS else keys
+
         rebuild = changed
-        rows = source(survivors_map)
+        rows = source(repos)
         if rows is not None:
             # stored ids win over any carried ids
             rows = _resolve_identities(rows).drop("doc_id")
@@ -182,43 +317,54 @@ def _stage(spark: SparkSession, index_dir: str, config: IndexConfig,
                 changed, allowMissingColumns=True
             )
         rebuild.write.mode("overwrite").parquet(staging)
-        return dirty_shards, rebuild.schema
+        return _Rebuild("disk", dirty_shards,
+                        spark.read.schema(rebuild.schema).parquet(staging),
+                        None, counts)
 
 
 def _merge(spark: SparkSession, index_dir: str, config: IndexConfig,
-           delta: DataFrame, source: Callable[[DataFrame], Optional[DataFrame]],
+           delta: DataFrame, source: Callable[[Repos], Optional[DataFrame]],
            deletions: bool, build_id: Optional[str],
            input_fingerprint: Optional[str], marker: Optional[dict] = None) -> dict:
     """The one incremental merge: classify ``delta`` against doc_map and
-    rebuild exactly the dirty shards.  ``source(survivors_map)`` returns the
-    current rows to draw the dirty shards' surviving docs from (or None when
-    none can survive); ``survivors_map`` is their (repo, path, doc_id).
-    ``marker`` holds extra entries for the build's commit marker.  Returns
-    build_index's metadata plus ``dirty_shards`` (empty: nothing to do,
-    nothing written)."""
-    # STAGE the rebuild rows before touching the index: their plan reads
-    # doc_map, which build_index is about to overwrite — you must never
-    # overwrite a table a live plan still scans (Iceberg gets this via
-    # snapshot isolation; plain parquet needs an explicit staging write).
-    # Persisting the plan would not do: the doc_map write drops its blocks.
+    rebuild exactly the dirty shards.  ``source(repos)`` returns the current
+    rows to draw the dirty shards' surviving docs from (or None when none
+    can survive); ``repos()`` gives the survivors' distinct repos, or None
+    past ``_MAX_PRUNE_KEYS``.  ``marker`` holds extra entries for the
+    build's commit marker.  Returns build_index's metadata plus
+    ``dirty_shards`` (empty: nothing to do, nothing written), ``staging``
+    (the path that decided: ``driver`` or ``disk``) and the ``changed``,
+    ``added``, ``deleted`` and ``survivors`` doc counts, which it also logs
+    as one JSON line."""
+    # The rebuild rows must not read a table the build overwrites: you must
+    # never overwrite a table a live plan still scans (Iceberg gets this
+    # via snapshot isolation).  The driver path's rows read only the delta,
+    # the source and local relations of ids, so the build reads them as
+    # they are.  The disk path's rows read doc_map, so _stage writes them
+    # under _staging first; persisting their plan would not do, as the
+    # doc_map write drops its blocks.
     staging = os.path.join(index_dir, "_staging")
-    dirty_shards: List[int] = []
+    delta = _resolve_identities(delta)
+    plan: Optional[_Rebuild] = None
     try:
-        dirty_shards, schema = _stage(spark, index_dir, config, delta, source,
-                                      deletions, staging)
-        if not dirty_shards:
-            return {"shards": [], "n_docs": 0, "dirty_shards": []}
-        meta = build_index(
-            spark, spark.read.schema(schema).parquet(staging), index_dir, config,
-            build_id=build_id, input_fingerprint=input_fingerprint,
-            only_shards=dirty_shards, _marker=marker,
-        )
+        plan = (_decide_on_driver(spark, index_dir, config, delta, source, deletions)
+                or _stage(spark, index_dir, config, delta, source, deletions, staging))
+        meta = {"shards": [], "n_docs": 0}
+        if plan.dirty:
+            meta = build_index(
+                spark, plan.rows, index_dir, config, build_id=build_id,
+                input_fingerprint=input_fingerprint, only_shards=plan.dirty,
+                _marker=marker, _sizes=plan.sizes,
+            )
     finally:
         shutil.rmtree(staging, ignore_errors=True)
-        if dirty_shards:
+        if plan is not None and plan.dirty:
             spark.catalog.refreshByPath(index_dir)
-    meta["dirty_shards"] = dirty_shards
-    return meta
+    report = dict(staging=plan.staging, **plan.counts,
+                  survivors=meta["n_docs"] - plan.counts["changed"])
+    log.info(json.dumps({"event": "sync", "build_id": meta.get("build_id"),
+                         "dirty_shards": plan.dirty, **report}))
+    return dict(meta, dirty_shards=plan.dirty, **report)
 
 
 def incremental_update_from_table(
@@ -279,22 +425,19 @@ def incremental_update_from_table(
                       True, build_id, fingerprint, pin)
         return _merged(meta, "incremental", "noop")
 
-    def pruned(survivors_map: DataFrame) -> Optional[DataFrame]:
+    def pruned(repos: Repos) -> Optional[DataFrame]:
         # Manifest file-pruning needs the distinct survivor repos driver-side
         # (that's Iceberg planning — manifests live on the driver), but the
         # hand-off must stay BOUNDED: a delta touching many shards of a
         # many-repo corpus could otherwise collect an unbounded repo list.
-        # limit(cap+1) caps the collect; past the cap, per-repo file pruning
-        # can't skip much anyway, so read the whole snapshot and let the
-        # identity join (survivors_map is the small, bounded side — AQE
-        # broadcasts it) do the narrowing distributed.
-        keys = [r["repo"] for r in survivors_map.select("repo").distinct()
-                .limit(_MAX_PRUNE_KEYS + 1).collect()]
-        if not keys:
-            return None
-        if len(keys) > _MAX_PRUNE_KEYS:
+        # Past the cap, per-repo file pruning can't skip much anyway, so
+        # read the whole snapshot and let the identity join (the survivors
+        # are the small, bounded side — AQE broadcasts them) do the
+        # narrowing distributed.
+        keys = repos()
+        if keys is None:
             return table.read(spark, current)
-        return table.read_pruned(spark, keys, current)
+        return table.read_pruned(spark, keys, current) if keys else None
 
     meta = _merge(spark, index_dir, config, table.diff(spark, last, current),
                   pruned, False, build_id, fingerprint, pin)

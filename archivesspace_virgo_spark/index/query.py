@@ -26,7 +26,8 @@ family passes its phrase frequency as tf, the block bound idf 1) and
 hands it a kernel; ``grouped_search`` alone cogroups the same filtered
 postings with doc_map (its kernel is ``_make_shard_scorer`` plus the
 group values).  It has two executors, chosen per index by the postings'
-on-disk bytes against one cap (``_DRIVER_POSTINGS_MAX_BYTES``):
+uncompressed bytes, summed from their parquet footers, against one cap
+(``_DRIVER_POSTINGS_MAX_BYTES``):
 
 - **driver** (at or under the cap): on the first query the engine reads
   ``postings/``, the only table it reads, once into a driver-resident
@@ -57,6 +58,7 @@ import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.dataset as pads
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
@@ -77,8 +79,8 @@ _BLOCK_COLS = _SCORE_COLS + ("block_last_doc", "block_max_tf", "block_min_dl",
                              "block_doc_off", "block_tf_off", "block_dl_off")
 _POS_COLS = _SCORE_COLS + ("pos_blob",)
 _M = np.int64(1) << np.int64(33)  # doc·_M + position keys; > any doc length
-# an index whose postings take at most this many bytes on disk is served
-# from driver memory (about 4x that as Arrow); a larger one by Spark
+# an index whose postings' row groups take at most this many bytes
+# uncompressed is served from driver memory; a larger one by Spark
 _DRIVER_POSTINGS_MAX_BYTES = 32 << 20
 
 
@@ -694,10 +696,17 @@ def _make_phrase_scorer(stored: List[str], freq, idf_sum: float,
     return scorer
 
 
-def _dir_bytes(path: str) -> int:
-    """Bytes of every file under ``path`` (0 when it does not exist)."""
-    return sum(os.path.getsize(os.path.join(d, f))
-               for d, _dirs, files in os.walk(path) for f in files)
+def _uncompressed_bytes(path: str) -> int:
+    """Uncompressed bytes of the row groups of every parquet file under
+    ``path``, from the footers alone (0 when it does not exist)."""
+    total = 0
+    for d, _dirs, files in os.walk(path):
+        for f in files:
+            if f.endswith(".parquet"):
+                meta = pq.read_metadata(os.path.join(d, f))
+                total += sum(meta.row_group(i).total_byte_size
+                             for i in range(meta.num_row_groups))
+    return total
 
 
 def _rows_of(table: pa.Table, column: str, values) -> pa.Table:
@@ -731,8 +740,8 @@ class QueryEngine:
                  config: Optional[IndexConfig] = None):
         """Nothing is read but the commit marker until the first query,
         so opening runs no Spark job.  That query picks the executor: an
-        index whose postings fit ``_DRIVER_POSTINGS_MAX_BYTES`` on disk
-        loads them into a driver-resident Arrow table and is served with
+        index whose postings fit ``_DRIVER_POSTINGS_MAX_BYTES``
+        uncompressed loads them into a driver-resident Arrow table and is served with
         no Spark job; a larger one pins postings via DataFrame cache
         (MEMORY_AND_DISK, partition-grained, spills) and is served by
         Spark.  A snapshot-bound engine never sees stale data: call
@@ -828,11 +837,11 @@ class QueryEngine:
 
     def _driver_tables(self) -> Optional[pa.Table]:
         """The driver-resident postings Arrow table, read once on first
-        use; None when the postings exceed the cap on disk and Spark
+        use; None when the postings exceed the cap uncompressed and Spark
         serves the index."""
         if self._driver is None:
             path = self.storage.path("postings")
-            self._driver = _dir_bytes(path) <= _DRIVER_POSTINGS_MAX_BYTES and (
+            self._driver = _uncompressed_bytes(path) <= _DRIVER_POSTINGS_MAX_BYTES and (
                 pads.dataset(path, format="parquet", partitioning="hive")
                 .to_table())
         return self._driver or None

@@ -2,10 +2,11 @@
 rows, down to the float bits, whether the kernels run on driver-resident
 Arrow postings or through Spark's ``applyInPandas`` (the same grouped-map
 function applied through Spark and to local pandas, results compared).
-The executor is chosen by the postings' on-disk bytes against the private
-cap; the Spark engines here are opened with the cap forced below any
-index."""
+The executor is chosen by the postings' uncompressed bytes against the
+private cap; the Spark engines here are opened with the cap forced below
+any index."""
 
+import os
 import struct
 
 import pytest
@@ -150,3 +151,30 @@ def test_over_cap_index_never_loads_arrow(spark, engines, monkeypatch):
     assert engine._driver is False
     monkeypatch.undo()
     assert _bits(got) == _bits(driver.search(T3, k=10).collect())
+
+
+def test_cap_bounds_the_postings_uncompressed(spark, tmp_path, monkeypatch):
+    """The cap bounds the postings as the driver decodes them, not as they
+    are stored: an index under the cap on disk but over it uncompressed,
+    as its parquet footers report, is served by Spark.  One shard, so the
+    files' fixed overhead does not outweigh the compression."""
+    import pyarrow.parquet as pq
+
+    cfg = IndexConfig(docs_per_shard=4096, block_size=16)
+    d = str(tmp_path / "idx")
+    build_index(spark, load_documents_as_corpus(spark, SF_SMOKE), d, cfg)
+    driver = QueryEngine(spark, d, cfg)
+    root = driver.storage.path("postings")
+    files = [os.path.join(p, f) for p, _dirs, fs in os.walk(root) for f in fs]
+    on_disk = sum(os.path.getsize(f) for f in files)
+    footers = [pq.read_metadata(f) for f in files if f.endswith(".parquet")]
+    loaded = sum(m.row_group(i).total_byte_size
+                 for m in footers for i in range(m.num_row_groups))
+    assert on_disk < loaded
+    monkeypatch.setattr(query, "_DRIVER_POSTINGS_MAX_BYTES", (on_disk + loaded) // 2)
+    engine = QueryEngine(spark, d, cfg)
+    assert engine._driver_tables() is None
+    monkeypatch.undo()
+    assert driver._driver_tables() is not None
+    assert _bits(engine.search(T3, k=10).collect()) == _bits(
+        driver.search(T3, k=10).collect())

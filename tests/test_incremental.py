@@ -264,7 +264,11 @@ def test_same_identity_versions_resolve_to_newest(spark, tmp_path):
 
 def test_failed_staging_write_leaves_no_staging(spark, tmp_path, monkeypatch):
     """A merge that fails right after writing its staged rebuild rows must
-    still remove them: nothing is left under ``_staging``."""
+    still remove them: nothing is left under ``_staging``.  The
+    driver-hand-off cap is forced to 0, so the merge stages on disk."""
+    from archivesspace_virgo_spark.index import incremental as inc
+
+    monkeypatch.setattr(inc, "_MAX_PRUNE_KEYS", 0)
     v1 = _input_hint_corpus(spark, n=100)
     d = str(tmp_path / "idx")
     build_index(spark, v1, d, CFG, input_fingerprint="v1")
@@ -335,6 +339,31 @@ def test_build_logs_one_json_metrics_line(spark, tmp_path, caplog):
     shards = IndexStorage(d).shards()
     assert sorted((s, e["n_docs"]) for s, e in shards.items()) == [
         (0, 64), (1, 64), (2, 22)]
+
+
+def test_sync_logs_one_json_line_of_what_it_did(spark, tmp_path, caplog):
+    """A merge returns, and logs as one JSON line, the path that decided
+    its change set and the changed, added, deleted and surviving docs."""
+    d = str(tmp_path / "idx")
+    build_index(spark, _input_hint_corpus(spark, n=100), d, CFG)
+    before = IndexStorage(d).shards()
+    docnum = F.regexp_extract("path", "doc/(\\d+)", 1).cast("int")
+    v2 = _input_hint_corpus(spark, n=130).filter(docnum != 3).withColumn(
+        "content", F.when(docnum == 5, F.concat("content", F.lit(" edit")))
+        .otherwise(F.col("content")))
+    logger = "archivesspace_virgo_spark.index.incremental"
+    with caplog.at_level(logging.INFO, logger=logger):
+        meta = incremental_update(spark, v2, d, CFG)
+    lines = [json.loads(r.getMessage()) for r in caplog.records if r.name == logger]
+    assert len(lines) == 1
+    fields = ("staging", "dirty_shards", "changed", "added", "deleted", "survivors")
+    assert {f: lines[0][f] for f in fields} == {f: meta[f] for f in fields}
+    assert lines[0]["build_id"] == meta["build_id"]
+    assert (meta["staging"], meta["changed"], meta["added"], meta["deleted"]) == (
+        "driver", 31, 30, 1)
+    # the dirty shards' stored docs, less the modified and the deleted one
+    stored = sum(e["n_docs"] for s, e in before.items() if s in meta["dirty_shards"])
+    assert meta["survivors"] == stored - 2 == meta["n_docs"] - 31
 
 
 def test_deleted_max_id_is_not_reused(spark, tmp_path):

@@ -227,16 +227,17 @@ def test_declared_reads_run_no_spark_job(spark, engine, tmp_path, read):
 
 
 #: Spark jobs a snapshot-diff sync of 20 new and 5 modified docs into the
-#: 150-doc index may run, counted like perfbench: 29 measured, plus 3; 61
-#: when every action re-ran the classification plan from the diff read, 31
-#: when the id assignment counted its input before sampling it
-_SYNC_JOB_BUDGET = 32
+#: 150-doc index may run, counted like perfbench: 17 measured, plus 3; 61
+#: when every action re-ran the classification plan from the diff read, 29
+#: when every change set was classified and staged on disk
+_SYNC_JOB_BUDGET = 20
 
 
 def test_snapshot_diff_sync_job_budget(spark, tmp_path):
-    """A snapshot-diff sync evaluates its change set once: the id
-    assignment, the dirty-shard collect, the survivor-repo collect and the
-    staging write read persisted frames, and no read infers a schema."""
+    """A snapshot-diff sync of a small change set decides it on the driver:
+    one collect of the changed keys, one of the survivors' ids, and the
+    build, which takes the per-shard sizes from the driver; no read infers
+    a schema."""
     from archivesspace_virgo_spark.index.incremental import (
         incremental_update_from_table,
     )
@@ -251,7 +252,57 @@ def test_snapshot_diff_sync_job_budget(spark, tmp_path):
     meta, jobs = _jobs_of(spark, "snapshot-diff-sync", lambda: (
         incremental_update_from_table(spark, t, idx, CFG)), ungrouped=True)
     assert meta["mode"] == "snapshot_diff" and meta["dirty_shards"] == [0, 2]
+    assert meta["staging"] == "driver"
     assert len(jobs) <= _SYNC_JOB_BUDGET, len(jobs)
+
+
+def _scans_of(spark, call):
+    """(result, the parquet scans of the SQL executions ``call`` ran): each
+    scan's formatted-plan block as a dict, ``{"ReadSchema": ..., ...}``."""
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        runs = store.executionsList()
+        return [runs.apply(i) for i in range(runs.size())]
+
+    seen = max([e.executionId() for e in executions()], default=-1)
+    result = call()
+    scans = []
+    for e in executions():
+        if e.executionId() <= seen:
+            continue
+        for block in e.physicalPlanDescription().split("\n\n"):
+            lines = block.strip().splitlines()
+            if lines and lines[0].startswith("(") and "Scan parquet" in lines[0]:
+                scans.append(dict(ln.split(": ", 1) for ln in lines[1:] if ": " in ln))
+    return result, scans
+
+
+@pytest.mark.parametrize("staging", ["driver", "disk"])
+def test_sync_reads_only_the_dirty_shards_of_doc_map(spark, tmp_path, monkeypatch,
+                                                     staging):
+    """The survivors' ids come from the dirty shards' doc_map partitions
+    alone: that read filters on the ``doc_shard`` partition column, so
+    Spark prunes the other partitions instead of scanning them all."""
+    from archivesspace_virgo_spark.index import incremental as inc
+
+    if staging == "disk":
+        monkeypatch.setattr(inc, "_MAX_PRUNE_KEYS", 0)
+    t, docs = _snapshot_table(spark, str(tmp_path / "tbl"))
+    idx = str(tmp_path / "idx")
+    inc.incremental_update_from_table(spark, t, idx, CFG)
+    t.append(docs(150, 160))
+    meta, scans = _scans_of(spark, lambda: inc.incremental_update_from_table(
+        spark, t, idx, CFG))
+    assert (meta["staging"], meta["dirty_shards"]) == (staging, [2])
+    # only doc_map has both repo and doc_id; the classification join reads
+    # every partition's content_sha256, the survivors' read does not
+    survivors = [s for s in scans if "repo:" in s["ReadSchema"]
+                 and "doc_id:" in s["ReadSchema"]
+                 and "content_sha256" not in s["ReadSchema"]]
+    assert survivors, scans
+    for scan in survivors:
+        assert "doc_shard" in scan.get("PartitionFilters", ""), scan
 
 
 def test_query_layer_has_one_shard_scan():

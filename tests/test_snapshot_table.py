@@ -452,9 +452,14 @@ def test_declared_schemas_equal_inference(spark, tmp_path):
 def test_syncs_release_exactly_the_frames_they_persist(spark, tmp_path, monkeypatch):
     """Each sync path unpersists the frames it persisted, whether it
     rebuilds, rebuilds nothing or fails, and only those: an engine opened
-    before the syncs keeps its cached postings."""
+    before the syncs keeps its cached postings.  The driver-hand-off cap is
+    forced to 0, so every change set is classified and staged on disk, the
+    path that persists frames."""
     from pyspark.sql import DataFrameWriter
 
+    from archivesspace_virgo_spark.index import incremental as inc
+
+    monkeypatch.setattr(inc, "_MAX_PRUNE_KEYS", 0)
     engine_dir = str(tmp_path / "engine_index")
     build_index(spark, _corpus(spark, 0, 100), engine_dir, CFG)
     engine = spark_executor_engine(spark, engine_dir, CFG)
@@ -496,6 +501,44 @@ def test_syncs_release_exactly_the_frames_they_persist(spark, tmp_path, monkeypa
     sync("incremental", lambda: incremental_update(
         spark, _corpus(spark, 10, 190), idx, CFG))
     assert engine._postings.storageLevel.useMemory
+
+
+def test_failed_driver_decided_sync_leaves_the_index_as_it_was(spark, tmp_path, monkeypatch):
+    """A sync decided on the driver that fails in one of the build's table
+    writes persists nothing, keeps the committed marker and leaves no
+    ``_staging`` directory."""
+    from archivesspace_virgo_spark.index import incremental as inc
+
+    t = SnapshotTable.create(str(tmp_path / "tbl"))
+    t.append(_corpus(spark, 0, 150))
+    idx = str(tmp_path / "idx")
+    incremental_update_from_table(spark, t, idx, CFG)
+    t.append(_corpus(spark, 150, 170))
+    jsc = spark.sparkContext._jsc
+    persisted = jsc.getPersistentRDDs().size()
+    st = IndexStorage(idx)
+    marker = st.read_commit()
+    real = IndexStorage.write
+    staged = []
+
+    def failing(self, df, table, *args, **kwargs):
+        if table == "doc_stats":
+            raise RuntimeError("injected doc_stats write failure")
+        real(self, df, table, *args, **kwargs)
+
+    def stage(*args, **kwargs):
+        staged.append(args)
+        raise AssertionError("a small sync must not stage on disk")
+
+    with monkeypatch.context() as mp:
+        mp.setattr(IndexStorage, "write", failing)
+        mp.setattr(inc, "_stage", stage)
+        with pytest.raises(RuntimeError, match="injected"):
+            incremental_update_from_table(spark, t, idx, CFG)
+    assert not staged
+    assert jsc.getPersistentRDDs().size() == persisted
+    assert st.read_commit() == marker
+    assert not os.path.exists(os.path.join(idx, "_staging"))
 
 
 def test_crash_after_the_build_commit_keeps_the_snapshot_pin(spark, tmp_path, monkeypatch):
