@@ -18,6 +18,16 @@ Dataflow — ONE shuffle total:
       → postings parquet partitioned by doc_shard, rows sorted by term so
         parquet rowgroup min/max stats prune term lookups at query time.
 
+A sync whose change set was decided on the driver (a few shards, at most
+``incremental._MAX_PRUNE_KEYS`` docs) is built there instead, with the same
+kernel — at that size each Spark job's fixed cost dwarfs its work:
+
+    rebuild rows                                        [ONE Arrow collect]
+      → per doc_shard: the pack kernel (``_pack_shard``) → postings, and
+        its per-field token counts → doc_stats dl and the marker's stats
+      → ``IndexStorage.replace_shards`` (pyarrow): postings, doc_stats,
+        then doc_map, the files Spark's writer would write.
+
 Scale notes (the 100 TB story):
 - Tokens, tf rows and blobs NEVER cross an exchange; the only shuffled bytes
   are the raw corpus, once.  (An earlier 4-exchange design — tf groupBy +
@@ -47,6 +57,7 @@ import uuid
 from typing import Dict, Iterable, List, Optional, Tuple
 
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
@@ -220,7 +231,9 @@ def _make_packer_arrow(block_size: int, fields: tuple = ("content",)):
     path: one call per doc_shard with rows (doc_shard, doc_id,
     <field columns...>) arriving as a ``pyarrow.Table`` (the buffers Spark
     shipped — no pandas string materialization; at ~10 KB of content per
-    doc that detour re-copied the whole corpus per batch).
+    doc that detour re-copied the whole corpus per batch).  It returns the
+    shard's postings; the kernel itself, ``_pack_shard``, also returns each
+    field's per-doc token counts, which a driver build stores as doc_stats.
 
     Tokenization AND tf aggregation happen here, inside the Python worker:
     - Arrow ships raw content bytes (5-10x smaller than an exploded token
@@ -234,68 +247,74 @@ def _make_packer_arrow(block_size: int, fields: tuple = ("content",)):
     dl is the per-(doc, field) token count; non-default fields are stored
     prefix-composite ("field:token"), so each (term, doc) has exactly one dl.
     """
+    def pack(tbl):
+        return _pack_shard(tbl, block_size, fields)[0]
+
+    return pack
+
+
+def _pack_shard(tbl, block_size: int, fields: tuple):
+    """The pack kernel over one doc_shard's rows: (its postings as a
+    ``pyarrow.Table``, each field's per-row token counts)."""
+    import pyarrow.compute as pc
+
     from archivesspace_virgo_spark.tokenizer import tokenize_flat
 
     default = fields[0]
-
-    def pack(tbl):
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        empty = _ARROW_POSTINGS_SCHEMA.empty_table()
-        if tbl.num_rows == 0:
-            return empty
-        shard = int(tbl.column("doc_shard")[0].as_py())
-        doc_ids = tbl.column("doc_id").to_numpy(
-            zero_copy_only=False).astype(np.int64, copy=False)
-        doc_parts, dl_parts, term_parts, pos_parts = [], [], [], []
-        for f in fields:
-            flat, lens = tokenize_flat(tbl.column(f))
-            total = int(lens.sum())
-            if total == 0:
-                continue
-            doc_parts.append(np.repeat(doc_ids, lens))
-            dl_parts.append(np.repeat(lens, lens))
-            # token position within the doc's field stream (0-based): a
-            # single arange minus each doc's broadcast start offset
-            starts = np.concatenate([[0], np.cumsum(lens)[:-1]])
-            pos_parts.append(np.arange(total, dtype=np.int64)
-                             - np.repeat(starts, lens))
-            if f != default:
-                # prefix-composite terms, vectorized over the FLAT token
-                # array (one Arrow element-wise join, no per-row loop)
-                flat = pc.binary_join_element_wise(f + ":", flat, "")
-            term_parts.append(flat)
-        if not term_parts:
-            return empty
-        # factorize the occurrence stream Arrow-side: a C++ hash encode
-        # over string views (no per-token Python objects), then sort the
-        # UNIQUES only and remap codes — pd.factorize(sort=True) semantics
-        # (UTF-8 byte order == code-point order, so Arrow's sort agrees
-        # with Python string comparison)
-        enc = pc.dictionary_encode(
-            pa.concat_arrays(term_parts) if len(term_parts) > 1
-            else term_parts[0]
-        )
-        idx = enc.indices.to_numpy(zero_copy_only=False).astype(np.int64)
-        perm_arr = pc.array_sort_indices(enc.dictionary)
-        perm = perm_arr.to_numpy(zero_copy_only=False).astype(np.int64)
-        rank = np.empty(perm.size, dtype=np.int64)
-        rank[perm] = np.arange(perm.size)
-        terms_sorted = pc.take(enc.dictionary, perm_arr)
-        if not pa.types.is_string(terms_sorted.type):
-            terms_sorted = pc.cast(terms_sorted, pa.string())
-        return _pack_occurrences_table(
-            shard,
-            rank[idx],
-            terms_sorted,
-            np.concatenate(doc_parts),
-            np.concatenate(dl_parts),
-            np.concatenate(pos_parts),
-            block_size,
-        )
-
-    return pack
+    empty = _ARROW_POSTINGS_SCHEMA.empty_table()
+    dls: List[np.ndarray] = []
+    if tbl.num_rows == 0:
+        return empty, dls
+    shard = int(tbl.column("doc_shard")[0].as_py())
+    doc_ids = tbl.column("doc_id").to_numpy(
+        zero_copy_only=False).astype(np.int64, copy=False)
+    doc_parts, dl_parts, term_parts, pos_parts = [], [], [], []
+    for f in fields:
+        flat, lens = tokenize_flat(tbl.column(f))
+        dls.append(lens)
+        total = int(lens.sum())
+        if total == 0:
+            continue
+        doc_parts.append(np.repeat(doc_ids, lens))
+        dl_parts.append(np.repeat(lens, lens))
+        # token position within the doc's field stream (0-based): a
+        # single arange minus each doc's broadcast start offset
+        starts = np.concatenate([[0], np.cumsum(lens)[:-1]])
+        pos_parts.append(np.arange(total, dtype=np.int64)
+                         - np.repeat(starts, lens))
+        if f != default:
+            # prefix-composite terms, vectorized over the FLAT token
+            # array (one Arrow element-wise join, no per-row loop)
+            flat = pc.binary_join_element_wise(f + ":", flat, "")
+        term_parts.append(flat)
+    if not term_parts:
+        return empty, dls
+    # factorize the occurrence stream Arrow-side: a C++ hash encode
+    # over string views (no per-token Python objects), then sort the
+    # UNIQUES only and remap codes — pd.factorize(sort=True) semantics
+    # (UTF-8 byte order == code-point order, so Arrow's sort agrees
+    # with Python string comparison)
+    enc = pc.dictionary_encode(
+        pa.concat_arrays(term_parts) if len(term_parts) > 1
+        else term_parts[0]
+    )
+    idx = enc.indices.to_numpy(zero_copy_only=False).astype(np.int64)
+    perm_arr = pc.array_sort_indices(enc.dictionary)
+    perm = perm_arr.to_numpy(zero_copy_only=False).astype(np.int64)
+    rank = np.empty(perm.size, dtype=np.int64)
+    rank[perm] = np.arange(perm.size)
+    terms_sorted = pc.take(enc.dictionary, perm_arr)
+    if not pa.types.is_string(terms_sorted.type):
+        terms_sorted = pc.cast(terms_sorted, pa.string())
+    return _pack_occurrences_table(
+        shard,
+        rank[idx],
+        terms_sorted,
+        np.concatenate(doc_parts),
+        np.concatenate(dl_parts),
+        np.concatenate(pos_parts),
+        block_size,
+    ), dls
 
 
 def _doc_stats(layout: DataFrame, fields: tuple) -> DataFrame:
@@ -388,6 +407,95 @@ def quarantine_invalid(
     return flagged.filter(F.col("_reason").isNull()).drop("_reason")
 
 
+def _build_with_spark(spark: SparkSession, storage: IndexStorage, config: IndexConfig,
+                      corpus: DataFrame, doc_map_cols: List[str],
+                      built_shards: List[int]) -> Dict[int, dict]:
+    """Write the built shards' three tables through Spark (the dataflow in
+    the module docstring); returns their marker entries."""
+    # --- THE one shuffle of the build: repartition raw corpus bytes by
+    # doc_shard.  Everything downstream (doc_map, doc_stats, postings) is
+    # partition-local: tokens, tf rows and blobs never cross an exchange.
+    # Explicit partition count (AQE never coalesces a user-specified
+    # repartition) so the partitioned writes keep enough writers — one task
+    # per shard up to ~4 tasks/core, multiple shards per task beyond that.
+    n_part = max(1, min(len(built_shards), spark.sparkContext.defaultParallelism * 4))
+    layout = corpus.repartition(n_part, "doc_shard").cache()
+
+    doc_map = layout.select(*doc_map_cols)
+    doc_stats = _doc_stats(layout, config.fields)
+    # --- pack postings per shard (tokenize + tf + encode in the kernel) ---
+    packed = layout.select(
+        "doc_shard", "doc_id", *config.fields
+    ).groupBy("doc_shard").applyInArrow(
+        _make_packer_arrow(config.block_size, config.fields),
+        schema=POSTINGS_SCHEMA,
+    )
+
+    # --- submit the three independent writes as CONCURRENT Spark jobs.
+    # They share the cached `layout` (the block manager's per-partition
+    # locks make concurrent materialization compute-once) and write to
+    # disjoint tables, so ordering between them is immaterial.  The win is
+    # wall-clock, not CPU: each write's driver-side commit (output listing
+    # + rename, or an object-store multipart commit on a real cluster) is
+    # serial latency that otherwise adds up across tables — overlapping it
+    # under the long-pole postings kernel removes a fixed ~seconds residue
+    # per build, which is precisely the non-scaling term in the N→4N
+    # efficiency measurements (BASELINE.md's per-phase decomposition).
+    # Concurrent job submission from driver threads is the standard Spark
+    # pattern for this (scheduler pools); exceptions propagate via result().
+    from concurrent.futures import ThreadPoolExecutor
+
+    try:
+        with ThreadPoolExecutor(max_workers=3) as pool:
+            futs = [
+                pool.submit(storage.write, packed, "postings"),
+                pool.submit(storage.write, doc_map, "doc_map"),
+                pool.submit(storage.write, doc_stats, "doc_stats"),
+            ]
+            for f in futs:
+                f.result()
+    finally:
+        # the writes are layout's only readers, failed or not
+        layout.unpersist()
+    return refresh_aggregates(spark, storage, built_shards)
+
+
+def _build_on_driver(storage: IndexStorage, config: IndexConfig, corpus: DataFrame,
+                     doc_map_cols: List[str]) -> Dict[int, dict]:
+    """Build the shards of a sync decided on the driver there: one Arrow
+    collect of their rows (bounded by the decision's cap), the same pack
+    kernel per shard, doc_stats' lengths from the kernel's own token
+    counts and the marker entries from the same arrays, so no Spark job
+    writes or aggregates.  All three tables are built before any is
+    written; doc_map goes last, so a failed write leaves the rows a sync
+    classifies against as they were."""
+    fields = config.fields
+    rows = corpus.select(*dict.fromkeys(doc_map_cols + list(fields))).toArrow()
+    rows = rows.sort_by([("doc_shard", "ascending"), ("doc_id", "ascending")])
+    shard_of = rows.column("doc_shard").to_numpy()
+    shards, starts = np.unique(shard_of, return_index=True)
+    tables: Dict[str, Dict[int, pa.Table]] = {"postings": {}, "doc_stats": {}, "doc_map": {}}
+    built: Dict[int, dict] = {}
+    for s, lo, hi in zip(shards.tolist(), starts, np.append(starts[1:], len(shard_of))):
+        part = rows.slice(lo, hi - lo)
+        tables["postings"][s], dls = _pack_shard(part, config.block_size, fields)
+        # one row per (doc, field), fields in order: _doc_stats' explode
+        tables["doc_stats"][s] = pa.table({
+            "doc_id": part.column("doc_id").take(np.repeat(np.arange(len(part)), len(fields))),
+            "field": pa.array(list(fields) * len(part), pa.string()),
+            "dl": np.stack(dls, axis=1).ravel(),
+        })
+        tables["doc_map"][s] = part
+        built[s] = {"n_docs": len(part),
+                    "tokens": {f: int(n.sum()) for f, n in zip(fields, dls)}}
+    # the schemas Spark would write: lazy frames, analysed only
+    for table, schema in (("postings", POSTINGS_SCHEMA),
+                          ("doc_stats", _doc_stats(corpus, fields).schema),
+                          ("doc_map", corpus.select(*doc_map_cols).schema)):
+        storage.replace_shards(table, schema, tables[table])
+    return built
+
+
 def build_index(
     spark: SparkSession,
     corpus: DataFrame,
@@ -414,8 +522,9 @@ def build_index(
     one marker write (internal: a snapshot sync pins its
     ``corpus_snapshot_id`` there).  ``_sizes`` is the built rows'
     ``(doc_shard, count, max doc_id)`` per shard when the caller already
-    holds it (internal: a sync that decides its change set on the driver),
-    so the sizing pass does not re-run the corpus plan.  Returns build
+    holds it (internal: a sync that decides its change set on the driver,
+    whose rows the decision bounds): the sizing pass does not re-run the
+    corpus plan, and the shards are built on the driver.  Returns build
     metadata dict.
     """
     config = config or IndexConfig()
@@ -479,61 +588,14 @@ def build_index(
             commit({})
         return {"build_id": build_id, "n_docs": 0, "shards": [], "elapsed_sec": 0.0}
 
-    # --- THE one shuffle of the build: repartition raw corpus bytes by
-    # doc_shard.  Everything downstream (doc_map, doc_stats, postings) is
-    # partition-local: tokens, tf rows and blobs never cross an exchange.
-    # Explicit partition count (AQE never coalesces a user-specified
-    # repartition) so the partitioned writes keep enough writers — one task
-    # per shard up to ~4 tasks/core, multiple shards per task beyond that.
-    n_part = max(1, min(len(built_shards), spark.sparkContext.defaultParallelism * 4))
-    layout = corpus.repartition(n_part, "doc_shard").cache()
-
-    # --- doc_map (identity + ingest invariant; facet columns live here) ---
-    meta_cols = [c for c in ["repo", "path", "commit", "lang"] if c in corpus.columns]
-    doc_map = layout.select("doc_shard", "doc_id", *meta_cols, "content_sha256")
-
-    doc_stats = _doc_stats(layout, config.fields)
-    # --- pack postings per shard (tokenize + tf + encode in the kernel) ---
-    packed = layout.select(
-        "doc_shard", "doc_id", *config.fields
-    ).groupBy("doc_shard").applyInArrow(
-        _make_packer_arrow(config.block_size, config.fields),
-        schema=POSTINGS_SCHEMA,
-    )
-
-    # --- submit the three independent writes as CONCURRENT Spark jobs.
-    # They share the cached `layout` (the block manager's per-partition
-    # locks make concurrent materialization compute-once) and write to
-    # disjoint tables, so ordering between them is immaterial.  The win is
-    # wall-clock, not CPU: each write's driver-side commit (output listing
-    # + rename, or an object-store multipart commit on a real cluster) is
-    # serial latency that otherwise adds up across tables — overlapping it
-    # under the long-pole postings kernel removes a fixed ~seconds residue
-    # per build, which is precisely the non-scaling term in the N→4N
-    # efficiency measurements (BASELINE.md's per-phase decomposition).
-    # Concurrent job submission from driver threads is the standard Spark
-    # pattern for this (scheduler pools); exceptions propagate via result().
-    from concurrent.futures import ThreadPoolExecutor
-
-    try:
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            futs = [
-                pool.submit(storage.write, packed, "postings"),
-                pool.submit(storage.write, doc_map, "doc_map"),
-                pool.submit(storage.write, doc_stats, "doc_stats"),
-            ]
-            for f in futs:
-                f.result()
-    finally:
-        # the writes are layout's only readers, failed or not
-        layout.unpersist()
-
-    # --- the marker's entries for the built shards, one JSON metrics log
-    # line, then the commit marker ---
-    built = {
-        s: dict(e, build_id=build_id, input_fingerprint=fingerprint)
-        for s, e in refresh_aggregates(spark, storage, built_shards).items()
-    }
+    # doc_map: identity + ingest invariant; facet columns live here
+    doc_map_cols = ["doc_shard", "doc_id"] + [
+        c for c in ["repo", "path", "commit", "lang"] if c in corpus.columns
+    ] + ["content_sha256"]
+    entries = (_build_with_spark(spark, storage, config, corpus, doc_map_cols, built_shards)
+               if _sizes is None else _build_on_driver(storage, config, corpus, doc_map_cols))
+    built = {s: dict(e, build_id=build_id, input_fingerprint=fingerprint)
+             for s, e in entries.items()}
     elapsed = time.time() - t0
     log.info(json.dumps({
         "event": "build", "build_id": build_id, "n_docs": n_docs_built,

@@ -11,9 +11,10 @@ merge step, ``_merge(delta, source, deletions)``:
 2. classify the delta with a delta-sized left join against an id-only
    ``doc_map`` projection: its changed rows have a new identity (added) or
    new content (modified); with deletions, the stored ids whose identity
-   the delta lacks are deleted.  Modified docs keep their ids; added docs
-   get ids from the marker's ``next_doc_id`` up, by rank in
-   ``(repo, path, commit)`` order;
+   the delta lacks are deleted.  Identities match NULL-safe, so a doc
+   whose repo or path is NULL keeps its id like any other.  Modified docs
+   keep their ids; added docs get ids from the marker's ``next_doc_id``
+   up, by rank in ``(repo, path, commit)`` order;
 3. a changed, added or deleted doc dirties its whole doc_shard, the
    index's unit of rebuild;
 4. the rebuild rows are the changed rows plus the dirty shards' surviving
@@ -21,7 +22,10 @@ merge step, ``_merge(delta, source, deletions)``:
    ``doc_shard`` partitions), their current rows from the caller's source;
 5. ``build_index(only_shards=dirty)`` over them replaces exactly those
    shards (dropping any that deletions emptied) and commits a marker whose
-   manifest replaces only their entries.
+   manifest replaces only their entries.  After a driver decision the
+   build runs on the driver too: one Arrow collect of the rebuild rows,
+   the pack kernel per shard, pyarrow writes with doc_map last, and the
+   marker's stats from the kernel's own arrays — no Spark write job.
 
 Steps 2-4 run one of two ways, chosen by the sizes the sync observes:
 
@@ -32,7 +36,8 @@ Steps 2-4 run one of two ways, chosen by the sizes the sync observes:
   ``n_docs`` over those shards fits the same cap, it collects the
   survivors' ids.  The rebuild rows are the delta and the source joined
   to Arrow local relations of ids: they read no index table, so the build
-  reads them as they are, sized by the per-shard counts the driver holds.
+  collects them as they are, sized by the per-shard counts the driver
+  holds.
 - **disk** (past the cap): ``_stage`` classifies distributed, with
   ``detect_changes``' two-phase id assignment.  It persists three frames,
   each evaluated once (the changed rows, the changed set with its ids, the
@@ -69,10 +74,11 @@ import json
 import logging
 import os
 import shutil
+import time
 from typing import Callable, List, NamedTuple, Optional, Tuple
 
 import pyarrow as pa
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from archivesspace_virgo_spark.config import IndexConfig
@@ -90,8 +96,9 @@ IDENTITY = ["repo", "path"]
 # distributed instead — never an unbounded driver list.
 _MAX_PRUNE_KEYS = 10_000
 
-#: the survivors' distinct repos, or None past ``_MAX_PRUNE_KEYS``
-Repos = Callable[[], Optional[List[str]]]
+#: the survivors' distinct repos (None among them for a NULL repo), or
+#: None past ``_MAX_PRUNE_KEYS``
+Repos = Callable[[], Optional[List[Optional[str]]]]
 
 
 def _resolve_identities(df: DataFrame) -> DataFrame:
@@ -118,22 +125,28 @@ def _resolve_identities(df: DataFrame) -> DataFrame:
     return df if "content_sha256" in df.columns else with_content_sha(df)
 
 
+def _same_identity() -> Column:
+    """``(repo, path)`` equal to ``(_repo, _path)``, a NULL matching NULL:
+    a doc whose repo or path is NULL keeps its identity."""
+    return F.col("repo").eqNullSafe(F.col("_repo")) & F.col("path").eqNullSafe(F.col("_path"))
+
+
 def _classify(spark: SparkSession, new: DataFrame,
               index_dir: str) -> Tuple[DataFrame, DataFrame]:
     """``new``'s changed rows (new identity or new content) with the stored
     ``_old_id`` (null: added) and ``_old_sha``, and the stored doc_ids whose
     identity ``new`` lacks.  Both lazy."""
     old = IndexStorage(index_dir).read(spark, "doc_map").select(
-        *IDENTITY, F.col("doc_id").alias("_old_id"),
-        F.col("content_sha256").alias("_old_sha"),
+        F.col("repo").alias("_repo"), F.col("path").alias("_path"),
+        F.col("doc_id").alias("_old_id"), F.col("content_sha256").alias("_old_sha"),
     )
     new = new if "content_sha256" in new.columns else with_content_sha(new)
     # |new| rows vs an id-only doc_map projection: the join is bounded by
     # the delta, never the corpus bytes (AQE broadcasts the smaller side)
-    diff = new.join(old, IDENTITY, "left").filter(
+    diff = new.join(old, _same_identity(), "left").filter(
         F.col("_old_id").isNull() | (F.col("content_sha256") != F.col("_old_sha"))
-    )
-    deleted = old.join(new.select(*IDENTITY), IDENTITY, "left_anti").select(
+    ).drop("_repo", "_path")
+    deleted = old.join(new.select(*IDENTITY), _same_identity(), "left_anti").select(
         F.col("_old_id").alias("doc_id")
     )
     return diff, deleted
@@ -198,8 +211,7 @@ def _join_ids(spark: SparkSession, rows: DataFrame,
         "_path": pa.array([p for _r, p, _i in ids], pa.string()),
         "doc_id": pa.array([i for _r, _p, i in ids], pa.int64()),
     }))
-    on = F.col("repo").eqNullSafe(F.col("_repo")) & F.col("path").eqNullSafe(F.col("_path"))
-    return rows.drop("doc_id").join(local, on).drop("_repo", "_path")
+    return rows.drop("doc_id").join(local, _same_identity()).drop("_repo", "_path")
 
 
 def _decide_on_driver(spark: SparkSession, index_dir: str, config: IndexConfig,
@@ -234,18 +246,16 @@ def _decide_on_driver(spark: SparkSession, index_dir: str, config: IndexConfig,
     if sum(entries[s]["n_docs"] for s in dirty if s in entries) > cap:
         return None
 
-    # the dirty shards' docs neither changed nor deleted; a NULL identity
-    # joins no source row, so it cannot survive
+    # the dirty shards' docs neither changed nor deleted
     changed = {(r, p) for r, p, _i in ids}
     survivors = [
         (r["repo"], r["path"], r["doc_id"]) for r in
         storage.read(spark, "doc_map").filter(F.col("doc_shard").isin(dirty))
         .select(*IDENTITY, "doc_id").collect()
-        if r["repo"] is not None and r["path"] is not None
-        and (r["repo"], r["path"]) not in changed and r["doc_id"] not in gone
+        if (r["repo"], r["path"]) not in changed and r["doc_id"] not in gone
     ]
     rows = _join_ids(spark, delta, ids)
-    current = source(lambda: sorted({r for r, _p, _i in survivors})) if survivors else None
+    current = source(lambda: list({r for r, _p, _i in survivors})) if survivors else None
     if current is None:
         survivors = []
     else:
@@ -299,12 +309,12 @@ def _stage(spark: SparkSession, index_dir: str, config: IndexConfig,
         survivors_map = hold(
             storage.read(spark, "doc_map")
             .filter(F.col("doc_shard").isin(dirty_shards))
-            .join(changed.select(*IDENTITY), IDENTITY, "left_anti")
-            .select(*IDENTITY, "doc_id")
+            .select(F.col("repo").alias("_repo"), F.col("path").alias("_path"), "doc_id")
+            .join(changed.select(*IDENTITY), _same_identity(), "left_anti")
         )
 
-        def repos() -> Optional[List[str]]:
-            keys = [r["repo"] for r in survivors_map.select("repo").distinct()
+        def repos() -> Optional[List[Optional[str]]]:
+            keys = [r["_repo"] for r in survivors_map.select("_repo").distinct()
                     .limit(_MAX_PRUNE_KEYS + 1).collect()]
             return None if len(keys) > _MAX_PRUNE_KEYS else keys
 
@@ -313,9 +323,8 @@ def _stage(spark: SparkSession, index_dir: str, config: IndexConfig,
         if rows is not None:
             # stored ids win over any carried ids
             rows = _resolve_identities(rows).drop("doc_id")
-            rebuild = rows.join(survivors_map, IDENTITY).unionByName(
-                changed, allowMissingColumns=True
-            )
+            rebuild = rows.join(survivors_map, _same_identity()).drop(
+                "_repo", "_path").unionByName(changed, allowMissingColumns=True)
         rebuild.write.mode("overwrite").parquet(staging)
         return _Rebuild("disk", dirty_shards,
                         spark.read.schema(rebuild.schema).parquet(staging),
@@ -333,9 +342,10 @@ def _merge(spark: SparkSession, index_dir: str, config: IndexConfig,
     past ``_MAX_PRUNE_KEYS``.  ``marker`` holds extra entries for the
     build's commit marker.  Returns build_index's metadata plus
     ``dirty_shards`` (empty: nothing to do, nothing written), ``staging``
-    (the path that decided: ``driver`` or ``disk``) and the ``changed``,
-    ``added``, ``deleted`` and ``survivors`` doc counts, which it also logs
-    as one JSON line."""
+    (the path that decided: ``driver`` or ``disk``), the ``changed``,
+    ``added``, ``deleted`` and ``survivors`` doc counts and the seconds
+    spent deciding (``decide_s``: steps 1-4) and building (``build_s``:
+    step 5), which it also logs as one JSON line."""
     # The rebuild rows must not read a table the build overwrites: you must
     # never overwrite a table a live plan still scans (Iceberg gets this
     # via snapshot isolation).  The driver path's rows read only the delta,
@@ -346,9 +356,11 @@ def _merge(spark: SparkSession, index_dir: str, config: IndexConfig,
     staging = os.path.join(index_dir, "_staging")
     delta = _resolve_identities(delta)
     plan: Optional[_Rebuild] = None
+    t0 = time.perf_counter()
     try:
         plan = (_decide_on_driver(spark, index_dir, config, delta, source, deletions)
                 or _stage(spark, index_dir, config, delta, source, deletions, staging))
+        t1 = time.perf_counter()
         meta = {"shards": [], "n_docs": 0}
         if plan.dirty:
             meta = build_index(
@@ -361,7 +373,8 @@ def _merge(spark: SparkSession, index_dir: str, config: IndexConfig,
         if plan is not None and plan.dirty:
             spark.catalog.refreshByPath(index_dir)
     report = dict(staging=plan.staging, **plan.counts,
-                  survivors=meta["n_docs"] - plan.counts["changed"])
+                  survivors=meta["n_docs"] - plan.counts["changed"],
+                  decide_s=t1 - t0, build_s=time.perf_counter() - t1)
     log.info(json.dumps({"event": "sync", "build_id": meta.get("build_id"),
                          "dirty_shards": plan.dirty, **report}))
     return dict(meta, dirty_shards=plan.dirty, **report)

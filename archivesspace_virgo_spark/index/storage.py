@@ -25,13 +25,23 @@ Build metrics are not a table: each build logs one JSON line at INFO
 (logger ``archivesspace_virgo_spark.index.build``) with n_docs, n_shards,
 elapsed_sec and docs_per_sec.
 
+Two writers fill the doc_shard partitions, with one replace semantics:
+a write replaces exactly the partitions of the shards it is given.
+``write`` is Spark's dynamic partition overwrite of a DataFrame (a full or
+disk-staged build).  ``replace_shards`` writes driver-held Arrow tables
+with pyarrow (a sync decided on the driver), as Spark's writer would:
+the same Spark schema in the footer, snappy, no Arrow schema, dictionary
+encoding where parquet-mr keeps it, one row group per file.
+
 Commit-ordering discipline mirrors the reference: hashes are persisted only
 after successful upload (IndexRecordsForV4.java:116-125); here the
 ``_meta/commit.json`` marker is the durable point — readers treat an index
-without it as absent.  It is also the ONLY validity signal: a build writes
-postings, doc_map and doc_stats as concurrent jobs, so a failed build can
-leave any subset of them rewritten; corpus stats, resume state and
-visibility all change in the marker's one atomic rename.
+without it as absent.  It is also the ONLY validity signal: a Spark build
+writes postings, doc_map and doc_stats as concurrent jobs, so a failed
+build can leave any subset of them rewritten; corpus stats, resume state
+and visibility all change in the marker's one atomic rename.  A driver
+build writes doc_map last, so a failed one leaves doc_map as it was and
+the next sync classifies the same change set again.
 
 The partition-by-doc_shard layout means postings for one term are spread
 over shards with disjoint contiguous doc_id ranges: this IS the hot-term
@@ -43,14 +53,20 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
+import uuid
 from typing import Dict, List, Optional
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from archivesspace_virgo_spark.config import IndexConfig
-from archivesspace_virgo_spark.sources.snapshot_table import footer_schema
+from archivesspace_virgo_spark.sources.snapshot_table import _SPARK_SCHEMA_KEY, footer_schema
 
 POSTINGS_SCHEMA = T.StructType(
     [
@@ -76,6 +92,65 @@ POSTINGS_SCHEMA = T.StructType(
     ]
 )
 
+#: the columns reads filter on (a postings term lookup, a doc_id join):
+#: the only ones whose min/max statistics a driver write keeps
+_FILTERED_COLUMNS = ("term", "doc_id")
+#: parquet-mr's dictionary page limit: past it, it writes values plain
+_MAX_DICTIONARY_BYTES = 1 << 20
+
+
+def _plain_bytes(values: pa.Array) -> int:
+    """The bytes of ``values`` (no nulls) PLAIN-encoded."""
+    if pa.types.is_binary(values.type) or pa.types.is_string(values.type):
+        return 4 * len(values) + pc.sum(pc.binary_length(values)).as_py()
+    return len(values) * values.type.bit_width // 8
+
+
+def _dictionary_paths(table: pa.Table) -> List[str]:
+    """The leaf columns of ``table`` parquet-mr writes dictionary-encoded:
+    those whose dictionary plus bit-packed indices take fewer bytes than
+    their plain encoding (its fallback test) within its page limit."""
+    paths = []
+    for name in table.column_names:
+        values, path = table.column(name), name
+        if pa.types.is_list(values.type):
+            values, path = pc.list_flatten(values), name + ".list.element"
+        values = values.combine_chunks().drop_null()
+        if len(values) == 0:
+            continue
+        uniques = pc.unique(values)
+        dictionary = _plain_bytes(uniques)
+        indices = len(values) * max(1, (len(uniques) - 1).bit_length()) // 8
+        if dictionary <= _MAX_DICTIONARY_BYTES and dictionary + indices < _plain_bytes(values):
+            paths.append(path)
+    return paths
+
+
+def _varint(n: int) -> bytes:
+    out = bytearray()
+    while n > 0x7F:
+        out.append(n & 0x7F | 0x80)
+        n >>= 7
+    return bytes(out + bytes([n]))
+
+
+def _with_key_value(data: bytes, key: bytes, value: bytes) -> bytes:
+    """``data``, a parquet file pyarrow wrote with no key-value metadata,
+    with the one entry ``key: value`` in its footer (pyarrow before 17
+    writes key-value metadata only beside its own serialized Arrow
+    schema).  The footer is thrift-compact ``FileMetaData``: the entry
+    goes in as field 5, a list of one KeyValue struct, just before
+    ``created_by`` (field 6), whose header then encodes a field delta of
+    1 instead of 2."""
+    size = int.from_bytes(data[-8:-4], "little")
+    body, footer = data[:-8 - size], data[-8 - size:-8]
+    created_by = pq.read_metadata(pa.BufferReader(data)).created_by.encode()
+    at = footer.rindex(b"\x28" + _varint(len(created_by)) + created_by)
+    entry = b"".join(b"\x18" + _varint(len(s)) + s for s in (key, value))
+    footer = footer[:at] + b"\x19\x1c" + entry + b"\x00\x18" + footer[at + 1:]
+    return body + footer + len(footer).to_bytes(4, "little") + b"PAR1"
+
+
 class IndexStorage:
     def __init__(self, index_dir: str):
         self.index_dir = index_dir
@@ -96,6 +171,44 @@ class IndexStorage:
         (df.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
          .partitionBy("doc_shard").parquet(self.path(table)))
 
+    def replace_shards(self, table: str, schema: T.StructType,
+                       parts: Dict[int, pa.Table]) -> None:
+        """Replace exactly the ``parts`` doc_shard partitions of ``table``
+        with their Arrow tables, written as Spark writes a DataFrame of
+        ``schema`` partitioned by doc_shard: one file per shard, holding
+        ``schema``'s other columns and its JSON in the footer.  A shard
+        whose table is empty keeps no partition.  Every file is written
+        under a hidden directory first, then each partition is swapped
+        in, as dynamic overwrite does."""
+        schema = T.StructType([f for f in schema.fields if f.name != "doc_shard"])
+        arrow_schema = to_arrow_schema(schema)
+        spark_json = json.dumps(schema.jsonValue(), separators=(",", ":")).encode()
+        root = self.path(table)
+        tmp = os.path.join(root, f"_tmp-{uuid.uuid4().hex}")
+        try:
+            for shard, part in parts.items():
+                if part.num_rows == 0:
+                    continue
+                part = part.select(schema.names).cast(arrow_schema)
+                out = pa.BufferOutputStream()
+                pq.write_table(
+                    part, out, row_group_size=part.num_rows, compression="snappy",
+                    store_schema=False, use_dictionary=_dictionary_paths(part),
+                    write_statistics=[c for c in _FILTERED_COLUMNS if c in schema.names])
+                d = os.path.join(tmp, f"doc_shard={shard}")
+                os.makedirs(d)
+                with open(os.path.join(d, f"part-00000-{uuid.uuid4()}.c000.snappy.parquet"),
+                          "wb") as f:
+                    f.write(_with_key_value(out.getvalue().to_pybytes(),
+                                            _SPARK_SCHEMA_KEY, spark_json))
+            for shard in parts:
+                dst = os.path.join(root, f"doc_shard={shard}")
+                shutil.rmtree(dst, ignore_errors=True)
+                if os.path.isdir(os.path.join(tmp, f"doc_shard={shard}")):
+                    os.rename(os.path.join(tmp, f"doc_shard={shard}"), dst)
+        finally:
+            shutil.rmtree(tmp, ignore_errors=True)
+
     def read(self, spark: SparkSession, table: str) -> DataFrame:
         """``table`` read with a declared schema: the one Spark would infer,
         taken from the same footer on the driver, so no read runs Spark's
@@ -110,8 +223,6 @@ class IndexStorage:
         pick), then the ``doc_shard`` partition column.  doc_map's and
         doc_stats' columns follow the corpus (doc_id may be int), so no
         constant serves.  None for a table with no such file: Spark infers."""
-        import pyarrow.parquet as pq
-
         root = self.path(table)
         shards = sorted(n for n in os.listdir(root)
                         if n.startswith("doc_shard=")) if os.path.isdir(root) else []
@@ -127,8 +238,6 @@ class IndexStorage:
     def drop_shards_except(self, keep) -> None:
         """Remove every doc_map/doc_stats/postings doc_shard partition not
         in ``keep`` (Iceberg: DELETE WHERE doc_shard NOT IN keep)."""
-        import shutil
-
         for table in ("doc_map", "doc_stats", "postings"):
             p = self.path(table)
             for name in os.listdir(p) if os.path.isdir(p) else ():

@@ -264,13 +264,16 @@ class SnapshotTable:
             for v in range(from_snapshot + 1, to_snapshot + 1)
         )
 
-    def read_pruned(self, spark: SparkSession, keys: List[str],
+    def read_pruned(self, spark: SparkSession, keys: List[Optional[str]],
                     snapshot_id: Optional[int] = None) -> DataFrame:
         """Manifest-pruned scan: only files whose [min, max] range on the
         prune column can contain one of ``keys`` (Iceberg manifest-stats
         file skipping).  Falls back to the full manifest for files without
-        stats."""
+        stats, and for a None key: min/max leave NULLs out, so a NULL can
+        sit in any file."""
         man = self.snapshot(snapshot_id)["manifest"]
+        if None in keys:
+            return self._read_files(spark, man)
         keys_sorted = sorted(keys)
         files = []
         for e in man:

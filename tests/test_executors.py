@@ -178,3 +178,28 @@ def test_cap_bounds_the_postings_uncompressed(spark, tmp_path, monkeypatch):
     assert driver._driver_tables() is not None
     assert _bits(engine.search(T3, k=10).collect()) == _bits(
         driver.search(T3, k=10).collect())
+
+
+def test_driver_built_shards_read_alike_on_both_executors(spark, tmp_path):
+    """A sync decided on the driver writes its shards with pyarrow; both
+    executors read that index, beside the shards Spark wrote, to the same
+    rows and float bits."""
+    from archivesspace_virgo_spark.index.incremental import incremental_update
+
+    d = str(tmp_path / "idx")
+    corpus = load_documents_as_corpus(spark, SF_SMOKE)
+    build_index(spark, corpus.filter(F.col("doc_id") < 400), d, CFG)
+    edited = corpus.withColumn("content", F.when(
+        F.col("doc_id") == 3, F.concat("content", F.lit(" value table"))
+    ).otherwise(F.col("content")))
+    meta = incremental_update(spark, edited.filter(F.col("doc_id") < 420), d, CFG)
+    assert meta["staging"] == "driver" and meta["dirty_shards"] == [0, 6]
+    driver = QueryEngine(spark, d, CFG)
+    spark_ = spark_executor_engine(spark, d, CFG)
+    for surface in ("search_or", "search_fq", "query_phrase", "highlight", "explain",
+                    "phrase_search", "sloppy_phrase_search_1"):
+        got = _bits(ORDERED[surface](driver).collect())
+        assert got and got == _bits(ORDERED[surface](spark_).collect()), surface
+    for surface in ("term_scores", "match_ids"):
+        got = sorted(_bits(UNORDERED[surface](driver).collect()))
+        assert got and got == sorted(_bits(UNORDERED[surface](spark_).collect())), surface

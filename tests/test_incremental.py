@@ -343,7 +343,8 @@ def test_build_logs_one_json_metrics_line(spark, tmp_path, caplog):
 
 def test_sync_logs_one_json_line_of_what_it_did(spark, tmp_path, caplog):
     """A merge returns, and logs as one JSON line, the path that decided
-    its change set and the changed, added, deleted and surviving docs."""
+    its change set, the changed, added, deleted and surviving docs, and
+    the seconds it spent deciding and building."""
     d = str(tmp_path / "idx")
     build_index(spark, _input_hint_corpus(spark, n=100), d, CFG)
     before = IndexStorage(d).shards()
@@ -356,8 +357,10 @@ def test_sync_logs_one_json_line_of_what_it_did(spark, tmp_path, caplog):
         meta = incremental_update(spark, v2, d, CFG)
     lines = [json.loads(r.getMessage()) for r in caplog.records if r.name == logger]
     assert len(lines) == 1
-    fields = ("staging", "dirty_shards", "changed", "added", "deleted", "survivors")
+    fields = ("staging", "dirty_shards", "changed", "added", "deleted", "survivors",
+              "decide_s", "build_s")
     assert {f: lines[0][f] for f in fields} == {f: meta[f] for f in fields}
+    assert meta["decide_s"] > 0 and meta["build_s"] >= meta["elapsed_sec"] > 0
     assert lines[0]["build_id"] == meta["build_id"]
     assert (meta["staging"], meta["changed"], meta["added"], meta["deleted"]) == (
         "driver", 31, 30, 1)

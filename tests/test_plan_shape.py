@@ -227,17 +227,18 @@ def test_declared_reads_run_no_spark_job(spark, engine, tmp_path, read):
 
 
 #: Spark jobs a snapshot-diff sync of 20 new and 5 modified docs into the
-#: 150-doc index may run, counted like perfbench: 17 measured, plus 3; 61
+#: 150-doc index may run, counted like perfbench: 9 measured, plus 3; 61
 #: when every action re-ran the classification plan from the diff read, 29
-#: when every change set was classified and staged on disk
-_SYNC_JOB_BUDGET = 20
+#: when every change set was classified and staged on disk, 17 when the
+#: shards it decided on the driver were built through Spark
+_SYNC_JOB_BUDGET = 12
 
 
 def test_snapshot_diff_sync_job_budget(spark, tmp_path):
     """A snapshot-diff sync of a small change set decides it on the driver:
     one collect of the changed keys, one of the survivors' ids, and the
-    build, which takes the per-shard sizes from the driver; no read infers
-    a schema."""
+    build, which takes the per-shard sizes from the driver and collects
+    the rebuild rows once; no read infers a schema."""
     from archivesspace_virgo_spark.index.incremental import (
         incremental_update_from_table,
     )
@@ -256,9 +257,9 @@ def test_snapshot_diff_sync_job_budget(spark, tmp_path):
     assert len(jobs) <= _SYNC_JOB_BUDGET, len(jobs)
 
 
-def _scans_of(spark, call):
-    """(result, the parquet scans of the SQL executions ``call`` ran): each
-    scan's formatted-plan block as a dict, ``{"ReadSchema": ..., ...}``."""
+def _plans_of(spark, call):
+    """(result, the formatted physical plans of the SQL executions ``call``
+    ran), read from the session's status store."""
     store = spark._jsparkSession.sharedState().statusStore()
 
     def executions():
@@ -267,15 +268,47 @@ def _scans_of(spark, call):
 
     seen = max([e.executionId() for e in executions()], default=-1)
     result = call()
+    return result, [e.physicalPlanDescription() for e in executions()
+                    if e.executionId() > seen]
+
+
+def _scans_of(spark, call):
+    """(result, the parquet scans of the SQL executions ``call`` ran): each
+    scan's formatted-plan block as a dict, ``{"ReadSchema": ..., ...}``."""
+    result, plans = _plans_of(spark, call)
     scans = []
-    for e in executions():
-        if e.executionId() <= seen:
-            continue
-        for block in e.physicalPlanDescription().split("\n\n"):
+    for plan in plans:
+        for block in plan.split("\n\n"):
             lines = block.strip().splitlines()
             if lines and lines[0].startswith("(") and "Scan parquet" in lines[0]:
                 scans.append(dict(ln.split(": ", 1) for ln in lines[1:] if ": " in ln))
     return result, scans
+
+
+#: the plan nodes of a Spark table write and of the pack kernel's grouped map
+_WRITE, _PACK = "InsertIntoHadoopFsRelationCommand", "FlatMapGroupsInArrow"
+
+
+def test_driver_decided_sync_runs_no_spark_write(spark, tmp_path):
+    """A sync decided on the driver builds its shards there too: none of
+    its SQL executions writes a table or runs the pack kernel through
+    ``applyInArrow``, where the full build before it does both."""
+    from archivesspace_virgo_spark.index.incremental import (
+        incremental_update_from_table,
+    )
+
+    t, docs = _snapshot_table(spark, str(tmp_path / "tbl"))
+    idx = str(tmp_path / "idx")
+    _meta, plans = _plans_of(spark, lambda: incremental_update_from_table(
+        spark, t, idx, CFG))
+    assert any(_WRITE in p for p in plans) and any(_PACK in p for p in plans)
+    t.append(docs(150, 160))
+    meta, plans = _plans_of(spark, lambda: incremental_update_from_table(
+        spark, t, idx, CFG))
+    assert (meta["staging"], meta["dirty_shards"]) == ("driver", [2])
+    assert plans
+    for plan in plans:
+        assert _WRITE not in plan and _PACK not in plan, plan[:2000]
 
 
 @pytest.mark.parametrize("staging", ["driver", "disk"])

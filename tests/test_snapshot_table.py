@@ -503,10 +503,19 @@ def test_syncs_release_exactly_the_frames_they_persist(spark, tmp_path, monkeypa
     assert engine._postings.storageLevel.useMemory
 
 
+def _failing_doc_stats_write(real):
+    """``IndexStorage.replace_shards`` that fails on doc_stats."""
+    def failing(self, table, *args, **kwargs):
+        if table == "doc_stats":
+            raise RuntimeError("injected doc_stats write failure")
+        real(self, table, *args, **kwargs)
+    return failing
+
+
 def test_failed_driver_decided_sync_leaves_the_index_as_it_was(spark, tmp_path, monkeypatch):
     """A sync decided on the driver that fails in one of the build's table
-    writes persists nothing, keeps the committed marker and leaves no
-    ``_staging`` directory."""
+    writes (the driver build's) persists nothing, keeps the committed
+    marker and leaves no ``_staging`` directory."""
     from archivesspace_virgo_spark.index import incremental as inc
 
     t = SnapshotTable.create(str(tmp_path / "tbl"))
@@ -518,20 +527,15 @@ def test_failed_driver_decided_sync_leaves_the_index_as_it_was(spark, tmp_path, 
     persisted = jsc.getPersistentRDDs().size()
     st = IndexStorage(idx)
     marker = st.read_commit()
-    real = IndexStorage.write
     staged = []
-
-    def failing(self, df, table, *args, **kwargs):
-        if table == "doc_stats":
-            raise RuntimeError("injected doc_stats write failure")
-        real(self, df, table, *args, **kwargs)
 
     def stage(*args, **kwargs):
         staged.append(args)
         raise AssertionError("a small sync must not stage on disk")
 
     with monkeypatch.context() as mp:
-        mp.setattr(IndexStorage, "write", failing)
+        mp.setattr(IndexStorage, "replace_shards",
+                   _failing_doc_stats_write(IndexStorage.replace_shards))
         mp.setattr(inc, "_stage", stage)
         with pytest.raises(RuntimeError, match="injected"):
             incremental_update_from_table(spark, t, idx, CFG)
@@ -539,6 +543,42 @@ def test_failed_driver_decided_sync_leaves_the_index_as_it_was(spark, tmp_path, 
     assert jsc.getPersistentRDDs().size() == persisted
     assert st.read_commit() == marker
     assert not os.path.exists(os.path.join(idx, "_staging"))
+
+
+def test_sync_retried_after_a_failed_driver_build_rebuilds_its_shards(
+        spark, tmp_path, monkeypatch):
+    """A driver build writes doc_map last: after its doc_stats write
+    fails, doc_map still holds the old rows, so the retried sync
+    classifies the same change set again and gives the index a clean sync
+    gives."""
+    def synced(root, fail):
+        t = SnapshotTable.create(str(root / "tbl"))
+        t.append(_corpus(spark, 0, 150))
+        idx = str(root / "idx")
+        incremental_update_from_table(spark, t, idx, CFG, build_id="full")
+        t.append(_corpus(spark, 150, 170).unionByName(
+            _corpus(spark, 10, 13).withColumn("content", F.concat("content", F.lit(" edit")))
+            .withColumn("commit", F.lit("z-v2"))))
+        if fail:
+            with monkeypatch.context() as mp:
+                mp.setattr(IndexStorage, "replace_shards",
+                           _failing_doc_stats_write(IndexStorage.replace_shards))
+                with pytest.raises(RuntimeError, match="injected"):
+                    incremental_update_from_table(spark, t, idx, CFG, build_id="sync")
+        return incremental_update_from_table(spark, t, idx, CFG, build_id="sync"), idx
+
+    retried, got = synced(tmp_path / "retried", True)
+    clean, want = synced(tmp_path / "clean", False)
+    fields = ("mode", "staging", "dirty_shards", "changed", "added", "n_docs")
+    assert [retried[f] for f in fields] == [clean[f] for f in fields]
+    assert retried["mode"] == "snapshot_diff" and retried["changed"] == 23
+    _assert_index_equal(spark, got, want)
+    doc_map = [sorted(str(tuple(r)) for r in IndexStorage(d).read(spark, "doc_map").collect())
+               for d in (got, want)]
+    assert doc_map[0] == doc_map[1]
+    markers = [{k: v for k, v in IndexStorage(d).read_commit().items() if k != "committed_at"}
+               for d in (got, want)]
+    assert markers[0] == markers[1]
 
 
 def test_crash_after_the_build_commit_keeps_the_snapshot_pin(spark, tmp_path, monkeypatch):
